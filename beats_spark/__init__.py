@@ -6,8 +6,8 @@ Beats executes a serial per-event processor chain over mutable JSON-like
 documents (libbeat/processors/processor.go:189-202); we compile the same
 config language into a single declarative DataFrame plan so Catalyst gets
 predicate pushdown, column pruning and whole-stage codegen for free, and
-express the row-level parsers (dissect/grok) as vectorized pandas/Arrow UDFs
-— never per-row Python.
+compile the row-level parsers (dissect/grok) to anchored JVM regexes that
+run inside that codegen — no Python in the parse path.
 
 Layout
 ------

@@ -37,7 +37,6 @@ which ``map<string,string>`` cannot hold).
 
 from __future__ import annotations
 
-import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -46,10 +45,19 @@ from beats_spark.event import append_flag, get_path, has_path, with_path
 from beats_spark.processors.base import Stage, register
 
 
-def _trim_chars(col: Column, chars: str) -> Column:
-    cls = "[" + re.sub(r"([\\\]^\-])", r"\\\1", chars) + "]+"
-    return F.regexp_replace(F.regexp_replace(col, f"^{cls}", ""),
-                            f"{cls}$", "")
+def _trim_chars(col: Column, chars: str, mode: str = "all") -> Column:
+    """``str.strip(chars)``; ``lstrip``/``rstrip`` for mode left/right, a
+    no-op for any other mode. Every character is written as ``\\x{h}``, so
+    no set — ``]``, ``^``, ``&&`` (Java class intersection), a letter — can
+    reshape the class."""
+    if not chars:
+        return col
+    cls = "[" + "".join(f"\\x{{{ord(c):x}}}" for c in chars) + "]+"
+    if mode in ("left", "all"):
+        col = F.regexp_replace(col, rf"\A{cls}", "")
+    if mode in ("right", "all"):
+        col = F.regexp_replace(col, rf"{cls}\z", "")
+    return col
 
 
 @register("kv")

@@ -3,7 +3,7 @@
 Defaults target the sandbox (local[N], single JVM) but every knob is the one
 you would set on a 1000-executor cluster too: AQE on (runtime re-plan +
 skew-join splitting), small-table broadcast, Arrow batching for the pandas
-UDF parse stages, and shuffle partitions sized to the parallelism level.
+UDF stages, and shuffle partitions sized to the parallelism level.
 """
 
 from __future__ import annotations
@@ -18,10 +18,11 @@ from pyspark.sql import SparkSession
 def ship_package(spark: SparkSession) -> None:
     """Make ``beats_spark`` importable on every executor.
 
-    The pandas-UDF closures (dissect/script) reference this package, so
-    python workers must import it — on a real cluster that's
-    ``spark-submit --py-files beats_spark.zip``; here we zip the package and
-    addPyFile, which is the same mechanism."""
+    The Python closures (script, fingerprint's xxhash/base32,
+    decompress_gzip_field, decode_xml, read_log_files, the multimodal ops)
+    reference this package, so python workers must import it — on a real
+    cluster that's ``spark-submit --py-files beats_spark.zip``; here we zip
+    the package and addPyFile, which is the same mechanism."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isdir(pkg_dir):
         # already imported from a --py-files zip: spark-submit distributed

@@ -4,19 +4,15 @@ Feature-matrix corpus in the spirit of the reference's golden corpus
 (libbeat/processors/dissect/testdata/dissect_tests.json): every modifier —
 skip, named skip, append (+ ordinal /N), indirect &, pointer *, fixed-length
 #N, greedy ->, data types |T, trim — plus failure cases. Cases are run
-through BOTH the exact positional scanner and (for static tokenizers) the
-vectorized regex engine, which must agree.
+through BOTH the reference positional scanner and the dissect stage, which
+must agree.
 """
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
-from beats_spark.processors.dissect import (
-    build_extractor,
-    parse_tokenizer,
-    scan_exact,
-)
+from beats_spark.processors import apply_chain, build_chain
+from beats_spark.processors.dissect import parse_tokenizer
+from dissect_reference import run_stage, scan_exact
 
 # (name, tokenizer, message, expected-or-None)
 CORPUS = [
@@ -222,6 +218,18 @@ TYPED_CORPUS = [
         "10.0.0.1 999.not.an.ip",
         {"ip1": "10.0.0.1", "ip2": None},
     ),
+    # Go ParseInt / ParseBool / ParseIP rules, one input each
+    ("integer upper hex", "%{n|integer}", "0X1F", {"n": 31}),
+    ("integer negative", "%{n|integer}", "-7", {"n": -7}),
+    ("integer decimal point is null", "%{n|integer}", "3.0", {"n": None}),
+    ("integer exponent is null", "%{n|integer}", "1e3", {"n": None}),
+    ("integer overflow is null", "%{n|integer}", "2147483648", {"n": None}),
+    ("boolean t", "%{b|boolean}", "t", {"b": True}),
+    ("boolean F", "%{b|boolean}", "F", {"b": False}),
+    ("boolean yes is null", "%{b|boolean}", "yes", {"b": None}),
+    ("boolean mixed case is null", "%{b|boolean}", "tRuE", {"b": None}),
+    ("ip v6 loopback", "%{ip|ip}", "::1", {"ip": "::1"}),
+    ("ip trailing garbage is null", "%{ip|ip}", "10.0.0.1x", {"ip": None}),
 ]
 
 
@@ -231,70 +239,44 @@ def test_scan_exact(name, tok, msg, expected):
     assert scan_exact(t, msg) == expected
 
 
-@pytest.fixture(scope="module")
-def run_spark(spark):
-    def _run(tok, msgs, engine="regex", **kw):
-        udf, rtype = build_extractor(tok, engine=engine, **kw)
-        df = spark.createDataFrame([(m,) for m in msgs], "text string")
-        rows = df.select(udf(F.col("text")).alias("d")).collect()
-        return [r["d"].asDict() if r["d"] is not None else None for r in rows], rtype
-
-    return _run
-
-
 @pytest.mark.parametrize(
     "name,tok,msg,expected",
     [c for c in CORPUS],
     ids=[c[0] for c in CORPUS],
 )
-def test_vectorized_matches_exact(run_spark, name, tok, msg, expected):
-    t = parse_tokenizer(tok)
-    engine = "exact" if t.dynamic else "regex"
-    rows, _ = run_spark(tok, [msg], engine=engine)
-    got = rows[0]
-    if t.dynamic:
-        assert got["_map"] == expected
-        assert got["_failed"] == (expected is None)
-        return
-    if expected is None:
-        assert got["_failed"] is True
-        assert all(v is None for k, v in got.items() if k != "_failed")
-    else:
-        assert got["_failed"] is False
-        payload = {k: v for k, v in got.items() if k != "_failed"}
-        assert payload == expected
+def test_vectorized_matches_exact(spark, name, tok, msg, expected):
+    [(got, failed)] = run_stage(spark, tok, [msg])
+    assert failed == (expected is None)
+    assert got == expected
 
 
 @pytest.mark.parametrize(
     "name,tok,msg,expected", TYPED_CORPUS, ids=[c[0] for c in TYPED_CORPUS]
 )
-def test_typed_extraction(run_spark, name, tok, msg, expected):
-    rows, _ = run_spark(tok, [msg])
-    payload = {k: v for k, v in rows[0].items() if k != "_failed"}
-    assert payload == expected
+def test_typed_extraction(spark, name, tok, msg, expected):
+    [(got, failed)] = run_stage(spark, tok, [msg])
+    assert not failed
+    assert got == expected
 
 
-def test_trim_values(run_spark):
-    rows, _ = run_spark(
-        "%{a},%{b}", ["  x  ,  y  "], trim_mode="all", trim_chars=" "
-    )
-    assert {k: v for k, v in rows[0].items() if k != "_failed"} == {"a": "x", "b": "y"}
+def test_trim_values(spark):
+    [(got, _)] = run_stage(spark, "%{a},%{b}", ["  x  ,  y  "],
+                           trim_values="all", trim_chars=" ")
+    assert got == {"a": "x", "b": "y"}
 
 
-def test_batch_extraction_is_vectorized(run_spark):
-    """One UDF call over many rows; mixed good/bad rows."""
+def test_batch_extraction_is_vectorized(spark):
+    """One stage over many rows; mixed good/bad rows."""
     tok = "level=%{lvl} latency_ms=%{ms|integer}"
     msgs = [f"level=info latency_ms={i}" for i in range(50)] + ["garbage", None]
-    rows, _ = run_spark(tok, msgs)
-    ok = [r for r in rows if r and not r["_failed"]]
+    rows = run_stage(spark, tok, msgs)
+    ok = [d for d, failed in rows if not failed]
     assert len(ok) == 50
-    assert ok[7]["ms"] == 7 and ok[7]["lvl"] == "info"
-    assert rows[-2]["_failed"] is True
+    assert ok[7] == {"lvl": "info", "ms": 7}
+    assert rows[-2] == (None, True) and rows[-1] == (None, True)
 
 
 def test_dissect_stage_end_to_end(spark):
-    from beats_spark.processors import build_chain, apply_chain
-
     df = spark.createDataFrame(
         [
             ("c1", 0, 'level=info msg="ok" latency_ms=12'),

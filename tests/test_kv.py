@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from beats_spark.processors import apply_chain, build_chain
+from dissect_reference import run_stage
 
 
 def _run(spark, text, cfg):
@@ -77,6 +78,16 @@ def test_kv_trim_and_strip_brackets(spark):
 def test_kv_trim_value(spark):
     r = _run(spark, "a=--1-- b=2", {"trim_value": "-"})
     assert r["kv"] == {"a": "1", "b": "2"}
+
+
+def test_trim_set_with_class_metacharacters(spark):
+    """``]``, ``[`` and ``&&`` in a trim set are characters to strip, not
+    regex class syntax — in kv and in dissect, which share the helper."""
+    r = _run(spark, "[a]=1 [[b]]=2", {"trim_key": "[]"})
+    assert r["kv"] == {"a": "1", "b": "2"}
+    [(d, _)] = run_stage(spark, "%{a},%{b}", ["[&x]&,]]y&&["],
+                         trim_values="all", trim_chars="[]&")
+    assert d == {"a": "x", "b": "y"}
 
 
 def test_kv_repeated_key_first_wins(spark):

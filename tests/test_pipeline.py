@@ -17,6 +17,7 @@ from beats_spark.pipeline import (
     fixture_config,
 )
 from beats_spark.testdata import synthesize_transcripts, transcripts_from_events
+from dissect_reference import expected, run_stage
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -154,26 +155,15 @@ def test_synthesize_transcripts_deterministic(spark):
     assert (g.max() + 1 == g.count()).all()
 
 
-def test_dissect_jvm_pandas_engines_agree(spark, transcripts):
-    """The JVM fast path (anchored regex, codegen) and the pandas-UDF path
-    must produce identical structs on eligible tokenizers."""
-    from beats_spark.processors import apply_chain, build_chain
-
+def test_dissect_transcripts_match_scan_exact(spark, transcripts):
+    """Every transcript row parses to what the reference scanner and the
+    type rules give."""
     tok = ('level=%{level} caller=%{caller} msg="%{msg}" '
            'latency_ms=%{latency|integer}')
-    outs = []
-    for engine in ("jvm", "pandas"):
-        stages = build_chain([
-            {"dissect": {"tokenizer": tok, "field": "text",
-                         "target_prefix": "p", "ignore_failure": True,
-                         "engine": engine}},
-        ])
-        df = apply_chain(transcripts, stages)
-        outs.append(
-            df.select("conv_id", "turn_idx", "p.*")
-            .orderBy("conv_id", "turn_idx").toPandas()
-        )
-    pd.testing.assert_frame_equal(outs[0], outs[1])
+    texts = [r["text"] for r in transcripts.select("text").collect()]
+    got = run_stage(spark, tok, texts)
+    assert not all(failed for _, failed in got)
+    assert got == [(expected(tok, s), expected(tok, s) is None) for s in texts]
 
 
 def test_crash_recovery_rollback(spark, transcripts, tmp_path):
@@ -215,47 +205,21 @@ def test_crash_recovery_rollback(spark, transcripts, tmp_path):
 
 
 def test_dissect_jvm_append_parity(spark):
-    """JVM fast path now covers append (+key / +key/N ordinal) — must equal
-    the pandas path on append, greedy padding, and fixed-length."""
-    from beats_spark.processors import apply_chain, build_chain
-
-    rows = [
-        ("john smith BOB 12 X",),
-        ("a b C 7 Y",),
-        ("nomatch",),
-    ]
-    df = spark.createDataFrame(rows, "text string")
+    """Append (+key / +key/N ordinal), typed and trailing keys equal the
+    reference scanner."""
+    texts = ["john smith BOB 12 X", "a b C 7 Y", "nomatch"]
     tok = "%{+name} %{+name} %{flag} %{n|integer} %{tail}"
-    outs = []
-    for engine in ("jvm", "pandas"):
-        stages = build_chain([
-            {"dissect": {"tokenizer": tok, "field": "text",
-                         "target_prefix": "p", "ignore_failure": True,
-                         "engine": engine}},
-        ])
-        out = apply_chain(df, stages)
-        outs.append(out.select("text", "p.*").orderBy("text").toPandas())
-    pd.testing.assert_frame_equal(outs[0], outs[1])
-    got = outs[0].set_index("text")
-    assert got.loc["john smith BOB 12 X", "name"] == "john smith"
-    assert got.loc["john smith BOB 12 X", "n"] == 12
+    got = run_stage(spark, tok, texts)
+    assert got == [(expected(tok, s), expected(tok, s) is None) for s in texts]
+    assert got[0][0] == {"name": "john smith", "flag": "BOB", "n": 12,
+                         "tail": "X"}
 
 
 def test_dissect_jvm_append_ordinal_parity(spark):
-    from beats_spark.processors import apply_chain, build_chain
-
-    df = spark.createDataFrame([("b a",)], "text string")
     tok = "%{+name/2} %{+name/1}"
-    outs = []
-    for engine in ("jvm", "pandas"):
-        stages = build_chain([
-            {"dissect": {"tokenizer": tok, "field": "text",
-                         "target_prefix": "p", "ignore_failure": True,
-                         "engine": engine}},
-        ])
-        outs.append(apply_chain(df, stages).select("p.name").toPandas())
-    pd.testing.assert_frame_equal(outs[0], outs[1])
-    assert outs[0]["name"][0] == "a b"  # ordinal reorders the appends
+    [(got, _)] = run_stage(spark, tok, ["b a"])
+    assert got == expected(tok, "b a")
+    assert got == {"name": "a b"}  # ordinal reorders the appends
 
 
 def test_cluster_by_orders_files(spark, transcripts, tmp_path):

@@ -3,7 +3,7 @@
 These pin the Catalyst properties the scale story depends on:
 - predicate pushdown + column pruning reach the parquet scan,
 - enrich compiles to a broadcast hash join (map-side, no shuffle of facts),
-- the JVM dissect path keeps the whole pipeline out of Python,
+- dissect, in every configuration, keeps the pipeline out of Python,
 - the condition language compiles into ONE filter (pushable),
 - salted repartition spreads the hot conversation.
 """
@@ -80,16 +80,23 @@ def test_jvm_pipeline_has_no_python(spark, tdir):
     assert "*(1)" in plan  # the WholeStageCodegen stage marker
 
 
-def test_pandas_dissect_is_arrow_not_rowwise(spark, tdir):
+@pytest.mark.parametrize("tokenizer,extra", [
+    ("%{a} %{b}", {}),
+    ("%{a} %{b->} %{+c/2} %{+c/1} %{d#2}", {}),
+    ("%{a},%{b}", {"trim_values": "all", "trim_chars": " []"}),
+    ("%{ip|ip} %{rest}", {}),
+    ("%{b|boolean} %{rest}", {}),
+    ("%{?k}=%{&k}", {}),
+], ids=["static", "append_ordinal", "trim", "ip", "boolean", "dynamic"])
+def test_dissect_plan_has_no_python(spark, tdir, tokenizer, extra):
     from beats_spark.processors import build_stage
 
     st = build_stage("dissect", {
-        "tokenizer": "%{a} %{b->} %{+c} %{+c}", "field": "text",
-        "target_prefix": "p", "ignore_failure": True, "engine": "pandas",
+        "tokenizer": tokenizer, "field": "text", "target_prefix": "p",
+        "ignore_failure": True, **extra,
     })
     plan = plan_of(st.apply(spark.read.parquet(tdir)))
-    assert "ArrowEvalPython" in plan       # vectorized pandas UDF
-    assert "BatchEvalPython" not in plan   # never row-at-a-time Python
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_salting_spreads_hot_conversation(spark, tdir):

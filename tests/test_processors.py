@@ -807,14 +807,13 @@ def test_decompress_gzip_string_column(spark):
     assert out["plain"] == "inner text"
 
 
-def test_dissect_pandas_int_invalid_values_null_not_crash(spark):
+def test_dissect_int_invalid_values_null_not_crash(spark):
     """Non-integral / out-of-range numeric strings yield null (Go ParseInt
-    failure), never a task-killing astype error."""
+    failure), never a task-killing error."""
     out = run(
         spark, [("v=3.5",), ("v=99999999999",), ("v=7",)], "text string",
         [{"dissect": {"tokenizer": "v=%{n|integer}", "field": "text",
-                      "target_prefix": "p", "ignore_failure": True,
-                      "engine": "pandas"}}],
+                      "target_prefix": "p", "ignore_failure": True}}],
     ).orderBy("text").collect()
     by = {r["text"]: r["p"]["n"] for r in out}
     assert by["v=3.5"] is None and by["v=99999999999"] is None
