@@ -1,11 +1,49 @@
-"""Dotted-path column helpers — the columnar analogue of Beats' MapStr.
+"""Dotted-path field access — the columnar analogue of Beats' MapStr.
 
 The reference mutates row documents in place with dotted-path resolution
 (common.MapStr: mapFind at libbeat/common/mapstr.go:444-482, Put/GetValue/
-Delete at mapstr.go:124-201, AddTags at mapstr.go:377-412). Here a "path"
-addresses nested StructType columns and every "mutation" is a projection the
-optimizer can see through: set = struct rebuild via Column.withField, delete
-= Column.dropFields, tags = array_union. All plan-time; nothing per-row.
+Delete at mapstr.go:124-201, AddTags at mapstr.go:377-412) and runs a
+processor's field rules one after another on that document
+(processor.go:189-202). Here a "path" addresses nested StructType columns
+and every mutation is a projection the optimizer can see through: set =
+struct rebuild via Column.withField, delete = Column.dropFields. All
+plan-time; nothing per-row.
+
+Every field write goes through one write set, :class:`Fields`::
+
+    f = Fields(df)
+    f.set("b", f.get("a"))       # a later read sees the earlier set
+    f.set("c", f.get("b"))
+    df = f.apply(where=cond)
+
+Its contract is libbeat's sequential ``Put``/``GetValue`` on each event,
+resolved at build time:
+
+- sets apply in call order; a set below an earlier whole-value set merges
+  into that value, and a set of an ancestor replaces the earlier sets below
+  it (their values still count for the NULL-parent rule below);
+- ``get``/``has`` see pending sets first — the latest value, a field of a
+  pending ancestor, or the merged struct of pending descendants — and then
+  the frame; a missing path reads as NULL;
+- a NULL parent stays NULL on rows where every value written under it is
+  NULL, and a fresh root is NULL where all of its leaves are NULL (Put only
+  creates intermediates for events a processor actually wrote);
+- ``set(p, v, where=w)`` puts only on rows where ``w`` holds, and
+  ``apply(where=c)`` keeps every old value on rows where ``c`` is false or
+  NULL.
+
+Cost: one ``apply`` is at most one staging projection, one projection that
+writes every touched root, and one drop, whatever the path count or
+overlap. Values placed inside a struct are staged as temp columns, so the
+leaf write and the NULL guards reference an attribute instead of re-inlining
+a large expression (which blows whole-stage codegen). A ``get`` or ``has``
+that reads through a pending whole value, or a ``get`` of such a value with
+sets below it, costs one analysis to learn that value's type.
+
+Divergences, because a column has one type for every row: a scalar on the
+path of a nested set is replaced by a struct (Put would fail; this keeps
+the plan total), and under ``where`` a set that changes a path's type needs
+an old value of the new type (see add_tags on a string ``tags``).
 """
 
 from __future__ import annotations
@@ -29,12 +67,7 @@ def col_path(path: str) -> Column:
 
 def has_path(schema: T.StructType, path: str) -> bool:
     """True if the dotted path resolves to a field in the schema."""
-    cur: T.DataType = schema
-    for part in split_path(path):
-        if not isinstance(cur, T.StructType) or part not in cur.fieldNames():
-            return False
-        cur = cur[part].dataType
-    return True
+    return path_type(schema, path) is not None
 
 
 def path_type(schema: T.StructType, path: str) -> T.DataType | None:
@@ -53,114 +86,17 @@ def get_path(df: DataFrame, path: str, default: Column | None = None) -> Column:
     return default if default is not None else F.lit(None)
 
 
-def _fresh_struct(parts: list[str], value: Column) -> Column:
-    out = value
-    for p in reversed(parts):
-        out = F.struct(out.alias(p))
-    return out
+def _field(base: Column | None, btype: T.DataType | None,
+           name: str) -> tuple[Column | None, T.DataType | None]:
+    if isinstance(btype, T.StructType) and name in btype.fieldNames():
+        return base.getField(name), btype[name].dataType
+    return None, None
 
 
-def _null_struct(t: T.StructType) -> Column:
-    """A non-NULL struct value whose every field is NULL — the writable
-    stand-in for a per-row NULL struct (withField on a NULL struct returns
-    NULL, silently losing the set; MapStr.Put creates intermediates for
-    every event, mapstr.go:462-478)."""
-    return F.struct(
-        *[F.lit(None).cast(f.dataType).alias(f.name) for f in t.fields]
-    )
-
-
-def _writable(parent: Column, t: T.StructType) -> Column:
-    return F.when(parent.isNotNull(), parent).otherwise(_null_struct(t))
-
-
-def _set_nested(parent: Column, parent_type: T.StructType, parts: list[str], value: Column) -> Column:
-    orig = parent
-    parent = _writable(parent, parent_type)
-    name = parts[0]
-    if len(parts) == 1:
-        out = parent.withField(_quote(name), value)
-    else:
-        child_t = parent_type[name].dataType if name in parent_type.fieldNames() else None
-        if isinstance(child_t, T.StructType):
-            out = parent.withField(
-                _quote(name), _set_nested(parent.getField(name), child_t, parts[1:], value)
-            )
-        else:
-            # child missing (or a scalar being overwritten): build the chain
-            # fresh, matching MapStr.Put which creates intermediate maps
-            # (mapstr.go:462-478).
-            out = parent.withField(_quote(name), _fresh_struct(parts[1:], value))
-    # Conditional processors write when(cond, v).otherwise(old NULL); rows the
-    # processor left untouched must keep parent=NULL instead of flipping to an
-    # all-null struct (MapStr.Put only creates intermediates for events the
-    # processor actually ran on).
-    return F.when(orig.isNull() & value.isNull(), F.lit(None)).otherwise(out)
-
-
-def _tmp_name(df: DataFrame) -> str:
-    """Staging-column name guaranteed absent from df (a user column named
-    __with_path_value__ must survive a with_path call untouched). Compared
-    case-insensitively: Spark resolution is case-insensitive by default, so
-    withColumn would REPLACE a column differing only in case."""
-    name, i = "__with_path_value__", 0
-    existing = {c.lower() for c in df.columns}
-    while name.lower() in existing:
-        i += 1
-        name = f"__with_path_value_{i}__"
-    return name
-
-
-def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
-    """Set/overwrite a (possibly nested) field; creates intermediates."""
-    parts = split_path(path)
-    root = parts[0]
-    if len(parts) == 1:
-        return df.withColumn(root, value)
-    if root in df.schema.fieldNames():
-        root_t = df.schema[root].dataType
-        if isinstance(root_t, T.StructType):
-            # Stage the value as a temp column first: _set_nested references
-            # it at every nesting level (leaf write + NULL-restore guard), and
-            # inlining a large expression tree that many times blows up
-            # codegen. As an attribute reference it stays cheap, and
-            # CollapseProject (SPARK-36718) won't re-inline an expensive
-            # multi-referenced alias.
-            tmp = _tmp_name(df)
-            staged = df.withColumn(tmp, value)
-            out = staged.withColumn(
-                root,
-                _set_nested(F.col(_quote(root)), root_t, parts[1:], F.col(tmp)),
-            )
-            return out.drop(tmp)
-        # scalar root being turned into an object — MapStr.Put would error;
-        # we overwrite (documented divergence, keeps the plan total).
-    # Fresh root: keep it NULL on rows the processor left untouched (leaf
-    # value NULL) instead of materializing an all-null struct — same
-    # MapStr.Put fidelity as above, same staging trick for codegen size.
-    tmp = _tmp_name(df)
-    staged = df.withColumn(tmp, value)
-    vref = F.col(tmp)
-    out = staged.withColumn(
-        root,
-        F.when(vref.isNull(), F.lit(None))
-        .otherwise(_fresh_struct(parts[1:], vref)),
-    )
-    return out.drop(tmp)
-
-
-def _fresh_tree(tree: dict) -> Column:
-    return F.struct(*[
-        (_fresh_tree(sub) if isinstance(sub, dict) else sub).alias(name)
-        for name, sub in tree.items()
-    ])
-
-
-def _leaf_values(tree: dict) -> list[Column]:
-    out: list[Column] = []
-    for sub in tree.values():
-        out.extend(_leaf_values(sub) if isinstance(sub, dict) else [sub])
-    return out
+def _keep(where: Column, new: Column, old: Column | None) -> Column:
+    """``new`` where ``where`` holds, else ``old`` (NULL when absent)."""
+    out = F.when(where, new)
+    return out if old is None else out.otherwise(old)
 
 
 def _all_null(values: list[Column]) -> Column:
@@ -170,124 +106,171 @@ def _all_null(values: list[Column]) -> Column:
     return cond
 
 
-def _set_tree(parent: Column, parent_type: T.StructType, tree: dict) -> Column:
-    """Multi-leaf generalization of _set_nested: writes EVERY (sub)field of
-    ``tree`` into ``parent`` in one pass, with the same per-level NULL
-    restore (a NULL parent stays NULL only when every value written at or
-    below that level is NULL — exactly what sequential _set_nested calls
-    converge to)."""
-    orig = parent
-    out = _writable(parent, parent_type)
-    for name, sub in tree.items():
-        if isinstance(sub, dict):
-            child_t = (parent_type[name].dataType
-                       if name in parent_type.fieldNames() else None)
-            if isinstance(child_t, T.StructType):
-                v = _set_tree(parent.getField(name), child_t, sub)
+class _Put:
+    """A whole-value write; later writes below it merge into it. ``shadow``
+    holds the values of the writes it replaced: they no longer show, but
+    they still created this path's ancestors on the rows they were non-NULL
+    (the NULL-parent rule counts every value written under a parent)."""
+
+    __slots__ = ("value", "subs", "shadow", "dtype")
+
+    def __init__(self, value: Column, shadow: list[Column] = ()):
+        self.value = value
+        self.subs: dict = {}
+        self.shadow = list(shadow)
+        self.dtype: T.DataType | None = None
+
+
+def _leaves(ent) -> list[Column]:
+    if isinstance(ent, _Put):
+        return [ent.value, *ent.shadow, *_leaves(ent.subs)]
+    return [v for sub in ent.values() for v in _leaves(sub)]
+
+
+class Fields:
+    """A write set over ``df`` with sequential per-event semantics (see the
+    module docstring). Pending writes form a tree: a ``dict`` node merges
+    its children into the frame's value at that path, a ``_Put`` replaces
+    the value and merges its ``subs`` into the new one."""
+
+    def __init__(self, df: DataFrame):
+        self.df = df
+        self._roots: dict = {}
+
+    def set(self, path: str, value: Column, where: Column | None = None) -> "Fields":
+        if where is not None:
+            value = _keep(where, value, self._read(path))
+        *parents, leaf = split_path(path)
+        tree = self._roots
+        for p in parents:
+            ent = tree.setdefault(p, {})
+            tree = ent.subs if isinstance(ent, _Put) else ent
+        old = tree.get(leaf)
+        tree[leaf] = _Put(value, _leaves(old) if old is not None else ())
+        return self
+
+    def get(self, path: str) -> Column:
+        out = self._read(path)
+        return out if out is not None else F.lit(None)
+
+    def has(self, path: str) -> bool:
+        ent, _, btype = self._find(split_path(path))
+        return ent is not None or btype is not None
+
+    def apply(self, where: Column | None = None) -> DataFrame:
+        df = self.df
+        if not self._roots:
+            return df
+        taken = {c.lower() for c in df.columns} | {r.lower() for r in self._roots}
+        temps: dict[str, Column] = {}
+        typed: dict[str, _Put] = {}
+
+        def stage(v: Column) -> str:
+            name = f"__wp{len(temps)}__"
+            while name.lower() in taken:
+                name = "_" + name
+            temps[name] = v
+            return name
+
+        def prep(ent, path: str, nested: bool):
+            # guard every value by `where` against the frame's old value,
+            # and stage the ones that land inside a struct
+            if not isinstance(ent, _Put):
+                return {k: prep(s, f"{path}.{k}", True) for k, s in ent.items()}
+            v = ent.value
+            if where is not None:
+                v = _keep(where, v, col_path(path) if has_path(df.schema, path) else None)
+            if not (nested or ent.subs):
+                return _Put(v)
+            # a root's shadow has no ancestor to create: dropped
+            shadow = [F.when(where, c) if where is not None else c
+                      for c in (ent.shadow if nested else [])]
+            name = stage(v)
+            out = _Put(F.col(name), [F.col(stage(c)) for c in shadow])
+            if ent.subs:  # merged into: _build needs its type
+                typed[name] = out
+                out.subs = {k: prep(s, f"{path}.{k}", True) for k, s in ent.subs.items()}
+            return out
+
+        roots = {r: prep(ent, r, False) for r, ent in self._roots.items()}
+        if temps:
+            df = df.withColumns(temps)
+        for name, put in typed.items():
+            put.dtype = df.schema[name].dataType
+        df = df.withColumns({r: self._build(ent, *self._find([r])[1:])[0]
+                             for r, ent in roots.items()})
+        return df.drop(*temps) if temps else df
+
+    # -- resolution ---------------------------------------------------------
+
+    def _read(self, path: str) -> Column | None:
+        """``get``, but None where the path is missing."""
+        ent, base, btype = self._find(split_path(path))
+        return self._build(ent, base, btype)[0] if ent is not None else base
+
+    def _dtype(self, put: _Put) -> T.DataType:
+        if put.dtype is None:
+            put.dtype = self.df.select(put.value).schema[0].dataType
+        return put.dtype
+
+    def _find(self, parts: list[str]):
+        """(pending entry at the path or None, the value the path holds
+        without that entry or None, its type or None)."""
+        tree, btype = self._roots, self.df.schema
+        base, below = None, []  # nearest pending whole value above, path under it
+        ent = None
+        for i, name in enumerate(parts):
+            ent = tree.get(name) if tree is not None else None
+            btype = (btype[name].dataType if isinstance(btype, T.StructType)
+                     and name in btype.fieldNames() else None)
+            below.append(name)
+            if isinstance(ent, _Put) and i < len(parts) - 1:
+                base, below, btype, tree = ent.value, [], self._dtype(ent), ent.subs
             else:
-                v = _fresh_tree(sub)
+                tree = ent if isinstance(ent, dict) else None
+        if btype is None:
+            return ent, None, None
+        if base is None:
+            return ent, col_path(".".join(below)), btype
+        for name in below:
+            base = base.getField(name)
+        return ent, base, btype
+
+    def _build(self, ent, base: Column | None,
+               btype: T.DataType | None) -> tuple[Column, list[Column]]:
+        """Column for a pending entry over ``base``, plus the values written
+        at or below it (for the NULL-parent guard of its ancestors)."""
+        put = ent if isinstance(ent, _Put) else None
+        if put is not None:
+            if not put.subs:
+                return put.value, [put.value, *put.shadow]
+            base, btype, ent = put.value, self._dtype(put), put.subs
+        fields, leaves = [], []
+        for name, sub in ent.items():
+            if isinstance(sub, _Put) and not sub.subs:  # needs no base
+                v, sub_leaves = self._build(sub, None, None)
+            else:
+                v, sub_leaves = self._build(sub, *_field(base, btype, name))
+            fields.append((name, v))
+            leaves += sub_leaves
+        if not isinstance(btype, T.StructType):
+            out = F.when(~_all_null(leaves), F.struct(*[v.alias(n) for n, v in fields]))
         else:
-            v = sub
-        out = out.withField(_quote(name), v)
-    return F.when(orig.isNull() & _all_null(_leaf_values(tree)),
-                  F.lit(None)).otherwise(out)
+            # withField on a NULL struct returns NULL: write into an all-NULL
+            # stand-in, then restore NULL where nothing non-NULL was written
+            out = F.coalesce(base, F.struct(*[
+                F.lit(None).cast(f.dataType).alias(f.name) for f in btype.fields]))
+            for name, v in fields:
+                out = out.withField(_quote(name), v)
+            out = F.when(~(base.isNull() & _all_null(leaves)), out)
+            if put is not None:
+                leaves = [put.value, *leaves]
+        return out, leaves + (put.shadow if put is not None else [])
 
 
-def with_paths(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    """Set several (possibly nested) fields with a BOUNDED number of eager
-    plan analyses: one staging projection for all values, one projection
-    writing every touched root, one drop — instead of with_path's three
-    eager ops PER path (measured ~0.15 s of driver time each on plans
-    carrying large expression trees; user_agent writes 7 paths).
-
-    Semantics notes:
-    - values are resolved against the INPUT frame (snapshot semantics); a
-      value that must read another entry's target should substitute that
-      entry's VALUE expression instead (see copy_fields' chaining) — the
-      sequential loop's read-your-writes by NAME is not reproduced;
-    - when one update path is a segment-prefix of another (inherently
-      order-dependent) this falls back to exactly the sequential loop;
-    - a subtree written with all-NULL values materializes as a struct of
-      NULLs when a sibling value is non-NULL (the sequential loop's result
-      for that corner depended on write ORDER; this is the normalized,
-      order-independent form). A root whose every written value is NULL
-      stays NULL, same as with_path."""
-    if len(updates) <= 1:
-        for p, v in updates.items():
-            df = with_path(df, p, v)
-        return df
-    # build one {field: value-or-subtree} tree per root column; bail to the
-    # sequential loop on prefix-overlapping paths
-    trees: dict[str, object] = {}
-    for path, value in updates.items():
-        parts = split_path(path)
-        if len(parts) == 1:
-            if parts[0] in trees:
-                return _with_paths_seq(df, updates)
-            trees[parts[0]] = value
-            continue
-        node = trees.setdefault(parts[0], {})
-        if not isinstance(node, dict):
-            return _with_paths_seq(df, updates)
-        for p in parts[1:-1]:
-            nxt = node.setdefault(p, {})
-            if not isinstance(nxt, dict):
-                return _with_paths_seq(df, updates)
-            node = nxt
-        if parts[-1] in node:
-            return _with_paths_seq(df, updates)
-        node[parts[-1]] = value
-
-    # stage every leaf value once (one projection), then write roots from
-    # cheap attribute refs (same codegen-size rationale as with_path).
-    # Collision set includes the UPDATE TARGET roots: a user column
-    # literally named __wpN__ being written must not be claimed as a temp
-    # and then dropped (with_path's _tmp_name hardening, kept here)
-    existing = {c.lower() for c in df.columns} | {r.lower() for r in trees}
-    temps: dict[str, Column] = {}
-    ref_trees: dict[str, object] = {}
-    i = 0
-
-    def stage(value: Column) -> Column:
-        nonlocal i
-        while f"__wp{i}__" in existing:
-            i += 1
-        name = f"__wp{i}__"
-        i += 1
-        temps[name] = value
-        return F.col(name)
-
-    def refit(tree):
-        if isinstance(tree, dict):
-            return {k: refit(v) for k, v in tree.items()}
-        return stage(tree)
-
-    for root, tree in trees.items():
-        ref_trees[root] = refit(tree)
-    staged = df.withColumns(temps)
-
-    root_cols: dict[str, Column] = {}
-    for root, tree in ref_trees.items():
-        if not isinstance(tree, dict):
-            root_cols[root] = tree
-            continue
-        root_t = (df.schema[root].dataType
-                  if root in df.schema.fieldNames() else None)
-        if isinstance(root_t, T.StructType):
-            root_cols[root] = _set_tree(F.col(_quote(root)), root_t, tree)
-        else:
-            # fresh (or scalar-overwritten) root: NULL when every written
-            # value is NULL — the with_path fresh-root guard, multi-leaf
-            root_cols[root] = F.when(
-                _all_null(_leaf_values(tree)), F.lit(None)
-            ).otherwise(_fresh_tree(tree))
-    return staged.withColumns(root_cols).drop(*temps)
-
-
-def _with_paths_seq(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    for p, v in updates.items():
-        df = with_path(df, p, v)
-    return df
+def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
+    """Set/overwrite one (possibly nested) field; creates intermediates."""
+    return Fields(df).set(path, value).apply()
 
 
 def drop_path(df: DataFrame, path: str) -> DataFrame:
@@ -296,15 +279,6 @@ def drop_path(df: DataFrame, path: str) -> DataFrame:
     if not has_path(df.schema, path):
         return df
     parts = split_path(path)
-
-    def type_at(ps: list[str]) -> T.DataType | None:
-        cur: T.DataType = df.schema
-        for p in ps:
-            if not isinstance(cur, T.StructType) or p not in cur.fieldNames():
-                return None
-            cur = cur[p].dataType
-        return cur
-
     # a struct must never be left EMPTY (Spark refuses with
     # CANNOT_DROP_ALL_FIELDS): when the immediate parent holds only this
     # field, drop the parent instead — recursively, the columnar analogue
@@ -312,7 +286,7 @@ def drop_path(df: DataFrame, path: str) -> DataFrame:
     # system.syslog.timestamp when it is syslog's last field removes
     # system.syslog; if syslog was system's last field, system goes too)
     while len(parts) > 1:
-        parent_t = type_at(parts[:-1])
+        parent_t = path_type(df.schema, ".".join(parts[:-1]))
         if isinstance(parent_t, T.StructType) and len(parent_t.fields) == 1:
             parts = parts[:-1]
             continue
@@ -330,12 +304,12 @@ def rename_path(df: DataFrame, src: str, dst: str) -> DataFrame:
     return drop_path(df, src)
 
 
-def tags_expr(df: DataFrame, tags: list[str], target: str = "tags") -> Column:
+def tags_expr(f: Fields, tags: list[str], target: str = "tags") -> Column:
     """Expression appending tags to an array field, creating it if needed
     (MapStr.AddTagsWithKey, mapstr.go:390-412; de-dup preserving order is
     NOT done by the reference, so plain concat)."""
-    existing = get_path(df, target)
-    existing_t = path_type(df.schema, target)
+    existing = f.get(target)
+    existing_t = path_type(f.df.schema, target)
     if isinstance(existing_t, T.ArrayType):
         base = F.coalesce(existing, F.array().cast("array<string>"))
     elif isinstance(existing_t, T.StringType):
@@ -347,35 +321,22 @@ def tags_expr(df: DataFrame, tags: list[str], target: str = "tags") -> Column:
 
 
 def add_tags(df: DataFrame, tags: list[str], target: str = "tags") -> DataFrame:
-    return with_path(df, target, tags_expr(df, tags, target))
+    return with_path(df, target, tags_expr(Fields(df), tags, target))
 
 
-def append_flag(df: DataFrame, flag: str, cond: Column | None = None,
-                path: str = "log.flags") -> DataFrame:
-    """Append a value to log.flags (beat.FlagField semantics), optionally
-    only on rows matching ``cond``; used for *_parsing_error / truncated."""
-    existing = get_path(df, path)
-    existing_t = path_type(df.schema, path)
-    if isinstance(existing_t, T.ArrayType):
-        base = F.coalesce(existing, F.array().cast("array<string>"))
-    else:
-        base = F.array().cast("array<string>")
-    appended = F.array_union(base, F.array(F.lit(flag)))
-    if cond is not None:
-        new_val = F.when(cond, appended).otherwise(
-            existing if existing_t is not None else F.lit(None).cast("array<string>")
-        )
-    else:
-        new_val = appended
-    return with_path(df, path, new_val)
+def append_flag(f: Fields, flag: str, cond: Column | None = None,
+                path: str = "log.flags") -> None:
+    """Append a value to log.flags (beat.FlagField semantics) in the write
+    set ``f``, optionally only on rows matching ``cond``; used for
+    *_parsing_error / truncated."""
+    base = F.array().cast("array<string>")
+    if isinstance(path_type(f.df.schema, path), T.ArrayType):
+        base = F.coalesce(f.get(path), base)
+    f.set(path, F.array_union(base, F.array(F.lit(flag))), where=cond)
 
 
-def set_error_message(df: DataFrame, failed: Column, message: str) -> DataFrame:
+def set_error_message(f: Fields, failed: Column, message: str) -> None:
     """Set ``error.message`` on failing rows while PRESERVING an earlier
     processor's message on rows that succeeded (the shared
     grok/dissect/syslog ``ignore_failure=False`` idiom)."""
-    prev = (get_path(df, "error.message")
-            if has_path(df.schema, "error.message")
-            else F.lit(None).cast("string"))
-    return with_path(df, "error.message",
-                     F.when(failed, F.lit(message)).otherwise(prev))
+    f.set("error.message", F.lit(message), where=failed)

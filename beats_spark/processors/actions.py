@@ -11,8 +11,8 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
-from beats_spark.event import add_tags as _add_tags
-from beats_spark.event import append_flag, get_path, has_path, path_type
+from beats_spark.event import (Fields, append_flag, get_path, has_path,
+                               path_type, rename_path, tags_expr, with_path)
 from beats_spark.processors.base import Stage, register
 
 # fields the reference refuses to drop (actions/drop_fields.go:24) mapped to
@@ -39,12 +39,9 @@ def add_fields(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target", "fields")
 
     class AddFields(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            flat = _flatten(fields)
-            return {
-                (f"{target}.{path}" if target else path): F.lit(v)
-                for path, v in flat.items()
-            }
+        def updates(self, f: Fields) -> None:
+            for path, v in _flatten(fields).items():
+                f.set(f"{target}.{path}" if target else path, F.lit(v))
 
     return AddFields()
 
@@ -57,14 +54,15 @@ def add_labels(cfg: dict[str, Any]) -> Stage:
     flat = _flatten(cfg.get("labels", {}))
 
     class AddLabels(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if isinstance(path_type(df.schema, "labels"), T.StructType):
-                col = get_path(df, "labels")
-                for k, v in flat.items():
-                    col = col.withField("`" + k.replace("`", "``") + "`", F.lit(v))
-            else:
-                col = F.struct(*[F.lit(v).alias(k) for k, v in flat.items()])
-            return {"labels": col}
+        def updates(self, f: Fields) -> None:
+            # a dotted key is ONE literal field name, so it is written into
+            # a whole ``labels`` value rather than through a dotted path
+            old = path_type(f.df.schema, "labels")
+            names = old.fieldNames() if isinstance(old, T.StructType) else []
+            f.set("labels", F.struct(
+                *[(F.lit(flat[n]) if n in flat else f.get("labels").getField(n)).alias(n)
+                  for n in names],
+                *[F.lit(v).alias(k) for k, v in flat.items() if k not in names]))
 
     return AddLabels()
 
@@ -77,23 +75,15 @@ def add_tags_proc(cfg: dict[str, Any]) -> Stage:
 
     class AddTags(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            if cond is None:
-                return _add_tags(df, tags, target)
-            from beats_spark.event import path_type, tags_expr, with_path
-            from pyspark.sql import types as T
-
-            appended = tags_expr(df, tags, target)
-            t = path_type(df.schema, target)
-            if isinstance(t, T.ArrayType):
+            if cond is not None and isinstance(path_type(df.schema, target), T.StringType):
+                # the column becomes array<string> on every row, so rows the
+                # condition skips hold their scalar wrapped (mapstr.go:399-403)
                 old = get_path(df, target)
-            elif isinstance(t, T.StringType):
-                # both when-branches must be array<string>: wrap the scalar
-                # like the unconditional path does (mapstr.go:399-403)
-                old = F.when(get_path(df, target).isNotNull(),
-                             F.array(get_path(df, target)))
-            else:
-                old = F.lit(None).cast("array<string>")
-            return with_path(df, target, F.when(cond, appended).otherwise(old))
+                df = with_path(df, target, F.when(old.isNotNull(), F.array(old)))
+            return super().apply(df, cond)
+
+        def updates(self, f: Fields) -> None:
+            f.set(target, tags_expr(f, tags, target))
 
     return AddTags()
 
@@ -109,7 +99,6 @@ def rename(cfg: dict[str, Any]) -> Stage:
 
     class Rename(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import rename_path, with_path
             for p in pairs:
                 src, dst = p["from"], p["to"]
                 if not has_path(df.schema, src):
@@ -127,8 +116,8 @@ def rename(cfg: dict[str, Any]) -> Stage:
                 if cond is None:
                     df = rename_path(df, src, dst)
                 else:
-                    df = with_path(df, dst, F.when(cond, get_path(df, src)))
-                    df = with_path(df, src, F.when(cond, F.lit(None)).otherwise(get_path(df, src)))
+                    df = (Fields(df).set(dst, get_path(df, src))
+                          .set(src, F.lit(None)).apply(where=cond))
             return df
 
     return Rename()
@@ -142,27 +131,16 @@ def copy_fields(cfg: dict[str, Any]) -> Stage:
     fail_on_error = cfg.get("fail_on_error", True)
 
     class CopyFields(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            # the reference copies pairs SEQUENTIALLY per event, so a later
-            # pair may read an earlier pair's target; updates() values are
-            # resolved against the INPUT frame (with_paths snapshot
-            # semantics), so chain by substituting the earlier pair's
-            # VALUE expression instead of a by-name read
-            out: dict[str, Column] = {}
+        def updates(self, f: Fields) -> None:
             for p in pairs:
                 src, dst = p["from"], p["to"]
-                if src in out:
-                    v = out[src]
-                elif has_path(df.schema, src):
-                    v = get_path(df, src)
-                else:
+                if not f.has(src):
                     if ignore_missing or not fail_on_error:
                         continue
                     raise ValueError(f"copy_fields: missing source field {src!r}")
-                if dst not in out and has_path(df.schema, dst) and fail_on_error:
+                if fail_on_error and has_path(f.df.schema, dst):
                     raise ValueError(f"copy_fields: target {dst!r} already exists")
-                out[dst] = v
-            return out
+                f.set(dst, f.get(src))
 
     return CopyFields()
 
@@ -259,18 +237,15 @@ def replace(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Replace(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out: dict[str, Column] = {}
+        def updates(self, f: Fields) -> None:
             for r in rules:
                 fld = r["field"]
-                if not has_path(df.schema, fld):
+                if not f.has(fld):
                     if ignore_missing:
                         continue
                     raise ValueError(f"replace: missing field {fld!r}")
-                out[fld] = F.regexp_replace(
-                    get_path(df, fld), r["pattern"], r.get("replacement", "")
-                )
-            return out
+                f.set(fld, F.regexp_replace(
+                    f.get(fld), r["pattern"], r.get("replacement", "")))
 
     return Replace()
 
@@ -287,42 +262,27 @@ def truncate_fields(cfg: dict[str, Any]) -> Stage:
         raise ValueError("truncate_fields: exactly one of max_characters/max_bytes")
 
     class Truncate(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import with_path
-            # conditions must be evaluated against PRE-truncation values, so
-            # the flag is materialized into a temp column before mutation
+        def updates(self, f: Fields) -> None:
             any_trunc = F.lit(False)
-            plans = []
             for fld in fields:
-                if not has_path(df.schema, fld):
+                if not f.has(fld):
                     continue
-                col = get_path(df, fld)
+                col = f.get(fld)
                 if max_chars is not None:
                     clipped = F.substring(col, 1, int(max_chars))
                     did = F.length(col) > int(max_chars)
                 else:
+                    # clip the UTF-8 bytes; Spark's decode replaces a
+                    # trailing partial sequence with U+FFFD, so strip those
                     b = F.encode(col, "UTF-8")
-                    # clip to max_bytes then walk back over a split UTF-8
-                    # sequence by dropping trailing continuation bytes
-                    raw = F.substring(b, 1, int(max_bytes))
-                    clipped = F.expr(
-                        f"decode(substring(encode({'`'+fld.replace('.','`.`')+'`'}, 'UTF-8'), 1, {int(max_bytes)}), 'UTF-8')"
-                    )
-                    # Spark's decode replaces a trailing partial sequence with
-                    # U+FFFD; strip any trailing replacement chars
-                    clipped = F.regexp_replace(clipped, "�+$", "")
+                    clipped = F.regexp_replace(
+                        F.decode(F.substring(b, 1, int(max_bytes)), "UTF-8"),
+                        "\ufffd+$", "")
                     did = F.length(b) > int(max_bytes)
-                    _ = raw
                 did = F.coalesce(did, F.lit(False))
-                if cond is not None:
-                    did = cond & did
-                plans.append((fld, F.when(did, clipped).otherwise(col)))
+                f.set(fld, clipped, where=did)
                 any_trunc = any_trunc | did
-            df = df.withColumn("__trunc_flag", any_trunc)
-            for fld, new_val in plans:
-                df = with_path(df, fld, new_val)
-            df = append_flag(df, "truncated", cond=F.col("__trunc_flag"))
-            return df.drop("__trunc_flag")
+            append_flag(f, "truncated", cond=any_trunc)
 
     return Truncate()
 
@@ -337,14 +297,14 @@ def extract_field(cfg: dict[str, Any]) -> Stage:
     target = cfg.get("target") or fld
 
     class ExtractField(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
+        def updates(self, f: Fields) -> None:
             import re as _re
 
             # the reference splits on a LITERAL separator (strings.Split);
             # F.split takes a Java regex, so metacharacters ('.', '|') must
             # be escaped or they split on every character
-            parts = F.split(get_path(df, fld), _re.escape(sep), -1)
-            return {target: F.element_at(parts, idx + 1)}
+            parts = F.split(f.get(fld), _re.escape(sep), -1)
+            f.set(target, F.element_at(parts, idx + 1))
 
     return ExtractField()
 
@@ -357,8 +317,8 @@ def decode_base64_field(cfg: dict[str, Any]) -> Stage:
     src, dst = spec["from"], spec.get("to", spec["from"])
 
     class DecodeB64(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            return {dst: F.unbase64(get_path(df, src)).cast("string")}
+        def updates(self, f: Fields) -> None:
+            f.set(dst, F.unbase64(f.get(src)).cast("string"))
 
     return DecodeB64()
 
@@ -370,12 +330,10 @@ def urldecode(cfg: dict[str, Any]) -> Stage:
     rules = cfg.get("fields", [])
 
     class UrlDecode(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out = {}
+        def updates(self, f: Fields) -> None:
             for r in rules:
                 src, dst = r["from"], r.get("to", r["from"])
-                out[dst] = F.try_url_decode(get_path(df, src))
-            return out
+                f.set(dst, F.try_url_decode(f.get(src)))
 
     return UrlDecode()
 
@@ -396,12 +354,12 @@ def split_field(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Split(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, f: Fields) -> None:
+            if not f.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"split: missing field {fld!r}")
-            col = get_path(df, fld).cast("string")
+            col = f.get(fld).cast("string")
             arr = F.split(col, sep)
             # length of the trailing run of empty fragments
             trail = F.aggregate(
@@ -414,7 +372,7 @@ def split_field(cfg: dict[str, Any]) -> Stage:
                 lambda acc: acc["n"])
             parts = F.when(col == "", F.array(F.lit(""))).otherwise(
                 F.slice(arr, 1, F.size(arr) - trail))
-            return {target: F.when(col.isNotNull(), parts)}
+            f.set(target, F.when(col.isNotNull(), parts))
 
     return Split()
 
@@ -441,12 +399,12 @@ def uri_parts(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class UriParts(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, f: Fields) -> None:
+            if not f.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"uri_parts: missing field {fld!r}")
-            col = get_path(df, fld).cast("string")
+            col = f.get(fld).cast("string")
             has_scheme = col.rlike("^[A-Za-z][A-Za-z0-9+.-]*://")
             # scheme-less inputs parse against a synthetic base. Inputs not
             # starting with '/' (e.g. 'example.com/x', '../a') get a '/'
@@ -489,6 +447,7 @@ def uri_parts(cfg: dict[str, Any]) -> Stage:
             }
             if keep_original:
                 out[f"{target}.original"] = col
-            return out
+            for path, v in out.items():
+                f.set(path, v)
 
     return UriParts()

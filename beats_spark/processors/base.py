@@ -7,12 +7,15 @@ The reference runs processors serially per event; nil return = drop
 Here a Stage declares itself in one of three shapes so conditions can be
 fused into the SAME projection instead of branching per row:
 
-- *project*: ``updates() -> {dotted_path: Column}`` (+ ``drops()``) — under
-  ``when``, each update becomes ``F.when(cond, new).otherwise(old)``;
+- *project*: ``updates(f)`` adds its writes to a :class:`~beats_spark.event.Fields`
+  write set (``f.get``/``f.has`` read, ``f.set`` writes, rules see each
+  other's writes in order) and ``drops()`` lists deletions; ``apply`` makes
+  exactly one write, ``f.apply(where=cond)``, which under ``when`` keeps
+  every old value on rows the condition does not match;
 - *filter*: ``keep() -> Column`` — under ``when`` it becomes
   ``~cond | keep`` (drop only matching rows);
-- *custom*: ``custom(df) -> df`` (mapInPandas etc.) — under ``when`` the
-  frame is split, transformed, and unioned back (rare; only ``script``).
+- *custom*: ``custom(df) -> df`` (joins, mapInPandas etc.) — under ``when``
+  the frame is split, transformed, and unioned back.
 
 Everything stays a single declarative plan: Catalyst sees through all of it.
 """
@@ -26,23 +29,9 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame, functions as F
 
 from beats_spark.conditions import compile_condition
-from beats_spark.event import (drop_path, get_path, has_path, with_path,
-                               with_paths)
+from beats_spark.event import Fields, drop_path
 
 _cond_counter = itertools.count()
-
-
-def _paths_overlap(updates: dict[str, "Column"]) -> bool:
-    """True when any update path is a segment-prefix of another (writes
-    then depend on application order)."""
-    paths = list(updates)
-    pref = {tuple(p.split(".")) for p in paths}
-    for p in paths:
-        parts = p.split(".")
-        for k in range(1, len(parts)):
-            if tuple(parts[:k]) in pref:
-                return True
-    return False
 
 
 class Stage:
@@ -50,8 +39,8 @@ class Stage:
 
     name = "stage"
 
-    def updates(self, df: DataFrame) -> dict[str, Column]:
-        return {}
+    def updates(self, f: Fields) -> None:
+        pass
 
     def drops(self, df: DataFrame) -> list[str]:
         return []
@@ -82,35 +71,17 @@ class Stage:
                 else (~F.coalesce(cond, F.lit(False)) | keep)
             )
 
-        ups = self.updates(df)
-        if _paths_overlap(ups):
-            # one update path is a prefix of another: order-dependent —
-            # keep the exact sequential semantics, including per-write
-            # has_path against the EVOLVING schema for the cond fallback
-            for path, new in ups.items():
-                if cond is not None:
-                    old = (get_path(df, path) if has_path(df.schema, path)
-                           else F.lit(None))
-                    new = F.when(cond, new).otherwise(old)
-                df = with_path(df, path, new)
-        else:
-            if cond is not None:
-                ups = {
-                    path: F.when(cond, new).otherwise(
-                        get_path(df, path) if has_path(df.schema, path)
-                        else F.lit(None))
-                    for path, new in ups.items()
-                }
-            # one batched write: 3 eager plan analyses total instead of 3
-            # per path (user_agent alone writes 7 paths — measured ~1 s of
-            # driver time per apply in the sequential form)
-            df = with_paths(df, ups)
-        for path in self.drops(df):
-            if cond is None:
+        f = Fields(df)
+        self.updates(f)
+        drops = self.drops(df)
+        if cond is not None:
+            # per-row "delete" under a condition: null out for matches
+            for path in drops:
+                f.set(path, F.lit(None))
+        df = f.apply(where=cond)
+        if cond is None:
+            for path in drops:
                 df = drop_path(df, path)
-            elif has_path(df.schema, path):
-                # per-row "delete" under a condition: null out for matches
-                df = with_path(df, path, F.when(cond, F.lit(None)).otherwise(get_path(df, path)))
         return df
 
     def _apply_custom_cond(self, df: DataFrame, cond: Column) -> DataFrame:
@@ -132,8 +103,10 @@ class FnStage(Stage):
     keep_fn: Callable[[DataFrame], Column] | None = None
     custom_fn: Callable[[DataFrame], DataFrame] | None = None
 
-    def updates(self, df: DataFrame) -> dict[str, Column]:
-        return self.updates_fn(df) if self.updates_fn else {}
+    def updates(self, f: Fields) -> None:
+        # the function reads the input frame; its entries are set in order
+        for path, value in (self.updates_fn(f.df) if self.updates_fn else {}).items():
+            f.set(path, value)
 
     def drops(self, df: DataFrame) -> list[str]:
         return self.drops_fn(df) if self.drops_fn else []

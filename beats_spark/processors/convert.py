@@ -8,7 +8,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Fields, set_error_message
 from beats_spark.processors.base import Stage, register
 
 _CONVERT_TYPES = {
@@ -35,17 +35,20 @@ def convert(cfg: dict[str, Any]) -> Stage:
     mode = cfg.get("mode", "copy")
 
     class Convert(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import drop_path, with_path
+        def updates(self, f: Fields) -> None:
+            # ``mode: rename`` deletes each source after its write; the
+            # deletes run after the write set, so a moved source reads as
+            # missing and a later write to it cancels its delete
+            self.moved = []
             for r in rules:
                 src = r["from"]
                 dst = r.get("to", src)
                 typ = r.get("type", "string")
-                if not has_path(df.schema, src):
+                if src in self.moved or not f.has(src):
                     if ignore_missing:
                         continue
                     raise ValueError(f"convert: missing field {src!r}")
-                col = get_path(df, src)
+                col = f.get(src)
                 if typ == "ip":
                     s = col.cast("string")
                     new = F.when(s.rlike(_IPV4) | s.rlike(_IPV6), s)
@@ -53,13 +56,14 @@ def convert(cfg: dict[str, Any]) -> Stage:
                     new = col.try_cast(_CONVERT_TYPES[typ])
                 else:
                     raise ValueError(f"convert: unknown type {typ!r}")
-                if cond is not None:
-                    old = get_path(df, dst) if has_path(df.schema, dst) else F.lit(None)
-                    new = F.when(cond, new).otherwise(old)
-                df = with_path(df, dst, new)
-                if mode == "rename" and dst != src and cond is None:
-                    df = drop_path(df, src)
-            return df
+                f.set(dst, new)
+                if dst in self.moved:
+                    self.moved.remove(dst)
+                if mode == "rename" and dst != src:
+                    self.moved.append(src)
+
+        def drops(self, df: DataFrame) -> list[str]:
+            return self.moved
 
     return Convert()
 
@@ -119,13 +123,13 @@ def timestamp(cfg: dict[str, Any]) -> Stage:
                     )
             validated.append(True)
 
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            self._validate(df.sparkSession)
-            if not has_path(df.schema, fld):
+        def updates(self, f: Fields) -> None:
+            self._validate(f.df.sparkSession)
+            if not f.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"timestamp: missing field {fld!r}")
-            src = get_path(df, fld).cast("string")
+            src = f.get(fld).cast("string")
             attempts = []
             for lay in layouts:
                 if lay == "UNIX":
@@ -156,10 +160,7 @@ def timestamp(cfg: dict[str, Any]) -> Stage:
                             f"INTERVAL {cur - 1970} YEARS")
                     attempts.append(F.to_utc_timestamp(parsed_lay, tz))
             parsed = F.coalesce(*attempts) if attempts else F.try_to_timestamp(src)
-            if not ignore_failure:
-                return {target: parsed}
-            old = get_path(df, target) if has_path(df.schema, target) else F.lit(None).cast("timestamp")
-            return {target: F.coalesce(parsed, old)}
+            f.set(target, F.coalesce(parsed, f.get(target)) if ignore_failure else parsed)
 
     return Timestamp()
 
@@ -178,11 +179,11 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
 
     class DecodeJson(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import with_path
+            f = Fields(df)
             for fld in fields:
-                if not has_path(df.schema, fld):
+                if not f.has(fld):
                     continue
-                col = get_path(df, fld).cast("string")
+                col = f.get(fld).cast("string")
                 if schema_ddl:
                     parsed = F.from_json(col, schema_ddl)
                 else:
@@ -198,15 +199,7 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
                         F.schema_of_json(F.lit(sample[0]["j"])).alias("s")
                     ).collect()[0]["s"]
                     parsed = F.from_json(col, ddl)
-                if cond is not None:
-                    parsed = F.when(cond, parsed)
-                dst = target if target else fld
                 if add_error_key:
-                    # error key FIRST: when dst == fld the write below
-                    # replaces the source column, and Columns resolve by
-                    # NAME against the frame they are used with — computing
-                    # `bad` afterwards would re-parse the decoded struct
-                    # (always failing) instead of the original string.
                     # PERMISSIVE from_json yields a null-FIELD struct on bad
                     # input, never a NULL struct, so failure is detected
                     # with a corrupt-record probe (readjson's addError path)
@@ -215,17 +208,12 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
                         {"columnNameOfCorruptRecord": "__corrupt"},
                     )
                     bad = col.isNotNull() & probe["__corrupt"].isNotNull()
-                    df = with_path(
-                        df,
-                        "error.message",
-                        F.when(bad, F.lit("Error decoding JSON field")).otherwise(
-                            get_path(df, "error.message")
-                            if has_path(df.schema, "error.message")
-                            else F.lit(None).cast("string")
-                        ),
-                    )
-                df = with_path(df, dst, parsed)
-            return df
+                    set_error_message(f, bad if cond is None else cond & bad,
+                                      "Error decoding JSON field")
+                # a decoded struct cannot also hold the string of rows the
+                # condition skips: those rows get NULL
+                f.set(target or fld, parsed if cond is None else F.when(cond, parsed))
+            return f.apply()
 
     return DecodeJson()
 
@@ -247,12 +235,11 @@ def decode_csv_fields(cfg: dict[str, Any]) -> Stage:
     split_rx = _re.escape(sep) + r'(?=(?:[^"]*"[^"]*")*[^"]*$)'
 
     class DecodeCsv(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            out: dict[str, Column] = {}
+        def updates(self, f: Fields) -> None:
             for src, dst in pairs.items():
-                if not has_path(df.schema, src):
+                if not f.has(src):
                     continue
-                arr = F.split(get_path(df, src).cast("string"), split_rx)
+                arr = F.split(f.get(src).cast("string"), split_rx)
                 if trim_leading:
                     arr = F.transform(arr, lambda v: F.regexp_replace(v, r"^ +", ""))
                 arr = F.transform(
@@ -261,7 +248,6 @@ def decode_csv_fields(cfg: dict[str, Any]) -> Stage:
                         F.regexp_replace(v, r'^"(.*)"$', "$1"), '""', '"'
                     ),
                 )
-                out[dst] = arr
-            return out
+                f.set(dst, arr)
 
     return DecodeCsv()

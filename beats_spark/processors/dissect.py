@@ -46,10 +46,9 @@ import re
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import (append_flag, get_path, has_path,
-                               set_error_message, with_path)
+from beats_spark.event import Fields, append_flag, set_error_message
 from beats_spark.processors.base import Stage, register
 from beats_spark.processors.kv import _trim_chars
 
@@ -295,44 +294,28 @@ def dissect(cfg: dict[str, Any]) -> Stage:
         )
 
     class Dissect(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            if not has_path(df.schema, src):
+        def updates(self, f: Fields) -> None:
+            if not f.has(src):
                 raise ValueError(f"dissect: field {src!r} not in schema")
-            if target and has_path(df.schema, target) and not overwrite_keys:
+            if target and f.has(target) and not overwrite_keys:
                 raise ValueError(
                     f"dissect: target_prefix {target!r} exists (set overwrite_keys)"
                 )
-            src_col = get_path(df, src).cast("string")
-            failed, payload = build_columns(t, src_col, trim_mode, trim_chars)
-            if cond is not None:
-                failed = cond & failed
-                ok = cond & ~failed
-            else:
-                ok = ~failed
+            failed, payload = build_columns(t, f.get(src).cast("string"),
+                                            trim_mode, trim_chars)
+            # failed rows keep their PRE-EXISTING fields (processor.go:
+            # failed events pass unchanged)
             if target:
-                # failed / condition-false rows keep their PRE-EXISTING
-                # target (processor.go: failed events pass unchanged) —
-                # a bare when() would null it out
-                old_t = (get_path(df, target)
-                         if has_path(df.schema, target) else None)
-                new_t = (F.when(ok, payload).otherwise(old_t)
-                         if old_t is not None else F.when(ok, payload))
-                df = with_path(df, target, new_t)
-            else:
-                # merge at root (target_prefix: "")
+                f.set(target, payload, where=~failed)
+            else:  # merge at root (target_prefix: "")
                 for n in t.out_keys():
-                    pre = has_path(df.schema, n)
-                    if pre and not overwrite_keys:
+                    if f.has(n) and not overwrite_keys:
                         raise ValueError(f"dissect: key {n!r} exists at root")
-                    v = F.when(ok, payload.getField(n))
-                    if pre:
-                        v = v.otherwise(get_path(df, n))
-                    df = df.withColumn(n, v)
-            df = append_flag(df, FLAG_PARSING_ERROR, cond=failed)
+                    f.set(n, payload.getField(n), where=~failed)
+            append_flag(f, FLAG_PARSING_ERROR, cond=failed)
             if not ignore_failure:
-                df = set_error_message(
-                    df, failed,
+                set_error_message(
+                    f, failed,
                     f"dissect: parsing failure (tokenizer={tokenizer})")
-            return df
 
     return Dissect()

@@ -13,7 +13,7 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Fields, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 # name → DataFrame provider, bound by the pipeline before building stages
@@ -385,17 +385,17 @@ def add_network_direction(cfg: dict[str, Any]) -> Stage:
         return F.coalesce(out, F.lit(False))
 
     class NetDir(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not (has_path(df.schema, src_f) and has_path(df.schema, dst_f)):
-                return {}
-            s_in = is_internal(get_path(df, src_f))
-            d_in = is_internal(get_path(df, dst_f))
+        def updates(self, f: Fields) -> None:
+            if not (f.has(src_f) and f.has(dst_f)):
+                return
+            s_in = is_internal(f.get(src_f))
+            d_in = is_internal(f.get(dst_f))
             direction = (
                 F.when(s_in & d_in, "internal")
                 .when(s_in & ~d_in, "outbound")
                 .when(~s_in & d_in, "inbound")
                 .otherwise("external")
             )
-            return {target: direction}
+            f.set(target, direction)
 
     return NetDir()

@@ -16,8 +16,10 @@ import re
 from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import types as T
 
-from beats_spark.event import append_flag, get_path, has_path
+from beats_spark.event import (Fields, append_flag, get_path, has_path,
+                               path_type, set_error_message)
 from beats_spark.processors.base import Stage, register
 
 # A small built-in pattern library (public grok idiom); users can extend via
@@ -156,9 +158,15 @@ def grok(cfg: dict[str, Any]) -> Stage:
 
     class Grok(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-            from beats_spark.event import with_path
             if not has_path(df.schema, src):
                 raise ValueError(f"grok: field {src!r} not in schema")
+            t_type = path_type(df.schema, target) if target else None
+            if t_type is not None and not isinstance(t_type, T.StructType):
+                # one column cannot hold a struct on matched rows and the
+                # old scalar on the others
+                raise ValueError(
+                    f"grok: target_prefix {target!r} holds a non-struct "
+                    f"{t_type.simpleString()}")
             col = get_path(df, src).cast("string")
             # Stage every regex evaluation ONCE behind temp columns (match
             # flag per pattern + raw extract per capture site): the combine
@@ -200,8 +208,11 @@ def grok(cfg: dict[str, Any]) -> Stage:
             matched = prior
             # per field: value from the winning pattern (NULL from all
             # others — selectors are exclusive), written iff the winning
-            # pattern declares the field
-            cols: dict[str, tuple[Column, Column]] = {}
+            # pattern declares the field; other rows keep any PRE-EXISTING
+            # value (a fallback grok chain over two formats must not null
+            # out what the previous grok extracted, and ES writes only the
+            # winner's captures)
+            f = Fields(df)
             for name, sites in fmap.items():
                 by_pat: dict[int, list[tuple[int, str]]] = {}
                 for j, gi, typ in sites:
@@ -234,96 +245,12 @@ def grok(cfg: dict[str, Any]) -> Stage:
                 uniq = {t for t in declared if t}
                 if len(uniq) == 1 and all(declared):
                     val = val.try_cast(_GROK_TYPES.get(uniq.pop(), "string"))
-                if cond is not None:
-                    written = cond & written
-                cols[name] = (val, written)
-            failed = ~matched
-            if cond is not None:
-                failed = cond & failed
-            # non-matching / condition-false rows keep any PRE-EXISTING
-            # destination value (a fallback grok chain over two formats
-            # must not null out what the previous grok extracted); with
-            # multiple patterns, fields absent from the winning pattern
-            # also keep their old value (ES writes only the winner's
-            # captures)
-            if target:
-                from pyspark.sql import types as T
-
-                from beats_spark.event import _quote, path_type
-
-                t_type = path_type(df.schema, target)
-                if isinstance(t_type, T.StructType):
-                    # MERGE captures into the existing struct (withField):
-                    # pre-existing fields no capture writes survive matched
-                    # rows, and both branches of the null-struct split have
-                    # the identical shape — replacing the whole struct
-                    # dropped foreign fields and failed analysis against a
-                    # differently-shaped old struct (r4 ADVICE finding)
-                    old = get_path(df, target)
-                    merged = old
-                    for n, (v, w) in cols.items():
-                        prev = (get_path(df, f"{target}.{n}")
-                                if has_path(df.schema, f"{target}.{n}")
-                                else F.lit(None))
-                        merged = merged.withField(
-                            _quote(n), F.when(w, v).otherwise(prev))
-                    # a NULL old struct nullifies withField — matched rows
-                    # must still create the struct, with the same shape:
-                    # old fields (null unless captured) in order, then
-                    # appended capture fields
-                    fresh: list[Column] = []
-                    old_names = set()
-                    for f_ in t_type.fields:
-                        old_names.add(f_.name)
-                        if f_.name in cols:
-                            v, w = cols[f_.name]
-                            fresh.append(F.when(w, v).alias(f_.name))
-                        else:
-                            fresh.append(
-                                F.lit(None).cast(f_.dataType).alias(f_.name))
-                    for n, (v, w) in cols.items():
-                        if n not in old_names:
-                            fresh.append(F.when(w, v).alias(n))
-                    # a NULL old struct on a row NO pattern matched stays
-                    # NULL (ES never creates the target on grok failure) —
-                    # an unguarded fresh struct would be non-null all-NULL
-                    any_written = F.lit(False)
-                    for _, w in cols.values():
-                        any_written = any_written | w
-                    payload = F.when(old.isNotNull(), merged) \
-                        .otherwise(F.when(any_written, F.struct(*fresh)))
-                else:
-                    # no pre-existing struct (or a non-struct value, which
-                    # a struct column replaces): build from captures only
-                    payload = F.struct(*[
-                        F.when(w, v).alias(n) for n, (v, w) in cols.items()])
-                    any_written = F.lit(False)
-                    for _, w in cols.values():
-                        any_written = any_written | w
-                    payload = F.when(any_written, payload)
-                df = with_path(df, target, payload)
-            else:
-                # batch all TOP-LEVEL fields into one projection — a
-                # with_path per field is one eager JVM analysis each
-                # (~0.1 s of driver time per field on warm sessions);
-                # nested paths still go through with_path's struct rebuild
-                flat: dict[str, Column] = {}
-                for n, (v, w) in cols.items():
-                    prev_v = (get_path(df, n) if has_path(df.schema, n)
-                              else F.lit(None))
-                    val = F.when(w, v).otherwise(prev_v)
-                    if "." in n:
-                        df = with_path(df, n, val)
-                    else:
-                        flat[n] = val
-                if flat:
-                    df = df.withColumns(flat)
+                f.set(f"{target}.{name}" if target else name, val, where=written)
             # failure is always visible in log.flags (like dissect);
             # error.message only without ignore_failure
-            df = append_flag(df, "grok_parsing_error", cond=failed)
+            append_flag(f, "grok_parsing_error", cond=~matched)
             if not ignore_failure:
-                from beats_spark.event import set_error_message
-                df = set_error_message(df, failed, "grok: no pattern matched")
-            return df.drop(*flags, *xcols)
+                set_error_message(f, ~matched, "grok: no pattern matched")
+            return f.apply(where=cond).drop(*flags, *xcols)
 
     return Grok()

@@ -41,7 +41,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import append_flag, get_path, has_path, with_path
+from beats_spark.event import Fields, append_flag, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 
@@ -151,7 +151,8 @@ def kv(cfg: dict[str, Any]) -> Stage:
                 failed = failed | F.coalesce(src.isNotNull() & malformed,
                                              F.lit(False))
             ok = ~failed & src.isNotNull()
-            out = with_path(df, target, F.when(ok, m))
-            return append_flag(out, "kv_parsing_error", cond=failed)
+            f = Fields(df).set(target, F.when(ok, m))
+            append_flag(f, "kv_parsing_error", cond=failed)
+            return f.apply()
 
     return KV()

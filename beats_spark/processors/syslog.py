@@ -23,7 +23,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import append_flag, get_path
+from beats_spark.event import Fields, append_flag, get_path, set_error_message
 from beats_spark.processors.base import Stage, register
 
 # <PRI>MMM dd HH:mm:ss HOST TAG[PID]: MSG       (rfc3164_parser.go)
@@ -117,11 +117,10 @@ def syslog(cfg: dict[str, Any]) -> Stage:
             payload = F.when(ok, F.struct(
                 *[fields[k].alias(k) for k in FIELD_ORDER]
             ))
-            df = df.withColumn(target, payload)
-            df = append_flag(df, "syslog_parsing_error", cond=~ok)
+            f = Fields(df).set(target, payload)
+            append_flag(f, "syslog_parsing_error", cond=~ok)
             if not ignore_failure:
-                from beats_spark.event import set_error_message
-                df = set_error_message(df, ~ok, "syslog parse failure")
-            return df
+                set_error_message(f, ~ok, "syslog parse failure")
+            return f.apply()
 
     return Syslog()

@@ -24,9 +24,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Fields
 from beats_spark.processors.base import Stage, register
 
 # (family, regex, n_version_groups) — ordered, first match wins. Version
@@ -147,12 +147,12 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", False)
 
     class UserAgent(Stage):
-        def updates(self, df: DataFrame) -> dict[str, Column]:
-            if not has_path(df.schema, fld):
+        def updates(self, f: Fields) -> None:
+            if not f.has(fld):
                 if ignore_missing:
-                    return {}
+                    return
                 raise ValueError(f"user_agent: missing field {fld!r}")
-            ua = get_path(df, fld).cast("string")
+            ua = f.get(fld).cast("string")
             # the big first-match-wins chains are emitted as SQL TEXT and
             # parsed once by F.expr: building ~500 Column nodes through
             # py4j cost ~1.2 s of driver time PER APPLY (measured r5) —
@@ -161,7 +161,7 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
             # uap-core first-match-wins semantics.
             from beats_spark.event import _quote
 
-            esc = (df.sparkSession.conf.get(
+            esc = (f.df.sparkSession.conf.get(
                 "spark.sql.parser.escapedStringLiterals", "false")
                 .lower() == "true")
             ua_ref = ("CAST(" + ".".join(_quote(p) for p in fld.split("."))
@@ -213,19 +213,17 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
                 .when(model != "", model)
                 .when(ua.isNotNull(), F.lit("Other")))
 
-            out: dict[str, Column] = {}
             if "name" in props:
-                out[f"{target}.name"] = name
+                f.set(f"{target}.name", name)
             if "version" in props:
-                out[f"{target}.version"] = version
+                f.set(f"{target}.version", version)
             if "os" in props:
-                out[f"{target}.os.name"] = os_name
-                out[f"{target}.os.version"] = os_ver
-                out[f"{target}.os.full"] = os_full
+                f.set(f"{target}.os.name", os_name)
+                f.set(f"{target}.os.version", os_ver)
+                f.set(f"{target}.os.full", os_full)
             if "device" in props:
-                out[f"{target}.device.name"] = device
+                f.set(f"{target}.device.name", device)
             if "original" in props and f"{target}.original" != fld:
-                out[f"{target}.original"] = ua
-            return out
+                f.set(f"{target}.original", ua)
 
     return UserAgent()

@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from beats_spark.event import (
+    Fields,
     add_tags,
     append_flag,
     drop_path,
@@ -55,10 +56,13 @@ def test_add_tags_and_flags(spark):
     df = add_tags(df, ["t1", "t2"])
     df = add_tags(df, ["t3"])
     assert df.collect()[0]["tags"] == ["t1", "t2", "t3"]
-    df = append_flag(df, "truncated", cond=F.col("id") == 1)
+    f = Fields(df)
+    append_flag(f, "truncated", cond=F.col("id") == 1)
+    df = f.apply()
     assert df.collect()[0]["log"]["flags"] == ["truncated"]
-    df2 = append_flag(df, "x", cond=F.col("id") == 99)
-    assert df2.collect()[0]["log"]["flags"] == ["truncated"]
+    f2 = Fields(df)
+    append_flag(f2, "x", cond=F.col("id") == 99)
+    assert f2.apply().collect()[0]["log"]["flags"] == ["truncated"]
 
 
 def test_with_path_untouched_rows_keep_null_parent(spark):
@@ -98,13 +102,18 @@ def test_with_path_survives_user_column_named_like_staging(spark):
 
 
 # ---------------------------------------------------------------------------
-# with_paths (batched multi-path writes)
+# multi-path write sets (one Fields.apply for many paths)
+
+def with_paths(df, updates):
+    f = Fields(df)
+    for path, value in updates.items():
+        f.set(path, value)
+    return f.apply()
+
 
 def test_with_paths_matches_sequential_with_path(spark):
-    """Non-overlapping nested + flat updates: batched result row-equal to
+    """Non-overlapping nested + flat updates: one write set is row-equal to
     the sequential with_path loop."""
-    from beats_spark.event import with_paths
-
     df = spark.createDataFrame(
         [("u1", 7, ("old",)), ("u2", None, None)],
         "id string, n int, p struct<keep:string>")
@@ -125,8 +134,6 @@ def test_with_paths_matches_sequential_with_path(spark):
 
 
 def test_with_paths_all_null_root_stays_null(spark):
-    from beats_spark.event import with_paths
-
     df = spark.createDataFrame([(1,)], "n int")
     out = with_paths(df, {"r.a": F.lit(None).cast("string"),
                           "r.b": F.lit(None).cast("string"),
@@ -137,9 +144,7 @@ def test_with_paths_all_null_root_stays_null(spark):
 
 def test_with_paths_prefix_overlap_falls_back_sequential(spark):
     """A root written both wholly and per-field is order-dependent — the
-    batched form must defer to the exact sequential loop."""
-    from beats_spark.event import with_paths
-
+    write set must give the exact sequential result."""
     df = spark.createDataFrame([(1,)], "n int")
     out = with_paths(df, {
         "r": F.struct(F.lit("a").alias("a"), F.lit("b").alias("b")),
@@ -151,8 +156,6 @@ def test_with_paths_prefix_overlap_falls_back_sequential(spark):
 def test_with_paths_temp_collision_with_target_and_column(spark):
     """Targets or existing columns named like the internal __wpN__ temps
     must neither be dropped nor clobbered."""
-    from beats_spark.event import with_paths
-
     df = spark.createDataFrame([("keep", 1)], "__wp0__ string, n int")
     out = with_paths(df, {"a.b": F.lit("x"),
                           "c": F.lit("y")}).collect()[0]
@@ -180,3 +183,52 @@ def test_copy_fields_chained_pairs_read_own_writes(spark):
     ])).collect()[0]
     assert out["b"] == "v"
     assert out["c"] == "v"  # reads the copied b, not the stale one
+
+
+def _chain(df, cfg):
+    from beats_spark.processors import apply_chain, build_chain
+
+    return apply_chain(df, build_chain(cfg)).collect()[0]
+
+
+AB_RULES = [{"from": "a", "to": "b"}, {"from": "b", "to": "c"}]
+
+
+def _ab(spark):
+    return spark.createDataFrame([("a%2520b", "stale", "go")],
+                                 "a string, b string, k string")
+
+
+def test_urldecode_chained_rules_read_own_writes(spark):
+    """A later rule reads the earlier rule's target: b is decoded once by
+    the first rule and again by the second, as the reference's sequential
+    Put/GetValue gives (a stale b would leave c == "stale")."""
+    out = _chain(_ab(spark), [{"urldecode": {"fields": AB_RULES}}])
+    assert out["b"] == "a%20b" and out["c"] == "a b"
+
+
+def test_urldecode_chained_rules_under_when(spark):
+    """The same chain under ``when``: matching rows read their own writes,
+    the others keep every old value."""
+    df = _ab(spark)
+    out = _chain(df, [{"urldecode": {"fields": AB_RULES,
+                                     "when": {"equals": {"k": "go"}}}}])
+    assert out["b"] == "a%20b" and out["c"] == "a b"
+    out = _chain(df, [{"urldecode": {"fields": AB_RULES,
+                                     "when": {"equals": {"k": "no"}}}}])
+    assert out["b"] == "stale" and out["c"] is None
+
+
+def test_urldecode_same_field_twice_decodes_twice(spark):
+    df = spark.createDataFrame([("a%2520b",)], "a string")
+    out = _chain(df, [{"urldecode": {"fields": [{"from": "a", "to": "a"},
+                                                {"from": "a", "to": "a"}]}}])
+    assert out["a"] == "a b"
+
+
+def test_replace_two_rules_on_one_field_both_apply(spark):
+    df = spark.createDataFrame([("xx",)], "v string")
+    out = _chain(df, [{"replace": {"fields": [
+        {"field": "v", "pattern": "x", "replacement": "y"},
+        {"field": "v", "pattern": "y", "replacement": "z"}]}}])
+    assert out["v"] == "zz"

@@ -182,3 +182,22 @@ def test_minhash_candidates_checkpointed_no_python(spark):
     # it must not have changed the cache-manager state it found
     assert jvm_cache.isEmpty() == was_empty
     pairs.count()
+
+
+def test_processors_write_fields_only_through_event():
+    """Only event.py writes nested fields: no processor module calls
+    Column.withField or hand-rolls the keep-old idiom
+    ``F.when(c, new).otherwise(<old value>)`` — ``Fields.set``/``apply``
+    take ``where=`` for that."""
+    import pathlib
+    import re
+
+    import beats_spark.processors as procs
+
+    bad = re.compile(r"\.withField\(|\.otherwise\((get_path|f\.get)\(")
+    root = pathlib.Path(procs.__file__).parent
+    hits = [f"{p.name}:{i}: {line.strip()}"
+            for p in sorted(root.glob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if bad.search(line)]
+    assert hits == []

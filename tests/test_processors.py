@@ -121,6 +121,23 @@ def test_convert(spark):
     assert bad["n2"] is None and bad["ip2"] is None
 
 
+def test_convert_rename_mode_moves_sources(spark):
+    """``mode: rename`` deletes each source after its write; under ``when``
+    the source is NULLed on matching rows only, and a later rule writing a
+    moved source keeps its value."""
+    rules = [{"from": "n", "to": "m", "type": "long"},
+             {"from": "s", "to": "n", "type": "string"}]
+    out = run(spark, [("42", "x")], "n string, s string",
+              [{"convert": {"fields": rules, "mode": "rename"}}]).collect()[0]
+    assert out.asDict() == {"n": "x", "m": 42}
+    out = run(spark, [("1", "a", "go"), ("2", "b", "no")],
+              "n string, s string, k string",
+              [{"convert": {"fields": rules[:1], "mode": "rename",
+                            "when": {"equals": {"k": "go"}}}}]).collect()
+    got = {r["k"]: (r["n"], r["m"]) for r in out}
+    assert got == {"go": (None, 1), "no": ("2", None)}
+
+
 def test_timestamp_layouts(spark):
     out = run(
         spark,
@@ -871,6 +888,16 @@ def test_grok_target_merge_null_old_struct_row(spark):
     ).orderBy("text").collect()
     assert out[0]["p"]["seen"] == "yes" and out[0]["p"]["id"] == 7
     assert out[1]["p"]["seen"] is None and out[1]["p"]["id"] == 8
+
+
+def test_grok_non_struct_target_refused_at_plan_time(spark):
+    """A scalar target cannot hold the capture struct on matched rows and
+    the old scalar on the others: refused at plan time, naming both."""
+    df = spark.createDataFrame([("id=7", "keep"), ("miss", "keep")],
+                               "text string, http string")
+    with pytest.raises(ValueError, match=r"'http'.*string"):
+        run_df(spark, df, [{"grok": {"pattern": "id=%{INT:id}",
+                                     "field": "text", "target_prefix": "http"}}])
 
 
 def test_enrich_dim_column_collision(spark):
