@@ -116,13 +116,15 @@ def extract_features(df: DataFrame, decoder: str = "fake",
     Binary payloads dominate row size, so the input is repartitioned by a
     BYTE budget (one cheap length-sum aggregate over the payload column),
     not a row count — a skewed media table with a few huge blobs per
-    partition would otherwise OOM the Arrow transfer.
+    partition would otherwise OOM the Arrow transfer. The same aggregate
+    reads the input's partition count (up to its last non-empty partition).
     """
-    total = df.select(
-        F.sum(F.coalesce(F.length("payload"), F.lit(0))).alias("b")
-    ).collect()[0]["b"] or 0
-    n_parts = max(1, min(100_000, -(-int(total) // int(batch_bytes))))
-    if n_parts > df.rdd.getNumPartitions():
+    row = df.select(
+        F.coalesce(F.length("payload"), F.lit(0)).alias("b"),
+        F.spark_partition_id().alias("p"),
+    ).agg(F.sum("b").alias("b"), (F.max("p") + 1).alias("p")).collect()[0]
+    n_parts = max(1, min(100_000, -(-int(row["b"] or 0) // int(batch_bytes))))
+    if n_parts > (row["p"] or 0):
         df = df.repartition(n_parts)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,16 +1,45 @@
-"""user_agent: UA-string → browser / os / device split, pure column algebra.
+r"""user_agent: UA-string → browser / os / device split, pure column algebra.
 
 The reference's module pipelines declare this as an ES ingest stage
 (e.g. filebeat/module/nginx/access/ingest/pipeline.yml:123-125,
 ``field: user_agent.original``); the ES processor is backed by the public
 uap-core regex dictionary. This stage carries a curated, ordered subset of
-uap-core-shaped patterns for the major browser / OS / device families as a
-single Catalyst CASE chain — first match wins, exactly like uap-core's
-ordered list. No Python in the plan: every rule is ``rlike`` +
-``regexp_extract``.
+uap-core-shaped patterns for the major browser / OS / device families —
+first match wins, exactly like uap-core's ordered list. No Python in the
+plan.
 
 Output (ES user_agent processor surface): ``{target}.name``, ``.version``,
 ``.os.{name,version,full}``, ``.device.name``, ``.original``.
+
+Plan shape — O(1) code per rule, and each rule's regex runs at most once
+per row (the winner's once more), so the stage fits in one whole-stage
+codegen method:
+
+1. the UA string is staged once as a temp column;
+2. one first-match ``RLIKE`` CASE per rule list stages a browser-rule and
+   an OS-rule index;
+3. ``name`` and the OS name are picked from the indexes; the device spider
+   test and ``os.full`` read the indexes instead of re-embedding the chains;
+4. versions come from ONE ``regexp_replace`` per rule list, with the picked
+   rule's ``^(?s:.*?)(?:rx)`` + ``()``×(4−n) + ``(?s:.*)$`` as pattern. It
+   rewrites the string to that rule's first-match groups packed as
+   ``$1 SEP $2 SEP $3 SEP $4``; one shared ``split`` / ``array_remove('')``
+   / ``CONCAT_WS('.')`` joins the non-empty ones. The lazy prefix starts the
+   match where ``regexp_extract``'s ``find()`` does and the suffix always
+   succeeds, so the groups are ``find()``'s. This is exact only because no
+   version group can contain ``SEP``: every group body is ``\d+``,
+   ``a\d+[a-z]*`` or ``b\d+[a-z]*`` (pinned by a test). The pattern is
+   recompiled on rows where it changes; one site per list instead of one per
+   rule keeps the stage small enough to share a method with the apache
+   module's four-pattern grok.
+
+Temp-column staging alone does not shrink that method: codegen gives an
+operator's consume its own method only when the parent uses every column
+it outputs, and ``ProjectExec`` counts as used only the columns it
+references twice — so every projection of a codegen stage lands in one
+``processNext()`` and only the total code counts. A CASE per property that
+re-runs every rule's ``RLIKE``, with a ``regexp_extract`` per version group,
+overflows the JVM's 64 KB method limit and drops the stage out of codegen.
 
 Documented divergences from a full uap-core run:
 - version strings join the matched numeric groups with '.' (no trailing
@@ -22,11 +51,12 @@ Documented divergences from a full uap-core run:
 
 from __future__ import annotations
 
-from typing import Any
+from functools import partial
+from typing import Any, Callable
 
-from pyspark.sql import functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import Fields
+from beats_spark.event import Fields, _quote, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 # (family, regex, n_version_groups) — ordered, first match wins. Version
@@ -99,7 +129,15 @@ _OSES: list[tuple[str, str, int, str | None]] = [
     ("FreeBSD", r"FreeBSD", 0, None),
 ]
 
+# device model: the classic "; <model> Build/" token, else the modern
+# Chrome Android shape "(Linux; Android 12; <model>)" which omits Build
+_MODEL_RXS = (r";\s*([^;)]+?)\s+Build[/ )]", r"Android [\d.]+; ([^;)]+?)\)")
+
 _UA_PROPS = {"name", "version", "os", "device", "original"}
+
+# packs a rule's version groups into one string; no group can contain it
+_SEP = "\x01"
+_MAX_GROUPS = 4
 
 
 def _sql_str(s: str, escaped_literals: bool = False) -> str:
@@ -113,18 +151,43 @@ def _sql_str(s: str, escaped_literals: bool = False) -> str:
     return "'" + body + "'"
 
 
-def _ver_sql(ua_ref: str, rx: str, n: int, esc: bool) -> str:
-    """Join the non-empty version captures with '.' (regexp_extract yields
-    '' for optional groups that did not participate). Deliberately NO
-    higher-order functions: a lambda per rule would be re-resolved by
-    every downstream analysis walk and blow up plan time when the stage
-    sits inside a long module chain."""
-    if n == 0:
-        return "CAST(NULL AS STRING)"
-    parts = ", ".join(
-        f"NULLIF(regexp_extract({ua_ref}, {_sql_str(rx, esc)}, {i}), '')"
-        for i in range(1, n + 1))
-    return f"NULLIF(CONCAT_WS('.', {parts}), '')"
+def _pack_rx(rx: str, n: int) -> str:
+    """Whole-string regex whose groups 1..4 are ``rx``'s first match's
+    version groups (padded with empty ones)."""
+    return f"^(?s:.*?)(?:{rx}){'()' * (_MAX_GROUPS - n)}(?s:.*)$"
+
+
+def _pick(idx: str, values: list[str | None]) -> str:
+    """``values[idx]`` as SQL (NULL for a NULL idx or a None value)."""
+    whens = " ".join(f"WHEN {k} THEN {v}" for k, v in enumerate(values)
+                     if v is not None)
+    return f"CASE {idx} {whens} END"
+
+
+def _first_match(ua: str, rxs: list[str], lit: Callable[[str], str]) -> str:
+    """Index of the first rule whose regex finds a match, else NULL."""
+    whens = " ".join(f"WHEN {ua} RLIKE {lit(rx)} THEN {i}"
+                     for i, rx in enumerate(rxs))
+    return f"CASE {whens} END"
+
+
+def _packed(ua: str, idx: str, rules: list[tuple[str, int]],
+            lit: Callable[[str], str]) -> str:
+    """The version groups of the rule ``idx`` picked, packed by ONE
+    ``regexp_replace`` with that rule's pattern (``rules``: (regex,
+    n_groups)); NULL for rules without groups."""
+    pats = [lit(_pack_rx(rx, n)) if n else None for rx, n in rules]
+    tmpl = lit(_SEP.join(f"${g}" for g in range(1, _MAX_GROUPS + 1)))
+    return f"regexp_replace({ua}, {_pick(idx, pats)}, {tmpl})"
+
+
+def _joined(packed: str, lit: Callable[[str], str]) -> str:
+    """Non-empty packed groups joined with '.', NULL when none (what
+    ``NULLIF(CONCAT_WS('.', NULLIF(regexp_extract(…), '')…), '')`` gives).
+    No higher-order function: its lambda would be re-resolved by every
+    downstream analysis walk of a long module chain."""
+    return (f"NULLIF(CONCAT_WS('.', array_remove(split({packed}, "
+            f"{lit(_SEP)}), '')), '')")
 
 
 @register("user_agent")
@@ -145,85 +208,73 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
         raise ValueError(f"user_agent: unknown properties {sorted(bad)} "
                          f"(known: {sorted(_UA_PROPS)})")
     ignore_missing = cfg.get("ignore_missing", False)
+    spiders = ", ".join(str(i) for i, (fam, _, _) in enumerate(_BROWSERS)
+                        if fam in _SPIDER_FAMILIES)
 
     class UserAgent(Stage):
-        def updates(self, f: Fields) -> None:
-            if not f.has(fld):
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
+            if not has_path(df.schema, fld):
                 if ignore_missing:
-                    return
+                    return df
                 raise ValueError(f"user_agent: missing field {fld!r}")
-            ua = f.get(fld).cast("string")
-            # the big first-match-wins chains are emitted as SQL TEXT and
-            # parsed once by F.expr: building ~500 Column nodes through
-            # py4j cost ~1.2 s of driver time PER APPLY (measured r5) —
-            # the same rule-of-thumb as the minhash/simhash SQL-text
-            # rework (BENCH.md §3). CASE WHEN order = list order = the
-            # uap-core first-match-wins semantics.
-            from beats_spark.event import _quote
-
-            esc = (f.df.sparkSession.conf.get(
+            # SQL text parsed once by F.expr: building the rule chains as
+            # py4j Column nodes cost ~1.2 s of driver time per apply (r5)
+            esc = (df.sparkSession.conf.get(
                 "spark.sql.parser.escapedStringLiterals", "false")
                 .lower() == "true")
-            ua_ref = ("CAST(" + ".".join(_quote(p) for p in fld.split("."))
-                      + " AS STRING)")
-            name = F.expr(
-                "CASE "
-                + " ".join(f"WHEN {ua_ref} RLIKE {_sql_str(rx, esc)} "
-                           f"THEN {_sql_str(fam, esc)}"
-                           for fam, rx, _ in _BROWSERS)
-                + f" WHEN {ua_ref} IS NOT NULL THEN 'Other' END")
-            version = F.expr(
-                "CASE "
-                + " ".join(f"WHEN {ua_ref} RLIKE {_sql_str(rx, esc)} "
-                           f"THEN {_ver_sql(ua_ref, rx, n, esc)}"
-                           for _, rx, n in _BROWSERS)
-                + " END")
+            lit = partial(_sql_str, escaped_literals=esc)
+            existing = {c.lower() for c in df.columns}
+            tp, i = "__ua_", 0
+            while any(x.lower().startswith(tp) for x in existing):
+                i += 1
+                tp = f"__ua{i}_"
+            ua, b, o, bv, ov = (_quote(tp + s) for s in ("s", "b", "o", "bv", "ov"))
 
-            def os_case(value_of) -> str:
-                return ("CASE "
-                        + " ".join(
-                            f"WHEN {ua_ref} RLIKE {_sql_str(rx, esc)} "
-                            f"THEN {value_of(oname, rx, n, vlit)}"
-                            for oname, rx, n, vlit in _OSES)
-                        + " END")
-
-            os_name = F.expr(os_case(lambda o, rx, n, v: _sql_str(o, esc)))
-            os_ver = F.expr(os_case(
-                lambda o, rx, n, v: _sql_str(v, esc) if v
-                else _ver_sql(ua_ref, rx, n, esc)))
-            os_full = F.when(
-                os_name.isNotNull(),
-                F.when(os_ver.isNotNull(),
-                       F.concat(os_name, F.lit(" "), os_ver))
-                .otherwise(os_name))
-
-            # classic "; <model> Build/" token, else the modern Chrome
-            # Android shape "(Linux; Android 12; <model>)" which omits Build
-            rx1 = _sql_str(r";\s*([^;)]+?)\s+Build[/ )]", esc)
-            rx2 = _sql_str(r"Android [\d.]+; ([^;)]+?)\)", esc)
-            model = F.expr(
-                f"COALESCE(NULLIF(regexp_extract({ua_ref}, {rx1}, 1), ''), "
-                f"NULLIF(regexp_extract({ua_ref}, {rx2}, 1), ''), '')")
-            device = (
-                F.when(name.isin(*sorted(_SPIDER_FAMILIES))
-                       | ua.rlike(_SPIDER_RX), F.lit("Spider"))
-                .when(ua.rlike(r"iPhone"), F.lit("iPhone"))
-                .when(ua.rlike(r"iPad"), F.lit("iPad"))
-                .when(ua.rlike(r"Macintosh"), F.lit("Mac"))
-                .when(model != "", model)
-                .when(ua.isNotNull(), F.lit("Other")))
-
-            if "name" in props:
-                f.set(f"{target}.name", name)
+            # rows a `when` skips see a NULL UA, so they skip every regex
+            # (their old values are kept by the write's `where`)
+            raw = get_path(df, fld).cast("string")
+            df = df.withColumn(tp + "s", raw if cond is None else F.when(cond, raw))
+            idx, packs = {}, {}
+            if props & {"name", "version", "device"}:
+                idx[tp + "b"] = _first_match(ua, [r[1] for r in _BROWSERS], lit)
             if "version" in props:
-                f.set(f"{target}.version", version)
+                packs[tp + "bv"] = _packed(ua, b, [r[1:3] for r in _BROWSERS], lit)
             if "os" in props:
-                f.set(f"{target}.os.name", os_name)
-                f.set(f"{target}.os.version", os_ver)
-                f.set(f"{target}.os.full", os_full)
+                idx[tp + "o"] = _first_match(ua, [r[1] for r in _OSES], lit)
+                packs[tp + "ov"] = _packed(ua, o, [r[1:3] for r in _OSES], lit)
+            for cols in (idx, packs):
+                if cols:
+                    df = df.withColumns({k: F.expr(v) for k, v in cols.items()})
+
+            f = Fields(df)
+            if "name" in props:
+                name = _pick(b, [lit(r[0]) for r in _BROWSERS])
+                f.set(f"{target}.name", F.expr(
+                    f"COALESCE({name}, CASE WHEN {ua} IS NOT NULL THEN 'Other' END)"))
+            if "version" in props:
+                f.set(f"{target}.version", F.expr(_joined(bv, lit)))
+            if "os" in props:
+                os_name = _pick(o, [lit(r[0]) for r in _OSES])
+                os_lit = _pick(o, [lit(r[3]) if r[3] else None for r in _OSES])
+                os_ver = f"COALESCE({os_lit}, {_joined(ov, lit)})"
+                f.set(f"{target}.os.name", F.expr(os_name))
+                f.set(f"{target}.os.version", F.expr(os_ver))
+                f.set(f"{target}.os.full", F.expr(
+                    f"CASE WHEN {o} IS NOT NULL "
+                    f"THEN CONCAT_WS(' ', {os_name}, {os_ver}) END"))
             if "device" in props:
-                f.set(f"{target}.device.name", device)
+                models = ", ".join(f"NULLIF(regexp_extract({ua}, {lit(rx)}, 1), '')"
+                                   for rx in _MODEL_RXS)
+                f.set(f"{target}.device.name", F.expr(
+                    f"CASE WHEN {b} IN ({spiders}) "
+                    f"OR {ua} RLIKE {lit(_SPIDER_RX)} THEN 'Spider' "
+                    f"WHEN {ua} RLIKE 'iPhone' THEN 'iPhone' "
+                    f"WHEN {ua} RLIKE 'iPad' THEN 'iPad' "
+                    f"WHEN {ua} RLIKE 'Macintosh' THEN 'Mac' "
+                    f"ELSE COALESCE({models}, "
+                    f"CASE WHEN {ua} IS NOT NULL THEN 'Other' END) END"))
             if "original" in props and f"{target}.original" != fld:
-                f.set(f"{target}.original", ua)
+                f.set(f"{target}.original", F.col(ua))
+            return f.apply(where=cond).drop(tp + "s", *idx, *packs)
 
     return UserAgent()

@@ -41,11 +41,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    shuffle_partitions defaults to the local core count — on a real cluster
-    you'd set ~2-3x total executor cores instead.
+    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    ``os.cpu_count()``). shuffle_partitions defaults to the local core
+    count — on a real cluster you'd set ~2-3x total executor cores instead.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

@@ -224,6 +224,15 @@ def test_multimodal_features_and_frames(spark):
     assert [r["width"] for r in img] == [64]
 
 
+def test_multimodal_features_repartition_by_byte_budget(spark):
+    media = multimodal.synthesize_media(spark, 60).coalesce(2)
+    total = media.select(F.sum(F.length("payload"))).collect()[0][0]
+    budget = -(-total // 7)  # seven partitions' worth of bytes
+    assert multimodal.extract_features(media, batch_bytes=budget).rdd.getNumPartitions() == 7
+    # a budget the input already meets keeps its partitioning
+    assert multimodal.extract_features(media, batch_bytes=total).rdd.getNumPartitions() == 2
+
+
 def test_multimodal_poly_payload_mode(spark):
     """payload_mode='poly' (the DuckDB-oracle-portable payload synthesis)
     keeps the exact same downstream contract as 'xx'; against an independent

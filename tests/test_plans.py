@@ -5,7 +5,9 @@ These pin the Catalyst properties the scale story depends on:
 - enrich compiles to a broadcast hash join (map-side, no shuffle of facts),
 - dissect, in every configuration, keeps the pipeline out of Python,
 - the condition language compiles into ONE filter (pushable),
-- salted repartition spreads the hot conversation.
+- salted repartition spreads the hot conversation,
+- the user_agent stage and the chains that carry it compile inside
+  whole-stage codegen (a fallback to the interpreter fails the test).
 """
 
 import pytest
@@ -97,6 +99,109 @@ def test_dissect_plan_has_no_python(spark, tdir, tokenizer, extra):
     })
     plan = plan_of(st.apply(spark.read.parquet(tdir)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+
+
+@pytest.fixture
+def no_codegen_fallback(spark):
+    """Make a whole-stage codegen compile failure raise instead of silently
+    running the plan in the interpreter."""
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.set(key, old)
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def test_user_agent_stays_in_codegen(spark, no_codegen_fallback):
+    from beats_spark.processors import apply_chain, build_chain
+    from test_ua_cidr import UA_CORPUS
+
+    df = spark.createDataFrame([(r[0],) for r in UA_CORPUS], "ua string")
+    _noop(apply_chain(df, build_chain([{"user_agent": {"field": "ua"}}])))
+
+
+def test_benchmark_shaped_chain_stays_in_codegen(spark, no_codegen_fallback):
+    """dissect logfmt, dissect with an ``|ip`` key, grok on an access line,
+    user_agent and kv, over one line of each format."""
+    from beats_spark.processors import apply_chain, build_chain
+
+    lines = [
+        'level=info caller=a.py:1 msg="ok" latency_ms=12',
+        "src=10.0.0.1 user=bob action=read status=ok",
+        '10.0.0.2 - bob [11/Mar/2025:14:22:05 +0000] "GET / HTTP/1.1" 200 5 '
+        '"-" "Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 '
+        '(KHTML, like Gecko) Chrome/70.0.3538.102 Safari/537.36"',
+    ]
+    access = ('%{IP:client_ip} - %{NOTSPACE:user} \\[%{DATA:time}\\] '
+              '"%{WORD:method} %{NOTSPACE:path} HTTP/%{NUMBER:version}" '
+              '%{INT:status:int} %{INT:bytes:int} "%{DATA:referrer}" '
+              '"%{DATA:ua}"')
+    chain = build_chain([
+        {"dissect": {"tokenizer": 'level=%{level} caller=%{caller} '
+                                  'msg="%{msg}" latency_ms=%{latency|integer}',
+                     "field": "text", "target_prefix": "parsed",
+                     "ignore_failure": True,
+                     "when": {"contains": {"text": "level="}}}},
+        {"dissect": {"tokenizer": "src=%{ip|ip} user=%{user} "
+                                  "action=%{action} status=%{status}",
+                     "field": "text", "target_prefix": "source",
+                     "ignore_failure": True,
+                     "when": {"contains": {"text": "src="}}}},
+        {"grok": {"field": "text", "pattern": access, "target_prefix": "http",
+                  "when": {"contains": {"text": "HTTP/"}}}},
+        {"user_agent": {"field": "http.ua", "ignore_missing": True}},
+        {"kv": {"field": "text", "target": "kv", "strict": False,
+                "include_keys": ["src", "user", "action", "status"]}},
+    ])
+    df = spark.createDataFrame([(x,) for x in lines], "text string")
+    _noop(apply_chain(df, chain))
+
+
+def _module_chain(spark, name: str):
+    """The golden module port ``name`` applied to its fixture lines."""
+    import datetime as dt
+    import importlib
+
+    from beats_spark.processors import apply_chain
+    from beats_spark.processors.enrich import register_lookup
+
+    m = importlib.import_module(f"test_module_{name}")
+    ts = dt.datetime(2025, 6, 1)
+    if name in ("nginx", "apache"):
+        register_lookup(f"{name}_geo", lambda: spark.createDataFrame(
+            m.GEO_DIM_ROWS, m.GEO_DIM_SCHEMA))
+        df = spark.createDataFrame([(x, ts) for x in m.LINES],
+                                   "message string, ts timestamp")
+        return apply_chain(df, getattr(m, f"{name}_access_stages")())
+    if name == "syslog":
+        df = spark.createDataFrame([(x, ts) for x in m.LINES],
+                                   "message string, ts timestamp")
+        return apply_chain(df, m.syslog_stages())
+    if name == "auditd":
+        df = spark.createDataFrame([(x,) for x in m.LINES], "message string")
+        return apply_chain(df, m.auditd_stages())
+    lines = m.RAW_LINES if name == "mysql" else m.TEXT + m.CSV
+    df = spark.createDataFrame([("f1", i, x) for i, x in enumerate(lines)],
+                               "file string, line_no int, message string")
+    if name == "postgresql":
+        return apply_chain(df, m.pg_stages())
+    stages = m.mysql_slowlog_stages()
+    out = apply_chain(df, stages[:1])  # multiline join, then excludes
+    for rx in m.EXCLUDE:
+        out = out.filter(~F.coalesce(F.col("message").rlike(rx), F.lit(False)))
+    return apply_chain(out, stages[1:])
+
+
+@pytest.mark.parametrize("name", ["nginx", "apache", "syslog", "mysql",
+                                  "auditd", "postgresql"])
+def test_module_chain_stays_in_codegen(spark, no_codegen_fallback, name):
+    """Every golden module port compiles inside whole-stage codegen; the
+    apache one shares a method between a four-pattern grok and user_agent."""
+    _noop(_module_chain(spark, name))
 
 
 def test_salting_spreads_hot_conversation(spark, tdir):
@@ -200,4 +305,20 @@ def test_processors_write_fields_only_through_event():
             for p in sorted(root.glob("*.py"))
             for i, line in enumerate(p.read_text().splitlines(), 1)
             if bad.search(line)]
+    assert hits == []
+
+
+def test_library_uses_no_rdd():
+    """Production code stays on the DataFrame API: no ``.rdd`` under
+    ``beats_spark/``."""
+    import pathlib
+    import re
+
+    import beats_spark
+
+    root = pathlib.Path(beats_spark.__file__).parent
+    hits = [f"{p.relative_to(root)}:{i}: {line.strip()}"
+            for p in sorted(root.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if re.search(r"\.rdd\b", line)]
     assert hits == []
