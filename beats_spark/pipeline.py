@@ -161,19 +161,10 @@ class Pipeline:
 
         routed = self.transform(df)
         # PySpark Observation captures only the FIRST action touching its
-        # node. Stages with plan-time sampling (schema-less
-        # decode_json_fields, timestamp sample validation) run a
-        # limit(1)-style collect DURING transform() — on the observed
-        # lineage — which would freeze events_in at the sample job's
-        # partial count. Detect consumption (non-blocking probe) and fall
-        # back to an explicit count job: only configs with sampling
-        # stages pay the second scan.
-        try:
-            # getRowOrEmpty returns a scala Option (py4j does NOT map its
-            # None$ to Python None — probe .isEmpty(), not `is None`)
-            obs_consumed = not obs._jo.getRowOrEmpty().isEmpty()
-        except Exception:
-            obs_consumed = True  # can't prove it's clean → pay the scan
+        # node: a stage that samples its input during transform() (schema-
+        # less decode_json_fields) would freeze events_in at the sample
+        # job's partial count, so only such configs pay a count job.
+        obs_consumed = any(st.samples_input for st in self.stages)
         payload_cols = [c for c in routed.columns if not c.startswith(META_PREFIX)]
         routed = routed.select(*payload_cols)
         if self.config.cluster_by:

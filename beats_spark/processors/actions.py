@@ -176,44 +176,31 @@ def include_fields(cfg: dict[str, Any]) -> Stage:
     fields = list(cfg.get("fields", []))
 
     class IncludeFields(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
+        def drops(self, df: DataFrame) -> list[str]:
             from pyspark.sql import types as T
 
             wanted = set(fields) | PROTECTED_FIELDS
 
-            def prune(col: Column, dtype, prefix: str) -> Column | None:
-                """Rebuild a struct keeping only wanted subtrees — a kept
-                root must not smuggle sibling fields through
-                (include_fields.go prunes to exactly the listed paths)."""
-                kept = []
-                for f in dtype.fields:
-                    p = f"{prefix}.{f.name}"
-                    if p in wanted or not isinstance(f.dataType, T.StructType):
-                        if p in wanted or any(
-                                w.startswith(p + ".") for w in wanted):
-                            kept.append(col.getField(f.name).alias(f.name))
-                    elif any(w.startswith(p + ".") for w in wanted):
-                        sub = prune(col.getField(f.name), f.dataType, p)
-                        if sub is not None:
-                            kept.append(sub.alias(f.name))
-                if not kept:
-                    return None
-                return F.when(col.isNotNull(), F.struct(*kept))
+            def unwanted(dtype: T.StructType, prefix: str) -> list[str]:
+                """Paths that are neither wanted nor an ancestor of a wanted
+                path: a kept struct must not smuggle sibling fields through
+                (include_fields.go prunes to exactly the listed paths), and a
+                struct none of whose fields is kept goes whole. A non-struct
+                ancestor is kept whole."""
+                out = []
+                for fld in dtype.fields:
+                    p = prefix + fld.name
+                    if p in wanted or (not prefix and p.startswith("_")):
+                        continue
+                    if not any(w.startswith(p + ".") for w in wanted):
+                        out.append(p)
+                    elif isinstance(fld.dataType, T.StructType):
+                        sub = unwanted(fld.dataType, p + ".")
+                        every = [f"{p}.{c}" for c in fld.dataType.fieldNames()]
+                        out += [p] if sub == every else sub
+                return out
 
-            cols = []
-            for root in df.schema.fieldNames():
-                if root.startswith("_") or root in wanted:
-                    cols.append(F.col(root))
-                    continue
-                if any(w.startswith(root + ".") for w in wanted):
-                    dtype = df.schema[root].dataType
-                    if isinstance(dtype, T.StructType):
-                        sub = prune(F.col(root), dtype, root)
-                        if sub is not None:
-                            cols.append(sub.alias(root))
-                    else:
-                        cols.append(F.col(root))
-            return df.select(*cols)
+            return unwanted(df.schema, "")
 
     return IncludeFields()
 

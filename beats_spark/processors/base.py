@@ -5,19 +5,22 @@ The reference runs processors serially per event; nil return = drop
 (conditionals.go:60-91) and ``if/then/else`` (conditionals.go:113-175).
 
 Here a Stage declares itself in one of three shapes so conditions can be
-fused into the SAME projection instead of branching per row:
+fused into the SAME pass instead of branching per row:
 
 - *project*: ``updates(f)`` adds its writes to a :class:`~beats_spark.event.Fields`
   write set (``f.get``/``f.has`` read, ``f.set`` writes, rules see each
   other's writes in order) and ``drops()`` lists deletions; ``apply`` makes
-  exactly one write, ``f.apply(where=cond)``, which under ``when`` keeps
-  every old value on rows the condition does not match;
+  exactly one write, ``f.apply(where=cond)``;
 - *filter*: ``keep() -> Column`` — under ``when`` it becomes
   ``~cond | keep`` (drop only matching rows);
-- *custom*: ``custom(df) -> df`` (joins, mapInPandas etc.) — under ``when``
-  the frame is split, transformed, and unioned back.
+- *frame*: an ``apply(df, cond)`` override (joins, windows, mapInPandas)
+  that does its frame-level work on the whole input — a join probes the
+  key masked by ``F.when(cond, key)`` — and ends in one
+  ``Fields.apply(where=cond)``.
 
-Everything stays a single declarative plan: Catalyst sees through all of it.
+``when`` means the same thing in every shape: rows where the condition is
+false or NULL keep every old value, in one pass over the input. Everything
+stays a single declarative plan: Catalyst sees through all of it.
 """
 
 from __future__ import annotations
@@ -38,6 +41,9 @@ class Stage:
     """Base processor stage. Subclasses override one shape."""
 
     name = "stage"
+    # runs an action on its input while the plan is built: Pipeline.run
+    # then counts the input itself (the action fires its Observation first)
+    samples_input = False
 
     def updates(self, f: Fields) -> None:
         pass
@@ -48,18 +54,9 @@ class Stage:
     def keep(self, df: DataFrame) -> Column | None:
         return None
 
-    def custom(self, df: DataFrame) -> DataFrame | None:
-        return None
-
     # -- application ------------------------------------------------------
 
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-        out = self.custom(df)
-        if out is not None:
-            if cond is None:
-                return out
-            return self._apply_custom_cond(df, cond)
-
         keep = self.keep(df)
         if keep is not None:
             # NULL-safe guard: a when-condition that evaluates NULL per row
@@ -84,14 +81,6 @@ class Stage:
                 df = drop_path(df, path)
         return df
 
-    def _apply_custom_cond(self, df: DataFrame, cond: Column) -> DataFrame:
-        tag = f"__when_{next(_cond_counter)}"
-        df = df.withColumn(tag, cond)
-        matched = self.custom(df.filter(F.col(tag)))
-        assert matched is not None
-        rest = df.filter(~F.coalesce(F.col(tag), F.lit(False)))
-        return matched.unionByName(rest, allowMissingColumns=True).drop(tag)
-
 
 @dataclass
 class FnStage(Stage):
@@ -101,7 +90,6 @@ class FnStage(Stage):
     updates_fn: Callable[[DataFrame], dict[str, Column]] | None = None
     drops_fn: Callable[[DataFrame], list[str]] | None = None
     keep_fn: Callable[[DataFrame], Column] | None = None
-    custom_fn: Callable[[DataFrame], DataFrame] | None = None
 
     def updates(self, f: Fields) -> None:
         # the function reads the input frame; its entries are set in order
@@ -114,9 +102,6 @@ class FnStage(Stage):
     def keep(self, df: DataFrame) -> Column | None:
         return self.keep_fn(df) if self.keep_fn else None
 
-    def custom(self, df: DataFrame) -> DataFrame | None:
-        return self.custom_fn(df) if self.custom_fn else None
-
 
 @dataclass
 class WhenStage(Stage):
@@ -126,6 +111,10 @@ class WhenStage(Stage):
     inner: Stage = field(default_factory=Stage)
     when_cfg: dict[str, Any] = field(default_factory=dict)
     name = "when"
+
+    @property
+    def samples_input(self) -> bool:
+        return self.inner.samples_input
 
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
         c = compile_condition(df, self.when_cfg)
@@ -147,6 +136,10 @@ class IfThenElseStage(Stage):
     then_stages: list[Stage] = field(default_factory=list)
     else_stages: list[Stage] = field(default_factory=list)
     name = "if"
+
+    @property
+    def samples_input(self) -> bool:
+        return any(st.samples_input for st in self.then_stages + self.else_stages)
 
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
         tag = f"__if_{next(_cond_counter)}"

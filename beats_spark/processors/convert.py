@@ -178,6 +178,8 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
     add_error_key = cfg.get("add_error_key", False)
 
     class DecodeJson(Stage):
+        samples_input = not schema_ddl
+
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             f = Fields(df)
             for fld in fields:

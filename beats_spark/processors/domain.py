@@ -29,7 +29,7 @@ from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from beats_spark.event import get_path, with_path
+from beats_spark.event import Fields, get_path
 from beats_spark.processors.base import Stage, register
 
 # Common-coverage built-in subset of the PSL (production: load the full
@@ -89,7 +89,7 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
     list_name = cfg.get("suffix_list", "default")
 
     class RegisteredDomain(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             spark = df.sparkSession
             sfx = F.broadcast(_suffix_frame(spark, list_name))
 
@@ -98,6 +98,8 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
             # can diverge between the two evaluations of a self-join),
             # deduplicated so each distinct domain is matched once
             dom_expr = F.lower(get_path(df, fld))
+            if cond is not None:  # skipped rows neither match nor probe
+                dom_expr = F.when(cond, dom_expr)
             doms = df.select(dom_expr.alias("__dom")).filter(
                 F.col("__dom").isNotNull()).distinct()
             labels = F.split(F.col("__dom"), r"\.")
@@ -157,6 +159,7 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
                     F.slice(labels2, n2 - F.col("__psk"), F.col("__psk") + 1),
                     "."),
             )
-            return with_path(out, target, reg).drop("__dom", "__psk")
+            return (Fields(out).set(target, reg).apply(where=cond)
+                    .drop("__dom", "__psk"))
 
     return RegisteredDomain()

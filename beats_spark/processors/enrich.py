@@ -24,35 +24,45 @@ def register_lookup(name: str, provider: Callable[[], DataFrame]) -> None:
     _LOOKUP_PROVIDERS[name] = provider
 
 
+def _dim(stage: str, df: DataFrame, cfg: dict[str, Any], key: str):
+    """The stage's dimension table (a registered ``lookup`` or a parquet
+    ``table``) and its (dim column, target field) pairs: ``fields`` as a
+    list or a rename map, by default every column but ``key``."""
+    name = cfg.get("lookup")
+    if name is not None:
+        if name not in _LOOKUP_PROVIDERS:
+            raise ValueError(f"{stage}: unknown lookup {name!r} "
+                             f"(registered: {sorted(_LOOKUP_PROVIDERS)})")
+        dim = _LOOKUP_PROVIDERS[name]()
+    elif cfg.get("table") is not None:
+        dim = df.sparkSession.read.parquet(cfg["table"])
+    else:
+        raise ValueError(f"{stage}: lookup or table required")
+    cols = cfg.get("fields") or [c for c in dim.columns if c != key]
+    return dim, (list(cols.items()) if isinstance(cols, dict)
+                 else [(c, c) for c in cols])
+
+
 @register("enrich")
 def enrich(cfg: dict[str, Any]) -> Stage:
     """Config: ``lookup`` (registered name) or ``table`` (parquet path),
     ``on`` (event field = dim key column), ``fields`` (dim columns to bring,
     optional rename map), ``target`` (prefix, default the lookup name),
     ``default`` (value map applied on miss — the left-join-null path).
+    Rows a ``when`` skips probe a NULL key and keep their old target.
     """
-    lookup_name = cfg.get("lookup")
-    table_path = cfg.get("table")
+    unknown = set(cfg) - {"lookup", "table", "on", "key", "fields", "target",
+                          "default"}
+    if unknown:
+        raise ValueError(f"enrich: unknown config keys {sorted(unknown)}")
     on = cfg["on"]
     key_col = cfg.get("key", on.split(".")[-1])
-    fields = cfg.get("fields")  # None = all non-key columns
-    target = cfg.get("target", lookup_name or "enrich")
+    target = cfg.get("target", cfg.get("lookup") or "enrich")
     defaults = cfg.get("default", {})
 
     class Enrich(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            spark = df.sparkSession
-            if lookup_name is not None:
-                dim = _LOOKUP_PROVIDERS[lookup_name]()
-            elif table_path is not None:
-                dim = spark.read.parquet(table_path)
-            else:
-                raise ValueError("enrich: lookup or table required")
-            cols = fields or [c for c in dim.columns if c != key_col]
-            if isinstance(cols, dict):
-                pairs = list(cols.items())
-            else:
-                pairs = [(c, c) for c in cols]
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
+            dim, pairs = _dim("enrich", df, cfg, key_col)
             # dim columns ride the join under a reserved prefix so a dim
             # column sharing a name with an event column can neither
             # become an ambiguous reference nor get the event's own
@@ -60,10 +70,11 @@ def enrich(cfg: dict[str, Any]) -> Stage:
             sel = [F.col(src).alias(f"__enr_{dst}") for src, dst in pairs]
             out_names = [dst for _, dst in pairs]
             dim = dim.select(F.col(key_col).alias("__enrich_key"), *sel)
+            key = get_path(df, on)
+            if cond is not None:
+                key = F.when(cond, key)
             joined = df.join(
-                F.broadcast(dim),
-                get_path(df, on) == F.col("__enrich_key"),
-                "left",
+                F.broadcast(dim), key == F.col("__enrich_key"), "left",
             ).drop("__enrich_key")
             payload_cols: list[Column] = []
             for c in out_names:
@@ -72,8 +83,7 @@ def enrich(cfg: dict[str, Any]) -> Stage:
                     v = F.coalesce(v, F.lit(defaults[c]))
                 payload_cols.append(v.alias(c))
             payload = F.struct(*payload_cols)
-            from beats_spark.event import with_path
-            joined = with_path(joined, target, payload)
+            joined = Fields(joined).set(target, payload).apply(where=cond)
             return joined.drop(*[f"__enr_{c}" for c in out_names])
 
     return Enrich()
@@ -264,13 +274,11 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
     explode amplification, no groupBy to pick the longest match. IPv4 and
     IPv6 dims coexist (keys are family-tagged). Duplicate dim rows at the
     same (family, prefix, key) keep the first, matching hash-lookup
-    first-wins."""
-    lookup_name = cfg.get("lookup")
-    table_path = cfg.get("table")
+    first-wins. Rows a ``when`` skips probe a NULL ip and keep their old
+    target."""
     on = cfg["on"]
     cidr_col = cfg.get("cidr", "cidr")
-    fields = cfg.get("fields")
-    target = cfg.get("target", lookup_name or "enrich_cidr")
+    target = cfg.get("target", cfg.get("lookup") or "enrich_cidr")
     ignore_missing = cfg.get("ignore_missing", False)
     unknown = set(cfg) - {"lookup", "table", "on", "cidr", "fields",
                           "target", "ignore_missing", "when"}
@@ -278,23 +286,13 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
         raise ValueError(f"enrich_cidr: unknown config keys {sorted(unknown)}")
 
     class EnrichCIDR(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            from beats_spark.event import with_path
-
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             if not has_path(df.schema, on):
                 if ignore_missing:
                     return df
                 raise ValueError(f"enrich_cidr: missing field {on!r}")
             spark = df.sparkSession
-            if lookup_name is not None:
-                dim = _LOOKUP_PROVIDERS[lookup_name]()
-            elif table_path is not None:
-                dim = spark.read.parquet(table_path)
-            else:
-                raise ValueError("enrich_cidr: lookup or table required")
-            cols = fields or [c for c in dim.columns if c != cidr_col]
-            pairs = (list(cols.items()) if isinstance(cols, dict)
-                     else [(c, c) for c in cols])
+            dim, pairs = _dim("enrich_cidr", df, cfg, cidr_col)
             if cidr_col not in dim.columns:
                 raise ValueError(
                     f"enrich_cidr: dim has no {cidr_col!r} column")
@@ -313,6 +311,8 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
                 T.StructField(d, dim.schema[s].dataType) for s, d in pairs])
 
             ip = get_path(df, on).cast("string")
+            if cond is not None:
+                ip = F.when(cond, ip)
             existing = {c.lower() for c in df.columns}
             names = ["hex", "s", "l", "r"] + [
                 f"{kp}{x}" for x in range(len(lengths)) for kp in ("k", "p")]
@@ -339,7 +339,8 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
                     hits.append(
                         F.try_element_at(F.from_json(F.lit(js), map_t), ev_key))
                 payload = F.coalesce(*hits) if hits else F.lit(None)
-                return with_path(df, target, payload).drop(*temp_cols)
+                return (Fields(df).set(target, payload).apply(where=cond)
+                        .drop(*temp_cols))
 
             for idx, (f_, l_) in enumerate(lengths):
                 slice_schema = T.StructType([
@@ -358,7 +359,7 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
                              ev_key == F.col(f"{tp}k{idx}"), "left")
                 hits.append(F.col(f"{tp}p{idx}"))
             payload = F.coalesce(*hits) if hits else F.lit(None)
-            out = with_path(df, target, payload)
+            out = Fields(df).set(target, payload).apply(where=cond)
             return out.drop(*temp_cols,
                             *[f"{tp}k{i}" for i in range(len(lengths))],
                             *[f"{tp}p{i}" for i in range(len(lengths))])

@@ -18,7 +18,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.event import get_path, has_path
+from beats_spark.event import Fields, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 PROTO_NUMBERS = {
@@ -97,9 +97,7 @@ def community_id(cfg: dict[str, Any]) -> Stage:
         raise ValueError("community_id: seed must be a uint16")
 
     class CommunityID(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            from beats_spark.event import with_path
-
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             def col_or_null(path: str, t: str) -> Column:
                 if has_path(df.schema, path):
                     return get_path(df, path).cast(t)
@@ -179,7 +177,7 @@ def community_id(cfg: dict[str, Any]) -> Stage:
                 portful, F.concat(head, _u16be(a_p), _u16be(b_p))
             ).otherwise(head)
             cid = F.concat(F.lit("1:"), F.base64(F.unhex(F.sha1(payload))))
-            out = with_path(df, target, cid)
+            out = Fields(df).set(target, cid).apply(where=cond)
             return out.drop(*[tp + c for c in names])
 
     return CommunityID()

@@ -39,9 +39,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import Fields, append_flag, get_path, has_path
+from beats_spark.event import Fields, append_flag
 from beats_spark.processors.base import Stage, register
 
 
@@ -83,12 +83,12 @@ def kv(cfg: dict[str, Any]) -> Stage:
         raise ValueError(f"kv: unknown config keys {sorted(unknown)}")
 
     class KV(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            if not has_path(df.schema, field):
+        def updates(self, f: Fields) -> None:
+            if not f.has(field):
                 if ignore_missing:
-                    return df
+                    return
                 raise ValueError(f"kv: missing field {field!r}")
-            src = get_path(df, field).cast("string")
+            src = f.get(field).cast("string")
             parts = F.filter(F.split(src, field_split, -1),
                              lambda p: p != "")
             split1 = lambda p: F.split(p, value_split, 2)  # noqa: E731
@@ -151,8 +151,7 @@ def kv(cfg: dict[str, Any]) -> Stage:
                 failed = failed | F.coalesce(src.isNotNull() & malformed,
                                              F.lit(False))
             ok = ~failed & src.isNotNull()
-            f = Fields(df).set(target, F.when(ok, m))
+            f.set(target, F.when(ok, m))
             append_flag(f, "kv_parsing_error", cond=failed)
-            return f.apply()
 
     return KV()

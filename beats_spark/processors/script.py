@@ -9,6 +9,8 @@ exception-tagging semantics (``_js_exception`` → ``_script_exception`` in
 
 Config: ``fn``: Callable[[pd.DataFrame], pd.DataFrame] (must preserve/declare
 schema via ``schema`` DDL when it changes), ``tag_on_exception``.
+Under ``when``, ``fn`` sees only each batch's matching rows; the others
+pass unchanged under the declared columns and the input's undeclared ones.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from typing import Any, Callable
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from beats_spark.processors.base import Stage, register
 
@@ -29,37 +31,54 @@ def script(cfg: dict[str, Any]) -> Stage:
     tag = cfg.get("tag_on_exception", "_script_exception")
 
     class Script(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            out_schema = schema_ddl or df.schema
-            if isinstance(schema_ddl, str):
-                from pyspark.sql.types import _parse_datatype_string
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
+            from pyspark.sql.types import StructType, _parse_datatype_string
 
-                out_cols = _parse_datatype_string(schema_ddl).fieldNames()
-            else:
-                out_cols = [f.name for f in df.schema.fields]
+            out_schema = (_parse_datatype_string(schema_ddl)
+                          if isinstance(schema_ddl, str) else schema_ddl)
+            out_schema = out_schema or df.schema
+            if cond is not None:  # skipped rows keep undeclared columns
+                out_schema = StructType(out_schema.fields + [
+                    f for f in df.schema.fields
+                    if f.name not in out_schema.fieldNames()])
+            out_cols, masked = out_schema.fieldNames(), cond is not None
+            flag, taken = "__script_when", {c.lower() for c in df.columns}
+            while flag in taken:
+                flag = "_" + flag
 
             def conform(pdf):
-                """Shape a batch to the DECLARED output schema — the
-                exception fallback must not crash Arrow serialization just
-                because fn would have added/removed columns."""
+                """Shape a batch to the output schema — the exception
+                fallback and the skipped rows must not crash Arrow
+                serialization just because fn adds or removes columns."""
                 out = pdf.copy()
                 for c in out_cols:
                     if c not in out.columns:
                         out[c] = None
-                return out[[c for c in out_cols]]
+                return out[out_cols]
+
+            def call(pdf):
+                try:
+                    return fn(pdf)
+                except Exception:  # noqa: BLE001 — mirror tag_on_exception
+                    fb = conform(pdf)
+                    if "tags" in fb.columns:
+                        fb["tags"] = fb["tags"].map(
+                            lambda t: (list(t) if t is not None else []) + [tag]
+                        )
+                    return fb
 
             def run(batches):
                 for pdf in batches:
-                    try:
-                        yield fn(pdf)
-                    except Exception:  # noqa: BLE001 — mirror tag_on_exception
-                        fb = conform(pdf)
-                        if "tags" in fb.columns:
-                            fb["tags"] = fb["tags"].map(
-                                lambda t: (list(t) if t is not None else []) + [tag]
-                            )
-                        yield fb
+                    if not masked:
+                        yield call(pdf)
+                        continue
+                    hit = pdf.pop(flag).fillna(False).astype(bool)
+                    matched = call(pdf[hit]) if hit.any() else pdf[hit]
+                    yield pd.concat([conform(matched), conform(pdf[~hit])],
+                                    ignore_index=True)
 
+            if masked:  # one pass: the condition rides into the batch
+                df = df.withColumn(flag, cond)
             return df.mapInPandas(run, schema=out_schema)
 
     return Script()

@@ -113,7 +113,9 @@ def multiline(cfg: dict[str, Any]) -> Stage:
         raise ValueError(f"multiline: unknown matcher type {match!r}")
 
     class Multiline(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
+            if cond is not None:  # reader config in the reference: no `when`
+                raise ValueError("multiline: takes no condition (when, if/then/else)")
             w = Window.partitionBy(*part).orderBy(*order)
             line = get_path(df, fld).cast("string")
             first = F.row_number().over(w) == 1
@@ -196,8 +198,9 @@ def rate_limit(cfg: dict[str, Any]) -> Stage:
 
     Batch semantics: within each (key, time-window) allow the first N events
     in event-time order, drop the rest — ``row_number() over (partition by
-    key, window(ts, unit)) <= N``. At 100 TB this is one shuffle on
-    (key, window); AQE handles skewed keys.
+    key, window start) <= N``, one shuffle on (key, window). Untimestamped
+    rows pass, as in the streaming token bucket (streaming/stateful.py);
+    under ``when`` the condition joins the key and skipped rows pass.
     """
     unknown = set(cfg) - {"limit", "fields", "ts_field"}
     if unknown:
@@ -212,24 +215,25 @@ def rate_limit(cfg: dict[str, Any]) -> Stage:
     n = int(n_s)
     if unit not in ("s", "m", "h"):
         raise ValueError(f"rate_limit: unknown unit {unit!r} in {limit!r}")
-    window_dur = {"s": "1 second", "m": "1 minute", "h": "1 hour"}[unit]
+    window_us = {"s": 1, "m": 60, "h": 3600}[unit] * 1_000_000
 
     class RateLimit(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
+        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             ts = get_path(df, ts_field)
-            # rows without an event time belong to no window and pass
-            # through untouched — same semantics as the streaming token
-            # bucket (streaming/stateful.py). They must be SPLIT OFF
-            # first: Spark's time-window rewrite injects an
-            # isnotnull(ts) filter, so keeping them in the limited frame
-            # silently drops every untimestamped event.
-            timed = df.filter(ts.isNotNull())
-            untimed = df.filter(ts.isNull())
-            win = F.window(ts, window_dur)["start"]
-            keys = [get_path(timed, f) for f in fields] + [win]
+            # the epoch-aligned window start as arithmetic, not F.window:
+            # Spark's time-window rewrite injects an isnotnull(ts) filter
+            # that would drop every untimestamped row
+            us = F.unix_micros(ts.cast("timestamp"))
+            keys = [get_path(df, f) for f in fields]
+            keys.append(us - F.pmod(us, F.lit(window_us)))
+            passes = ts.isNull()
+            if cond is not None:
+                matched = F.coalesce(cond, F.lit(False))
+                keys.append(matched)
+                passes = passes | ~matched
             w = Window.partitionBy(*keys).orderBy(ts)
-            timed = timed.withColumn("__rl_rn", F.row_number().over(w))
-            limited = timed.filter(F.col("__rl_rn") <= n).drop("__rl_rn")
-            return limited.unionByName(untimed)
+            return (df.withColumn("__rl_rn", F.row_number().over(w))
+                    .filter(passes | (F.col("__rl_rn") <= n))
+                    .drop("__rl_rn"))
 
     return RateLimit()

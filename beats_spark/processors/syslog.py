@@ -21,9 +21,9 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from beats_spark.event import Fields, append_flag, get_path, set_error_message
+from beats_spark.event import Fields, append_flag, set_error_message
 from beats_spark.processors.base import Stage, register
 
 # <PRI>MMM dd HH:mm:ss HOST TAG[PID]: MSG       (rfc3164_parser.go)
@@ -96,8 +96,8 @@ def syslog(cfg: dict[str, Any]) -> Stage:
     ignore_failure = bool(cfg.get("ignore_failure", True))
 
     class Syslog(Stage):
-        def custom(self, df: DataFrame) -> DataFrame:
-            line = get_path(df, fld).cast("string")
+        def updates(self, f: Fields) -> None:
+            line = f.get(fld).cast("string")
             ok3, f3 = _parse_3164(line)
             ok5, f5 = _parse_5424(line)
             if fmt == "rfc3164":
@@ -117,10 +117,9 @@ def syslog(cfg: dict[str, Any]) -> Stage:
             payload = F.when(ok, F.struct(
                 *[fields[k].alias(k) for k in FIELD_ORDER]
             ))
-            f = Fields(df).set(target, payload)
+            f.set(target, payload)
             append_flag(f, "syslog_parsing_error", cond=~ok)
             if not ignore_failure:
                 set_error_message(f, ~ok, "syslog parse failure")
-            return f.apply()
 
     return Syslog()

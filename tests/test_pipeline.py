@@ -382,6 +382,80 @@ def test_events_in_correct_with_plan_time_sampling_stage(spark, transcripts,
     assert sum(res.sinks.values()) + res.events_dropped == n
 
 
+def test_events_in_correct_with_sampling_stage_inside_if(spark, transcripts,
+                                                        tmp_path):
+    """A sampling stage nested in if/then also marks its chain: run() pays
+    the count job and events_in stays exact."""
+    src = transcripts.withColumn(
+        "raw", F.concat(F.lit('{"k":'), F.col("turn_idx").cast("string"),
+                        F.lit("}")))
+    cfg = PipelineConfig(
+        processors=[
+            {"if": {"has_fields": ["raw"]},
+             "then": [{"decode_json_fields": {"fields": ["raw"]}}]},
+            {"drop_event": {"when": {"equals": {"role": "system"}}}},
+        ],
+        routes=[{"sink": "s_%{[tool]}"}],
+    )
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    res = Pipeline(spark, cfg, cat).run(src, run_id="sampled_if")
+    n = transcripts.count()
+    assert res.events_in == n
+    assert sum(res.sinks.values()) + res.events_dropped == n
+
+
+def test_run_with_when_on_frame_stages_scans_input_exactly_once(
+        spark, transcripts, tmp_path):
+    """``when`` on the join, window and mapInPandas stages keeps run() at
+    one read of its input (none splits its frame and unions it back), and
+    events_in stays exact."""
+    from beats_spark.processors.enrich import register_lookup
+
+    register_lookup("once_tools", lambda: spark.createDataFrame(
+        [("search", "web")], "tool string, family string"))
+    register_lookup("once_geo", lambda: spark.createDataFrame(
+        [("10.0.0.0/8", "lan")], "cidr string, zone string"))
+    base = transcripts.withColumn("ip", F.concat(
+        F.lit("10.0.0."), (F.col("turn_idx") % 250).cast("string")))
+    rows_seen = spark.sparkContext.accumulator(0)
+
+    def passthrough(it):
+        for pdf in it:
+            rows_seen.add(len(pdf))
+            yield pdf
+
+    when = {"equals": {"role": "user"}}
+    cfg = PipelineConfig(
+        processors=[
+            {"kv": {"field": "text", "strict": False, "when": when}},
+            {"syslog": {"field": "text", "when": when}},
+            {"community_id": {"fields": {"source_ip": "ip",
+                                         "destination_ip": "ip"},
+                              "when": when}},
+            {"enrich": {"lookup": "once_tools", "on": "tool",
+                        "target": "tool_meta", "when": when}},
+            {"enrich_cidr": {"lookup": "once_geo", "on": "ip",
+                             "target": "geo", "when": when}},
+            {"include_fields": {"fields": ["conv_id", "turn_idx", "role",
+                                           "text", "tool", "ip", "kv"],
+                                "when": when}},
+            {"script": {"fn": lambda pdf: pdf, "when": when}},
+            {"rate_limit": {"limit": "2/s", "fields": ["conv_id"],
+                            "when": when}},
+        ],
+        routes=[{"sink": "s_%{[tool]}"}],
+    )
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    res = Pipeline(spark, cfg, cat).run(
+        base.mapInPandas(passthrough, base.schema), run_id="when_onescan")
+    n = transcripts.count()
+    assert res.events_in == n
+    assert rows_seen.value == n, (
+        f"input scanned {rows_seen.value / n:.2f}x (expected exactly 1x)"
+    )
+    assert sum(res.sinks.values()) + res.events_dropped == n
+
+
 def test_catalog_read_unknown_snapshot_raises(spark, transcripts, tmp_path):
     cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     s = cat.append(transcripts, "t")

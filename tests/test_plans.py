@@ -322,3 +322,28 @@ def test_library_uses_no_rdd():
             for i, line in enumerate(p.read_text().splitlines(), 1)
             if re.search(r"\.rdd\b", line)]
     assert hits == []
+
+
+def _grep_library(pattern: str, sub: str = "") -> list[str]:
+    import pathlib
+    import re
+
+    import beats_spark
+
+    root = pathlib.Path(beats_spark.__file__).parent / sub
+    return [f"{p.relative_to(root)}:{i}: {line.strip()}"
+            for p in sorted(root.rglob("*.py"))
+            for i, line in enumerate(p.read_text().splitlines(), 1)
+            if re.search(pattern, line)]
+
+
+def test_processors_have_one_when_path():
+    """No stage splits its frame under ``when`` and unions it back: no
+    ``custom`` hook and no union under ``beats_spark/processors/``."""
+    assert _grep_library(r"def custom\b|_apply_custom_cond|unionByName\(|\.union\(",
+                         "processors") == []
+
+
+def test_library_uses_no_private_py4j_handles():
+    """Production code reaches the JVM only through the public API."""
+    assert _grep_library(r"\._(jo|jdf|jvm|jsc)\b") == []
