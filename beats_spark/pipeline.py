@@ -5,8 +5,9 @@ path (filebeat/beater/filebeat.go:220, libbeat/publisher/pipeline/client.go:83)
 with one declarative Spark job:
 
     incremental read (snapshot range)           # registrar resume semantics
-      → processor chain (one fused projection per stage)
+      → round-robin spread of a narrow scan     # output workers, see below
       → salted repartition on hot conv_ids      # skew control
+      → processor chain (one fused projection per stage)
       → _sink column (outil.Selector, first-match-wins)
       → ONE partitioned write, per-sink dirs adopted as table snapshots
       → metrics + lineage commit                # monitoring.go counters
@@ -18,6 +19,16 @@ parquet (cheap columnar count) so reported counts are what actually landed,
 not what the plan promised — the analogue of ack-based counters
 (pipeline/monitoring.go:92-104: events.total/filtered/published).
 
+Spread: the reference hands batches to load-balanced output workers
+(pipeline/output.go:56,106); here the workers are Spark's task slots. A
+scan is one task per file split, so a micro-batch that landed as one small
+file would run the whole chain and the write on one core. When the input's
+local files hold fewer splits (Σ ⌈size / maxPartitionBytes⌉) than
+``defaultParallelism`` and no salt or repartition is configured, ``run``
+deals the rows round-robin over every slot — one exchange, after the
+``_pid`` tag, so lineage still names the scan partition. Frames with no
+sizable input files (createDataFrame, Kafka, Iceberg) are not spread.
+
 Exactly-once resume: each processed source snapshot id is recorded in the
 ``lineage`` table inside the same run; a re-run sees it and skips — the
 registrar's offset checkpoint (filebeat/registrar/registrar.go:139-194)
@@ -27,12 +38,15 @@ re-expressed as table state.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from beats_spark.catalog import ParquetCatalog
@@ -43,6 +57,17 @@ from beats_spark.selector import compile_selector
 DEAD_LETTER = "dead_letter"
 METRICS_TABLE = "pipeline_metrics"
 LINEAGE_TABLE = "lineage"
+METRICS_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("partition_id", pa.int32()), ("sink", pa.string()),
+    ("events_in", pa.int64()), ("events_dropped", pa.int64()),
+    ("events_routed", pa.int64()),
+])
+LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()), ("source_table", pa.string()),
+    ("snapshot_id", pa.string()), ("committed_at", pa.float64()),
+])
+_BYTE_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
+               "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
 
 # characters Spark escapes in partition directory names
 # (ExternalCatalogUtils.charToEscape) — adoption must look up the ESCAPED dir
@@ -55,6 +80,40 @@ def escape_path_name(value: str) -> str:
     return "".join(
         f"%{ord(c):02X}" if c in _ESCAPED_CHARS else c for c in value
     )
+
+
+def _byte_string(value: str) -> int:
+    """A Spark byte-size conf (``134217728``, ``128m``, ``128MB``) in bytes."""
+    n, unit = re.fullmatch(r"(\d+)\s*([a-z]*)", value.strip().lower()).groups()
+    return int(n) << _BYTE_UNITS[unit]
+
+
+def _idle_slots(df: DataFrame, split_bytes: int, slots: int) -> bool:
+    """Whether scanning the frame's input files leaves task slots idle:
+    Σ ⌈size / split_bytes⌉ < slots. False when it has no input files or one
+    is not a local ``file:`` URI that can be sized."""
+    files = df.inputFiles()
+    splits = 0
+    for uri in files:
+        url = urlparse(uri)
+        if url.scheme != "file":
+            return False
+        try:
+            splits += -(-os.path.getsize(unquote(url.path)) // split_bytes)
+        except OSError:
+            return False
+        if splits >= slots:
+            return False
+    return bool(files)
+
+
+def _commit_frame(spark: SparkSession, rows: list[tuple],
+                  schema: pa.Schema) -> DataFrame:
+    """A handful of commit rows as one partition: the Arrow table reaches the
+    JVM whole, not pickled through ``parallelize``, and commits one file."""
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=schema)
+    return spark.createDataFrame(table).coalesce(1)
 
 
 @dataclass
@@ -115,7 +174,7 @@ class Pipeline:
         rows go to the dead-letter table, mirroring ES dead_letter_index,
         outputs/elasticsearch/non_indexable_policy.go:31-73)."""
         cfg = self.config
-        if cfg.salt_buckets and cfg.salt_column:
+        if self._salted:
             n = cfg.repartition or self.spark.sparkContext.defaultParallelism * 2
             # salt from row CONTENT (turn_idx when present, else all columns)
             # so placement is deterministic under task retries — a
@@ -132,6 +191,22 @@ class Pipeline:
         sink = compile_selector(df, cfg.routes, fallback=cfg.fallback_sink)
         return df.withColumn(SINK_COL, F.coalesce(sink, F.lit(cfg.dead_letter)))
 
+    @property
+    def _salted(self) -> bool:
+        return bool(self.config.salt_buckets and self.config.salt_column)
+
+    def _spread(self, df: DataFrame) -> DataFrame:
+        """Round-robin a scan that would leave task slots idle over all of
+        them (module docstring, Spread); transform() already repartitions a
+        salted or ``repartition`` config."""
+        if self._salted or self.config.repartition:
+            return df
+        slots = self.spark.sparkContext.defaultParallelism
+        split_bytes = _byte_string(
+            self.spark.conf.get("spark.sql.files.maxPartitionBytes"))
+        return (df.repartition(slots) if _idle_slots(df, split_bytes, slots)
+                else df)
+
     # -- full run ------------------------------------------------------------
 
     def run(self, df: DataFrame, run_id: str | None = None,
@@ -142,8 +217,9 @@ class Pipeline:
         run_id = run_id or uuid.uuid4().hex[:12]
         cat = self.catalog
 
-        # tag the input partition once, at the scan, for per-partition lineage
-        df = df.withColumn(PID_COL, F.spark_partition_id())
+        # tag the input partition once, at the scan, for per-partition
+        # lineage; a narrow scan is spread over the task slots after it
+        df = self._spread(df.withColumn(PID_COL, F.spark_partition_id()))
         # SINGLE-PASS lineage: events_in is observed by the staging write job
         # itself (CollectMetrics rides the one scan; Catalyst does not push
         # the drop_event filters below it), instead of a separate
@@ -213,25 +289,18 @@ class Pipeline:
         # leftover staging dir (only _SUCCESS marker remains) is removed
         shutil.rmtree(staging, ignore_errors=True)
 
-        metrics_df = self.spark.createDataFrame(
-            metrics_rows,
-            "run_id string, partition_id int, sink string, "
-            "events_in long, events_dropped long, events_routed long",
-        )
-        cat.append(metrics_df, METRICS_TABLE, run_id=run_id)
+        cat.append(_commit_frame(self.spark, metrics_rows, METRICS_SCHEMA),
+                   METRICS_TABLE, run_id=run_id)
 
         # lineage is committed for EVERY run (a direct run(df) gets one row
         # with a NULL snapshot_id): the lineage commit is the run's "completed"
         # marker, so incomplete_runs()/rollback would otherwise misclassify
         # every direct run as crashed and delete validly committed sink data
         snaps = source_snapshots or []
-        lineage_df = self.spark.createDataFrame(
-            [(run_id, source_table, s, float(time.time())) for s in snaps]
-            or [(run_id, source_table, None, float(time.time()))],
-            "run_id string, source_table string, snapshot_id string, "
-            "committed_at double",
-        )
-        cat.append(lineage_df, LINEAGE_TABLE, run_id=run_id)
+        lineage_rows = [(run_id, source_table, s, time.time())
+                        for s in snaps or [None]]
+        cat.append(_commit_frame(self.spark, lineage_rows, LINEAGE_SCHEMA),
+                   LINEAGE_TABLE, run_id=run_id)
 
         return RunResult(
             run_id=run_id,

@@ -4,6 +4,21 @@ Defaults target the sandbox (local[N], single JVM) but every knob is the one
 you would set on a 1000-executor cluster too: AQE on (runtime re-plan +
 skew-join splitting), small-table broadcast, Arrow batching for the pandas
 UDF stages, and shuffle partitions sized to the parallelism level.
+
+Two defaults are sized for the library rather than taken from Spark:
+
+- ``spark.driver.memory`` is a quarter of physical RAM (the JVM's own
+  default heap fraction), capped at 8g, so a local driver never claims half
+  of a small host.
+- ``spark.python.sql.dataFrameDebugging.enabled`` is off. With it on,
+  PySpark records the Python call site of every Column function call, at
+  four py4j round trips each (active session, a conf read, origin set and
+  clear) — about half of the commands a processor chain sends while its
+  plan is built. The site it records is a line under
+  ``beats_spark/processors/``, never the user's code: users write config,
+  not Column calls.
+
+``SPARK_DRIVER_MEMORY`` and ``extra_conf`` override both.
 """
 
 from __future__ import annotations
@@ -31,6 +46,12 @@ def ship_package(spark: SparkSession) -> None:
     base = os.path.join(tempfile.gettempdir(), f"beats_spark_pyfiles_{os.getpid()}")
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "beats_spark")
     spark.sparkContext.addPyFile(zip_path)
+
+
+def _default_driver_memory() -> str:
+    """A quarter of physical RAM in MiB, at least 1g and at most 8g."""
+    ram_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(max(ram_mib // 4, 1024), 8192)}m"
 
 
 def get_spark(
@@ -65,7 +86,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # zstd parquet output: measured to LIFT per-node scaling efficiency
         # 0.60 → 0.83 on the fan-out write (BENCH.md §2.1) — it converts

@@ -2,11 +2,12 @@
 text equality under (conv_id, turn_idx) ordering, and checkpoint/resume
 idempotence (the FIXTURES.md §4/§5 golden flow)."""
 
+import glob
 import re
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from beats_spark.catalog import ParquetCatalog
 from beats_spark.pipeline import (
@@ -16,6 +17,7 @@ from beats_spark.pipeline import (
     PipelineConfig,
     fixture_config,
 )
+from beats_spark.schema import PID_COL
 from beats_spark.testdata import synthesize_transcripts, transcripts_from_events
 from dissect_reference import expected, run_stage
 
@@ -461,3 +463,84 @@ def test_catalog_read_unknown_snapshot_raises(spark, transcripts, tmp_path):
     s = cat.append(transcripts, "t")
     with pytest.raises(ValueError, match="unknown snapshot"):
         cat.read("t", [s.snapshot_id, "bogus"])
+
+
+@pytest.fixture(scope="module")
+def layouts(spark, transcripts, tmp_path_factory):
+    """The fixture transcripts as one parquet file and as four."""
+    root = tmp_path_factory.mktemp("layouts")
+    one, four = str(root / "one"), str(root / "four")
+    transcripts.coalesce(1).write.parquet(one)
+    transcripts.repartition(4).write.parquet(four)
+    return one, four
+
+
+def test_spread_and_unspread_layouts_commit_the_same_run(spark, layouts,
+                                                         tmp_path):
+    """The same rows as one file (spread over the task slots) and as four
+    (not spread) land the same sink rows and commit the same counters,
+    per-sink metrics and lineage. Each layout's metrics rows equal its
+    landed rows per ``_pid``, which stays the scan partition: one value for
+    the one-file source, four for the four-file one."""
+    runs = []
+    for i, src in enumerate(layouts):
+        cat = ParquetCatalog(spark, str(tmp_path / f"wh{i}"))
+        res = Pipeline(spark, fixture_config(), cat).run(
+            spark.read.parquet(src), run_id="same")
+        m = cat.read(METRICS_TABLE).toPandas()
+        routed = m[m["sink"].notna()]
+        per_pid = dict(zip(zip(routed["sink"], routed["partition_id"]),
+                           routed["events_routed"]))
+        landed = {(s, r[PID_COL]): r["count"] for s in res.sinks
+                  for r in cat.read(s).groupBy(PID_COL).count().collect()}
+        assert per_pid == landed
+        run_row = m[m["sink"].isna()]
+        runs.append({
+            "res": (res.sinks, res.events_in, res.events_dropped),
+            "rows": {s: cat.read(s).drop(PID_COL)
+                     .orderBy("conv_id", "turn_idx").collect()
+                     for s in res.sinks},
+            "pids": len({p for _, p in per_pid}),
+            "run_row": run_row[["partition_id", "events_in",
+                                "events_dropped", "events_routed"]]
+            .values.tolist(),
+            "lineage": cat.read(LINEAGE_TABLE)
+            .select("run_id", "source_table", "snapshot_id").collect(),
+        })
+    one, four = runs
+    assert (one["pids"], four["pids"]) == (1, 4)
+    for key in ("res", "rows", "run_row", "lineage"):
+        assert one[key] == four[key], key
+
+
+COMMIT_DDL = {
+    METRICS_TABLE: "run_id string, partition_id int, sink string, "
+                   "events_in long, events_dropped long, events_routed long",
+    LINEAGE_TABLE: "run_id string, source_table string, snapshot_id string, "
+                   "committed_at double",
+}
+
+
+def test_commit_frames_are_one_file_with_the_ddl_schema(spark, transcripts,
+                                                        tmp_path):
+    """Every metrics and lineage snapshot a run commits is one parquet file
+    with the commit schema; the NULL sink of the run row (partition -1) and
+    the NULL snapshot_id of a direct run survive the round trip."""
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    cat.append(transcripts, "transcripts")
+    pipe = Pipeline(spark, fixture_config(), cat)
+    inc = pipe.run_incremental("transcripts", run_id="inc")
+    pipe.run(transcripts, run_id="direct")
+    assert cat.incomplete_runs() == set()
+    for table, ddl in COMMIT_DDL.items():
+        snaps = cat.snapshots(table)
+        assert [s.run_id for s in snaps] == ["inc", "direct"]
+        for s in snaps:
+            assert len(glob.glob(f"{s.path}/*.parquet")) == 1, s.path
+        assert cat.read(table).schema == T.DataType.fromDDL(ddl)
+    m = cat.read(METRICS_TABLE).filter(F.col("partition_id") == -1).collect()
+    assert sorted(r["run_id"] for r in m) == ["direct", "inc"]
+    assert all(r["sink"] is None for r in m)
+    lineage = {r["run_id"]: r["snapshot_id"]
+               for r in cat.read(LINEAGE_TABLE).collect()}
+    assert lineage == {"inc": inc.snapshot_ids[0], "direct": None}

@@ -6,13 +6,20 @@ These pin the Catalyst properties the scale story depends on:
 - dissect, in every configuration, keeps the pipeline out of Python,
 - the condition language compiles into ONE filter (pushable),
 - salted repartition spreads the hot conversation,
+- a scan that would leave task slots idle gets one round-robin exchange,
+  and no other input does,
 - the user_agent stage and the chains that carry it compile inside
   whole-stage codegen (a fallback to the interpreter fails the test).
 """
 
-import pytest
-from pyspark.sql import functions as F
+import glob
+import os
+import re
 
+import pytest
+from pyspark.sql import DataFrameWriter, functions as F
+
+from beats_spark.catalog import ParquetCatalog
 from beats_spark.pipeline import Pipeline, PipelineConfig, fixture_config
 from beats_spark.testdata import synthesize_transcripts, tools_lookup_df
 
@@ -232,6 +239,80 @@ def test_unsalted_hot_key_is_skewed(spark, tdir):
         .groupBy("p").count().collect()
     )
     assert len(dist) == 1
+
+
+@pytest.fixture(scope="module")
+def layouts(spark, tmp_path_factory):
+    """The same 4 000 turns as one parquet file and as four."""
+    df = synthesize_transcripts(spark, 4_000, 40)
+    root = tmp_path_factory.mktemp("layouts")
+    one, four = str(root / "one"), str(root / "four")
+    df.coalesce(1).write.parquet(one)
+    df.repartition(4).write.parquet(four)
+    assert [len(glob.glob(f"{d}/*.parquet")) for d in (one, four)] == [1, 4]
+    return one, four
+
+
+def _staging_run(spark, monkeypatch, tmp_path, cfg, src):
+    """Run ``cfg`` on ``src``; return the exchanges in the executed plan of
+    the frame the staging write wrote, that plan, and the task (partition)
+    numbers in the names of the files the write left in the sinks."""
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **k):
+        if "_staging_" in path:
+            plans.append(plan_of(self._df))
+        return real(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    wh = tmp_path / "wh"
+    res = Pipeline(spark, cfg, ParquetCatalog(spark, str(wh))).run(src)
+    tasks = {int(os.path.basename(f)[5:10])
+             for s in res.sinks
+             for f in glob.glob(f"{wh}/{s}/data/*/part-*.parquet")}
+    [plan] = plans
+    return re.findall(r"\bExchange (\w+)", plan), plan, tasks
+
+
+def test_narrow_scan_is_spread_over_task_slots(spark, layouts, monkeypatch,
+                                               tmp_path):
+    """A one-file source is one scan task; the staging write deals its rows
+    round-robin over every slot with one exchange and runs one task per
+    slot."""
+    slots = spark.sparkContext.defaultParallelism
+    exchanges, plan, tasks = _staging_run(spark, monkeypatch, tmp_path,
+                                          fixture_config(),
+                                          spark.read.parquet(layouts[0]))
+    assert exchanges == ["RoundRobinPartitioning"]
+    assert f"RoundRobinPartitioning({slots})" in plan
+    assert tasks == set(range(slots))
+
+
+@pytest.mark.parametrize("case", ["four_files", "salted", "repartition",
+                                  "create_data_frame"])
+def test_spread_only_when_scan_leaves_slots_idle(spark, layouts, monkeypatch,
+                                                 tmp_path, case):
+    """No spread for a source of at least ``defaultParallelism`` files, for
+    a config that repartitions already, or for a frame with no input
+    files."""
+    cfg = fixture_config()
+    src = spark.read.parquet(layouts[0])
+    want = []
+    if case == "four_files":
+        src = spark.read.parquet(layouts[1])
+    elif case == "salted":
+        cfg.salt_column, cfg.salt_buckets = "conv_id", 4
+        want = ["hashpartitioning"]
+    elif case == "repartition":
+        cfg.repartition = 3
+        want = ["RoundRobinPartitioning"]
+    else:
+        src = spark.createDataFrame(src.collect(), src.schema)
+    exchanges, plan, _ = _staging_run(spark, monkeypatch, tmp_path, cfg, src)
+    assert exchanges == want
+    if case == "repartition":
+        assert "RoundRobinPartitioning(3)" in plan
 
 
 def test_topk_is_take_ordered(spark):

@@ -45,3 +45,39 @@ def test_get_spark_env_and_explicit_master(monkeypatch):
     session.get_spark(master="local[5]")
     assert b.master_url == "local[5]"
     assert b.conf["spark.sql.shuffle.partitions"] == "5"
+
+
+def _ram(monkeypatch, gib: int) -> None:
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+    monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+
+
+def test_get_spark_sizes_driver_memory_from_ram(monkeypatch):
+    """The default driver heap is a quarter of physical RAM, between 1g and
+    8g; SPARK_DRIVER_MEMORY and then extra_conf override it."""
+    b = _Builder()
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    monkeypatch.setattr(session.SparkSession, "builder", b)
+    monkeypatch.setattr(session, "ship_package", lambda spark: None)
+    for gib, want in ((15, "3840m"), (64, "8192m"), (2, "1024m")):
+        _ram(monkeypatch, gib)
+        session.get_spark()
+        assert b.conf["spark.driver.memory"] == want
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "5g")
+    session.get_spark()
+    assert b.conf["spark.driver.memory"] == "5g"
+    session.get_spark(extra_conf={"spark.driver.memory": "3g"})
+    assert b.conf["spark.driver.memory"] == "3g"
+
+
+def test_get_spark_turns_off_call_site_capture(monkeypatch):
+    """PySpark's per-Column-call call-site capture is off by default and
+    extra_conf turns it back on."""
+    b = _Builder()
+    monkeypatch.setattr(session.SparkSession, "builder", b)
+    monkeypatch.setattr(session, "ship_package", lambda spark: None)
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    session.get_spark()
+    assert b.conf[key] == "false"
+    session.get_spark(extra_conf={key: "true"})
+    assert b.conf[key] == "true"
