@@ -5,10 +5,11 @@ the REAL beats_spark stage implementations over a transcript-shaped table
 derived deterministically from the driver's ``events`` parquet (derivation
 defined once as a DataFrame plan and once as SQL — beats_spark/testdata.py —
 so DuckDB can replicate it bit-for-bit). ML/training-data ops run on the
-``documents`` / ``embeddings`` tables. Ops whose hashing primitive has no
-DuckDB equivalent (xxhash64-based MinHash/SimHash/LSH) have no oracle entry
-and get the driver's rows-only check; their correctness is pinned by pytest
-brute-force oracles in tests/test_ml.py instead.
+``documents`` / ``embeddings`` tables. All 43 queries have an exact DuckDB
+oracle in ``oracle_sql()``: the MinHash, SimHash, hyperplane-LSH and
+multimodal queries run their portable ``poly`` hash mode, which DuckDB
+replicates value for value. The production xxhash64 mode has no DuckDB
+equivalent; tests/test_ml.py pins it against brute-force oracles.
 """
 
 from __future__ import annotations

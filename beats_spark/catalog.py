@@ -195,14 +195,19 @@ class ParquetCatalog:
         """Run ids that committed data/metrics snapshots but never reached
         the lineage commit (the last step of Pipeline.run) — candidates for
         rollback_run before resuming."""
-        lineage_runs: set[str] = set()
-        if self.exists(lineage_table):
-            lineage_runs = {
-                s.run_id for s in self.snapshots(lineage_table) if s.run_id
-            }
-        all_runs: set[str] = set()
-        for t in self.tables():
-            if t == lineage_table:
-                continue
-            all_runs |= {s.run_id for s in self.snapshots(t) if s.run_id}
-        return all_runs - lineage_runs
+        per_table = {t: {s.run_id for s in self.snapshots(t) if s.run_id}
+                     for t in self.tables()}
+        return incomplete_run_ids(per_table, per_table.get(lineage_table, set()),
+                                  lineage_table)
+
+
+def incomplete_run_ids(per_table_runs: dict[str, set[str]],
+                       lineage_runs: set[str],
+                       lineage_table: str = "lineage") -> set[str]:
+    """Runs that committed data/metrics snapshots but no lineage row; the
+    arithmetic behind both catalogs' ``incomplete_runs``."""
+    all_runs: set[str] = set()
+    for t, runs in per_table_runs.items():
+        if t != lineage_table:
+            all_runs |= runs
+    return all_runs - lineage_runs

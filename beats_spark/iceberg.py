@@ -26,6 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import incomplete_run_ids
+
 
 @dataclass
 class IcebergSnapshot:
@@ -164,18 +166,6 @@ def rollback_target(snaps: list[IcebergSnapshot], run_id: str) -> str | None:
             "roll back newer runs first"
         )
     return mine[0].parent_id
-
-
-def incomplete_run_ids(per_table_runs: dict[str, set[str]],
-                       lineage_runs: set[str],
-                       lineage_table: str = "lineage") -> set[str]:
-    """Runs that committed data/metrics snapshots but no lineage row —
-    identical arithmetic to ParquetCatalog.incomplete_runs."""
-    all_runs: set[str] = set()
-    for t, runs in per_table_runs.items():
-        if t != lineage_table:
-            all_runs |= runs
-    return all_runs - lineage_runs
 
 
 # -- the catalog -------------------------------------------------------------

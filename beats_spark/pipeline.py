@@ -209,13 +209,16 @@ class Pipeline:
 
     # -- full run ------------------------------------------------------------
 
+    def _catalog(self) -> ParquetCatalog:
+        if self.catalog is None:
+            raise ValueError("run() needs a catalog; use transform() for plan-only")
+        return self.catalog
+
     def run(self, df: DataFrame, run_id: str | None = None,
             source_snapshots: list[str] | None = None,
             source_table: str = "transcripts") -> RunResult:
-        if self.catalog is None:
-            raise ValueError("run() needs a catalog; use transform() for plan-only")
+        cat = self._catalog()
         run_id = run_id or uuid.uuid4().hex[:12]
-        cat = self.catalog
 
         # tag the input partition once, at the scan, for per-partition
         # lineage; a narrow scan is spread over the task slots after it
@@ -323,8 +326,7 @@ class Pipeline:
         sink commit and its lineage commit looks identical), so a
         concurrent driver's half-committed run would be rolled back and
         its rows lost when it commits lineage anyway."""
-        cat = self.catalog
-        assert cat is not None
+        cat = self._catalog()
         # recovery BEFORE resume: a previous run that crashed between sink
         # adoption and its lineage commit left orphan sink snapshots; its
         # source snapshots are still unprocessed per lineage, so resuming

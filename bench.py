@@ -1,38 +1,31 @@
 """Bench harness.
 
-Prints ONE JSON line:
+Prints ONE JSON line on stdout:
   {"metric": "end_to_end_pipeline_sec", "value": <sec>, "unit": "sec",
-   "queries": {<name>: <sec>, ...}, "sf": <sf>,
-   "throughput_turns_per_sec": <r/s>,
-   "scaling": {"cores_n": 8, "cores_4n": 32, "throughput_n": ..,
-               "throughput_4n": .., "efficiency": ..}}
+   "queries": {<name>: <sec>, ...}, "sf": <sf>, "e2e_rows": <rows>,
+   "throughput_turns_per_sec": <turns/s>, "host": <fingerprint>,
+   "scaling": {"cores_n", "cores_4n", "turns", "sec_n", "sec_4n",
+               "throughput_n", "throughput_4n", "efficiency", "levels"}}
 
-Two parts:
-1. headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-   on local[$SPARK_GRAFT_CPUS] — per-query wall seconds.
-2. the BASELINE.json scaling criterion, evidenced in-sandbox: the SAME
-   deterministic e2e job (synthesize → dissect/enrich/fingerprint/route →
-   partitioned fan-out write) at local[8] and local[32] in separate JVMs
-   (subprocess per level, cold JVM each, timing excludes session startup);
-   efficiency = (thr_4N / thr_N) / 4.
+Every timed item goes through ``timed``: one untimed warm-up, then three
+timed reps, reporting the median. A DataFrame is materialized by writing
+it to the ``noop`` sink, so every row of every column is computed; a
+``count()`` would let Catalyst prune the processors away.
 
-Host-window methodology (BENCH.md): the sandbox host is burstable — the
-same job swings 2-5× between multi-minute throttle windows, so every
-number of record is a MIN over repetitions, and a detector compares the
-measured mins against the best historical mins (BENCH_r*.json artifacts):
-a block/round whose canary min exceeds ~1.5× the historical best is a
-throttled window, and the harness keeps running extra blocks/rounds (up
-to a cap) instead of finalizing numbers from it.
-
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-BENCH_TURNS (default 16_000_000), BENCH_REPS (default 3/worker,
-early-exit when a rep is within 15% of the best committed min),
-BENCH_LEVELS (default "8,32"), BENCH_SKIP_SCALING=1 to skip scaling,
-BENCH_SKIP_CURVE=1 to skip the scale curve, BENCH_CURVE_MULT (default 16 —
-synthesized third curve point at mult× sf_hi; 1 disables),
-BENCH_QUERY_REPS/_MAX (default 3/6 headline blocks),
-BENCH_ROUNDS/BENCH_MAX_ROUNDS (default 2/8 scaling rounds),
-BENCH_WINDOW_FACTOR (default 1.5 — throttle detection threshold).
+1. Headline queries (``__spark_entry__``) at $SPARK_GRAFT_SF_DIR on
+   local[$SPARK_GRAFT_CPUS] (default ``os.cpu_count()``, like
+   ``get_spark()``).
+2. End to end (``value``): one ``Pipeline.run`` of the fixture chain plus
+   the enrich lookup over the transcripts derived from the events table,
+   into a throwaway ``ParquetCatalog``: scan → chain → route → partitioned
+   write → per-sink adopt → metrics and lineage commit.
+3. ML scale curve for the near-dup candidate generators (stderr only):
+   the sf0.01 sibling of the sf dir when there is one, the sf dir, and an
+   8× synthesized copy of it.
+4. Scaling: the same end-to-end run over a fixed synthesized input in a
+   cold JVM per level (CPUS/4, CPUS/2, CPUS) with ``get_spark()``
+   defaults; efficiency = (throughput_4n / throughput_n) / (cores_4n /
+   cores_n).
 """
 
 from __future__ import annotations
@@ -40,7 +33,7 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -48,9 +41,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-BENCH_TURNS = int(os.environ.get("BENCH_TURNS", "16000000"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+SCALING_TURNS = 1_000_000
+CURVE_MULT = 8
+WARMUPS, REPS = 1, 3
 
 HEADLINE = [
     "transcripts_derive",
@@ -86,82 +83,55 @@ def _bench_minhash_xx(spark, sf_dir: str):
 
 HEADLINE_OVERRIDES = {"dedup_minhash_lsh": _bench_minhash_xx}
 
-# plan-stable cheap queries used to detect a throttled host window: their
-# steady-state mins move only when the host does (the ml ops are excluded —
-# their implementations legitimately change across rounds)
-DETECTOR_QUERIES = [
-    "transcripts_derive", "dissect_parse", "grok_parse",
-    "fingerprint", "route_counts", "enrich_lookup",
-]
+
+def timed(work):
+    """Median wall seconds of ``REPS`` calls of ``work`` after ``WARMUPS``
+    untimed ones, and the last call's result. A DataFrame result is
+    written to the ``noop`` sink inside the clock."""
+    def once():
+        out = work()
+        if isinstance(out, DataFrame):
+            out.write.format("noop").mode("overwrite").save()
+        return out
+
+    for _ in range(WARMUPS):
+        once()
+    secs = []
+    for _ in range(REPS):
+        t0 = time.perf_counter()
+        out = once()
+        secs.append(time.perf_counter() - t0)
+    return round(statistics.median(secs), 3), out
 
 
-def _cpu_probe(reps: int = 2, threads: int = 16) -> float:
-    """~1 s JVM-free host-speed probe: a fixed MULTI-THREADED sha256
-    workload (16 threads × 96 MiB; hashlib releases the GIL) timed
-    min-of-reps. It must be multi-core because the sandbox throttle is a
-    CPU-quota squeeze over ALL cores: a single-thread probe reads ~1.4×
-    while a 32-thread Spark job runs 5× slower (measured r4) — aggregate
-    throughput is the signal that tracks the scaling job. Used to DEFER
-    the scaling epoch until the host is back near its best observed speed
-    (best probe this run AND across committed artifacts)."""
-    import hashlib
+def headline(spark, sf_dir: str) -> dict[str, float]:
+    import __spark_entry__ as entry
 
-    import numpy as np
-    from concurrent.futures import ThreadPoolExecutor
-
-    buf = np.arange(4 * 1024 * 1024, dtype=np.int64).tobytes()  # 32 MiB
-
-    def work(_):
-        h = hashlib.sha256()
-        for _ in range(3):
-            h.update(buf)
-        return h.hexdigest()
-
-    best = float("inf")
-    with ThreadPoolExecutor(max_workers=threads) as ex:
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            list(ex.map(work, range(threads)))
-            best = min(best, time.perf_counter() - t0)
-    return best
+    qs = entry.queries()
+    times = {}
+    for name in HEADLINE:
+        query = HEADLINE_OVERRIDES.get(name, qs[name])
+        times[name], _ = timed(lambda: query(spark, sf_dir))
+        print(f"# {name}: {times[name]}s", file=sys.stderr)
+    return times
 
 
-def _historical_bests(sf: float | str | None = None) -> dict:
-    """Best recorded per-query / per-scaling-level seconds across all
-    committed BENCH_r*.json artifacts — the 'best historical min' the
-    window detector compares against. Query times are only comparable at
-    the same scale factor; scaling-level times are sf-independent (the
-    scaling job synthesizes its own BENCH_TURNS input)."""
-    import glob
+def e2e_run(spark, src):
+    """One ``Pipeline.run`` of the fixture chain plus the enrich lookup
+    over ``src`` into a throwaway ``ParquetCatalog``; its ``RunResult``."""
+    from beats_spark.catalog import ParquetCatalog
+    from beats_spark.pipeline import Pipeline, fixture_config
+    from beats_spark.processors.enrich import register_lookup
+    from beats_spark.testdata import tools_lookup_df
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    qbest: dict[str, float] = {}
-    sbest: dict[int, float] = {}
-    pbest: float | None = None
-    for p in sorted(glob.glob(os.path.join(here, "BENCH_r*.json"))):
-        try:
-            with open(p) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-        except (OSError, json.JSONDecodeError):
-            continue
-        cp = parsed.get("cpu_probe_best")
-        if isinstance(cp, (int, float)):
-            pbest = cp if pbest is None else min(pbest, cp)
-        if sf is None or parsed.get("sf") == sf:
-            for k, v in (parsed.get("queries") or {}).items():
-                if isinstance(v, (int, float)):
-                    qbest[k] = min(qbest.get(k, v), v)
-        sc = parsed.get("scaling") or {}
-        for sec_key, all_key, lvl_key in (("sec_n", "all_secs_n", "cores_n"),
-                                          ("sec_4n", "all_secs_4n", "cores_4n")):
-            if lvl_key not in sc:
-                continue
-            c = int(sc[lvl_key])
-            cands = [sc[sec_key]] if isinstance(sc.get(sec_key), (int, float)) else []
-            cands += [x for x in (sc.get(all_key) or []) if isinstance(x, (int, float))]
-            if cands:
-                sbest[c] = min([sbest[c], *cands]) if c in sbest else min(cands)
-    return {"queries": qbest, "scaling": sbest, "cpu_probe": pbest}
+    register_lookup("tools", lambda: tools_lookup_df(spark))
+    cfg = fixture_config()
+    cfg.processors.append(
+        {"enrich": {"lookup": "tools", "on": "tool", "target": "tool_meta",
+                    "default": {"tool_family": "unknown"}}}
+    )
+    with tempfile.TemporaryDirectory(prefix="bench_wh_") as wh:
+        return Pipeline(spark, cfg, catalog=ParquetCatalog(spark, wh)).run(src)
 
 
 def _synth_curve_point(spark, sf_hi: str, mult: int, out_dir: str) -> None:
@@ -205,28 +175,21 @@ def _synth_curve_point(spark, sf_hi: str, mult: int, out_dir: str) -> None:
                 "vec_id", F.concat(F.col("vec_id"), F.lit(f"_c{i}"))
             ).withColumn("embedding", flipped.cast("array<float>")))
     par = spark.sparkContext.defaultParallelism
-    base = d_parts[0]
-    for p in d_parts[1:]:
-        base = base.unionByName(p)
-    base.repartition(par).write.mode("overwrite") \
-        .parquet(f"{out_dir}/documents.parquet")
-    ebase = e_parts[0]
-    for p in e_parts[1:]:
-        ebase = ebase.unionByName(p)
-    ebase.repartition(par).write.mode("overwrite") \
-        .parquet(f"{out_dir}/embeddings.parquet")
+    for name, parts in (("documents", d_parts), ("embeddings", e_parts)):
+        base = parts[0]
+        for p in parts[1:]:
+            base = base.unionByName(p)
+        base.repartition(par).write.mode("overwrite") \
+            .parquet(f"{out_dir}/{name}.parquet")
 
 
-def _run_scale_curve(spark, dirs: list[str], reps: int = 2) -> dict:
-    """Multi-point scale curve for the candidate-generation ml ops in their
-    PRODUCTION (xx-hash) configuration: if candidate generation were
-    quadratic, time ratios would approach data_ratio²; banded/bucketed
-    plans keep them near data_ratio. The exponent of record
-    (``scaling_exponent``) is the log-log slope between the two LARGEST
-    points — at the small points fixed plan-build/JIT overhead dominates
-    the data term (the r3 lesson: a 500→5000-doc pair measured simhash at
-    −0.05); ``exponents_pairwise`` keeps every consecutive slope for the
-    curve's shape."""
+def _scale_curve(spark, dirs: list[str]) -> None:
+    """Seconds per point for the candidate-generation ml ops in their
+    PRODUCTION (xx-hash) configuration, with the log-log slope between
+    consecutive points. Banded/bucketed plans keep time ratios near the
+    data ratio; a quadratic candidate phase would approach its square. The
+    last slope, between the two largest points, is the one of record: at
+    the small points fixed plan/JIT cost dominates."""
     from beats_spark.ml.dedup import (embedding_neardup_pairs,
                                       minhash_lsh_pairs, simhash_pairs)
 
@@ -244,397 +207,103 @@ def _run_scale_curve(spark, dirs: list[str], reps: int = 2) -> dict:
             spark.read.parquet(f"{d}/embeddings.parquet"),
             threshold=0.35, num_planes=6)),
     }
-    counts: dict[tuple[str, str], int] = {}
-    for d in dirs:
-        for t in ("documents", "embeddings"):
-            counts[(d, t)] = spark.read.parquet(f"{d}/{t}.parquet").count()
-
-    curve: dict[str, dict] = {}
     for name, (table, fn) in ops.items():
-        pts = []
-        for d in dirs:
-            best, pairs = float("inf"), 0
-            fn(d).count()  # warm: plan build + JIT outside the clock
-            for _ in range(reps):
-                t0 = time.perf_counter()
-                pairs = fn(d).count()
-                best = min(best, time.perf_counter() - t0)
-            pts.append({"sf_dir": d, "rows_in": counts[(d, table)],
-                        "pairs_out": pairs, "sec": round(best, 3)})
-        exps = []
-        for a, b in zip(pts, pts[1:]):
-            dr = b["rows_in"] / max(a["rows_in"], 1)
-            tr = b["sec"] / max(a["sec"], 1e-9)
-            exps.append(round(math.log(tr) / math.log(dr), 2)
-                        if dr > 1 and tr > 0 else None)
-        # marginal exponent: subtract the smallest point's time as the
-        # per-op fixed floor (500 docs ≈ pure plan/JIT/scheduling overhead
-        # at local[32]) and take the log-log slope of the REMAINING time
-        # over the two largest points — the raw slope understates scaling
-        # while absolute times sit near the floor
-        marginal = None
-        if len(pts) >= 3:
-            floor = pts[0]["sec"]
-            d2, d3 = pts[-2]["sec"] - floor, pts[-1]["sec"] - floor
-            dr = pts[-1]["rows_in"] / max(pts[-2]["rows_in"], 1)
-            if d2 > 0.05 and d3 > 0 and dr > 1:
-                marginal = round(math.log(d3 / d2) / math.log(dr), 2)
-        curve[name] = {
-            "points": pts,
-            "exponents_pairwise": exps,
-            # log-log slope between the two largest points, where the data
-            # term dominates fixed overhead
-            "scaling_exponent": exps[-1] if exps else None,
-            "exponent_marginal": marginal,
-        }
-        print(f"# curve {name}: {curve[name]['points']} "
-              f"exps={exps} marginal={marginal}", file=sys.stderr)
-    return curve
+        pts = [(spark.read.parquet(f"{d}/{table}.parquet").count(),
+                timed(lambda: fn(d))[0]) for d in dirs]
+        exps = [round(math.log(t2 / t1) / math.log(n2 / n1), 2)
+                for (n1, t1), (n2, t2) in zip(pts, pts[1:])
+                if n2 > n1 and t1 > 0 < t2]
+        print(f"# curve {name}: (rows_in, sec) {pts} exponents {exps}",
+              file=sys.stderr)
 
 
-def _scale_pipeline(spark):
-    """The measured pipeline: fixture chain (dissect JVM fast path,
-    drop_event, add_fields, rename, fingerprint sha256, if/then tags) +
-    enrich broadcast join + selector routing."""
-    from beats_spark.pipeline import Pipeline, fixture_config
-    from beats_spark.processors.enrich import register_lookup
-    from beats_spark.testdata import tools_lookup_df
-
-    register_lookup("tools", lambda: tools_lookup_df(spark))
-    cfg = fixture_config()
-    cfg.processors.append(
-        {"enrich": {"lookup": "tools", "on": "tool", "target": "tool_meta",
-                    "default": {"tool_family": "unknown"}}}
-    )
-    return Pipeline(spark, cfg)
-
-
-def _e2e_job(spark, pipe, src_dir: str, out_dir: str) -> None:
-    """One timed run: read transcript parquet → parse→enrich→route →
-    single-pass partitioned fan-out write (the production shape: input is a
-    table, not an in-flight generator)."""
-    routed = pipe.transform(spark.read.parquet(src_dir))
-    routed.write.partitionBy("_sink").mode("overwrite").parquet(out_dir)
-
-
-def _worker(cores: int) -> None:
-    """Run the e2e job at local[cores]; print one JSON line.
-
-    Methodology: K repetitions of the identical job, report the MIN —
-    the sandbox host is burstable/throttled and single runs swing 2-5×;
-    the minimum is the reproducible steady-state figure. The first run
-    (JIT tiered-compilation + codegen + python worker pool spin-up) always
-    acts as warmup and is never the min in practice. Heap is pinned
-    (-Xms=-Xmx, AlwaysPreTouch) so G1 never pays growth pauses mid-run, and
-    sinks write to tmpfs so the sandbox's single shared disk doesn't fake a
-    scaling ceiling a per-node-disk cluster wouldn't have."""
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
+def _worker(cores: int, src: str) -> None:
+    """Time the end-to-end run over ``src`` at local[cores] in this (cold)
+    JVM; print one JSON line."""
     from beats_spark.session import get_spark
 
-    mem = os.environ["SPARK_DRIVER_MEMORY"]
-    spark = get_spark(
-        f"bench_scale_{cores}", master=f"local[{cores}]",
-        shuffle_partitions=cores,
-        extra_conf={
-            "spark.driver.extraJavaOptions": f"-Xms{mem} -XX:+AlwaysPreTouch",
-            # v2 committer: per-task file moves instead of a serial driver-side
-            # commit loop — shrinks the Amdahl serial fraction of the fan-out
-            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
-            # Tungsten off-heap: row buffers out of the (shared) G1 heap —
-            # less GC coupling between 32 concurrent writer tasks
-            "spark.memory.offHeap.enabled": "true",
-            "spark.memory.offHeap.size": "8g",
-        },
-    )
-    shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    # short 3-rep blocks sample MORE distinct throttle windows per budget
-    # than long blocks (the alternation's whole point); BENCH_EARLY_SEC
-    # (set by the parent from the best committed min) ends a block as soon
-    # as it has produced one clean steady-state sample
-    reps = int(os.environ.get("BENCH_REPS", "3"))
-    early = float(os.environ.get("BENCH_EARLY_SEC", "0"))
-    # wall budget for THIS worker (parent passes its remaining global
-    # budget): under a deep credit-drain epoch a single rep can run 100+ s,
-    # and the parent's budget check only fires between rounds — without a
-    # per-worker deadline a late round overshoots the caller's patience
-    # (observed: a fully-throttled epoch ran past an external 2400 s kill)
-    wbudget = float(os.environ.get("BENCH_WORKER_BUDGET", "0"))
-    from beats_spark.testdata import synthesize_transcripts
-
-    src = tempfile.mkdtemp(prefix=f"bench_src_{cores}_", dir=shm)
-    synthesize_transcripts(
-        spark, BENCH_TURNS, max(1000, BENCH_TURNS // 200), partitions=64
-    ).write.mode("overwrite").parquet(src)
-    pipe = _scale_pipeline(spark)
-    times = []
-    t_all = time.perf_counter()
-    try:
-        for _ in range(reps):
-            out = tempfile.mkdtemp(prefix=f"bench_sinks_{cores}_", dir=shm)
-            try:
-                t0 = time.perf_counter()
-                _e2e_job(spark, pipe, src, out)
-                times.append(time.perf_counter() - t0)
-            finally:
-                shutil.rmtree(out, ignore_errors=True)
-            if early and len(times) >= 2 and min(times) <= early:
-                break
-            if wbudget and time.perf_counter() - t_all > wbudget:
-                break  # deadline hit; keep what we have (≥1 rep)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    dt = min(times)
-    print(json.dumps({"cores": cores, "sec": dt, "turns": BENCH_TURNS,
-                      "throughput": BENCH_TURNS / dt,
-                      "all_secs": [round(t, 2) for t in times]}))
+    spark = get_spark(f"bench_scale_{cores}", master=f"local[{cores}]")
+    sec, _ = timed(lambda: e2e_run(spark, spark.read.parquet(src)))
+    print(json.dumps({"cores": cores, "sec": sec,
+                      "throughput": SCALING_TURNS / sec}))
     spark.stop()
+
+
+def scaling(src: str) -> dict:
+    """One cold worker JVM per level over the same input at ``src``."""
+    levels = sorted({max(1, CPUS // 4), max(1, CPUS // 2), CPUS})
+    got = {}
+    for cores in levels:
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--worker",
+             str(cores), src],
+            stdout=subprocess.PIPE, text=True, check=True,
+            cwd=os.path.dirname(os.path.abspath(__file__)))
+        got[cores] = json.loads(proc.stdout.strip().splitlines()[-1])
+        print(f"# scale local[{cores}]: {got[cores]}", file=sys.stderr)
+    lo, hi = got[levels[0]], got[levels[-1]]
+    return {
+        "cores_n": lo["cores"], "cores_4n": hi["cores"],
+        "turns": SCALING_TURNS,
+        "sec_n": lo["sec"], "sec_4n": hi["sec"],
+        "throughput_n": round(lo["throughput"], 1),
+        "throughput_4n": round(hi["throughput"], 1),
+        "efficiency": round((hi["throughput"] / lo["throughput"])
+                            / (hi["cores"] / lo["cores"]), 3),
+        "levels": {str(c): {"sec": g["sec"],
+                            "throughput": round(g["throughput"], 1)}
+                   for c, g in got.items()},
+    }
+
+
+def final_line(times: dict, e2e_sec: float, e2e_rows: int, sf: str,
+               host: str, scale: dict) -> str:
+    return json.dumps({
+        "metric": "end_to_end_pipeline_sec",
+        "value": e2e_sec,
+        "unit": "sec",
+        "queries": {**times, "pipeline_e2e_fanout": e2e_sec},
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "e2e_rows": e2e_rows,
+        "throughput_turns_per_sec": scale["throughput_4n"],
+        "host": host,
+        "scaling": scale,
+    })
 
 
 def main() -> None:
-    if len(sys.argv) > 2 and sys.argv[1] == "--worker":
-        _worker(int(sys.argv[2]))
+    if len(sys.argv) > 3 and sys.argv[1] == "--worker":
+        _worker(int(sys.argv[2]), sys.argv[3])
         return
 
-    import __spark_entry__ as entry_mod
     from beats_spark.session import get_spark
+    from beats_spark.testdata import (synthesize_transcripts,
+                                      transcripts_from_events)
+    from perfbench.jvm import host_fingerprint, stop
+
+    spark = get_spark("bench", master=f"local[{CPUS}]")
+    host = host_fingerprint(spark)
+    times = headline(spark, SF_DIR)
+    e2e_sec, res = timed(
+        lambda: e2e_run(spark, transcripts_from_events(spark, SF_DIR)))
+    print(f"# pipeline_e2e_fanout: {e2e_sec}s {res}", file=sys.stderr)
+
+    with tempfile.TemporaryDirectory(prefix="bench_") as tmp:
+        lo = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+        dirs = [lo] if os.path.isdir(lo) and lo != SF_DIR.rstrip("/") else []
+        synth = os.path.join(tmp, "curve_hi")
+        _synth_curve_point(spark, SF_DIR, CURVE_MULT, synth)
+        _scale_curve(spark, dirs + [SF_DIR, synth])
+
+        src = os.path.join(tmp, "scaling_src")
+        synthesize_transcripts(
+            spark, SCALING_TURNS, max(1000, SCALING_TURNS // 200),
+            partitions=4 * CPUS).write.parquet(src)
+        stop(spark)  # the driver JVM too: the workers get the whole host
+        scale = scaling(src)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    probe_best = _cpu_probe()
-    spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-
-    hist = _historical_bests(float(sf) if sf.replace(".", "").isdigit() else sf)
-    factor = float(os.environ.get("BENCH_WINDOW_FACTOR", "1.5"))
-    # global wall-clock budget: window-detector retries must degrade
-    # gracefully (finalize with window_ok=false) instead of running past
-    # the caller's patience when the host is throttled for the whole run
-    budget = float(os.environ.get("BENCH_BUDGET_SEC", "2100"))
-    t_start = time.monotonic()
-    # canary and its reference MUST sum the same query set — a detector
-    # query absent from every committed artifact would otherwise inflate
-    # the measured sum against the reference forever
-    canary_qs = [q for q in DETECTOR_QUERIES if q in hist["queries"]]
-    canary_ref = sum(hist["queries"][q] for q in canary_qs) or None
-
-    from beats_spark.pipeline import Pipeline, fixture_config
-    from beats_spark.testdata import transcripts_from_events
-
-    qs = entry_mod.queries()
-    times: dict[str, float] = {}
-    n_rows_e2e = 0
-    blocks_min = int(os.environ.get("BENCH_QUERY_REPS", "3"))
-    blocks_max = int(os.environ.get("BENCH_QUERY_REPS_MAX", "6"))
-    block = 0
-    window_ok_headline = True
-    while True:
-        block += 1
-        for name in HEADLINE:
-            t0 = time.perf_counter()
-            df = HEADLINE_OVERRIDES.get(name, qs[name])(spark, SF_DIR)
-            n = df.count()
-            dt = round(time.perf_counter() - t0, 3)
-            times[name] = min(times.get(name, dt), dt)
-            print(f"# b{block} {name}: {dt}s ({n} rows)", file=sys.stderr)
-
-        # end-to-end pipeline run at SF_DIR scale (events-derived transcripts)
-        t0 = time.perf_counter()
-        out = tempfile.mkdtemp(prefix="bench_e2e_")
-        try:
-            pipe = Pipeline(spark, fixture_config())
-            routed = pipe.transform(transcripts_from_events(spark, SF_DIR))
-            routed.write.partitionBy("_sink").mode("overwrite").parquet(out)
-            n_rows_e2e = spark.read.parquet(out).count()
-        finally:
-            shutil.rmtree(out, ignore_errors=True)
-        e2e_sec = round(time.perf_counter() - t0, 3)
-        times["pipeline_e2e_fanout"] = min(
-            times.get("pipeline_e2e_fanout", e2e_sec), e2e_sec)
-        print(f"# b{block} pipeline_e2e_fanout: {e2e_sec}s", file=sys.stderr)
-
-        probe_best = min(probe_best, _cpu_probe(reps=1))
-        canary = sum(times[q] for q in canary_qs if q in times)
-        window_ok_headline = canary_ref is None or canary <= canary_ref * factor
-        if block >= blocks_min and (
-                window_ok_headline or time.monotonic() - t_start > budget * 0.3):
-            break
-        if block >= blocks_max:
-            print(f"# headline window still throttled after {block} blocks "
-                  f"(canary {canary:.2f}s vs ref {canary_ref:.2f}s)",
-                  file=sys.stderr)
-            break
-
-    result = {
-        "metric": "end_to_end_pipeline_sec",
-        "value": times["pipeline_e2e_fanout"],
-        "unit": "sec",
-        "queries": times,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "e2e_rows": n_rows_e2e,
-        "headline_blocks": block,
-        "window_ok_headline": window_ok_headline,
-    }
-    diag: dict = {}  # bulky diagnostics — emitted on stderr, not the final line
-
-    if os.environ.get("BENCH_SKIP_CURVE") != "1":
-        lo = os.environ.get("BENCH_CURVE_LO", "/root/testdata/sf0.01")
-        if os.path.isdir(lo) and os.path.isdir(SF_DIR) and lo != SF_DIR:
-            dirs = [lo, SF_DIR]
-            # third, larger point (synthesized mult× sf_hi) so the exponent
-            # of record is taken where the data term dominates
-            mult = int(os.environ.get("BENCH_CURVE_MULT", "16"))
-            synth = None
-            if mult > 1 and time.monotonic() - t_start < budget * 0.5:
-                shm = "/dev/shm" if os.path.isdir("/dev/shm") else None
-                synth = tempfile.mkdtemp(prefix="bench_curve_hi_", dir=shm)
-                _synth_curve_point(spark, SF_DIR, mult, synth)
-                dirs.append(synth)
-            try:
-                diag["scale_curve"] = _run_scale_curve(spark, dirs)
-            finally:
-                if synth:
-                    shutil.rmtree(synth, ignore_errors=True)
-    spark.stop()
-
-    if os.environ.get("BENCH_SKIP_SCALING") != "1":
-        levels = [int(x) for x in
-                  os.environ.get("BENCH_LEVELS", "8,32").split(",")]
-        # the host throttles in multi-minute windows, so measuring all reps
-        # of one level then all of the other compares DIFFERENT windows and
-        # the efficiency ratio inherits the drift; alternating level blocks
-        # per round samples both levels in each window, and rounds REPEAT
-        # (up to BENCH_MAX_ROUNDS) until the per-level mins are inside
-        # factor× the best historical mins AND the efficiency gate holds —
-        # a round captured entirely inside a throttle window is detected
-        # and never finalized as-is (the r2 lesson)
-        min_rounds = int(os.environ.get("BENCH_ROUNDS", "2"))
-        max_rounds = int(os.environ.get("BENCH_MAX_ROUNDS", "8"))
-        sref = hist["scaling"]
-        scaling: dict[int, dict] = {}
-        eff = None
-        window_ok_scaling = True
-        rnd = 0
-        probes_at_scaling: list[float] = []
-        pref_hist = hist.get("cpu_probe")
-        while rnd < max_rounds:
-            # opportunistic epoch: a scaling round burns 1-5 min of JVM
-            # time, so before spending it, check the ~1 s CPU probe and
-            # SLEEP through a throttle window instead (the r3 lesson: both
-            # recorded epochs ran 5× over the historical mins). Reference =
-            # best probe this run and across committed artifacts; the defer
-            # gives up at 80% budget so a permanently-throttled host still
-            # finalizes (window_ok=false) instead of stalling.
-            while True:
-                p = _cpu_probe()
-                probes_at_scaling.append(round(p, 3))
-                probe_best = min(probe_best, p)
-                pref = min([x for x in (pref_hist, probe_best)
-                            if x is not None])
-                if p <= pref * 1.35:
-                    break
-                if time.monotonic() - t_start > budget * 0.8:
-                    print(f"# probe still {p:.2f}s vs best {pref:.2f}s at "
-                          "80% budget; running scaling anyway",
-                          file=sys.stderr)
-                    break
-                print(f"# host throttled (probe {p:.2f}s vs best "
-                      f"{pref:.2f}s); deferring scaling 60s", file=sys.stderr)
-                time.sleep(60)
-            for cores in levels:
-                env = dict(os.environ)
-                # hand the worker what's left of the global budget (150 s
-                # floor so it always completes at least one warm rep)
-                env["BENCH_WORKER_BUDGET"] = str(max(
-                    150.0, budget - (time.monotonic() - t_start)))
-                if cores in sref:
-                    # worker stops repeating once a rep lands within 5% of
-                    # the best committed min — the block's purpose (one clean
-                    # steady-state sample) is met, and the saved time buys
-                    # more alternation rounds inside the budget. Kept TIGHT
-                    # (5%, not the 50% window factor) so early exit cannot
-                    # freeze one level meaningfully above its steady state
-                    # while the other converges — that asymmetry would bias
-                    # the efficiency ratio
-                    env["BENCH_EARLY_SEC"] = str(sref[cores] * 1.05)
-                proc = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-                    capture_output=True, text=True, timeout=3600, env=env,
-                    cwd=os.path.dirname(os.path.abspath(__file__)),
-                )
-                lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
-                if not lines:
-                    print(f"# worker {cores} failed: {proc.stderr[-500:]}",
-                          file=sys.stderr)
-                    continue
-                got = json.loads(lines[-1])
-                print(f"# scale r{rnd} local[{cores}]: {got}", file=sys.stderr)
-                entry = scaling.setdefault(cores, {
-                    "cores": cores, "sec": float("inf"),
-                    "turns": got["turns"], "throughput": 0.0, "all_secs": [],
-                })
-                entry["all_secs"] += got["all_secs"]
-                if got["sec"] < entry["sec"]:
-                    entry["sec"] = got["sec"]
-                    entry["throughput"] = got["throughput"]
-            rnd += 1
-            if len(scaling) < 2:
-                continue
-            lo, hi = min(scaling), max(scaling)
-            eff = (scaling[hi]["throughput"] / scaling[lo]["throughput"]) / (hi / lo)
-            window_ok_scaling = all(
-                scaling[c]["sec"] <= sref[c] * factor
-                for c in scaling if c in sref)
-            print(f"# after round {rnd}: efficiency={eff:.3f} "
-                  f"window_ok={window_ok_scaling}", file=sys.stderr)
-            # success-stop needs BOTH levels within 15% of their best
-            # committed mins (tighter than the 1.5× window_ok REPORTING
-            # threshold): stopping at the first eff >= 0.8 with loose mins
-            # would select a favorable noise draw (optional stopping).
-            # Levels with NO committed history never satisfy this — a
-            # vacuous all() would reopen exactly that hole — so a fresh
-            # clone runs the full min_rounds..budget schedule instead.
-            stop_ok = all(
-                c in sref and scaling[c]["sec"] <= sref[c] * 1.15
-                for c in scaling)
-            if rnd >= min_rounds and stop_ok and eff >= 0.8:
-                break
-            if rnd >= min_rounds and time.monotonic() - t_start > budget:
-                print(f"# budget exhausted after round {rnd}; finalizing "
-                      f"with window_ok={window_ok_scaling}", file=sys.stderr)
-                break
-        if len(scaling) >= 2:
-            lo, hi = min(scaling), max(scaling)
-            thr_n, thr_4n = scaling[lo]["throughput"], scaling[hi]["throughput"]
-            result["throughput_turns_per_sec"] = round(thr_4n, 1)
-            result["scaling"] = {
-                "cores_n": lo, "cores_4n": hi,
-                "turns": BENCH_TURNS,
-                "rounds": rnd,
-                "window_ok": window_ok_scaling,
-                "sec_n": round(scaling[lo]["sec"], 3),
-                "sec_4n": round(scaling[hi]["sec"], 3),
-                "throughput_n": round(thr_n, 1),
-                "throughput_4n": round(thr_4n, 1),
-                "efficiency": round((thr_4n / thr_n) / (hi / lo), 3),
-            }
-            # per-rep raw timings are diagnostics, not headline — they go to
-            # the diag line below, never the final line (the r4 artifact's
-            # final line outgrew the driver's tail capture and parsed: null)
-            diag["all_secs_n"] = scaling[lo].get("all_secs")
-            diag["all_secs_4n"] = scaling[hi].get("all_secs")
-            diag["cpu_probes_scaling"] = probes_at_scaling
-
-    result["cpu_probe_best"] = round(probe_best, 3)
-    # FINAL stdout line must stay compact and parseable end-to-end: bulky
-    # diagnostics (scale curve, raw rep arrays) print FIRST on stderr.
-    print("# diag " + json.dumps(diag), file=sys.stderr)
-    line = json.dumps(result)
-    if len(line) > 4000:  # belt-and-braces: never emit an unparseable tail
-        slim = {k: result[k] for k in
-                ("metric", "value", "unit", "sf", "queries", "scaling",
-                 "window_ok_headline", "cpu_probe_best", "headline_blocks")
-                if k in result}
-        line = json.dumps(slim)
-    print(line)
+    print(final_line(times, e2e_sec, sum(res.sinks.values()), sf, host, scale))
 
 
 if __name__ == "__main__":

@@ -331,6 +331,17 @@ def test_run_incremental_rolls_back_crashed_run(spark, transcripts, tmp_path):
     assert {s: cat.read(s).count() for s in want} == want
 
 
+def test_run_and_run_incremental_without_catalog_raise_value_error(
+        spark, transcripts):
+    """Both entry points refuse a catalog-less pipeline with the same
+    ValueError (an ``assert`` would vanish under ``python -O``)."""
+    pipe = Pipeline(spark, fixture_config())
+    with pytest.raises(ValueError, match="needs a catalog"):
+        pipe.run(transcripts)
+    with pytest.raises(ValueError, match="needs a catalog"):
+        pipe.run_incremental("transcripts")
+
+
 def test_run_scans_input_exactly_once(spark, transcripts, tmp_path):
     """The production run() path must read its input ONCE: lineage counters
     ride the staging write via df.observe, not a separate pre-count job.
