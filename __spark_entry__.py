@@ -655,7 +655,9 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from beats_spark.ml import textstats
 
     _prep(spark)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # one file is one split: spread the per-row hashing over every slot
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+        spark.sparkContext.defaultParallelism)
     return docs.select(
         "doc_id", textstats.rolling_fingerprint(F.col("text")).alias("fp")
     )
@@ -715,7 +717,10 @@ def q_user_agent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 4, F.lit(_UA_IPH))
         .otherwise(F.lit(_UA_AND))
     )
-    df = t.withColumn("ua", ua)
+    # the transcripts window shuffle is coalesced into one partition at
+    # small scale factors: spread the UA regex work over every slot
+    df = t.withColumn("ua", ua).repartition(
+        spark.sparkContext.defaultParallelism)
     out = apply_chain(df, build_chain([
         {"user_agent": {"field": "ua", "target_field": "user_agent"}},
     ]))

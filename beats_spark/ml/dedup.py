@@ -3,10 +3,15 @@ cosine near-dup.
 
 Shuffle budget at 100 TB:
 - exact: one shuffle on the content hash (map-side partial agg first).
-- minhash LSH: one narrow pass computes signatures (per-row array math, no
-  shuffle), one explode+shuffle on (band, band_hash), pairs verified inside
-  buckets — never a global cross join.
-- simhash: narrow signature pass + one shuffle on the high bits.
+- minhash LSH: the corpus is read once. Each document's shingles are
+  exploded and hashed by scalar expressions (whole-stage codegen), and one
+  groupBy per document yields its hashed shingle set, its signature and
+  its band keys. That per-document frame is persisted; the band self-join
+  and the exact-Jaccard verification both read it — never a global cross
+  join.
+- simhash: the corpus is read once: tokens exploded (token-less documents
+  keep one zero-vote row), one groupBy of per-bit vote sums, then a
+  shuffle-hash self-join on the permutation-table keys.
 - embedding near-dup: hyperplane-bucket join (see similarity.py), cosine
   verified inside buckets only.
 """
@@ -48,8 +53,9 @@ def poly_string_hash(t: Column, base: int = 31, seed: int = 7) -> Column:
 
 
 def words(col: Column) -> Column:
-    """Whitespace tokens, empties removed."""
-    return F.filter(F.split(col, r"\s+"), lambda t: t != "")
+    """Whitespace tokens, empties removed (no lambda, so it stays in
+    whole-stage codegen)."""
+    return F.array_remove(F.split(col, r"\s+"), "")
 
 
 def word_shingles(col: Column, n: int = 3) -> Column:
@@ -106,68 +112,76 @@ def minhash_lsh_pairs(
 
     shingle → minhash → band → bucket-join: docs sharing any band bucket
     become candidates; candidates are verified with EXACT Jaccard over the
-    shingle sets, so the threshold is precise and LSH only controls recall
-    (rows per band r = num_hashes/bands; P[candidate] = 1-(1-j^r)^b).
+    hashed shingle sets, so the threshold is precise and LSH only controls
+    recall (rows per band r = num_hashes/bands; P[candidate] = 1-(1-j^r)^b).
+    Ids must be unique: rows sharing an id are one document.
 
-    hash='xx' (production) never materializes shingle STRINGS: tokens are
-    hashed once, a shingle's hash is xxhash64 over the sliced token-hash
-    array, and Jaccard verification runs on the distinct hashed-shingle
-    sets (set arithmetic is hash-collision-exact at 2^-64 per pair) —
-    array_join string allocation was the dominant measured cost of the
-    signature pass. hash='poly' mirrors the same shape with portable
-    31-bit arithmetic, so its verification Jaccard carries a ~s²/2³²
-    per-document shingle-collision probability (negligible below ~10⁴
-    shingles/doc; use 'xx' where that matters) — tokens char-hashed ONCE polynomially, a shingle's hash a
-    polynomial fold of its n token hashes (zip_with rolling combine, so the
-    token-hash array is evaluated n times per ROW, never per shingle), and
-    verification Jaccard over the distinct hashed-shingle sets — every
-    value byte-reproducible in DuckDB for the driver's oracle at roughly
-    the production mode's cost (the old poly path char-hashed every
-    shingle STRING: ~n× the char hashing plus an array_join allocation
-    per shingle).
+    Shingle strings are never built. The token array is projected once,
+    the ``shingle_n`` shifted slices of it are zipped and exploded (one row
+    per shingle), and each shingle is hashed by a scalar expression over
+    its tokens, inside whole-stage codegen:
+
+    - ``hash='xx'`` (production): ``xxhash64(xxhash64(xxhash64(t0),
+      xxhash64(t1)), xxhash64(t2))``. Set arithmetic on these hashes is
+      collision-exact at 2^-64 per pair.
+    - ``hash='poly'``: tokens char-hashed once polynomially (projected as
+      an array), a shingle's hash the fold ``(acc * 1000003 + h) mod P``
+      of its token hashes. Every value is byte-reproducible in DuckDB for
+      the oracle of ``tools/check_entry.py``; the 31-bit hashes give the
+      verification Jaccard a ~s²/2³² per-document shingle-collision
+      probability (negligible below ~10⁴ shingles/doc; use 'xx' where
+      that matters).
+
+    One groupBy per document then yields the verification set
+    (``collect_set`` of the shingle hashes), the ``num_hashes`` min-hashes
+    and the band keys; map-side partial aggregation ships one row per doc
+    per partition, not the exploded rows.
+
+    Scale trade-off: that per-document frame is persisted
+    (MEMORY_AND_DISK, so it spills rather than OOMs) and holds every
+    document's hashed shingle set — 8 bytes per distinct shingle — beside
+    its ``bands`` band keys. Both sides of the band self-join and both
+    sides of the verification join read it, so the corpus is read and
+    hashed once. The band explode and candidate self-join carry only
+    (id, band, bucket); shingle sets enter only the verification joins.
+    The verified pair set is small and is eagerly materialized
+    (``localCheckpoint``) so the persisted frame can be dropped before
+    returning: callers of the returned frame have no handle to unpersist
+    it.
     """
-    rows_per_band = num_hashes // bands
-    toks = words(F.col(content_col))
-    if hash == "xx":
-        th = F.transform(toks, lambda t: F.xxhash64(t))
-    else:
-        th = F.transform(toks, lambda t: poly_string_hash(t))
-    k = F.size(toks) - F.lit(shingle_n - 1)
-    # rolling combine: hs[i] = fold over th[i..i+n-1]. Built with zip_with
-    # over shifted slices — each slice evaluates th once per ROW; the
-    # previous transform-over-indices lambda re-evaluated the th subtree
-    # per SHINGLE (interpreted HOFs have no common-subexpression
-    # elimination), making token hashing O(tokens × shingles) instead of
-    # O(tokens) — measured 2× on the whole operator at sf0.1.
-    kk = F.greatest(k, F.lit(0))
-    hs = F.slice(th, 1, kk)
-    for j in range(1, shingle_n):
-        nxt = F.slice(th, 1 + j, kk)
-        if hash == "xx":
-            hs = F.zip_with(hs, nxt, lambda a, h: F.xxhash64(a, h))
-        else:
-            hs = F.zip_with(
-                hs, nxt,
-                lambda a, h: F.pmod(a * 1000003 + h, F.lit(POLY_P)),
-            )
-    hs = F.array_distinct(hs)
-    # __vs: the verification set = the hashed shingle set in both modes
-    base = df.select(F.col(id_col).alias("__id"), hs.alias("__vs"))
-    base = base.filter(F.size("__vs") > 0)
-    ex = base.select("__id", F.explode("__vs").alias("__h"))
+    from pyspark import StorageLevel
 
-    # signature via explode + num_hashes codegen'd min-aggregates instead of
-    # a nested transform/array_min higher-order expression: HOFs run
-    # INTERPRETED (~600 ns/element-op measured), while min() aggs over the
-    # exploded hashes stay inside whole-stage codegen — a ~5× faster
-    # signature pass. Map-side partial aggregation means the shuffle carries
-    # one (id, num_hashes mins) row per doc per partition, the same bytes
-    # the signature column would, NOT the exploded rows.
+    rows_per_band = num_hashes // bands
+    toks = df.select(F.col(id_col).alias("__id"),
+                     words(F.col(content_col)).alias("__t"))
+    if hash == "xx":
+        src, tok_sql = "__t", "xxhash64({})"
+
+        def fold(acc: str, h: str) -> str:
+            return f"xxhash64({acc}, {h})"
+    else:
+        toks = toks.select(
+            "__id",
+            F.transform("__t", lambda t: poly_string_hash(t)).alias("__th"))
+        src, tok_sql = "__th", "{}"
+
+        def fold(acc: str, h: str) -> str:
+            return f"pmod({acc} * 1000003 + {h}, {POLY_P})"
+
+    # shingle i = (src[i], ..., src[i+n-1]): the n shifted slices of length
+    # size - n + 1, zipped; a doc with fewer than n tokens explodes to no row
+    k = f"greatest(size({src}) - {shingle_n - 1}, 0)"
+    zipped = "arrays_zip(" + ", ".join(
+        f"slice({src}, {j + 1}, {k})" for j in range(shingle_n)) + ")"
+    h = tok_sql.format("__z.`0`")
+    for j in range(1, shingle_n):
+        h = fold(h, tok_sql.format(f"__z.`{j}`"))
+    ex = (toks.select("__id", F.expr(f"explode({zipped})").alias("__z"))
+          .select("__id", F.expr(h).alias("__h")))
 
     # per-seed/band expressions are SQL TEXT parsed once by F.expr —
     # building 64 min-aggregates + the band keys as nested Column trees
-    # costs noticeable driver-side py4j time per call (same fix as the
-    # simhash signature)
+    # costs noticeable driver-side py4j time per call
     def perm_sql(seed: int) -> str:
         if hash == "xx":
             return f"xxhash64(__h, {seed})"
@@ -175,74 +189,52 @@ def minhash_lsh_pairs(
         b = (seed * 12345 + 7) % POLY_P
         return f"pmod({a} * __h + {b}, {POLY_P})"
 
-    sig = (
-        ex.groupBy("__id")
-        .agg(*[F.expr(f"min({perm_sql(s)})").alias(f"__m{s}")
-               for s in range(num_hashes)])
-        .select(
-            "__id",
-            F.expr("array(" + ", ".join(
-                f"__m{s}" for s in range(num_hashes)) + ")").alias("__sig"),
-        )
-    )
-
     def band_sql(b: int) -> str:
-        sl = f"slice(__sig, {b * rows_per_band + 1}, {rows_per_band})"
+        rows = [f"__m{s}" for s in
+                range(b * rows_per_band, (b + 1) * rows_per_band)]
         if hash == "xx":
-            # xxhash64 hashes the sliced array<long> directly — no
-            # per-band string materialization
-            return f"xxhash64({sl})"
-        return (f"aggregate({sl}, CAST(0 AS BIGINT), "
-                f"(acc, m) -> pmod(acc * 1000003 + m, {POLY_P}))")
+            return f"xxhash64(array({', '.join(rows)}))"
+        key = "CAST(0 AS BIGINT)"
+        for m in rows:
+            key = fold(key, m)
+        return key
 
-    # the band explode and candidate self-join carry ONLY (id, band, bucket)
-    # — 24 bytes/row — never the shingle arrays; shipping the heaviest column
-    # through a `bands`-way explode would amplify its shuffle bytes by the
-    # band count at scale. Shingle sets cross the wire once per doc in the
-    # verification joins below, not once per band. The band list is a
-    # LITERAL array (bands is a plan-time int), not a transform-over-
-    # sequence HOF — fixed expressions stay inside whole-stage codegen.
-    banded = sig.select(
-        "__id",
-        F.posexplode(F.expr("array(" + ", ".join(
-            band_sql(b) for b in range(bands)) + ")")).alias("__band", "__bh"),
+    docs = (
+        ex.groupBy("__id")
+        .agg(F.collect_set("__h").alias("__vs"),
+             *[F.expr(f"min({perm_sql(s)})").alias(f"__m{s}")
+               for s in range(num_hashes)])
+        .select("__id", "__vs", F.expr("array(" + ", ".join(
+            band_sql(b) for b in range(bands)) + ")").alias("__bands"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # persist: the self-join evaluates each side's subtree independently
-    # (broadcast build + streamed probe do NOT share work), which would run
-    # the signature pass — the operator's dominant cost — once per side.
-    # The banded frame is 3 longs/row (docs × bands), far smaller than the
-    # corpus, and MEMORY_AND_DISK spills rather than OOMs at scale; this
-    # measured ~2× on the end-to-end operator. The candidate id-pairs are
-    # then EAGERLY materialized (localCheckpoint: small — ids only, blocks
-    # GC-cleaned by the ContextCleaner) so the cache can be dropped before
-    # returning — a DataFrame persist is never auto-released, and callers
-    # of the returned frame have no handle to unpersist it.
-    from pyspark import StorageLevel
-
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__bh") == F.col("b.__bh"))
-            & (F.col("a.__id") < F.col("b.__id")),
+    try:
+        banded = docs.select(
+            "__id", F.posexplode("__bands").alias("__band", "__bh"))
+        a, b = banded.alias("a"), banded.alias("b")
+        cand = (
+            a.join(
+                b,
+                (F.col("a.__band") == F.col("b.__band"))
+                & (F.col("a.__bh") == F.col("b.__bh"))
+                & (F.col("a.__id") < F.col("b.__id")),
+            )
+            .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
         )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .localCheckpoint(eager=True)
-    )
-    banded.unpersist()
-    sh_a = base.select(F.col("__id").alias("id_a"), F.col("__vs").alias("sh_a"))
-    sh_b = base.select(F.col("__id").alias("id_b"), F.col("__vs").alias("sh_b"))
-    pairs = cand.join(sh_a, "id_a").join(sh_b, "id_b")
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-    )
+        sh_a = docs.select(F.col("__id").alias("id_a"), F.col("__vs").alias("sh_a"))
+        sh_b = docs.select(F.col("__id").alias("id_b"), F.col("__vs").alias("sh_b"))
+        jac = (F.size(F.array_intersect("sh_a", "sh_b"))
+               / F.size(F.array_union("sh_a", "sh_b")))
+        return (
+            cand.join(sh_a, "id_a").join(sh_b, "id_b")
+            .withColumn("jaccard", jac)
+            .filter(F.col("jaccard") >= jaccard_threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        docs.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -373,47 +365,43 @@ def simhash_pairs(
     the top ``prefix_bits`` bits (docs within small hamming usually share
     the prefix, but a flipped prefix bit loses the pair).
 
-    The signature is computed relationally — explode tokens, 64 codegen'd
-    conditional-sum aggregates (one per bit), pack the sign bits — instead
-    of the interpreted zip_with accumulator of ``simhash()`` (same values;
-    the Column form remains for single-expression use). Token-less docs
-    rejoin with signature 0, matching the accumulator's empty fold.
+    The signature is computed relationally in one read of the corpus:
+    tokens exploded with ``explode_outer``, 64 codegen'd conditional-sum
+    aggregates (one per bit), then the sign bits packed — instead of the
+    interpreted zip_with accumulator of ``simhash()`` (same values; the
+    Column form remains for single-expression use). A token-less document
+    keeps one NULL-token row that votes 0 on every bit, so it gets
+    signature 0, matching the accumulator's empty fold. Ids must be
+    unique: rows sharing an id are one document.
     """
     bits = 64
     # The per-bit expressions below are built as SQL TEXT and parsed once
     # by F.expr: constructing 64 vote aggregates + 64 pack terms as nested
     # Column trees costs ~3 s of driver-side py4j round-trips per call
     # (measured at sf0.01 — more than the job itself). The token hash is
-    # projected ONCE as __h so each vote reads a cheap attribute.
+    # projected ONCE as __h (NULL on a token-less document's row) so each
+    # vote reads a cheap attribute.
     tok = df.select(
         F.col(id_col).alias("__id"),
-        F.explode(words(F.col(content_col))).alias("__t"),
+        F.explode_outer(words(F.col(content_col))).alias("__t"),
     )
+    tok_hash = F.xxhash64("__t") if hash == "xx" else poly_string_hash(F.col("__t"))
+    tok = tok.select("__id", F.when(F.col("__t").isNotNull(), tok_hash).alias("__h"))
     if hash == "xx":
-        tok = tok.select("__id", F.xxhash64("__t").alias("__h"))
-
         def vote(i: int) -> str:
-            return (f"CASE WHEN (shiftright(__h, {i}) & 1) = 1 "
-                    f"THEN 1 ELSE -1 END")
+            return f"(shiftright(__h, {i}) & 1) = 1"
     else:
-        tok = tok.select("__id", poly_string_hash(F.col("__t")).alias("__h"))
-
         def vote(i: int) -> str:
             a = ((i * 2 + 1) * 1103515245) % POLY_P
             b = (i * 12345 + 7) % POLY_P
-            return (f"CASE WHEN pmod({a} * __h + {b}, {POLY_P}) * 2 "
-                    f">= {POLY_P} THEN 1 ELSE -1 END")
+            return f"pmod({a} * __h + {b}, {POLY_P}) * 2 >= {POLY_P}"
 
     counts = tok.groupBy("__id").agg(
-        *[F.expr(f"sum({vote(i)})").alias(f"__c{i}") for i in range(bits)]
+        *[F.expr(f"sum(CASE WHEN __h IS NULL THEN 0 WHEN {vote(i)} "
+                 f"THEN 1 ELSE -1 END)").alias(f"__c{i}") for i in range(bits)]
     )
-    sims = counts.select(
+    base = counts.select(
         "__id", F.expr(pack_sign_bits_sql("__c", bits)).alias("__sim"))
-    base = (
-        df.select(F.col(id_col).alias("__id"))
-        .join(sims, "__id", "left")
-        .select("__id", F.coalesce("__sim", F.lit(0).cast("long")).alias("__sim"))
-    )
     if candidates == "prefix":
         bucket = F.shiftrightunsigned(F.col("__sim"), 64 - prefix_bits)
         base = base.withColumn("__bkt", bucket)
@@ -468,7 +456,12 @@ def simhash_pairs(
     keys = F.expr("array(" + ", ".join(key_sql(cb) for cb in combos) + ")")
     cand = base.select(
         "__id", "__sim", F.posexplode(keys).alias("__tbl", "__key"))
-    a, b = cand.alias("a"), cand.alias("b")
+    # shuffle-hash join: both sides are the same exchange over ``cand``
+    # (reused), so the signature's final aggregate runs once. A broadcast
+    # build side re-runs it in a separate job (measured 1.69 → 1.29 s on
+    # 10 k documents, 4 cores), and C(B,c) rows per document would not
+    # fit a broadcast at scale anyway.
+    a, b = cand.alias("a"), cand.alias("b").hint("shuffle_hash")
     return (
         a.join(b, (F.col("a.__tbl") == F.col("b.__tbl"))
                & (F.col("a.__key") == F.col("b.__key"))

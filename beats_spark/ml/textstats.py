@@ -198,10 +198,9 @@ def rolling_fingerprint(col: Column, window: int = 5) -> Column:
     toks = words(col)
     k = F.size(toks) - F.lit(window - 1)
     # tokens are char-hashed ONCE; each shingle hash is a polynomial fold of
-    # the precomputed token hashes via zip_with over shifted slices (the same
-    # rolling combine as MinHash, dedup.py) — the previous
-    # transform-over-indices lambda re-sliced and re-char-hashed every token
-    # `window` times per row (interpreted HOFs have no common-subexpression
+    # the precomputed token hashes via zip_with over shifted slices — a
+    # transform-over-indices lambda would re-slice and re-char-hash every
+    # token `window` times per row (interpreted HOFs have no common-subexpression
     # elimination), O(window × tokens) char hashing instead of O(tokens).
     th = F.transform(toks, _word_hash)
     kk = F.greatest(k, F.lit(0))

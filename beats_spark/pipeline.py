@@ -261,15 +261,21 @@ class Pipeline:
         shutil.rmtree(staging, ignore_errors=True)
         routed.write.partitionBy(SINK_COL).mode("errorifexists").parquet(staging)
 
-        # explicit schema: an all-rows-dropped run leaves only _SUCCESS in
-        # staging and schema inference would throw; with the known schema the
-        # read is simply empty and the run still commits metrics + lineage
-        written = self.spark.read.schema(routed.schema).parquet(staging)
-        out_rows = (
-            written.groupBy(SINK_COL, PID_COL)
-            .agg(F.count("*").alias("cnt"))
-            .collect()
-        )
+        # read back the `_sink=<x>` directories that landed, with staging as
+        # the partition base: Spark treats the `_`-prefixed staging dir
+        # itself as a hidden path. An all-rows-dropped run lands none (only
+        # _SUCCESS) and skips the read; it still commits metrics + lineage.
+        landed = sorted(os.path.join(staging, d) for d in os.listdir(staging)
+                        if d.startswith(f"{SINK_COL}="))
+        out_rows = []
+        if landed:
+            written = (self.spark.read.schema(routed.schema)
+                       .option("basePath", staging).parquet(*landed))
+            out_rows = (
+                written.groupBy(SINK_COL, PID_COL)
+                .agg(F.count("*").alias("cnt"))
+                .collect()
+            )
         sink_counts: dict[str, int] = {}
         metrics_rows: list[tuple] = []
         for r in out_rows:

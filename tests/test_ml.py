@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import dedup_reference
 from beats_spark.ml import dedup, multimodal, similarity, textstats
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -387,3 +388,88 @@ def test_embedding_neardup_degenerate_vectors(spark):
         "vec_id bigint, embedding array<double>")
     got = dedup.embedding_neardup_pairs(d, threshold=0.5, num_planes=2)
     assert {(r["id_a"], r["id_b"]) for r in got.collect()} == {(1, 2)}
+
+
+# ---------------------------------------------------------------------------
+# MinHash / SimHash against the previous interpreted-lambda operators
+# ---------------------------------------------------------------------------
+
+# whitespace edge cases beside the sf0.001 corpus: NULL, empty and blank
+# documents, tab/newline separators, leading and trailing blanks, fewer
+# than and exactly three tokens, and repeated shingles
+EDGE_TEXTS = [None, "", "   ", "\t\n", "a b c", "\ta  b\nc ", " a b c d ",
+              "a b", "b", "a b c a b c a b c", "a\tb\tc\ta\tb\tc",
+              "x y z x y z w", "x  y z x y z w"]
+
+
+@pytest.fixture(scope="module")
+def edge_docs(spark, docs):
+    edge = spark.createDataFrame(
+        [(900_000 + i, t) for i, t in enumerate(EDGE_TEXTS)],
+        "doc_id long, text string")
+    return docs.select("doc_id", "text").unionByName(edge)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("hash_mode", ["xx", "poly"])
+@pytest.mark.parametrize("threshold,bands", [(0.3, 32), (0.8, 16)])
+def test_minhash_lsh_equals_reference(edge_docs, hash_mode, threshold, bands):
+    """The codegen shingle hashing and the one persisted per-document frame
+    emit exactly the rows of the previous operator (same pairs, same
+    rounded Jaccard)."""
+    kw = dict(jaccard_threshold=threshold, bands=bands, hash=hash_mode)
+    want = _rows(dedup_reference.minhash_lsh_pairs(edge_docs, **kw))
+    got = _rows(dedup.minhash_lsh_pairs(edge_docs, **kw))
+    assert len(want) > 0
+    assert got == want
+
+
+@pytest.mark.parametrize("hash_mode", ["xx", "poly"])
+@pytest.mark.parametrize("candidates", ["perm", "prefix"])
+def test_simhash_pairs_equals_reference(edge_docs, hash_mode, candidates):
+    """One read with a zero-vote row for token-less documents emits exactly
+    the rows of the previous spine left join; the NULL, empty and blank
+    documents keep signature 0 and so pair with each other."""
+    kw = dict(max_hamming=3, hash=hash_mode, candidates=candidates)
+    want = _rows(dedup_reference.simhash_pairs(edge_docs, **kw))
+    got = _rows(dedup.simhash_pairs(edge_docs, **kw))
+    assert (900_000, 900_001, 0) in want
+    assert got == want
+
+
+def _scans(spark, op) -> float:
+    """How many times ``op`` reads its input: an accumulator counts every
+    row that crosses a pass-through stage at the source."""
+    rows_seen = spark.sparkContext.accumulator(0)
+    src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+
+    def passthrough(it):
+        for pdf in it:
+            rows_seen.add(len(pdf))
+            yield pdf
+
+    op(src.mapInPandas(passthrough, src.schema)).write.format(
+        "noop").mode("overwrite").save()
+    return rows_seen.value / src.count()
+
+
+def test_minhash_lsh_reads_input_once(spark):
+    assert _scans(spark, lambda d: dedup.minhash_lsh_pairs(
+        d, jaccard_threshold=0.3, bands=32)) == 1
+
+
+def test_simhash_pairs_reads_input_once(spark):
+    assert _scans(spark, lambda d: dedup.simhash_pairs(d, max_hamming=3)) == 1
+
+
+def test_words_has_no_lambda(spark):
+    """Tokenizing is a plain expression (whole-stage codegen), not an
+    interpreted ``filter`` lambda."""
+    df = spark.createDataFrame([(" a\tb  c ",)], "text string")
+    out = df.select(dedup.words(F.col("text")).alias("t"))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "lambdafunction" not in plan
+    assert out.first()["t"] == ["a", "b", "c"]

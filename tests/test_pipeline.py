@@ -273,6 +273,40 @@ def test_staging_leftover_is_cleared_on_retry(spark, transcripts, tmp_path):
     assert not os.path.exists(staging)
 
 
+@pytest.mark.parametrize("drop_all", [False, True])
+def test_run_reads_no_hidden_path(spark, transcripts, tmp_path, monkeypatch,
+                                  drop_all):
+    """run() reads back the landed ``_sink=<x>`` directories, never the
+    ``_staging_<run>`` dir itself: Spark treats a basename starting with
+    ``.``, or with ``_`` and no ``=``, as hidden and logs "All paths were
+    ignored". A run that dropped every row reads nothing back."""
+    import os
+
+    from pyspark.sql import DataFrameReader
+
+    read = []
+    real = DataFrameReader.parquet
+
+    def spy(self, *paths, **k):
+        read.extend(paths)
+        return real(self, *paths, **k)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    cfg = fixture_config()
+    if drop_all:
+        cfg = PipelineConfig(
+            processors=[{"drop_event": {"when": {"has_fields": ["conv_id"]}}}],
+            routes=[{"sink": "s_%{[role]}"}])
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    res = Pipeline(spark, cfg, cat).run(transcripts, run_id="hidden")
+    names = [os.path.basename(os.path.normpath(p)) for p in read]
+    assert [n for n in names if n.startswith(".")
+            or (n.startswith("_") and "=" not in n)] == []
+    staged = [p for p in read if "_staging_hidden" in p]
+    assert len(staged) == len(res.sinks)
+    assert (res.sinks == {}) == drop_all
+
+
 def test_rollback_removes_staging_dir(spark, tmp_path):
     import os
     wh = str(tmp_path / "wh")
