@@ -9,17 +9,23 @@ Two tiers:
   signatures come from a relational pass (posexplode → codegen'd per-plane
   sum-aggregates → id-keyed join back; see ``_bucket_projs``) — one extra
   id-shuffle, but zero interpreted higher-order functions on the corpus.
-  The query's own bucket is evaluated once on a synthetic row at plan time
-  (a 1-row job) and inlined as a literal so the probe filter is a pure
-  codegen bit_count. The probe scans ~corpus/2^planes rows per probe; at
-  100 TB the corpus would be WRITTEN partitioned by bucket so the probe
-  prunes file scans instead. Hyperplane coefficients are deterministic
-  integer hashes (no RNG shipping, reproducible at any parallelism).
+  The query's own bucket is computed in Python (:func:`query_bucket`,
+  bit-identical to the corpus pass) and inlined as a literal, so building
+  the probe runs no Spark job and the probe filter is a pure codegen
+  bit_count. The probe scans ~corpus/2^planes rows per probe; at 100 TB
+  the corpus would be WRITTEN partitioned by bucket so the probe prunes
+  file scans instead. Hyperplane coefficients are deterministic integer
+  hashes (no RNG shipping, reproducible at any parallelism).
 """
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column, DataFrame, functions as F
+
+from beats_spark.ml.dedup import POLY_P, pack_sign_bits_sql
+from beats_spark.processors.xxh64 import xxh64
 
 # ---------------------------------------------------------------------------
 # vector math, pure JVM
@@ -42,80 +48,61 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-# deterministic "random" hyperplane coefficient in [-1, 1): plane p, dim d.
-# coef_hash='xx' mixes with xxhash64 (production default); 'poly' hashes
-# the DECIMAL-STRING of the index polynomially — digit decomposition is
-# nonlinear, so consecutive (p, d) don't produce arithmetic-progression
-# coefficients (a purely multiplicative mix does, and correlated planes
-# wreck LSH recall) — and the same arithmetic is DuckDB-replicable, giving
-# hyperplane-bucketed queries a value-level oracle.
-def _plane_coef(p: int, d: Column, coef_hash: str = "xx") -> Column:
+# ---------------------------------------------------------------------------
+# hyperplane buckets
+# ---------------------------------------------------------------------------
+
+
+def _coef(p: int, d: int, coef_hash: str = "xx") -> float:
+    """Deterministic "random" hyperplane coefficient in [-1, 1) of plane
+    ``p``, dimension ``d``. 'xx' (default) is Spark's signed ``xxhash64``
+    of the INT ``p*16384 + d`` (the corpus pass derives it inline in SQL).
+    'poly' hashes the DECIMAL STRING of ``p*16384 + d + 1`` polynomially:
+    digit decomposition is nonlinear, so consecutive (p, d) don't give
+    arithmetic-progression coefficients (correlated planes wreck LSH
+    recall), and the integer arithmetic is DuckDB-replicable, giving
+    bucketed queries a value-level oracle."""
     if coef_hash == "xx":
-        mixed = F.xxhash64(F.lit(p) * 16384 + d)
+        mixed = xxh64(struct.pack("<i", p * 16384 + d), 42)
+        mixed -= (mixed >> 63) << 64  # read as signed
     else:
-        from beats_spark.ml.dedup import poly_string_hash
-
-        mixed = poly_string_hash(
-            (F.lit(p).cast("long") * 16384 + d + 1).cast("string")
-        )
-    return (F.pmod(mixed, F.lit(2000)).cast("double") - F.lit(1000.0)) / F.lit(1000.0)
+        mixed = 7
+        for ch in str(p * 16384 + d + 1):
+            mixed = (mixed * 31 + ord(ch)) % POLY_P
+    return (float(mixed % 2000) - 1000.0) / 1000.0
 
 
-def hyperplane_bucket(vec: Column, num_planes: int = 8,
-                      coef_hash: str = "xx") -> Column:
-    """Sign-bit signature of ``vec`` against ``num_planes`` deterministic
-    hyperplanes, packed into a bigint bucket id.
-
-    Column form for single-expression use (e.g. one query vector). For a
-    whole CORPUS use :func:`hyperplane_buckets` — this form evaluates
-    interpreted higher-order functions, O(planes × dims) per row."""
-    out = F.lit(0).cast("long")
+def query_bucket(vec, num_planes: int = 8, coef_hash: str = "xx") -> int:
+    """Bucket id of one vector: bit p is set when its projection on plane
+    p is positive. Each projection is summed in dimension order from 0.0,
+    so the value is bit-identical to the corpus pass. An empty or NULL
+    vector, or one with a NULL element, is bucket 0."""
+    if vec is None or len(vec) == 0 or any(x is None for x in vec):
+        return 0
+    out = 0
     for p in range(num_planes):
-        proj = F.aggregate(
-            F.zip_with(
-                vec,
-                F.transform(F.sequence(F.lit(0), F.size(vec) - 1),
-                            lambda d: _plane_coef(p, d, coef_hash)),
-                lambda x, c: x * c,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        out = out + F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), p)).otherwise(F.lit(0).cast("long"))
+        proj = 0.0
+        for d, x in enumerate(vec):
+            proj += float(x) * _coef(p, d, coef_hash)
+        # Spark orders NaN above every value: NaN sets the bit there too
+        if proj > 0 or proj != proj:
+            out |= 1 << p
     return out
-
-
-def _poly_coef_py(p: int, d: int) -> float:
-    """Exact Python replica of _plane_coef for coef_hash='poly' — pure
-    integer arithmetic plus one final float subtract/divide, so the value
-    is bit-identical to the Spark/DuckDB derivation."""
-    from beats_spark.ml.dedup import POLY_P
-
-    acc = 7
-    for ch in str(p * 16384 + d + 1):
-        acc = (acc * 31 + ord(ch)) % POLY_P
-    return (float(acc % 2000) - 1000.0) / 1000.0
 
 
 def _bucket_projs(base: DataFrame, num_planes: int,
                   coef_hash: str) -> DataFrame:
-    """(__id, __bkt) for ids of ``base`` (columns __id, __v) whose vector
-    has at least one element — the caller left-joins and coalesces to 0 for
-    empty/NULL vectors (the Column form's empty fold). A vector containing
-    a NULL ELEMENT also gets bucket 0: the Column form's fold nullifies the
-    whole projection, where a plain sum() would silently skip it.
+    """(__id, __bkt, __n) for every id of ``base`` (columns __id, __v):
+    the hyperplane bucket and the L2 norm of the vector, from one
+    ``posexplode_outer`` and one aggregate of codegen'd sums. A NULL or
+    empty vector explodes to one NULL element; any NULL element gives
+    bucket 0 and a NULL norm, where a plain sum() would skip it.
 
-    posexplode once, then ``num_planes`` codegen'd sum-aggregates; sign
-    bits packed with the shared helper. coef_hash='xx' derives the
-    coefficient inline from the element position (pure codegen SQL).
-    coef_hash='poly' joins a broadcast coefficient table precomputed in
-    Python (bit-identical integer arithmetic) — deriving it inline would
-    run an interpreted aggregate/split character fold per element per
-    plane, which is the exact interpretation this relational form exists
-    to remove."""
-    from beats_spark.ml.dedup import pack_sign_bits_sql
-
-    ex = base.select("__id", F.posexplode("__v").alias("__pos", "__x"))
+    'xx' derives the coefficient inline from the element position (pure
+    codegen SQL); 'poly' left-joins a broadcast table of :func:`_coef` —
+    inline, it would be an interpreted character fold per element per
+    plane, the interpretation this relational form exists to remove."""
+    ex = base.select("__id", F.posexplode_outer("__v").alias("__pos", "__x"))
     if coef_hash == "xx":
         prods = [
             f"sum(__x * ((CAST(pmod(xxhash64({p * 16384} + __pos), 2000) "
@@ -124,16 +111,17 @@ def _bucket_projs(base: DataFrame, num_planes: int,
         ]
     else:
         dims = base.agg(F.max(F.size("__v"))).first()[0] or 0
-        spark = base.sparkSession
-        coefs = spark.createDataFrame(
-            [(d, *[_poly_coef_py(p, d) for p in range(num_planes)])
+        coefs = base.sparkSession.createDataFrame(
+            [(d, *[_coef(p, d, "poly") for p in range(num_planes)])
              for d in range(dims)],
-            ["__pos", *[f"__k{p}" for p in range(num_planes)]],
+            ", ".join(["__pos int"]
+                      + [f"__k{p} double" for p in range(num_planes)]),
         )
-        ex = ex.join(F.broadcast(coefs), "__pos")
+        ex = ex.join(F.broadcast(coefs), "__pos", "left")
         prods = [f"sum(__x * __k{p})" for p in range(num_planes)]
     projs = ex.groupBy("__id").agg(
         F.expr("sum(CASE WHEN __x IS NULL THEN 1 ELSE 0 END)").alias("__nn"),
+        F.expr("sqrt(sum(__x * __x))").alias("__n"),
         *[F.expr(prods[p]).alias(f"__p{p}") for p in range(num_planes)],
     )
     return projs.select(
@@ -141,32 +129,72 @@ def _bucket_projs(base: DataFrame, num_planes: int,
         F.expr(f"CASE WHEN __nn > 0 THEN CAST(0 AS BIGINT) "
                f"ELSE {pack_sign_bits_sql('__p', num_planes)} END"
                ).alias("__bkt"),
+        F.expr("CASE WHEN __nn > 0 THEN CAST(NULL AS DOUBLE) "
+               "ELSE __n END").alias("__n"),
     )
+
+
+def _base(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    return df.select(F.col(id_col).alias("__id"),
+                     F.col(vec_col).cast("array<double>").alias("__v"))
 
 
 def hyperplane_buckets(df: DataFrame, vec_col: str = "embedding",
                        id_col: str = "vec_id", num_planes: int = 8,
                        coef_hash: str = "xx") -> DataFrame:
-    """(id, __bkt) for every corpus row — same values as the Column form
-    (including bucket 0 for empty, NULL, and NULL-element vectors),
-    computed relationally via :func:`_bucket_projs`. Callers that already
-    hold an (id, vec) projection should join ``_bucket_projs`` directly
-    instead of calling this (it re-selects from df for the id spine)."""
-    base = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"),
-    )
-    return (
-        base.select("__id")
-        .join(_bucket_projs(base, num_planes, coef_hash), "__id", "left")
-        .select("__id",
-                F.coalesce("__bkt", F.lit(0).cast("long")).alias("__bkt"))
-    )
+    """(__id, __bkt) for every corpus row (ids must be unique), computed
+    relationally; each the :func:`query_bucket` of the row's vector, 0 for
+    an empty, NULL or NULL-element vector."""
+    return _bucket_projs(_base(df, vec_col, id_col), num_planes,
+                         coef_hash).select("__id", "__bkt")
+
+
+def _bucketed(corpus: DataFrame, vec_col: str, id_col: str,
+              num_planes: int, coef_hash: str) -> DataFrame:
+    """The corpus plus its ``__bkt`` column (a NULL id gets bucket 0)."""
+    b = _bucket_projs(_base(corpus, vec_col, id_col), num_planes, coef_hash)
+    return (corpus.join(b.select(F.col("__id").alias(id_col), "__bkt"),
+                        id_col, "left")
+            .withColumn("__bkt", F.coalesce("__bkt", F.lit(0).cast("long"))))
 
 
 # ---------------------------------------------------------------------------
 # search
 # ---------------------------------------------------------------------------
+
+
+def _topk(rows: DataFrame, query_vec: list[float], k: int, vec_col: str,
+          id_col: str, exclude_id: int | None) -> DataFrame:
+    """(id, score): exact cosine of ``vec_col`` to the query, ordered by
+    (score desc, id) — the id tiebreak keeps results deterministic.
+    ``orderBy().limit(k)`` compiles to TakeOrdered: no global sort at any
+    scale."""
+    if exclude_id is not None:
+        rows = rows.filter(F.col(id_col) != exclude_id)
+    q = F.lit(query_vec).cast("array<double>")
+    return (
+        rows.select(F.col(id_col),
+                    cosine(F.col(vec_col).cast("array<double>"), q)
+                    .alias("score"))
+        .orderBy(F.col("score").desc(), F.col(id_col))
+        .limit(k)
+        .select(id_col, F.round("score", 6).alias("score"))
+    )
+
+
+def _probe_topk(rows: DataFrame, query_vec: list[float], k: int,
+                vec_col: str, id_col: str, num_planes: int,
+                probe_hamming: int, exclude_id: int | None,
+                coef_hash: str) -> DataFrame:
+    """Top-k among ``rows`` (with a ``__bkt`` column) whose bucket is
+    within ``probe_hamming`` bits of the query's. The probe references
+    only ``__bkt``, so on a bucket-partitioned table it is a partition
+    filter."""
+    qb = query_bucket(query_vec, num_planes, coef_hash)
+    probed = rows.filter(
+        F.bit_count(F.col("__bkt").cast("long").bitwiseXOR(F.lit(qb)))
+        <= probe_hamming)
+    return _topk(probed, query_vec, k, vec_col, id_col, exclude_id)
 
 
 def cosine_topk(
@@ -179,22 +207,8 @@ def cosine_topk(
 ) -> DataFrame:
     """Brute-force top-k by cosine similarity to a constant query vector.
 
-    Returns (id, score) ordered by (score desc, id) — the id tiebreak keeps
-    results deterministic. ``orderBy().limit(k)`` compiles to TakeOrdered:
-    no global sort at any scale.
-    """
-    q = F.lit(query_vec).cast("array<double>")
-    df = corpus.select(
-        F.col(id_col),
-        cosine(F.col(vec_col).cast("array<double>"), q).alias("score"),
-    )
-    if exclude_id is not None:
-        df = df.filter(F.col(id_col) != exclude_id)
-    return (
-        df.orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("score", 6).alias("score"))
-    )
+    Returns (id, score) ordered by (score desc, id)."""
+    return _topk(corpus, query_vec, k, vec_col, id_col, exclude_id)
 
 
 def lsh_topk(
@@ -213,35 +227,14 @@ def lsh_topk(
     exact cosine + top-k inside the probed slice.
 
     At 100 TB the corpus would be written bucketed/partitioned by the
-    signature so the probe prunes file scans via partition pruning; here the
-    filter is computed on the fly (bit_count is codegen'd).
+    signature so the probe prunes file scans via partition pruning
+    (:func:`write_bucketed`); here the filter is computed on the fly
+    (bit_count is codegen'd).
     """
-    q = F.lit(query_vec).cast("array<double>")
-    vec = F.col(vec_col).cast("array<double>")
-    ids = corpus.select(F.col(id_col).alias("__id"), vec.alias("__v"))
-    base = (
-        ids.join(_bucket_projs(ids, num_planes, coef_hash), "__id", "left")
-        .select(F.col("__id").alias(id_col), "__v",
-                F.coalesce("__bkt", F.lit(0).cast("long")).alias("__bkt"))
-    )
-    # the query's bucket is ONE value: evaluate the Column form on a
-    # single synthetic row and inline the result as a literal — leaving it
-    # as an expression re-runs the interpreted plane fold on EVERY corpus
-    # row inside the filter (HOFs are not constant-folded)
-    spark = corpus.sparkSession
-    qb_val = spark.range(1).select(
-        hyperplane_bucket(q, num_planes, coef_hash).alias("b")
-    ).collect()[0]["b"]
-    probed = base.filter(
-        F.bit_count(F.col("__bkt").bitwiseXOR(F.lit(qb_val))) <= probe_hamming)
-    if exclude_id is not None:
-        probed = probed.filter(F.col(id_col) != exclude_id)
-    return (
-        probed.select(F.col(id_col), cosine(F.col("__v"), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("score", 6).alias("score"))
-    )
+    return _probe_topk(_bucketed(corpus, vec_col, id_col, num_planes,
+                                 coef_hash),
+                       query_vec, k, vec_col, id_col, num_planes,
+                       probe_hamming, exclude_id, coef_hash)
 
 
 def write_bucketed(
@@ -259,19 +252,10 @@ def write_bucketed(
     a probe reads ~``C(planes, ≤hamming)/2^planes`` of the corpus bytes
     instead of filtering rows after a full scan.
 
-    One signature pass (the relational ``_bucket_projs``), one id-join,
-    one partitioned write. 2^num_planes directories — keep num_planes
-    moderate (8 → 256 partitions) so files stay large at scale."""
-    base = corpus.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("__v"))
-    # _bucket_projs directly (not hyperplane_buckets, whose internal id-
-    # spine join would make this TWO corpus-sized joins): one signature
-    # pass, one left join, NULL/empty vectors coalesce to bucket 0
-    b = _bucket_projs(base, num_planes, coef_hash) \
-        .withColumnRenamed("__id", id_col)
-    (corpus.join(b, id_col, "left")
-     .withColumn("__bkt", F.coalesce(F.col("__bkt"), F.lit(0).cast("long")))
+    One signature pass, one id-join, one partitioned write. 2^num_planes
+    directories — keep num_planes moderate (8 → 256 partitions) so files
+    stay large at scale."""
+    (_bucketed(corpus, vec_col, id_col, num_planes, coef_hash)
      .write.partitionBy("__bkt").mode("overwrite").parquet(path))
 
 
@@ -290,24 +274,9 @@ def lsh_topk_bucketed(
     """``lsh_topk`` over a :func:`write_bucketed` corpus. Identical
     results; the bucket probe becomes a PARTITION filter (it references
     only the partition column), so unprobed buckets are never read."""
-    q = F.lit(query_vec).cast("array<double>")
-    qb_val = spark.range(1).select(
-        hyperplane_bucket(q, num_planes, coef_hash).alias("b")
-    ).collect()[0]["b"]
-    df = spark.read.parquet(path)
-    probed = df.filter(
-        F.bit_count(F.col("__bkt").cast("long").bitwiseXOR(F.lit(qb_val)))
-        <= probe_hamming)
-    if exclude_id is not None:
-        probed = probed.filter(F.col(id_col) != exclude_id)
-    return (
-        probed.select(
-            F.col(id_col),
-            cosine(F.col(vec_col).cast("array<double>"), q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("score", 6).alias("score"))
-    )
+    return _probe_topk(spark.read.parquet(path), query_vec, k, vec_col,
+                       id_col, num_planes, probe_hamming, exclude_id,
+                       coef_hash)
 
 
 def ivf_topk(
@@ -343,10 +312,5 @@ def ivf_topk(
             "lbl", cosine(F.col("centroid"), q).alias("s")
         ).orderBy(F.col("s").desc()).limit(n_probe).collect()
     ]
-    return (
-        corpus.filter(F.col(label_col).isin(probe))
-        .select(F.col(id_col), cosine(vec, q).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col))
-        .limit(k)
-        .select(id_col, F.round("score", 6).alias("score"))
-    )
+    return _topk(corpus.filter(F.col(label_col).isin(probe)), query_vec, k,
+                 vec_col, id_col, None)

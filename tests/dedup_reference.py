@@ -1,4 +1,5 @@
-"""The previous MinHash and SimHash pair operators, kept as the test oracle.
+"""The previous MinHash and SimHash pair operators and the SimHash Column
+form, kept as the test oracle.
 
 These are the interpreted-lambda forms that ``beats_spark.ml.dedup``
 replaced: tokens filtered by a ``filter`` lambda, MinHash shingle hashes
@@ -6,7 +7,9 @@ built by a ``zip_with`` rolling combine over shifted token-hash slices and
 verified against a second build of each document's shingle set, and the
 SimHash signature left-joined back onto a ``df.select(id)`` spine so a
 token-less document gets signature 0. The production operators must emit
-exactly the same rows (``tests/test_ml.py``).
+exactly the same rows (``tests/test_ml.py``). ``simhash()`` is the
+interpreted zip_with accumulator that computes one document's signature
+as a Column — the brute-force reference for ``simhash_pairs``' recall.
 """
 
 from __future__ import annotations
@@ -310,3 +313,58 @@ def simhash_pairs(
         # a pair can collide in several tables; pairs are tiny post-filter
         .distinct()
     )
+
+
+def simhash(col: Column, bits: int = 64, hash: str = "xx") -> Column:
+    """Charikar SimHash over whitespace tokens, as a bigint.
+
+    bit_i = sign of sum over tokens of a ±1 vote per token. ONE pass over
+    the tokens with an array<long> accumulator (zip_with adds the ±1 vector
+    of each token's hash), then the sign vector is packed into a single
+    long. All higher-order array functions — no UDF, no shuffle, token list
+    traversed once.
+
+    Votes: ``hash='xx'`` uses bit i of xxhash64(token). ``'poly'`` hashes
+    the token polynomially ONCE, then votes per bit with an independent
+    universal hash (a_i·h+b_i mod P ≥ P/2) — bit-slicing a polynomial hash
+    is NOT avalanche-y (correlated sign bits across documents), per-bit
+    universal hashing is the textbook random-projection construction and
+    stays DuckDB-reproducible.
+    """
+    if hash == "xx":
+        def vote(h: Column, i: Column) -> Column:
+            return F.when(
+                F.call_function("shiftright", h, i.cast("int")).bitwiseAND(F.lit(1)) == 1,
+                F.lit(1).cast("long"),
+            ).otherwise(F.lit(-1).cast("long"))
+        tok_hash = lambda t: F.xxhash64(t)  # noqa: E731
+    else:
+        def vote(h: Column, i: Column) -> Column:
+            s = i.cast("long")
+            a = F.pmod((s * 2 + 1) * F.lit(1103515245), F.lit(POLY_P))
+            b = F.pmod(s * 12345 + 7, F.lit(POLY_P))
+            return F.when(
+                F.pmod(a * h + b, F.lit(POLY_P)) * 2 >= F.lit(POLY_P),
+                F.lit(1).cast("long"),
+            ).otherwise(F.lit(-1).cast("long"))
+        tok_hash = lambda t: poly_string_hash(t)  # noqa: E731
+    toks = words(col)
+    idx = F.sequence(F.lit(0), F.lit(bits - 1))
+    zeros = F.transform(idx, lambda i: F.lit(0).cast("long") + i * 0)
+    counts = F.aggregate(
+        F.transform(toks, tok_hash),
+        zeros,
+        lambda acc, h: F.zip_with(
+            acc,
+            F.transform(idx, lambda i: vote(h, i)),
+            lambda a, b: a + b,
+        ),
+    )
+    packed = F.zip_with(
+        counts,
+        idx,
+        lambda c, i: F.when(
+            c > 0, F.call_function("shiftleft", F.lit(1).cast("long"), i.cast("int"))
+        ).otherwise(F.lit(0).cast("long")),
+    )
+    return F.aggregate(packed, F.lit(0).cast("long"), lambda a, b: a + b)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import dedup_reference
+import similarity_reference
 from beats_spark.ml import dedup, multimodal, similarity, textstats
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -300,7 +301,7 @@ def test_simhash_perm_recall_exact_vs_brute_force(docs):
     import itertools
 
     sims = docs.select(
-        "doc_id", dedup.simhash(F.col("text")).alias("sim")).toPandas()
+        "doc_id", dedup_reference.simhash(F.col("text")).alias("sim")).toPandas()
     by_id = dict(zip(sims["doc_id"], sims["sim"]))
     want = set()
     for a, b in itertools.combinations(sorted(by_id), 2):
@@ -330,7 +331,7 @@ def test_simhash_perm_wide_key_no_overflow(docs):
 
     got = dedup.simhash_pairs(docs, max_hamming=0).toPandas()
     sims = docs.select(
-        "doc_id", dedup.simhash(F.col("text")).alias("sim")).toPandas()
+        "doc_id", dedup_reference.simhash(F.col("text")).alias("sim")).toPandas()
     by_id = dict(zip(sims["doc_id"], sims["sim"]))
     want = {(a, b) for a, b in itertools.combinations(sorted(by_id), 2)
             if by_id[a] == by_id[b]}
@@ -340,16 +341,14 @@ def test_simhash_perm_wide_key_no_overflow(docs):
 def test_hyperplane_buckets_relational_plan_and_parity(emb):
     """Corpus bucket pass must be codegen aggregates (no interpreted
     higher-order functions) and must equal the Column form bit-for-bit."""
-    from beats_spark.ml.similarity import hyperplane_bucket, hyperplane_buckets
-
-    rel = hyperplane_buckets(emb, num_planes=8)
+    rel = similarity.hyperplane_buckets(emb, num_planes=8)
     plan = rel._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan
     assert "zip_with" not in plan.lower() and "transform(" not in plan.lower()
     col = emb.select(
         F.col("vec_id").alias("__id"),
-        hyperplane_bucket(F.col("embedding").cast("array<double>"),
-                          8).alias("__bkt"))
+        similarity_reference.hyperplane_bucket(
+            F.col("embedding").cast("array<double>"), 8).alias("__bkt"))
     a = {r["__id"]: r["__bkt"] for r in rel.collect()}
     b = {r["__id"]: r["__bkt"] for r in col.collect()}
     assert a == b
@@ -357,23 +356,23 @@ def test_hyperplane_buckets_relational_plan_and_parity(emb):
 
 def test_hyperplane_buckets_null_and_empty_vectors(spark):
     """NULL array, empty array, and a NULL ELEMENT must all yield bucket 0
-    in BOTH forms (the Column fold nullifies the projection; a bare sum()
-    would silently skip the NULL element and diverge)."""
-    from beats_spark.ml.similarity import hyperplane_bucket, hyperplane_buckets
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 2.0, -3.0]), (2, None), (3, []), (4, [1.0, None, -2.0])],
-        "vec_id bigint, embedding array<double>")
+    in the relational pass, in query_bucket and in the Column form (the
+    Column fold nullifies the projection; a bare sum() would silently skip
+    the NULL element and diverge)."""
+    rows = [(1, [1.0, 2.0, -3.0]), (2, None), (3, []), (4, [1.0, None, -2.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     for ch in ("xx", "poly"):
         rel = {r["__id"]: r["__bkt"]
-               for r in hyperplane_buckets(df, num_planes=4,
-                                           coef_hash=ch).collect()}
+               for r in similarity.hyperplane_buckets(df, num_planes=4,
+                                                      coef_hash=ch).collect()}
         col = {r["vec_id"]: r["b"] for r in df.select(
             "vec_id",
-            hyperplane_bucket(F.col("embedding").cast("array<double>"),
-                              4, ch).alias("b")).collect()}
+            similarity_reference.hyperplane_bucket(
+                F.col("embedding").cast("array<double>"), 4, ch
+            ).alias("b")).collect()}
         col = {k: (0 if v is None else v) for k, v in col.items()}
         assert rel == col, (ch, rel, col)
+        assert rel == {i: similarity.query_bucket(v, 4, ch) for i, v in rows}
         assert rel[2] == 0 and rel[3] == 0 and rel[4] == 0
 
 
@@ -440,11 +439,11 @@ def test_simhash_pairs_equals_reference(edge_docs, hash_mode, candidates):
     assert got == want
 
 
-def _scans(spark, op) -> float:
+def _scans(spark, op, path: str = f"{SF_DIR}/documents.parquet") -> float:
     """How many times ``op`` reads its input: an accumulator counts every
     row that crosses a pass-through stage at the source."""
     rows_seen = spark.sparkContext.accumulator(0)
-    src = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    src = spark.read.parquet(path)
 
     def passthrough(it):
         for pdf in it:
@@ -473,3 +472,130 @@ def test_words_has_no_lambda(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "lambdafunction" not in plan
     assert out.first()["t"] == ["a", "b", "c"]
+
+
+# ---------------------------------------------------------------------------
+# hyperplane buckets, LSH top-k and embedding pairs against the previous forms
+# ---------------------------------------------------------------------------
+
+# edge vectors beside the sf0.001 corpus and its duplicated vectors: NULL
+# array, empty array, a NULL element and a zero vector
+EDGE_VECS = [None, [], [1.0, None] + [0.5] * 62, [0.0] * 64]
+# query vectors by id; 20_002 holds the NULL element
+QUERIES = [0, 7, 123, 311, 20_002]
+
+
+@pytest.fixture(scope="module")
+def edge_emb(spark, emb):
+    dup = emb.filter(F.col("vec_id") % 50 == 0).select(
+        (F.col("vec_id") + 10000).alias("vec_id"), "embedding", "label")
+    edge = spark.createDataFrame(
+        [(20_000 + i, v, 0) for i, v in enumerate(EDGE_VECS)],
+        "vec_id bigint, embedding array<float>, label int")
+    return emb.unionByName(dup).unionByName(edge).cache()
+
+
+@pytest.mark.parametrize("coef_hash", ["xx", "poly"])
+@pytest.mark.parametrize("planes", [4, 6, 8])
+def test_hyperplane_buckets_equal_reference(edge_emb, coef_hash, planes):
+    """The one-aggregate bucket pass (no id spine) and the Python query
+    bucket give every vector the bucket of the previous forms."""
+    kw = dict(num_planes=planes, coef_hash=coef_hash)
+    want = _rows(similarity_reference.hyperplane_buckets(edge_emb, **kw))
+    assert _rows(similarity.hyperplane_buckets(edge_emb, **kw)) == want
+    col = edge_emb.select("vec_id", "embedding", similarity_reference
+                          .hyperplane_bucket(F.col("embedding").cast(
+                              "array<double>"), planes, coef_hash)
+                          .alias("b")).collect()
+    assert {r["vec_id"]: similarity.query_bucket(r["embedding"], **kw)
+            for r in col} == {r["vec_id"]: r["b"] or 0 for r in col}
+    assert {b for _, b in want} != {0}
+
+
+@pytest.mark.parametrize("coef_hash", ["xx", "poly"])
+@pytest.mark.parametrize("planes,hamming", [(8, 3), (6, 2)])
+def test_lsh_topk_equals_reference(spark, edge_emb, tmp_path_factory,
+                                   coef_hash, planes, hamming):
+    """lsh_topk and lsh_topk_bucketed return the previous lsh_topk's rows,
+    in order, for every query — or abort as it does: a probe that reaches
+    the zero vector divides by a zero norm under ANSI mode."""
+    from pyspark.errors import ArithmeticException
+
+    def outcome(df):
+        try:
+            return df.collect()
+        except ArithmeticException as e:
+            return e.getCondition()
+
+    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
+    similarity.write_bucketed(edge_emb, path, num_planes=planes,
+                              coef_hash=coef_hash)
+    vecs = {r["vec_id"]: r["embedding"] for r in
+            edge_emb.filter(F.col("vec_id").isin(QUERIES)).collect()}
+    full = 0
+    for qid in QUERIES:
+        kw = dict(k=10, num_planes=planes, probe_hamming=hamming,
+                  exclude_id=qid, coef_hash=coef_hash)
+        want = outcome(similarity_reference.lsh_topk(edge_emb, vecs[qid], **kw))
+        assert outcome(similarity.lsh_topk(edge_emb, vecs[qid], **kw)) == want
+        assert outcome(similarity.lsh_topk_bucketed(
+            spark, path, vecs[qid], **kw)) == want
+        full += isinstance(want, list) and len(want) == 10
+    assert full >= 3
+
+
+@pytest.mark.parametrize("coef_hash", ["xx", "poly"])
+@pytest.mark.parametrize("threshold,planes", [(0.35, 6), (0.9, 8)])
+def test_embedding_neardup_equals_reference(edge_emb, coef_hash, threshold,
+                                            planes):
+    """Norms from the bucket aggregate emit exactly the previous rows."""
+    kw = dict(threshold=threshold, num_planes=planes, coef_hash=coef_hash)
+    want = _rows(similarity_reference.embedding_neardup_pairs(edge_emb, **kw))
+    assert len(want) > 0
+    assert _rows(dedup.embedding_neardup_pairs(edge_emb, **kw)) == want
+
+
+def _jobs(spark, build) -> int:
+    """Spark jobs that ``build`` starts, counted under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4()}"
+    sc.setJobGroup(group, "plan build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lsh_topk_builds_without_a_job(spark, emb, tmp_path_factory):
+    """The query bucket is computed in Python: building lsh_topk runs no
+    job, and lsh_topk_bucketed none beyond reading the table's schema."""
+    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
+    similarity.write_bucketed(emb, path, num_planes=6)
+    q = [float(x) for x in
+         emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    assert _jobs(spark, lambda: similarity.lsh_topk(
+        emb, q, probe_hamming=3, coef_hash="xx")) == 0
+    assert _jobs(spark, lambda: similarity.lsh_topk_bucketed(
+        spark, path, q, num_planes=6)) == _jobs(
+        spark, lambda: spark.read.parquet(path))
+
+
+def test_embedding_neardup_reads_input_4_times(spark, tmp_path):
+    """One bucket-and-norm aggregate, the id scan and the two vector
+    sides of the verification join: four reads of the input."""
+    path = str(tmp_path / "embeddings")
+    spark.read.parquet(f"{SF_DIR}/embeddings.parquet").write.parquet(path)
+    assert _scans(spark, lambda d: dedup.embedding_neardup_pairs(
+        d, threshold=0.35, num_planes=6), path) == 4
+
+
+def test_embedding_neardup_keeps_the_id_scan_outer_join(emb):
+    """The coalesced bucket keeps the id scan a LEFT OUTER join: as an
+    inner join AQE broadcasts the id scan and the candidate join runs
+    behind the bucket aggregate's one coalesced partition."""
+    got = dedup.embedding_neardup_pairs(emb, threshold=0.35, num_planes=6)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LeftOuter" in plan, plan
