@@ -45,7 +45,8 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """NULL when either vector has a zero norm (or a NULL element)."""
+    return F.try_divide(dot(a, b), norm(a) * norm(b))
 
 
 # ---------------------------------------------------------------------------
@@ -70,6 +71,24 @@ def _coef(p: int, d: int, coef_hash: str = "xx") -> float:
         for ch in str(p * 16384 + d + 1):
             mixed = (mixed * 31 + ord(ch)) % POLY_P
     return (float(mixed % 2000) - 1000.0) / 1000.0
+
+
+def _coef_sql(p: int, coef_hash: str) -> str:
+    """SQL text of :func:`_coef` for plane ``p`` at dimension ``__pos``.
+    'poly' folds the decimal digits of ``n = p*16384 + __pos + 1`` most
+    significant first, as arithmetic (``__pos`` is an INT, so ``n`` has at
+    most 10 digits): a place above ``n``'s leading digit multiplies by 1
+    and adds 0, which leaves the fold unchanged."""
+    if coef_hash == "xx":
+        mixed = f"xxhash64({p * 16384} + __pos)"
+    else:
+        n = f"(CAST(__pos AS BIGINT) + {p * 16384 + 1})"
+        mixed = "7"
+        for j in range(9, -1, -1):
+            on = f"{n} >= {10 ** j}"
+            mixed = (f"pmod({mixed} * IF({on}, 31, 1) + IF({on}, 48 + "
+                     f"pmod(div({n}, {10 ** j}), 10), 0), {POLY_P})")
+    return f"((CAST(pmod({mixed}, 2000) AS DOUBLE) - 1000.0) / 1000.0)"
 
 
 def query_bucket(vec, num_planes: int = 8, coef_hash: str = "xx") -> int:
@@ -98,27 +117,12 @@ def _bucket_projs(base: DataFrame, num_planes: int,
     empty vector explodes to one NULL element; any NULL element gives
     bucket 0 and a NULL norm, where a plain sum() would skip it.
 
-    'xx' derives the coefficient inline from the element position (pure
-    codegen SQL); 'poly' left-joins a broadcast table of :func:`_coef` —
-    inline, it would be an interpreted character fold per element per
-    plane, the interpretation this relational form exists to remove."""
+    Both derive the coefficient inline from the element position, in
+    codegen SQL (:func:`_coef_sql`): no table to size, so building the
+    pass runs no Spark job."""
     ex = base.select("__id", F.posexplode_outer("__v").alias("__pos", "__x"))
-    if coef_hash == "xx":
-        prods = [
-            f"sum(__x * ((CAST(pmod(xxhash64({p * 16384} + __pos), 2000) "
-            f"AS DOUBLE) - 1000.0) / 1000.0))"
-            for p in range(num_planes)
-        ]
-    else:
-        dims = base.agg(F.max(F.size("__v"))).first()[0] or 0
-        coefs = base.sparkSession.createDataFrame(
-            [(d, *[_coef(p, d, "poly") for p in range(num_planes)])
-             for d in range(dims)],
-            ", ".join(["__pos int"]
-                      + [f"__k{p} double" for p in range(num_planes)]),
-        )
-        ex = ex.join(F.broadcast(coefs), "__pos", "left")
-        prods = [f"sum(__x * __k{p})" for p in range(num_planes)]
+    prods = [f"sum(__x * {_coef_sql(p, coef_hash)})"
+             for p in range(num_planes)]
     projs = ex.groupBy("__id").agg(
         F.expr("sum(CASE WHEN __x IS NULL THEN 1 ELSE 0 END)").alias("__nn"),
         F.expr("sqrt(sum(__x * __x))").alias("__n"),
@@ -166,7 +170,9 @@ def _bucketed(corpus: DataFrame, vec_col: str, id_col: str,
 def _topk(rows: DataFrame, query_vec: list[float], k: int, vec_col: str,
           id_col: str, exclude_id: int | None) -> DataFrame:
     """(id, score): exact cosine of ``vec_col`` to the query, ordered by
-    (score desc, id) — the id tiebreak keeps results deterministic.
+    (score desc, id) — the id tiebreak keeps results deterministic. Rows
+    without a cosine (a zero-norm or NULL-element vector on either side)
+    are dropped.
     ``orderBy().limit(k)`` compiles to TakeOrdered: no global sort at any
     scale."""
     if exclude_id is not None:
@@ -176,6 +182,7 @@ def _topk(rows: DataFrame, query_vec: list[float], k: int, vec_col: str,
         rows.select(F.col(id_col),
                     cosine(F.col(vec_col).cast("array<double>"), q)
                     .alias("score"))
+        .filter(F.col("score").isNotNull())
         .orderBy(F.col("score").desc(), F.col(id_col))
         .limit(k)
         .select(id_col, F.round("score", 6).alias("score"))

@@ -6,13 +6,12 @@ fields sorted+deduped (fingerprint.go:52-55 via StringSet.ToSlice), times
 hashed in UTC rendered with Go's time.String() format, hex encoding default
 (config.go:29-35), hashes md5/sha1/sha256/sha384/sha512/xxhash (hash.go).
 
-All hashes are Go-byte-exact. md5/sha* are JVM built-ins (whole-stage
-codegen, no Python); ``xxhash`` matches cespare/xxhash (XXH64 seed 0 over
-the serialized UTF-8 bytes, test vector fingerprint_test.go:92) via the
-numpy-vectorized from-scratch XXH64 in xxh64.py, Arrow-batched. The
-``xxhash64`` method is an extra fast variant using Spark's JVM xxhash64
-(seed 42 over Spark's internal encoding — same distribution, different
-bytes; zero Python).
+All hashes are Go-byte-exact and every one is a JVM expression (whole-stage
+codegen, no Python worker). ``xxhash`` matches cespare/xxhash (XXH64 seed 0
+over the serialized UTF-8 bytes, test vector fingerprint_test.go:92)
+through Spark's seed-chained ``xxhash64`` (see :data:`_XXH_SEED0`). Every
+digest then takes the same hex → hex/base64/base32 tail: like the
+reference's Run, any method takes any encoding.
 
 Caveat (documented divergence): float rendering matches Go ``%v`` for
 typical values via the shortest round-trip repr; exotic exponent
@@ -21,10 +20,7 @@ formatting can differ.
 
 from __future__ import annotations
 
-import base64 as _b64
 from typing import Any
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
@@ -77,48 +73,59 @@ def serialize_fields(df: DataFrame, fields: list[str], ignore_missing: bool) -> 
     return F.concat(*parts)
 
 
+# Spark's xxhash64(c1, c2, ...) hashes c1 with seed 42 and each later child
+# with the previous result as its seed. XXH64 of one 8-byte input inverts
+# step by step, and this long's seed-42 hash is 0, so
+# xxhash64(lit(_XXH_SEED0), s) is XXH64 seed 0 over the UTF-8 bytes of s.
+_XXH_SEED0 = -365884300664092260
+
+_DIGEST_BYTES = {"md5": 16, "sha1": 20, "sha256": 32, "sha384": 48,
+                 "sha512": 64, "xxhash": 8}
+
+# conv(_, 16, 32) digits → the RFC 4648 base32 alphabet
+_CONV32 = "0123456789ABCDEFGHIJKLMNOPQRSTUV"
+_RFC4648_32 = "ABCDEFGHIJKLMNOPQRSTUVWXYZ234567"
+
+
+def hex_digest(serialized: Column, method: str) -> Column:
+    """Lowercase hex digest of the UTF-8 bytes of ``serialized``."""
+    if method == "md5":
+        return F.md5(serialized)
+    if method == "sha1":
+        return F.sha1(serialized)
+    if method in ("sha256", "sha384", "sha512"):
+        return F.sha2(serialized, int(method[3:]))
+    if method == "xxhash":
+        # Go renders Sum64 big-endian: 16 lowercase hex chars
+        return F.lower(F.lpad(
+            F.hex(F.xxhash64(F.lit(_XXH_SEED0), serialized)), 16, "0"))
+    raise ValueError(f"fingerprint: unknown method {method!r}")
+
+
+def base32_of_hex(hex_col: Column, nbytes: int) -> Column:
+    """RFC 4648 base32 (``=``-padded) of an ``nbytes``-byte hex digest:
+    every 5 bytes (10 hex chars) are 8 base32 digits, which ``conv``
+    renders in its own alphabet and ``translate`` maps to RFC 4648."""
+    groups = -(-nbytes // 5)
+    padded = F.rpad(hex_col, groups * 10, "0")
+    digits = F.concat(*[
+        F.lpad(F.conv(F.substring(padded, 10 * g + 1, 10), 16, 32), 8, "0")
+        for g in range(groups)])
+    rfc = F.translate(digits, _CONV32, _RFC4648_32)
+    return F.rpad(F.substring(rfc, 1, -(-nbytes * 8 // 5)), groups * 8, "=")
+
+
 def hash_column(serialized: Column, method: str, encoding: str) -> Column:
     method = method.lower()
-    encoding = encoding.lower()  # before the xxhash check: 'HEX' is valid
-    if method == "md5":
-        hex_col = F.md5(serialized)
-    elif method == "sha1":
-        hex_col = F.sha1(serialized)
-    elif method in ("sha256", "sha384", "sha512"):
-        hex_col = F.sha2(serialized, int(method[3:]))
-    elif method == "xxhash":
-        # Go-byte-exact: XXH64 seed 0 over the serialized UTF-8 bytes,
-        # rendered as Sum()+hex does (16 lowercase hex chars) — matches
-        # cespare/xxhash (hash.go:57, vector fingerprint_test.go:92).
-        if encoding != "hex":
-            raise ValueError("xxhash supports hex only")
-        from beats_spark.processors.xxh64 import xxh64_hex_series
-
-        return F.pandas_udf(xxh64_hex_series, returnType="string")(serialized)
-    elif method == "xxhash64":
-        # extra (non-reference) fast variant: Spark's JVM xxhash64, seed 42
-        # over the internal encoding — zero Python, different bytes than Go
-        if encoding != "hex":
-            raise ValueError("xxhash64 supports hex only")
-        return F.lower(F.hex(F.xxhash64(serialized)))
-    else:
-        raise ValueError(f"fingerprint: unknown method {method!r}")
+    encoding = encoding.lower()
+    hex_col = hex_digest(serialized, method)
     if encoding == "hex":
         return hex_col
     if encoding == "base64":
         return F.base64(F.unhex(hex_col))
     if encoding == "base32":
-        # no JVM builtin for base32 — tiny Arrow-batched re-encode of the
-        # already-computed hex digest
-        return _b32_udf(hex_col)
+        return base32_of_hex(hex_col, _DIGEST_BYTES[method])
     raise ValueError(f"fingerprint: unknown encoding {encoding!r}")
-
-
-def _b32_udf(col: Column) -> Column:
-    def b32(s: pd.Series) -> pd.Series:
-        return s.map(lambda h: _b64.b32encode(bytes.fromhex(h)).decode() if h else None)
-
-    return F.pandas_udf(b32, returnType="string")(col)
 
 
 @register("fingerprint")

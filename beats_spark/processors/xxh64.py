@@ -4,24 +4,15 @@ libbeat/processors/fingerprint/hash.go:28-57 and the test vector
 fingerprint_test.go:92 ``xxhash -> 37bc50682fba6686``).
 
 The algorithm is Yann Collet's public XXH64 specification
-(https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md).
-Two implementations:
-
-- ``xxh64(data, seed)`` — scalar reference, used as the in-repo oracle for
-  the vectorized path (no ``xxhash`` package ships in this environment).
-- ``xxh64_hex_batch(series)`` — numpy-vectorized across a pandas batch:
-  the Python-level loop count is ``max_len/32`` stripes (+ a bounded tail
-  of at most 3+1+3 lane steps), never the row count, so it is Arrow/pandas
-  UDF-friendly at scale.
-
-Digest rendering matches Go ``hash.Hash.Sum`` + hex: 8 big-endian bytes →
-16 lowercase hex chars.
+(https://github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md), as a
+scalar function over one byte string. The fingerprint processor hashes in
+the JVM (Spark's ``xxhash64``, seed-chained to seed 0); this function is
+its test oracle (no ``xxhash`` package is assumed to be installed) and
+gives ``ml.similarity`` the Python value of Spark's ``xxhash64`` of an INT
+(seed 42 over its 4 little-endian bytes).
 """
 
 from __future__ import annotations
-
-import numpy as np
-import pandas as pd
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -77,136 +68,3 @@ def xxh64(data: bytes, seed: int = 0) -> int:
     acc = (acc * _P3) & _M
     acc ^= acc >> 32
     return acc
-
-
-# ---------------------------------------------------------------------------
-# vectorized batch path
-# ---------------------------------------------------------------------------
-
-_U = np.uint64
-_u1, _u2, _u3, _u4, _u5 = _U(_P1), _U(_P2), _U(_P3), _U(_P4), _U(_P5)
-
-
-def _vrotl(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << _U(r)) | (x >> _U(64 - r))
-
-
-def _vround(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
-    return _vrotl(acc + lane * _u2, 31) * _u1
-
-
-def xxh64_batch(values: list[bytes], seed: int = 0,
-                budget_bytes: int = 32 << 20) -> np.ndarray:
-    """XXH64 of each byte string, vectorized across the batch.
-
-    Rows are processed in LENGTH-SORTED chunks sized so the dense matrix
-    stays under ``budget_bytes``: a single long outlier in an Arrow batch
-    must not multiply the padded [rows, ceil32(max_len)] allocation by the
-    batch size (10k rows × one 1 MB value would be a ~10 GB buffer), nor
-    make every short row pay the outlier's stripe count.
-    """
-    nrows = len(values)
-    lens = np.fromiter((len(v) for v in values), dtype=np.int64, count=nrows)
-    if nrows == 0:
-        return np.empty(0, dtype=np.uint64)
-    order = np.argsort(lens, kind="stable")
-    widths = np.maximum(32, (lens[order] + 31) // 32 * 32)
-    out = np.empty(nrows, dtype=np.uint64)
-    start = 0
-    while start < nrows:
-        end = start + 1
-        # rows sorted by length → the chunk's matrix width is its LAST
-        # row's width; grow while the dense allocation fits the budget
-        while end < nrows and (end - start + 1) * widths[end] <= budget_bytes:
-            end += 1
-        idx = order[start:end]
-        out[idx] = _xxh64_dense([values[i] for i in idx], lens[idx], seed)
-        start = end
-    return out
-
-
-def _xxh64_dense(values: list[bytes], lens: np.ndarray,
-                 seed: int = 0) -> np.ndarray:
-    """One zero-padded [rows, ceil32(max_len)] uint8 matrix; the stripe
-    loop runs across ALL rows at once with row masks; lane reads use
-    uint64/uint32 views (the 32-byte tail base is always 8- and 4-aligned,
-    so every full lane is a plain aligned view column)."""
-    nrows = len(values)
-    max_len = int(lens.max())
-    width = max(32, (max_len + 31) // 32 * 32)
-    buf = np.zeros((nrows, width), dtype=np.uint8)
-    for i, v in enumerate(values):
-        if v:
-            buf[i, : len(v)] = np.frombuffer(v, dtype=np.uint8)
-    lanes64 = buf.view(np.uint64)  # [rows, width/8] little-endian
-    lanes32 = buf.view(np.uint32)  # [rows, width/4]
-
-    with np.errstate(over="ignore"):
-        seed_u = _U(seed & _M)
-        nstripes = lens // 32  # full 32-byte stripes per row
-        acc = np.full(nrows, seed_u + _u5, dtype=np.uint64)
-        big = nstripes > 0
-        if big.any():
-            a1 = np.full(nrows, seed_u + _u1 + _u2, dtype=np.uint64)
-            a2 = np.full(nrows, seed_u + _u2, dtype=np.uint64)
-            a3 = np.full(nrows, seed_u, dtype=np.uint64)
-            a4 = np.full(nrows, seed_u - _u1, dtype=np.uint64)
-            for s in range(int(nstripes.max())):
-                m = nstripes > s
-                base = 4 * s
-                a1[m] = _vround(a1[m], lanes64[m, base])
-                a2[m] = _vround(a2[m], lanes64[m, base + 1])
-                a3[m] = _vround(a3[m], lanes64[m, base + 2])
-                a4[m] = _vround(a4[m], lanes64[m, base + 3])
-            merged = (_vrotl(a1, 1) + _vrotl(a2, 7)
-                      + _vrotl(a3, 12) + _vrotl(a4, 18))
-            for a in (a1, a2, a3, a4):
-                merged = (merged ^ _vround(np.zeros_like(a), a)) * _u1 + _u4
-            acc[big] = merged[big]
-        acc += lens.astype(np.uint64)
-
-        # tail: base offset is 32-aligned; up to 3 u64 lanes, 1 u32 lane,
-        # then up to 3 single bytes — each step masked by per-row tail size
-        tail = lens - nstripes * 32
-        base64i = nstripes * 4  # u64 lane index of the tail start
-        rows = np.arange(nrows)
-        for j in range(3):
-            m = tail >= (j + 1) * 8
-            if m.any():
-                lane = lanes64[rows[m], base64i[m] + j]
-                acc[m] = _vrotl(acc[m] ^ _vround(np.zeros_like(lane), lane),
-                                27) * _u1 + _u4
-        n8 = np.minimum(tail // 8, 3)
-        rem = tail - n8 * 8
-        m4 = rem >= 4
-        if m4.any():
-            lane32 = lanes32[rows[m4], base64i[m4] * 2 + n8[m4] * 2].astype(
-                np.uint64)
-            acc[m4] = _vrotl(acc[m4] ^ (lane32 * _u1), 23) * _u2 + _u3
-        byte_base = nstripes * 32 + n8 * 8 + np.where(m4, 4, 0)
-        nbytes = rem - np.where(m4, 4, 0)
-        for t in range(3):
-            m = nbytes > t
-            if m.any():
-                b = buf[rows[m], byte_base[m] + t].astype(np.uint64)
-                acc[m] = _vrotl(acc[m] ^ (b * _u5), 11) * _u1
-
-        acc ^= acc >> _U(33)
-        acc *= _u2
-        acc ^= acc >> _U(29)
-        acc *= _u3
-        acc ^= acc >> _U(32)
-    return acc
-
-
-def xxh64_hex_series(s: pd.Series) -> pd.Series:
-    """UTF-8 XXH64 (seed 0) of each string as 16 lowercase hex chars —
-    byte-identical to Go's cespare/xxhash + hex rendering. Nulls pass
-    through."""
-    mask = s.notna()
-    vals = [v.encode("utf-8") for v in s[mask]]
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    if vals:
-        digests = xxh64_batch(vals)
-        out[mask] = [format(int(d), "016x") for d in digests]
-    return out

@@ -23,6 +23,8 @@ Two defaults are sized for the library rather than taken from Spark:
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import shutil
 import tempfile
@@ -33,11 +35,12 @@ from pyspark.sql import SparkSession
 def ship_package(spark: SparkSession) -> None:
     """Make ``beats_spark`` importable on every executor.
 
-    The Python closures (script, fingerprint's xxhash/base32,
-    decompress_gzip_field, decode_xml, read_log_files, the multimodal ops)
-    reference this package, so python workers must import it — on a real
-    cluster that's ``spark-submit --py-files beats_spark.zip``; here we zip
-    the package and addPyFile, which is the same mechanism."""
+    The Python closures (script, decompress_gzip_field, decode_xml,
+    read_log_files, the multimodal ops) reference this package, so python
+    workers must import it — on a real cluster that's ``spark-submit
+    --py-files beats_spark.zip``; here we zip the package and addPyFile,
+    which is the same mechanism. The session serves the zip from its temp
+    path for the life of this process, which removes it on exit."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     if not os.path.isdir(pkg_dir):
         # already imported from a --py-files zip: spark-submit distributed
@@ -45,7 +48,13 @@ def ship_package(spark: SparkSession) -> None:
         return
     base = os.path.join(tempfile.gettempdir(), f"beats_spark_pyfiles_{os.getpid()}")
     zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "beats_spark")
+    atexit.register(_remove_quietly, zip_path)
     spark.sparkContext.addPyFile(zip_path)
+
+
+def _remove_quietly(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def _default_driver_memory() -> str:

@@ -517,31 +517,60 @@ def test_hyperplane_buckets_equal_reference(edge_emb, coef_hash, planes):
 def test_lsh_topk_equals_reference(spark, edge_emb, tmp_path_factory,
                                    coef_hash, planes, hamming):
     """lsh_topk and lsh_topk_bucketed return the previous lsh_topk's rows,
-    in order, for every query — or abort as it does: a probe that reaches
-    the zero vector divides by a zero norm under ANSI mode."""
-    from pyspark.errors import ArithmeticException
-
-    def outcome(df):
-        try:
-            return df.collect()
-        except ArithmeticException as e:
-            return e.getCondition()
-
+    in order, for every query. The previous form aborted on a zero norm
+    (ANSI division) and kept rows without a score, so its side runs over
+    the corpus without the zero-norm (empty and all-zero) vectors and
+    drops its NULL scores."""
     path = str(tmp_path_factory.mktemp("ann") / "bucketed")
     similarity.write_bucketed(edge_emb, path, num_planes=planes,
                               coef_hash=coef_hash)
+    nonzero = edge_emb.filter(F.coalesce(F.exists(
+        "embedding", lambda x: x != 0), F.lit(True)))
     vecs = {r["vec_id"]: r["embedding"] for r in
             edge_emb.filter(F.col("vec_id").isin(QUERIES)).collect()}
     full = 0
     for qid in QUERIES:
         kw = dict(k=10, num_planes=planes, probe_hamming=hamming,
                   exclude_id=qid, coef_hash=coef_hash)
-        want = outcome(similarity_reference.lsh_topk(edge_emb, vecs[qid], **kw))
-        assert outcome(similarity.lsh_topk(edge_emb, vecs[qid], **kw)) == want
-        assert outcome(similarity.lsh_topk_bucketed(
-            spark, path, vecs[qid], **kw)) == want
-        full += isinstance(want, list) and len(want) == 10
+        want = [r for r in similarity_reference.lsh_topk(
+            nonzero, vecs[qid], **kw).collect() if r["score"] is not None]
+        assert similarity.lsh_topk(edge_emb, vecs[qid], **kw).collect() == want
+        assert similarity.lsh_topk_bucketed(
+            spark, path, vecs[qid], **kw).collect() == want
+        full += len(want) == 10
     assert full >= 3
+
+
+def test_topk_skips_zero_norm_vectors(spark, emb, tmp_path_factory):
+    """A zero corpus vector is never scored and a zero query scores
+    nothing: every top-k entry point returns the rows it returns without
+    the zero vector, and no row for a zero query, instead of aborting on a
+    division by a zero norm."""
+    zero = spark.createDataFrame([(30_000, [0.0] * 64, -1)],
+                                 "vec_id bigint, embedding array<float>, "
+                                 "label int")
+    both = emb.unionByName(zero)
+    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
+    similarity.write_bucketed(both, path, num_planes=6)
+    q = [float(x) for x in
+         emb.filter(F.col("vec_id") == 0).first()["embedding"]]
+    lsh = dict(num_planes=6, probe_hamming=6)  # every bucket, bucket 0 too
+
+    def entry_points(corpus):
+        return {
+            "cosine_topk": lambda v: similarity.cosine_topk(corpus, v),
+            "ivf_topk": lambda v: similarity.ivf_topk(corpus, v),
+            "lsh_topk": lambda v: similarity.lsh_topk(corpus, v, **lsh),
+        }
+
+    with_zero, without = entry_points(both), entry_points(emb)
+    with_zero["lsh_topk_bucketed"] = lambda v: similarity.lsh_topk_bucketed(
+        spark, path, v, **lsh)
+    without["lsh_topk_bucketed"] = without["lsh_topk"]
+    for name, topk in with_zero.items():
+        assert topk([0.0] * 64).collect() == [], name
+        got = topk(q).collect()
+        assert len(got) == 10 and got == without[name](q).collect(), name
 
 
 @pytest.mark.parametrize("coef_hash", ["xx", "poly"])
@@ -576,8 +605,9 @@ def test_lsh_topk_builds_without_a_job(spark, emb, tmp_path_factory):
     similarity.write_bucketed(emb, path, num_planes=6)
     q = [float(x) for x in
          emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    assert _jobs(spark, lambda: similarity.lsh_topk(
-        emb, q, probe_hamming=3, coef_hash="xx")) == 0
+    for coef_hash in ("xx", "poly"):
+        assert _jobs(spark, lambda: similarity.lsh_topk(
+            emb, q, probe_hamming=3, coef_hash=coef_hash)) == 0, coef_hash
     assert _jobs(spark, lambda: similarity.lsh_topk_bucketed(
         spark, path, q, num_planes=6)) == _jobs(
         spark, lambda: spark.read.parquet(path))

@@ -3,7 +3,8 @@
 These pin the Catalyst properties the scale story depends on:
 - predicate pushdown + column pruning reach the parquet scan,
 - enrich compiles to a broadcast hash join (map-side, no shuffle of facts),
-- dissect, in every configuration, keeps the pipeline out of Python,
+- dissect, in every configuration, and fingerprint, for every method and
+  encoding, keep the pipeline out of Python,
 - the condition language compiles into ONE filter (pushable),
 - salted repartition spreads the hot conversation,
 - a scan that would leave task slots idle gets one round-robin exchange,
@@ -98,12 +99,26 @@ def test_jvm_pipeline_has_no_python(spark, tdir):
     ("%{?k}=%{&k}", {}),
 ], ids=["static", "append_ordinal", "trim", "ip", "boolean", "dynamic"])
 def test_dissect_plan_has_no_python(spark, tdir, tokenizer, extra):
-    from beats_spark.processors import build_stage
-
-    st = build_stage("dissect", {
+    _assert_stage_has_no_python(spark, tdir, "dissect", {
         "tokenizer": tokenizer, "field": "text", "target_prefix": "p",
         "ignore_failure": True, **extra,
     })
+
+
+@pytest.mark.parametrize("encoding", ["hex", "base32", "base64"])
+@pytest.mark.parametrize("method", ["md5", "sha1", "sha256", "sha384",
+                                    "sha512", "xxhash"])
+def test_fingerprint_plan_has_no_python(spark, tdir, method, encoding):
+    _assert_stage_has_no_python(spark, tdir, "fingerprint", {
+        "fields": ["conv_id", "turn_idx", "text"], "method": method,
+        "encoding": encoding,
+    })
+
+
+def _assert_stage_has_no_python(spark, tdir, processor, config) -> None:
+    from beats_spark.processors import build_stage
+
+    st = build_stage(processor, config)
     plan = plan_of(st.apply(spark.read.parquet(tdir)))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 

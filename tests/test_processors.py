@@ -252,6 +252,8 @@ def test_fingerprint_zero_fraction_timestamp(spark):
 
 def test_fingerprint_methods_and_encodings(spark):
     import base64 as b64
+
+    from beats_spark.processors.xxh64 import xxh64
     rows = [("x",)]
     for method in ["md5", "sha1", "sha256", "sha384", "sha512"]:
         out = run(spark, rows, "v string",
@@ -264,6 +266,15 @@ def test_fingerprint_methods_and_encodings(spark):
     out = run(spark, rows, "v string",
               [{"fingerprint": {"fields": ["v"], "encoding": "base32"}}]).collect()[0]
     assert out["fingerprint"] == b64.b32encode(raw).decode()
+    raw = xxh64(b"|v|x|").to_bytes(8, "big")
+    for encoding, enc in (("base32", b64.b32encode), ("base64", b64.b64encode)):
+        out = run(spark, rows, "v string",
+                  [{"fingerprint": {"fields": ["v"], "method": "xxhash",
+                                    "encoding": encoding}}]).collect()[0]
+        assert out["fingerprint"] == enc(raw).decode(), encoding
+    with pytest.raises(ValueError, match="unknown method 'xxhash64'"):
+        run(spark, rows, "v string",
+            [{"fingerprint": {"fields": ["v"], "method": "xxhash64"}}])
 
 
 def test_fingerprint_xxhash_go_vectors(spark):
@@ -286,27 +297,34 @@ def test_fingerprint_xxhash_go_vectors(spark):
         assert out["fingerprint"] == fp, method
 
 
-def test_xxh64_scalar_vs_batch_property():
-    """The numpy-vectorized XXH64 agrees with the scalar spec reference on
-    random byte strings across every length class (empty, <4, <8, <32,
-    stripe boundaries, long), for several seeds."""
+def test_fingerprint_xxhash_property(spark):
+    """method=xxhash equals the scalar XXH64 spec function (seed 0 over the
+    serialized UTF-8 bytes) on random Unicode values whose serializations
+    cross the 4-, 8- and 32-byte lane boundaries, up to a few hundred
+    bytes."""
     import random
 
-    import numpy as np
+    from beats_spark.processors.fingerprint import _XXH_SEED0
+    from beats_spark.processors.xxh64 import xxh64
 
-    from beats_spark.processors.xxh64 import xxh64, xxh64_batch
-
-    rng = random.Random(7)
-    lengths = list(range(0, 40)) + [63, 64, 65, 100, 255, 1000, 4097]
-    vals = [bytes(rng.randrange(256) for _ in range(n)) for n in lengths]
-    vals += [bytes(rng.randrange(256) for _ in range(rng.randrange(0, 300)))
-             for _ in range(200)]
-    for seed in (0, 42, 2**63):
-        got = xxh64_batch(vals, seed)
-        want = np.array([xxh64(v, seed) for v in vals], dtype=np.uint64)
-        assert (got == want).all(), seed
+    # the seed-0 chain: Spark hashes the leading long with seed 42 to 0
+    assert xxh64(_XXH_SEED0.to_bytes(8, "little", signed=True), 42) == 0
     # spec test vector: XXH64('', 0)
     assert format(xxh64(b""), "016x") == "ef46db3751d8e999"
+
+    rng = random.Random(7)
+    ranges = [(0x20, 0x7F), (0x80, 0x800), (0x800, 0xD800),
+              (0x10000, 0x110000)]  # 1-, 2-, 3- and 4-byte UTF-8
+    vals = ["".join(chr(rng.randrange(*rng.choice(ranges)))
+                    for _ in range(n))
+            for n in list(range(0, 40)) + [rng.randrange(40, 150)
+                                           for _ in range(60)]]
+    out = run(spark, list(enumerate(vals)), "i int, v string",
+              [{"fingerprint": {"fields": ["v"], "method": "xxhash"}}])
+    got = {r["i"]: r["fingerprint"] for r in out.collect()}
+    want = {i: format(xxh64(f"|v|{v}|".encode(), 0), "016x")
+            for i, v in enumerate(vals)}
+    assert got == want
 
 
 def test_xxh64_matches_jvm_lz4(spark):
@@ -1139,20 +1157,6 @@ def test_grok_bare_groups_do_not_shift_captures(spark):
     assert got["/x"]["port"] == 80
     assert got["/y"]["method"] == "GET"
     assert got["/y"]["host"] is None and got["/y"]["port"] is None
-
-
-def test_xxh64_batch_skewed_lengths_chunked():
-    """A long outlier in a batch must not inflate the dense matrix: the
-    length-sorted chunking path must still match the scalar oracle."""
-    import numpy as np
-
-    from beats_spark.processors.xxh64 import xxh64, xxh64_batch
-
-    vals = [b"x" * n for n in (0, 1, 31, 32, 33, 100)] * 20
-    vals.append(b"y" * 300_000)
-    got = xxh64_batch(vals, budget_bytes=1 << 14)
-    want = np.array([xxh64(v) for v in vals], dtype=np.uint64)
-    assert (got == want).all()
 
 
 def test_multiline_dotted_field_merges_nested(spark):

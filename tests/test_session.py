@@ -81,3 +81,29 @@ def test_get_spark_turns_off_call_site_capture(monkeypatch):
     assert b.conf[key] == "false"
     session.get_spark(extra_conf={key: "true"})
     assert b.conf[key] == "true"
+
+
+def test_ship_package_removes_its_zip_at_exit(tmp_path):
+    """The zip handed to addPyFile exists while the driver process runs and
+    is gone once it exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import os, sys, types\n"
+        "from beats_spark import session\n"
+        "seen = []\n"
+        "sc = types.SimpleNamespace(addPyFile=seen.append)\n"
+        "session.ship_package(types.SimpleNamespace(sparkContext=sc))\n"
+        "assert os.path.isfile(seen[0])\n"
+        "print(seen[0])\n"
+    )
+    env = {**os.environ, "PYTHONPATH": repo, "TMPDIR": str(tmp_path)}
+    out = subprocess.run([sys.executable, "-c", script], env=env,
+                         capture_output=True, text=True, check=True,
+                         timeout=120)
+    zip_path = out.stdout.strip()
+    assert zip_path.startswith(str(tmp_path)) and zip_path.endswith(".zip")
+    assert not os.path.exists(zip_path)
