@@ -29,6 +29,8 @@ import time
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -38,6 +40,19 @@ class Snapshot:
     path: str
     committed_at: float
     run_id: str | None = None
+
+
+def data_files(path: str) -> list[str]:
+    """The parquet files a write left in ``path``: Spark's ``_SUCCESS``
+    marker and its hidden ``.crc`` files are not data."""
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".parquet") and not f.startswith(("_", ".")))
+
+
+def read_files(files: list[str], columns: list[str]) -> pa.Table:
+    """``columns`` of parquet ``files`` on the driver, one file at a time,
+    so no dataset discovery skips a ``_``-prefixed path."""
+    return pa.concat_tables(pq.read_table(f, columns=columns) for f in files)
 
 
 class ParquetCatalog:
@@ -94,10 +109,18 @@ class ParquetCatalog:
 
     # -- write ---------------------------------------------------------------
 
-    def append(self, df: DataFrame, table: str, run_id: str | None = None) -> Snapshot:
+    def append(self, df: DataFrame | pa.Table, table: str,
+               run_id: str | None = None) -> Snapshot:
+        """Write ``df`` as a new snapshot. A ``pyarrow.Table`` (the
+        pipeline's metrics and lineage rows) is written on the driver as
+        one file, without a Spark job."""
         sid = self.new_snapshot_id(table)
         path = os.path.join(self._table_dir(table), "data", sid)
-        df.write.mode("errorifexists").parquet(path)
+        if isinstance(df, pa.Table):
+            os.makedirs(path)
+            pq.write_table(df, os.path.join(path, "part-00000.parquet"))
+        else:
+            df.write.mode("errorifexists").parquet(path)
         return self._commit(table, sid, path, run_id)
 
     def adopt_directory(self, src_dir: str, table: str,
@@ -132,6 +155,14 @@ class ParquetCatalog:
         if not snaps:
             raise ValueError(f"table {table!r} has no committed snapshots")
         return self.spark.read.parquet(*[s.path for s in snaps])
+
+    def read_arrow(self, table: str, columns: list[str]) -> pa.Table:
+        """``columns`` of every committed snapshot, read on the driver with
+        pyarrow — no Spark job, for small bookkeeping tables."""
+        snaps = self.snapshots(table)
+        if not snaps:
+            raise ValueError(f"table {table!r} has no committed snapshots")
+        return read_files([f for s in snaps for f in data_files(s.path)], columns)
 
     def read_since(self, table: str, after_snapshot_id: str | None) -> tuple[DataFrame | None, list[str]]:
         """Incremental read: snapshots strictly after the given id (None =

@@ -24,6 +24,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import incomplete_run_ids
@@ -344,8 +345,10 @@ class IcebergCatalog:
 
     # -- write ---------------------------------------------------------------
 
-    def append(self, df: DataFrame, table: str,
+    def append(self, df: DataFrame | pa.Table, table: str,
                run_id: str | None = None) -> IcebergSnapshot:
+        if isinstance(df, pa.Table):
+            df = self.spark.createDataFrame(df)
         w = df.writeTo(self._t(table)).using("iceberg")
         if run_id:
             w = w.option("snapshot-property.run_id", run_id)
@@ -429,6 +432,11 @@ class IcebergCatalog:
         else:
             reader = reader.option("snapshot-id", wanted[-1].snapshot_id)
         return reader.load(self._t(table))
+
+    def read_arrow(self, table: str, columns: list[str]) -> pa.Table:
+        """``columns`` of the table as Arrow (the bookkeeping reads of
+        ``Pipeline.run_incremental`` and the streaming runner)."""
+        return self.read(table).select(*columns).toArrow()
 
     def read_since(self, table: str, after_snapshot_id: str | None
                    ) -> tuple[DataFrame | None, list[str]]:

@@ -15,9 +15,27 @@ with one declarative Spark job:
 Fan-out is single-pass: the reference publishes each batch once to one output
 (load-balanced), we write each row once via ``partitionBy(_sink)`` — no
 per-sink re-scan of the transformed frame. Metrics re-aggregate the *written*
-parquet (cheap columnar count) so reported counts are what actually landed,
-not what the plan promised — the analogue of ack-based counters
+parquet (the ``_pid`` column of the landed files, counted with pyarrow on
+the driver) so reported counts are what actually landed, not what the plan
+promised — the analogue of ack-based counters
 (pipeline/monitoring.go:92-104: events.total/filtered/published).
+
+Plan once: like the reference's processors.New (processor.go:72-123),
+the chain is planned once per ``Pipeline`` and key — the input schema,
+the lookup registrations (``register_lookup`` bumps a generation) and the
+session conf (``getAll``; the build reads the time zone and
+``escapedStringLiterals``) — through a recorder (beats_spark/tape.py);
+a later input of the same key replays the recorded frame ops instead of
+re-running the build. A chain whose build looks at its input's data (a
+schema-less ``decode_json_fields`` samples it) is not replayable and is
+built per input. So a lookup or ``table:`` dim is read when the chain is
+planned, once per ``Pipeline`` and key — as the reference's processors
+load their side tables when they are built; re-registering a lookup
+re-plans. The only Spark jobs of a replayed batch are then the staging
+write's (under AQE one per query stage, e.g. the spread's shuffle) plus,
+in ``run_incremental``, the schema read of the new source snapshot. The re-aggregation, the lineage done-set
+and the metrics and lineage commits are pyarrow reads and writes on the
+driver.
 
 Spread: the reference hands batches to load-balanced output workers
 (pipeline/output.go:56,106); here the workers are Spark's task slots. A
@@ -42,17 +60,21 @@ import re
 import shutil
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from beats_spark.catalog import ParquetCatalog
+from beats_spark.catalog import ParquetCatalog, data_files, read_files
 from beats_spark.processors import apply_chain, build_chain
+from beats_spark.processors.enrich import lookup_generation
 from beats_spark.schema import META_PREFIX, PID_COL, SINK_COL
 from beats_spark.selector import compile_selector
+from beats_spark.tape import Tape, real
 
 DEAD_LETTER = "dead_letter"
 METRICS_TABLE = "pipeline_metrics"
@@ -107,13 +129,27 @@ def _idle_slots(df: DataFrame, split_bytes: int, slots: int) -> bool:
     return bool(files)
 
 
-def _commit_frame(spark: SparkSession, rows: list[tuple],
-                  schema: pa.Schema) -> DataFrame:
-    """A handful of commit rows as one partition: the Arrow table reaches the
-    JVM whole, not pickled through ``parallelize``, and commits one file."""
-    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
-                                 schema=schema)
-    return spark.createDataFrame(table).coalesce(1)
+def _commit_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """A handful of commit rows as one Arrow table: the catalog writes it
+    as one file on the driver."""
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                schema=schema)
+
+
+def _landed(staging: str) -> Counter:
+    """Rows per (sink, ``_pid``) in the ``_sink=<x>`` dirs of a staging
+    write, counted from their ``_pid`` column with pyarrow. Spark escapes
+    the dir names (:func:`escape_path_name`); ``unquote`` decodes them."""
+    counts: Counter = Counter()
+    prefix = f"{SINK_COL}="
+    for d in os.listdir(staging):
+        if not d.startswith(prefix):
+            continue
+        sink = unquote(d[len(prefix):])
+        pids = read_files(data_files(os.path.join(staging, d)), [PID_COL])[PID_COL]
+        for v in pc.value_counts(pids).to_pylist():
+            counts[sink, v["values"]] += v["counts"]
+    return counts
 
 
 @dataclass
@@ -166,13 +202,27 @@ class Pipeline:
         self.config = config
         self.catalog = catalog
         self.stages = build_chain(config.processors)
+        self._plan: tuple[tuple, Tape] | None = None   # (key, replayable tape)
 
     # -- pure plan (unit-testable, no IO) -----------------------------------
 
     def transform(self, df: DataFrame) -> DataFrame:
         """processor chain + routing; adds ``_sink`` (never null: unroutable
         rows go to the dead-letter table, mirroring ES dead_letter_index,
-        outputs/elasticsearch/non_indexable_policy.go:31-73)."""
+        outputs/elasticsearch/non_indexable_policy.go:31-73).
+
+        The chain is planned once per key — input schema, lookup
+        registrations, session conf — and replayed on later inputs
+        (module docstring, Plan once)."""
+        key = (df.schema, lookup_generation(), self.spark.conf.getAll)
+        if self._plan is not None and self._plan[0] == key:
+            return self._plan[1].replay(df)
+        tape = Tape()
+        out = self._build(tape.record(df))
+        self._plan = (key, tape) if tape.seal(out) else None
+        return real(out)
+
+    def _build(self, df: DataFrame) -> DataFrame:
         cfg = self.config
         if self._salted:
             n = cfg.repartition or self.spark.sparkContext.defaultParallelism * 2
@@ -261,27 +311,14 @@ class Pipeline:
         shutil.rmtree(staging, ignore_errors=True)
         routed.write.partitionBy(SINK_COL).mode("errorifexists").parquet(staging)
 
-        # read back the `_sink=<x>` directories that landed, with staging as
-        # the partition base: Spark treats the `_`-prefixed staging dir
-        # itself as a hidden path. An all-rows-dropped run lands none (only
-        # _SUCCESS) and skips the read; it still commits metrics + lineage.
-        landed = sorted(os.path.join(staging, d) for d in os.listdir(staging)
-                        if d.startswith(f"{SINK_COL}="))
-        out_rows = []
-        if landed:
-            written = (self.spark.read.schema(routed.schema)
-                       .option("basePath", staging).parquet(*landed))
-            out_rows = (
-                written.groupBy(SINK_COL, PID_COL)
-                .agg(F.count("*").alias("cnt"))
-                .collect()
-            )
+        # count what landed in the `_sink=<x>` directories (an all-rows-
+        # dropped run lands none, only _SUCCESS); it still commits metrics
+        # and lineage
         sink_counts: dict[str, int] = {}
         metrics_rows: list[tuple] = []
-        for r in out_rows:
-            s, p, c = r[SINK_COL], r[PID_COL], r["cnt"]
+        for (s, p), c in sorted(_landed(staging).items()):
             sink_counts[s] = sink_counts.get(s, 0) + c
-            metrics_rows.append((run_id, int(p) if p is not None else -1, s, 0, 0, c))
+            metrics_rows.append((run_id, p, s, 0, 0, c))
         # the staging write has run, so the observed metric is available now
         events_in = (int(df.count()) if obs_consumed
                      else int(obs.get["events_in"]))
@@ -298,8 +335,8 @@ class Pipeline:
         # leftover staging dir (only _SUCCESS marker remains) is removed
         shutil.rmtree(staging, ignore_errors=True)
 
-        cat.append(_commit_frame(self.spark, metrics_rows, METRICS_SCHEMA),
-                   METRICS_TABLE, run_id=run_id)
+        cat.append(_commit_table(metrics_rows, METRICS_SCHEMA), METRICS_TABLE,
+                   run_id=run_id)
 
         # lineage is committed for EVERY run (a direct run(df) gets one row
         # with a NULL snapshot_id): the lineage commit is the run's "completed"
@@ -308,8 +345,8 @@ class Pipeline:
         snaps = source_snapshots or []
         lineage_rows = [(run_id, source_table, s, time.time())
                         for s in snaps or [None]]
-        cat.append(_commit_frame(self.spark, lineage_rows, LINEAGE_SCHEMA),
-                   LINEAGE_TABLE, run_id=run_id)
+        cat.append(_commit_table(lineage_rows, LINEAGE_SCHEMA), LINEAGE_TABLE,
+                   run_id=run_id)
 
         return RunResult(
             run_id=run_id,
@@ -341,12 +378,9 @@ class Pipeline:
             cat.rollback_run(dead)
         done: set[str] = set()
         if cat.exists(LINEAGE_TABLE):
-            done = {
-                r["snapshot_id"]
-                for r in cat.read(LINEAGE_TABLE)
-                .filter(F.col("source_table") == source_table)
-                .select("snapshot_id").distinct().collect()
-            }
+            seen = cat.read_arrow(LINEAGE_TABLE, ["source_table", "snapshot_id"])
+            done = set(seen.filter(pc.equal(seen["source_table"], source_table))
+                       ["snapshot_id"].to_pylist())
         todo = [s for s in cat.snapshots(source_table) if s.snapshot_id not in done]
         if not todo:
             return RunResult(run_id=run_id or "noop", sinks={}, events_in=0,

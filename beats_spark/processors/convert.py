@@ -147,17 +147,16 @@ def timestamp(cfg: dict[str, Any]) -> Stage:
                     # pattern has no y/u token outside quoted literals):
                     # Spark defaults the missing year to 1970; the
                     # reference substitutes the CURRENT year (timestamp.go
-                    # year-0 handling). INTERVAL arithmetic keeps the time
-                    # of day (add_months would truncate to a date).
+                    # year-0 handling), taken from current_date() when the
+                    # query runs, so a kept plan follows the year. INTERVAL
+                    # arithmetic keeps the time of day (add_months would
+                    # truncate to a date).
                     import re as _re
 
                     unquoted = _re.sub(r"'[^']*'", "", lay)
                     if "y" not in unquoted and "u" not in unquoted:
-                        import datetime as _dt
-
-                        cur = _dt.date.today().year
-                        parsed_lay = parsed_lay + F.expr(
-                            f"INTERVAL {cur - 1970} YEARS")
+                        parsed_lay = parsed_lay + F.make_interval(
+                            years=F.year(F.current_date()) - 1970)
                     attempts.append(F.to_utc_timestamp(parsed_lay, tz))
             parsed = F.coalesce(*attempts) if attempts else F.try_to_timestamp(src)
             f.set(target, F.coalesce(parsed, f.get(target)) if ignore_failure else parsed)

@@ -18,10 +18,20 @@ from beats_spark.processors.base import Stage, register
 
 # name → DataFrame provider, bound by the pipeline before building stages
 _LOOKUP_PROVIDERS: dict[str, Callable[[], DataFrame]] = {}
+_generation = 0
 
 
 def register_lookup(name: str, provider: Callable[[], DataFrame]) -> None:
+    """Bind ``name`` to ``provider``. A stage calls the provider when its
+    chain is planned; a ``Pipeline`` re-plans after every registration."""
+    global _generation
     _LOOKUP_PROVIDERS[name] = provider
+    _generation += 1
+
+
+def lookup_generation() -> int:
+    """How many lookups have been registered: part of a plan's cache key."""
+    return _generation
 
 
 def _dim(stage: str, df: DataFrame, cfg: dict[str, Any], key: str):

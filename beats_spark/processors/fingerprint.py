@@ -136,6 +136,10 @@ def fingerprint(cfg: dict[str, Any]) -> Stage:
     method = cfg.get("method", "sha256")
     target = cfg.get("target_field", "fingerprint")
     encoding = cfg.get("encoding", "hex")
+    if method.lower() not in _DIGEST_BYTES:
+        raise ValueError(f"fingerprint: unknown method {method!r}")
+    if encoding.lower() not in ("hex", "base64", "base32"):
+        raise ValueError(f"fingerprint: unknown encoding {encoding!r}")
     ignore_missing = cfg.get("ignore_missing", False)
 
     class Fingerprint(Stage):

@@ -57,14 +57,9 @@ def run_stream(pipe, source: DataFrame, checkpoint: str,
         # the whole lineage table every micro-batch would cost O(batches)
         # per batch over the stream's lifetime
         if seen_runs is None:
-            if cat.exists(LINEAGE_TABLE):
-                seen_runs = {
-                    r["run_id"]
-                    for r in cat.read(LINEAGE_TABLE)
-                    .select("run_id").distinct().collect()
-                }
-            else:
-                seen_runs = set()
+            seen_runs = (set(cat.read_arrow(LINEAGE_TABLE, ["run_id"])["run_id"]
+                             .to_pylist())
+                         if cat.exists(LINEAGE_TABLE) else set())
         if run_id in seen_runs:
             return
         # a PARTIALLY committed earlier attempt (crashed between sink

@@ -276,22 +276,30 @@ def test_staging_leftover_is_cleared_on_retry(spark, transcripts, tmp_path):
 @pytest.mark.parametrize("drop_all", [False, True])
 def test_run_reads_no_hidden_path(spark, transcripts, tmp_path, monkeypatch,
                                   drop_all):
-    """run() reads back the landed ``_sink=<x>`` directories, never the
-    ``_staging_<run>`` dir itself: Spark treats a basename starting with
-    ``.``, or with ``_`` and no ``=``, as hidden and logs "All paths were
-    ignored". A run that dropped every row reads nothing back."""
+    """run() counts what landed from the data files of the landed
+    ``_sink=<x>`` directories, read with pyarrow, and never reads a hidden
+    path: not Spark's ``_SUCCESS`` marker or ``.crc`` files, and not the
+    ``_staging_<run>`` dir through Spark (which treats a basename starting
+    with ``.``, or with ``_`` and no ``=``, as hidden). A run that dropped
+    every row reads nothing back."""
     import os
 
+    import pyarrow.parquet as pq
     from pyspark.sql import DataFrameReader
 
-    read = []
-    real = DataFrameReader.parquet
+    spark_read, arrow_read = [], []
+    real_spark, real_arrow = DataFrameReader.parquet, pq.read_table
 
-    def spy(self, *paths, **k):
-        read.extend(paths)
-        return real(self, *paths, **k)
+    def spark_spy(self, *paths, **k):
+        spark_read.extend(paths)
+        return real_spark(self, *paths, **k)
 
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    def arrow_spy(source, *a, **k):
+        arrow_read.append(source)
+        return real_arrow(source, *a, **k)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spark_spy)
+    monkeypatch.setattr(pq, "read_table", arrow_spy)
     cfg = fixture_config()
     if drop_all:
         cfg = PipelineConfig(
@@ -299,12 +307,45 @@ def test_run_reads_no_hidden_path(spark, transcripts, tmp_path, monkeypatch,
             routes=[{"sink": "s_%{[role]}"}])
     cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     res = Pipeline(spark, cfg, cat).run(transcripts, run_id="hidden")
-    names = [os.path.basename(os.path.normpath(p)) for p in read]
+    names = [os.path.basename(os.path.normpath(p)) for p in spark_read]
     assert [n for n in names if n.startswith(".")
             or (n.startswith("_") and "=" not in n)] == []
-    staged = [p for p in read if "_staging_hidden" in p]
-    assert len(staged) == len(res.sinks)
+    assert [p for p in spark_read if "_staging_hidden" in p] == []
+    staged = [p for p in arrow_read if "_staging_hidden" in p]
+    assert [p for p in staged
+            if os.path.basename(p).startswith(("_", "."))] == []
+    assert ({os.path.basename(os.path.dirname(p)) for p in staged}
+            == {f"_sink={s}" for s in res.sinks})
     assert (res.sinks == {}) == drop_all
+
+
+def test_escaped_sink_names_are_counted_decoded(spark, transcripts, tmp_path):
+    """Spark escapes a sink name in its ``_sink=<x>`` staging dir (``:`` is
+    ``%3A``); the counts of what landed, and the tables adopted, carry the
+    decoded name."""
+    cfg = PipelineConfig(routes=[{"sink": "s:%{[role]}"}])
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    res = Pipeline(spark, cfg, cat).run(transcripts, run_id="escaped")
+    want = {f"s:{r['role']}": r["count"]
+            for r in transcripts.groupBy("role").count().collect()}
+    assert res.sinks == want
+    assert {s: cat.read(s).count() for s in want} == want
+
+
+def test_resume_reads_lineage_written_by_spark(spark, transcripts, tmp_path):
+    """The done-set of run_incremental reads lineage snapshots with pyarrow,
+    whichever writer made them: a snapshot marked done by a Spark-written
+    lineage file is skipped."""
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    done = cat.append(transcripts, "transcripts").snapshot_id
+    cat.append(spark.createDataFrame(
+        [("old", "transcripts", done, 0.0)], COMMIT_DDL[LINEAGE_TABLE]),
+        LINEAGE_TABLE, run_id="old")
+    pipe = Pipeline(spark, fixture_config(), cat)
+    assert pipe.run_incremental("transcripts").skipped
+    fresh = cat.append(transcripts.limit(10), "transcripts").snapshot_id
+    assert pipe.run_incremental("transcripts").snapshot_ids == [fresh]
+    assert pipe.run_incremental("transcripts").skipped
 
 
 def test_rollback_removes_staging_dir(spark, tmp_path):

@@ -277,6 +277,15 @@ def test_fingerprint_methods_and_encodings(spark):
             [{"fingerprint": {"fields": ["v"], "method": "xxhash64"}}])
 
 
+def test_fingerprint_bad_method_or_encoding_fails_at_build():
+    """An unknown method or encoding is a config error when the chain is
+    built, like an unknown processor, not when the stage is applied."""
+    with pytest.raises(ValueError, match="unknown method 'bogus'"):
+        build_chain([{"fingerprint": {"fields": ["v"], "method": "bogus"}}])
+    with pytest.raises(ValueError, match="unknown encoding 'nope'"):
+        build_chain([{"fingerprint": {"fields": ["v"], "encoding": "nope"}}])
+
+
 def test_fingerprint_xxhash_go_vectors(spark):
     """method=xxhash is byte-compatible with Go cespare/xxhash: the
     reference's own vector (fingerprint_test.go:92, fields field1/field2 of
@@ -745,6 +754,19 @@ def test_timestamp_yearless_layout_uses_current_year(spark):
         [{"timestamp": {"field": "raw", "layouts": ["Jan 2 15:04:05"]}}],
     ).collect()[0]
     assert out["ts"].year == dt.date.today().year  # not 1970
+
+
+def test_timestamp_yearless_year_is_not_a_plan_literal(spark):
+    """The year of a year-less layout comes from current_date() when the
+    query runs, not from a literal fixed when the plan was built, so a plan
+    kept across batches follows the year."""
+    import re
+
+    out = run(spark, [("Aug 17 10:00:00",)], "raw string",
+              [{"timestamp": {"field": "raw", "layouts": ["Jan 2 15:04:05"]}}])
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "current_date(" in plan
+    assert not re.search(r"INTERVAL '?\d+'? YEAR", plan, re.IGNORECASE), plan
 
 
 def test_decode_json_add_error_key_polarity(spark):
