@@ -11,7 +11,7 @@ run inside that codegen — no Python in the parse path.
 
 Layout
 ------
-schema.py       transcript + sink schemas (BASELINE.json input_hint)
+schema.py       system column names (_meta_ prefix, _sink, _pid)
 event.py        dotted-path column helpers (MapStr analogue, mapstr.go)
 conditions.py   condition AST -> Column  (libbeat/conditions)
 fmtstr.py       %{[field]} event-format strings -> Column (common/fmtstr)

@@ -14,7 +14,9 @@ Semantics preserved:
   Go regexp.MatchString semantics — conditions/matcher.go:39-84);
 - ``range`` coerces numerics to double and ANDs the bounds
   (range.go:85-139);
-- ``network`` matches IPv4 against CIDRs or named ranges (network.go:45-70).
+- ``network`` matches IPv4 and IPv6 addresses against CIDRs or named
+  ranges (network.go:45-70); the address is parsed once (:func:`ip_hex`)
+  and compared with each pre-parsed network (:func:`cidr_match`).
 """
 
 from __future__ import annotations
@@ -58,91 +60,109 @@ def _ip4_to_long(col: Column) -> Column:
     )
 
 
-def _cidr4_match(col: Column, cidr: str) -> Column:
-    net, bits_s = cidr.split("/")
-    bits = int(bits_s)
-    parts = [int(x) for x in net.split(".")]
-    net_long = (parts[0] << 24) + (parts[1] << 16) + (parts[2] << 8) + parts[3]
-    mask = ((1 << 32) - 1) ^ ((1 << (32 - bits)) - 1) if bits < 32 else (1 << 32) - 1
-    return col.rlike(_IPV4_RE) & (
-        _ip4_to_long(col).bitwiseAND(F.lit(mask)) == F.lit(net_long & mask)
-    )
+def let(value: Column, body) -> Column:
+    """``body(x)`` with ``x`` bound to ``value``: a one-element ``transform``
+    whose lambda variable stands in for ``value``, so the tree holds
+    ``value`` once however often ``body`` refers to it."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def _ip6_words(col: Column) -> Column:
-    """Parse an IPv6 literal into an array<long> of eight 16-bit words, or
-    NULL when the string is not valid IPv6. Pure Catalyst expressions
-    (split / filter / conv) — conditions stay pushdown-friendly JVM code,
-    no UDF. Handles ``::`` zero-compression and the embedded-IPv4 tail
-    (``::ffff:1.2.3.4``), like Go's net.ParseIP (network.go matching)."""
-    s = F.lower(F.trim(col))
-    # embedded dotted-quad tail -> two hex words
-    v4 = F.regexp_extract(s, _IPV4_TAIL_RE, 1)
-    v4l = _ip4_to_long(v4)
-    s = F.when(v4 == "", s).otherwise(
-        F.concat(
-            F.regexp_replace(s, _IPV4_TAIL_RE, ":"),
-            F.lower(F.conv(F.shiftright(v4l, 16).cast("string"), 10, 16)),
-            F.lit(":"),
-            F.lower(F.conv(v4l.bitwiseAND(F.lit(0xFFFF)).cast("string"), 10, 16)),
-        )
-    )
-    # a single leading/trailing ':' (not part of '::') is invalid per
-    # net.ParseIP (':1:2:3:4:5:6:7:8'), but the empty-group filter below
-    # would otherwise silently accept it as 8 words
-    shape_ok = (
-        s.rlike(r"^[0-9a-f:]+$")
-        & ~s.contains(":::")
-        & (F.size(F.split(s, "::")) <= 2)
-        & ~s.rlike(r"^:[^:]")
-        & ~s.rlike(r"[^:]:$")
-    )
-    parts = F.split(s, "::")
-    has_dc = F.size(parts) == 2
-    grp = lambda seg: F.filter(  # noqa: E731
-        F.split(seg, ":"), lambda x: x != ""
-    )
-    left = grp(F.element_at(parts, 1))
-    right = F.when(has_dc, grp(F.element_at(parts, 2))).otherwise(
-        F.array().cast("array<string>")
-    )
-    n = F.size(left) + F.size(right)
-    full = F.when(
-        has_dc & (n <= 7),
-        F.concat(left, F.array_repeat(F.lit("0"), 8 - n), right),
-    ).otherwise(F.when(~has_dc & (n == 8), left))
-    groups_ok = F.forall(full, lambda g: g.rlike("^[0-9a-f]{1,4}$"))
-    words = F.transform(full, lambda g: F.conv(g, 16, 10).cast("long"))
-    return F.when(shape_ok & full.isNotNull() & groups_ok, words)
+def _ip6_hex(s0: Column) -> Column:
+    """Uppercase 32-char hex of a lowercased, trimmed IPv6 literal, or NULL
+    when it is not one: ``::`` zero-compression and an embedded dotted-quad
+    tail (``::ffff:1.2.3.4``), like Go's net.ParseIP."""
+    def tail_as_words(v4: Column) -> Column:
+        # embedded dotted-quad tail -> two hex words
+        return F.when(v4 == "", s0).otherwise(let(_ip4_to_long(v4), lambda n: F.concat(
+            F.regexp_replace(s0, _IPV4_TAIL_RE, ":"),
+            F.lower(F.hex(F.shiftright(n, 16))), F.lit(":"),
+            F.lower(F.hex(n.bitwiseAND(F.lit(0xFFFF)))))))
+
+    def groups(s: Column) -> Column:
+        # a single leading/trailing ':' (not part of '::') is invalid per
+        # net.ParseIP (':1:2:3:4:5:6:7:8'), but the empty-group filter
+        # would otherwise silently accept it as 8 words
+        shape_ok = (s.rlike(r"^[0-9a-f:]+$") & ~s.contains(":::")
+                    & ~s.rlike(r"^:[^:]") & ~s.rlike(r"[^:]:$"))
+        # the non-empty ':'-groups on each side of the '::'
+        halves = F.transform(F.split(s, "::"), lambda h: F.filter(
+            F.split(h, ":"), lambda g: g != ""))
+        return let(halves, lambda h: F.when(shape_ok, let(
+            F.size(F.flatten(h)), lambda n: F.when(
+                (F.size(h) == 2) & (n <= 7),
+                F.concat(F.element_at(h, 1), F.array_repeat(F.lit("0"), 8 - n),
+                         F.element_at(h, 2)),
+            ).when((F.size(h) == 1) & (n == 8), F.element_at(h, 1)))))
+
+    def to_hex(full: Column) -> Column:
+        return F.when(F.forall(full, lambda g: F.length(g) <= 4), F.upper(
+            F.array_join(F.transform(full, lambda g: F.lpad(g, 4, "0")), "")))
+
+    s = let(F.regexp_extract(s0, _IPV4_TAIL_RE, 1), tail_as_words)
+    return let(let(s, groups), to_hex)
 
 
-def _cidr6_match(col: Column, cidr: str) -> Column:
+def ip_hex(col: Column) -> Column:
+    """Uppercase hex of an address's network-order bytes: 8 chars for IPv4,
+    32 for IPv6, NULL when the column (cast to string) is not an address.
+    IPv4 must be a strict dotted quad; IPv6 is parsed by :func:`_ip6_hex`.
+    Each intermediate is bound once (:func:`let`), so the analyzed tree
+    stays small and is the same parse for every caller."""
+    return let(col.cast("string"), lambda ip: F.when(
+        ip.rlike(_IPV4_RE), F.lpad(F.hex(_ip4_to_long(ip)), 8, "0"),
+    ).otherwise(_ip6_hex(F.lower(F.trim(ip)))))
+
+
+def mask_hex(hexcol: Column, plen: int) -> Column:
+    """First ``plen`` bits of a hex-encoded address, as the hex prefix
+    string: whole nibbles verbatim + the next nibble masked. ``plen`` is a
+    plan-time constant, so this folds to a substring + tiny arithmetic."""
+    nib, rem = plen // 4, plen % 4
+    body = F.substring(hexcol, 1, nib) if nib else F.lit("")
+    if rem:
+        step = 16 >> rem
+        nibble = F.conv(F.substring(hexcol, nib + 1, 1), 16, 10).cast("int")
+        body = F.concat(body, F.conv(nibble - nibble % step, 10, 16))
+    return body
+
+
+def cidr_key(cidr: str) -> tuple[int, int, str]:
+    """A CIDR or bare address as (hex length of its family, prefix length,
+    the :func:`mask_hex` of its network address): what an :func:`ip_hex`
+    inside it masks to. Host bits are ignored; raises ``ValueError`` for
+    anything ``ipaddress`` does not parse."""
     import ipaddress
 
-    net = ipaddress.ip_network(cidr, strict=False)
-    packed = net.network_address.packed
-    net_words = [int.from_bytes(packed[i:i + 2], "big") for i in range(0, 16, 2)]
-    bits = net.prefixlen
-    words = _ip6_words(col)
-    cond = words.isNotNull()
-    full_words, rem = divmod(bits, 16)
-    for i in range(full_words):
-        cond = cond & (F.element_at(words, i + 1) == F.lit(net_words[i]))
-    if rem:
-        shift = 16 - rem
-        cond = cond & (
-            F.shiftright(F.element_at(words, full_words + 1), shift)
-            == F.lit(net_words[full_words] >> shift)
-        )
-    return F.coalesce(cond, F.lit(False))
+    net = ipaddress.ip_network(str(cidr).strip(), strict=False)
+    # the network address has its host bits zeroed: the key is its prefix
+    hx = net.network_address.packed.hex().upper()
+    return len(hx), net.prefixlen, hx[:(net.prefixlen + 3) // 4]
 
 
-def _cidr_match(col: Column, cidr: str) -> Column:
-    if "/" not in cidr:
-        cidr = cidr + ("/128" if ":" in cidr else "/32")
-    if ":" in cidr:
-        return _cidr6_match(col, cidr)
-    return _cidr4_match(col, cidr)
+def cidr_match(hexcol: Column, key: tuple[int, int, str]) -> Column:
+    """Whether an :func:`ip_hex` column lies in the :func:`cidr_key`
+    ``key``; FALSE, never NULL, for a NULL address."""
+    width, plen, prefix = key
+    return (hexcol.isNotNull() & (F.length(hexcol) == width)
+            & (mask_hex(hexcol, plen) == prefix))
+
+
+def network_keys(nets: Any) -> list[tuple[int, int, str]]:
+    """The :func:`cidr_key` of each network of a ``network`` argument (one
+    name or CIDR, or a list), the named ranges expanded."""
+    return [cidr_key(c) for n in (nets if isinstance(nets, list) else [nets])
+            for c in NAMED_NETWORKS.get(n, [n])]
+
+
+def in_networks(col: Column, keys: list[tuple[int, int, str]]) -> Column:
+    """Whether the address column lies in any of the networks ``keys``:
+    the address is parsed once."""
+    def any_match(h: Column) -> Column:
+        out = F.lit(False)
+        for k in keys:
+            out = out | cidr_match(h, k)
+        return out
+    return let(ip_hex(col), any_match)
 
 
 def _false_if_null(c: Column) -> Column:
@@ -250,14 +270,6 @@ def compile_condition(df: DataFrame, cfg: dict[str, Any]) -> Column:
         for _fld, col, present, nets in _leaf_fields(df, arg):
             if not present:
                 return F.lit(False)
-            nets = nets if isinstance(nets, list) else [nets]
-            cidrs: list[str] = []
-            for n in nets:
-                cidrs.extend(NAMED_NETWORKS.get(n, [n]))
-            leaf = F.lit(False)
-            ip = col.cast("string")
-            for c in cidrs:
-                leaf = leaf | _cidr_match(ip, c)
-            out = out & _false_if_null(leaf)
+            out = out & in_networks(col, network_keys(nets))
         return out
     raise ValueError(f"unknown condition kind: {kind!r}")

@@ -91,18 +91,6 @@ LINEAGE_SCHEMA = pa.schema([
 _BYTE_UNITS = {"": 0, "b": 0, "k": 10, "kb": 10, "m": 20, "mb": 20,
                "g": 30, "gb": 30, "t": 40, "tb": 40, "p": 50, "pb": 50}
 
-# characters Spark escapes in partition directory names
-# (ExternalCatalogUtils.charToEscape) — adoption must look up the ESCAPED dir
-_ESCAPED_CHARS = (
-    {chr(i) for i in range(0x20)} | {chr(0x7F)} | set('"#%\'*/:=?\\{[]^')
-)
-
-
-def escape_path_name(value: str) -> str:
-    return "".join(
-        f"%{ord(c):02X}" if c in _ESCAPED_CHARS else c for c in value
-    )
-
 
 def _byte_string(value: str) -> int:
     """A Spark byte-size conf (``134217728``, ``128m``, ``128MB``) in bytes."""
@@ -136,20 +124,22 @@ def _commit_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
                                 schema=schema)
 
 
-def _landed(staging: str) -> Counter:
+def _landed(staging: str) -> tuple[Counter, dict[str, str]]:
     """Rows per (sink, ``_pid``) in the ``_sink=<x>`` dirs of a staging
-    write, counted from their ``_pid`` column with pyarrow. Spark escapes
-    the dir names (:func:`escape_path_name`); ``unquote`` decodes them."""
+    write, counted from their ``_pid`` column with pyarrow, and each sink's
+    dir. Spark escapes the dir names; ``unquote`` decodes them."""
     counts: Counter = Counter()
+    dirs: dict[str, str] = {}
     prefix = f"{SINK_COL}="
     for d in os.listdir(staging):
         if not d.startswith(prefix):
             continue
         sink = unquote(d[len(prefix):])
-        pids = read_files(data_files(os.path.join(staging, d)), [PID_COL])[PID_COL]
+        dirs[sink] = os.path.join(staging, d)
+        pids = read_files(data_files(dirs[sink]), [PID_COL])[PID_COL]
         for v in pc.value_counts(pids).to_pylist():
             counts[sink, v["values"]] += v["counts"]
-    return counts
+    return counts, dirs
 
 
 @dataclass
@@ -316,7 +306,8 @@ class Pipeline:
         # and lineage
         sink_counts: dict[str, int] = {}
         metrics_rows: list[tuple] = []
-        for (s, p), c in sorted(_landed(staging).items()):
+        landed, sink_dirs = _landed(staging)
+        for (s, p), c in sorted(landed.items()):
             sink_counts[s] = sink_counts.get(s, 0) + c
             metrics_rows.append((run_id, p, s, 0, 0, c))
         # the staging write has run, so the observed metric is available now
@@ -328,10 +319,7 @@ class Pipeline:
         )
 
         for sink in sorted(sink_counts):
-            cat.adopt_directory(
-                os.path.join(staging, f"{SINK_COL}={escape_path_name(sink)}"),
-                sink, run_id=run_id,
-            )
+            cat.adopt_directory(sink_dirs[sink], sink, run_id=run_id)
         # leftover staging dir (only _SUCCESS marker remains) is removed
         shutil.rmtree(staging, ignore_errors=True)
 

@@ -13,6 +13,8 @@ from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from beats_spark.conditions import (cidr_key, in_networks, ip_hex, let,
+                                   mask_hex, network_keys)
 from beats_spark.event import Fields, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
@@ -99,110 +101,22 @@ def enrich(cfg: dict[str, Any]) -> Stage:
     return Enrich()
 
 
-def _mask_hex_const(hexcol: Column, plen: int) -> Column:
-    """First ``plen`` bits of a hex-encoded address, as the hex prefix
-    string: whole nibbles verbatim + the next nibble masked. ``plen`` is a
-    plan-time constant here (event side: one expression per distinct dim
-    prefix length), so this folds to a substring + tiny arithmetic."""
-    nib, rem = plen // 4, plen % 4
-    body = F.substring(hexcol, 1, nib) if nib else F.lit("")
-    if rem:
-        step = 16 >> rem
-        nibble = F.conv(F.substring(hexcol, nib + 1, 1), 16, 10).cast("int")
-        body = F.concat(body, F.conv(nibble - nibble % step, 10, 16))
-    return body
-
-
 def _prepare_cidr_dim(rows, cidr_field: str, payload_fields: list[str]):
-    """Driver-side dim preparation: parse each CIDR with stdlib ipaddress
-    and emit {(family, prefix_len, masked-hex-key): payload-tuple},
-    first-wins on duplicates (hash-lookup semantics). The key format is
-    EXACTLY what the event side's _mask_hex_const computes from
-    F.hex(_ip_bytes(ip)): uppercase hex prefix, whole nibbles verbatim +
-    the next nibble masked. Invalid CIDR rows are skipped, matching the
-    old Spark-side NULL-key filter; strict=False masks host bits like the
-    Spark-side masking did."""
-    import ipaddress
-
-    prepared: dict[tuple[str, int, str], tuple] = {}
+    """Driver-side dim preparation: each CIDR row as its
+    ``conditions.cidr_key`` (family hex length, prefix length, masked-hex
+    key) → payload tuple, first-wins on duplicates (hash-lookup
+    semantics). Invalid CIDR rows are skipped; host bits are masked."""
+    prepared: dict[tuple[int, int, str], tuple] = {}
     for r in rows:
         c = r[cidr_field]
         if c is None:
             continue
         try:
-            net = ipaddress.ip_network(str(c).strip(), strict=False)
+            key = cidr_key(c)
         except ValueError:
             continue
-        fam = "4" if net.version == 4 else "6"
-        plen = net.prefixlen
-        hx = net.network_address.packed.hex().upper()
-        nib, rem = divmod(plen, 4)
-        key = hx[:nib]
-        if rem:
-            step = 16 >> rem
-            nibble = int(hx[nib], 16)
-            key += format(nibble - nibble % step, "X")
-        prepared.setdefault((fam, plen, key),
-                            tuple(r[f] for f in payload_fields))
+        prepared.setdefault(key, tuple(r[f] for f in payload_fields))
     return prepared
-
-
-def _stage_ip_hex(df: DataFrame, ip: Column, tp: str):
-    """Uppercase full-length hex of an ip string column (8 chars v4 / 32
-    chars v6, NULL when invalid), staged through small temp columns.
-
-    Value-identical to ``F.hex(flowhash._ip_bytes(ip))`` — same
-    ``conditions._ip6_words`` validation (``::`` compression, embedded-v4
-    tail, shape/group checks) — but each intermediate lands in its own
-    temp column, so Catalyst analyzes a handful of ~20-node trees instead
-    of ONE ~800-node tree whose shared subexpressions the Column DSL
-    duplicates multiplicatively (~1.4 s of analysis per apply, measured).
-    v6 groups are already hex, so the staged form also drops _ip_bytes's
-    hex→dec→hex round-trip. Returns (df, hex_col_name, temp_col_names)."""
-    from beats_spark.conditions import _IPV4_RE, _IPV4_TAIL_RE, _ip4_to_long
-
-    c_s, c_left, c_right, c_hex = f"{tp}s", f"{tp}l", f"{tp}r", f"{tp}hex"
-
-    s0 = F.lower(F.trim(ip))
-    v4t = F.regexp_extract(s0, _IPV4_TAIL_RE, 1)
-    v4l = _ip4_to_long(v4t)
-    # embedded dotted-quad tail -> two hex words (same rewrite, same
-    # permissive-tail semantics as _ip6_words)
-    df = df.withColumn(c_s, F.when(v4t == "", s0).otherwise(F.concat(
-        F.regexp_replace(s0, _IPV4_TAIL_RE, ":"),
-        F.lower(F.conv(F.shiftright(v4l, 16).cast("string"), 10, 16)),
-        F.lit(":"),
-        F.lower(F.conv(v4l.bitwiseAND(F.lit(0xFFFF)).cast("string"), 10, 16)),
-    )))
-    s = F.col(c_s)
-    parts = F.split(s, "::")  # tiny tree — inlined, not staged
-    grp = lambda seg: F.filter(F.split(seg, ":"), lambda x: x != "")  # noqa: E731
-    df = df.withColumns({
-        c_left: grp(F.element_at(parts, 1)),
-        c_right: F.when(F.size(parts) == 2, grp(F.element_at(parts, 2)))
-                  .otherwise(F.array().cast("array<string>")),
-    })
-    n = F.size(F.col(c_left)) + F.size(F.col(c_right))
-    # `full` references only staged column refs, so inlining it three times
-    # (null-check / group-check / fold) stays small
-    full = F.when(
-        (F.size(parts) == 2) & (n <= 7),
-        F.concat(F.col(c_left), F.array_repeat(F.lit("0"), 8 - n), F.col(c_right)),
-    ).otherwise(F.when((F.size(parts) == 1) & (n == 8), F.col(c_left)))
-    shape_ok = (
-        s.rlike(r"^[0-9a-f:]+$")
-        & ~s.contains(":::")
-        & (F.size(parts) <= 2)
-        & ~s.rlike(r"^:[^:]")
-        & ~s.rlike(r"[^:]:$")
-    )
-    groups_ok = F.forall(full, lambda g: g.rlike("^[0-9a-f]{1,4}$"))
-    hex6 = F.upper(F.aggregate(
-        full, F.lit(""), lambda acc, g: F.concat(acc, F.lpad(g, 4, "0"))))
-    hex4 = F.lpad(F.hex(_ip4_to_long(ip)), 8, "0")
-    df = df.withColumn(c_hex, F.when(ip.rlike(_IPV4_RE), hex4).otherwise(
-        F.when(shape_ok & full.isNotNull() & groups_ok, hex6)))
-    return df, c_hex, [c_s, c_left, c_right, c_hex]
 
 
 # Catalyst map literals are ArrayBasedMapData — probes are linear scans, so
@@ -262,8 +176,9 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
     contract as the PSL table in registered_domain, and a driver loop
     costs microseconds/row where the previous Spark-side parse paid a
     ~20 s fixed analysis/codegen job on the giant column-level IPv6 tree
-    PER STAGE APPLY (measured r4, 6-row dim). The event ip is hex-encoded
-    ONCE, then for each distinct prefix length the event computes its
+    PER STAGE APPLY (measured r4, 6-row dim). The event ip is parsed
+    ONCE (``conditions.ip_hex``) into one temp column of its hex, then for
+    each distinct prefix length the event computes its
     constant-length masked key and looks up that length's slice, longest
     first; the payload is the first non-null match. Two physical
     strategies, picked by dim size:
@@ -282,10 +197,10 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
     Both are map-side: at 100 TB this is ≤ address-bits broadcast hash
     joins (or pure projection) and ZERO shuffles of the event stream — no
     explode amplification, no groupBy to pick the longest match. IPv4 and
-    IPv6 dims coexist (keys are family-tagged). Duplicate dim rows at the
-    same (family, prefix, key) keep the first, matching hash-lookup
-    first-wins. Rows a ``when`` skips probe a NULL ip and keep their old
-    target."""
+    IPv6 dims coexist (keys are tagged with the family's hex length).
+    Duplicate dim rows at the same (family, prefix, key) keep the first,
+    matching hash-lookup first-wins. Rows a ``when`` skips probe a NULL ip
+    and keep their old target."""
     on = cfg["on"]
     cidr_col = cfg.get("cidr", "cidr")
     target = cfg.get("target", cfg.get("lookup") or "enrich_cidr")
@@ -320,19 +235,25 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
             payload_t = T.StructType([
                 T.StructField(d, dim.schema[s].dataType) for s, d in pairs])
 
-            ip = get_path(df, on).cast("string")
+            ip = get_path(df, on)
             if cond is not None:
                 ip = F.when(cond, ip)
             existing = {c.lower() for c in df.columns}
-            names = ["hex", "s", "l", "r"] + [
+            names = ["hex"] + [
                 f"{kp}{x}" for x in range(len(lengths)) for kp in ("k", "p")]
             tp, i = "__cidr_", 0
             while any(f"{tp}{x}".lower() in existing for x in names):
                 i += 1
                 tp = f"__cidr{i}_"
-            df, hex_col, temp_cols = _stage_ip_hex(df, ip, tp)
-            ev_hex = F.col(hex_col)
-            ev_fam = F.when(F.length(ev_hex) == 8, "4").otherwise("6")
+            # the address is parsed once, into one temp column
+            df = df.withColumn(f"{tp}hex", ip_hex(ip))
+            ev_hex = F.col(f"{tp}hex")
+
+            def ev_key(width: int, plen: int) -> Column:
+                # NULL for another family and for a NULL hex: a /0 row's
+                # masked key is the constant '', so an unguarded catch-all
+                # would "enrich" NULL/unparseable ips
+                return F.when(F.length(ev_hex) == width, mask_hex(ev_hex, plen))
 
             inline_maps = (len(prepared) <= _INLINE_MAX_ENTRIES
                            and _json_literal_slices(prepared, lengths, pairs))
@@ -341,16 +262,11 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
             if inline_maps:
                 map_t = T.MapType(T.StringType(), payload_t)
                 for (f_, l_), js in zip(lengths, inline_maps):
-                    # same NULL-hex guard as the join path: a /0 row's
-                    # masked key is the constant '', so an unguarded
-                    # catch-all would "enrich" NULL/unparseable ips
-                    ev_key = F.when((ev_fam == f_) & ev_hex.isNotNull(),
-                                    _mask_hex_const(ev_hex, l_))
-                    hits.append(
-                        F.try_element_at(F.from_json(F.lit(js), map_t), ev_key))
+                    hits.append(F.try_element_at(
+                        F.from_json(F.lit(js), map_t), ev_key(f_, l_)))
                 payload = F.coalesce(*hits) if hits else F.lit(None)
                 return (Fields(df).set(target, payload).apply(where=cond)
-                        .drop(*temp_cols))
+                        .drop(f"{tp}hex"))
 
             for idx, (f_, l_) in enumerate(lengths):
                 slice_schema = T.StructType([
@@ -359,18 +275,12 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
                 slice_ = spark.createDataFrame(
                     [(k, p) for (f2, p2, k), p in prepared.items()
                      if f2 == f_ and p2 == l_], slice_schema)
-                # the NULL-hex guard matters for /0 dim rows: their masked
-                # key is the constant '' (independent of the hex column),
-                # so without it a catch-all ::/0 or 0.0.0.0/0 row would
-                # "enrich" rows whose ip is NULL or unparseable
-                ev_key = F.when((ev_fam == f_) & ev_hex.isNotNull(),
-                                _mask_hex_const(ev_hex, l_))
                 df = df.join(F.broadcast(slice_),
-                             ev_key == F.col(f"{tp}k{idx}"), "left")
+                             ev_key(f_, l_) == F.col(f"{tp}k{idx}"), "left")
                 hits.append(F.col(f"{tp}p{idx}"))
             payload = F.coalesce(*hits) if hits else F.lit(None)
             out = Fields(df).set(target, payload).apply(where=cond)
-            return out.drop(*temp_cols,
+            return out.drop(f"{tp}hex",
                             *[f"{tp}k{i}" for i in range(len(lengths))],
                             *[f"{tp}p{i}" for i in range(len(lengths))])
 
@@ -380,33 +290,25 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
 @register("add_network_direction")
 def add_network_direction(cfg: dict[str, Any]) -> Stage:
     """Classify src/dst IPs vs internal_networks → direction
-    (actions/add_network_direction.go:34-53)."""
-    from beats_spark.conditions import NAMED_NETWORKS, _cidr_match
-
+    (actions/add_network_direction.go:34-53): each address is parsed once
+    and matched against the networks parsed when the stage is built."""
     src_f = cfg.get("source", "source.ip")
     dst_f = cfg.get("destination", "destination.ip")
     target = cfg.get("target", "network.direction")
-    networks = cfg.get("internal_networks", ["private"])
-
-    def is_internal(col: Column) -> Column:
-        out = F.lit(False)
-        for n in networks:
-            for cidr in NAMED_NETWORKS.get(n, [n]):
-                out = out | _cidr_match(col.cast("string"), cidr)
-        return F.coalesce(out, F.lit(False))
+    try:
+        keys = network_keys(cfg.get("internal_networks", ["private"]))
+    except ValueError as e:
+        raise ValueError(
+            f"add_network_direction: bad internal_networks: {e}") from None
 
     class NetDir(Stage):
         def updates(self, f: Fields) -> None:
             if not (f.has(src_f) and f.has(dst_f)):
                 return
-            s_in = is_internal(f.get(src_f))
-            d_in = is_internal(f.get(dst_f))
-            direction = (
-                F.when(s_in & d_in, "internal")
-                .when(s_in & ~d_in, "outbound")
-                .when(~s_in & d_in, "inbound")
-                .otherwise("external")
-            )
-            f.set(target, direction)
+            s_in = in_networks(f.get(src_f), keys)
+            d_in = in_networks(f.get(dst_f), keys)
+            f.set(target, let(s_in, lambda s: let(d_in, lambda d: (
+                F.when(s & d, "internal").when(s, "outbound")
+                .when(d, "inbound").otherwise("external")))))
 
     return NetDir()

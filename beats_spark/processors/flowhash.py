@@ -18,6 +18,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from beats_spark.conditions import ip_hex
 from beats_spark.event import Fields, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
@@ -50,24 +51,6 @@ def _gate(n: Column, hi: int) -> Column:
     than inside _u16be/_u8, where the guard would triplicate the large
     sorted-endpoint CASE subtrees and blow up codegen."""
     return F.when((n >= 0) & (n <= hi), n)
-
-
-def _ip_bytes(ip: Column) -> Column:
-    """network-byte-order address bytes: 4 for IPv4 (getRawIP's To4
-    normalization), 16 for IPv6. Invalid addresses (octets > 255,
-    non-IP strings) yield NULL → NULL community id, matching net.ParseIP
-    failure → buildFlow nil."""
-    from beats_spark.conditions import _IPV4_RE, _ip4_to_long, _ip6_words
-
-    v4 = F.unhex(F.lpad(F.hex(_ip4_to_long(ip)), 8, "0"))
-    words = _ip6_words(ip)
-    v6 = F.unhex(
-        F.aggregate(
-            words, F.lit(""),
-            lambda acc, w: F.concat(acc, F.lpad(F.hex(w.cast("int")), 4, "0")),
-        )
-    )
-    return F.when(ip.rlike(_IPV4_RE), v4).otherwise(v6)
 
 
 def _equiv_chain(t: Column, table: dict[int, int]) -> Column:
@@ -131,7 +114,7 @@ def community_id(cfg: dict[str, Any]) -> Stage:
                 is_icmp4 | is_icmp6, F.coalesce(equiv, icmp_c)
             ).otherwise(dp)
 
-            # Stage the big subtrees (the IPv6 parse inside _ip_bytes and
+            # Stage the big subtrees (the address parses and
             # the icmp-equiv port CASEs) as temp columns: the sort/select
             # below references each of them several times, and inlining
             # them that many times blows up codegen. As attribute refs the
@@ -139,7 +122,7 @@ def community_id(cfg: dict[str, Any]) -> Stage:
             # expensive multi-referenced aliases staged, SPARK-36718).
             # free-name probe (case-insensitive, like event._tmp_name): a
             # user column named __cid_sp must not be overwritten-then-dropped
-            names = ("proto", "sp", "dp", "sb", "db", "oneway")
+            names = ("proto", "sp", "dp", "sh", "dh", "oneway")
             existing = {c.lower() for c in df.columns}
             tp, i = "__cid_", 0
             while any((tp + s).lower() in existing for s in names):
@@ -149,22 +132,21 @@ def community_id(cfg: dict[str, Any]) -> Stage:
                 tp + "proto": proto,
                 tp + "sp": sp,
                 tp + "dp": dp,
-                tp + "sb": _ip_bytes(src_ip),
-                tp + "db": _ip_bytes(dst_ip),
+                tp + "sh": ip_hex(src_ip),
+                tp + "dh": ip_hex(dst_ip),
                 tp + "oneway": one_way,
             })
             proto = F.col(tp + "proto")
             sp, dp = F.col(tp + "sp"), F.col(tp + "dp")
-            sb, db = F.col(tp + "sb"), F.col(tp + "db")
+            sh, dh = F.col(tp + "sh"), F.col(tp + "dh")
             one_way = F.col(tp + "oneway")
 
-            # bytes.Compare via hex strings (lexicographic hex == byte order;
-            # equal lengths within one address family)
-            sh, dh = F.hex(sb), F.hex(db)
+            # bytes.Compare via the hex strings (lexicographic hex == byte
+            # order; equal lengths within one address family)
             sorted_ = (sh < dh) | ((sh == dh) & (sp < dp))
             keep = one_way | sorted_
-            a_ip = F.when(keep, sb).otherwise(db)
-            b_ip = F.when(keep, db).otherwise(sb)
+            a_ip = F.unhex(F.when(keep, sh).otherwise(dh))
+            b_ip = F.unhex(F.when(keep, dh).otherwise(sh))
             a_p = F.when(keep, sp).otherwise(dp)
             b_p = F.when(keep, dp).otherwise(sp)
 

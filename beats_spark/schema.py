@@ -1,8 +1,4 @@
-"""Schemas: the transcript input table and pipeline system columns.
-
-The input shape is mandated by BASELINE.json ``input_hint``:
-``conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
-ts:timestamp``.
+"""Pipeline system column names.
 
 Beats' event model (libbeat/beat/event.go:35-41) has Timestamp / Meta /
 Fields; here the known transcript columns are typed top-level columns, parsed
@@ -12,19 +8,6 @@ payloads), and ``@timestamp`` is the ``ts`` column.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import types as T
-
-TRANSCRIPT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("turn_idx", T.IntegerType(), False),
-        T.StructField("role", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("tool", T.StringType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-    ]
-)
 
 # System / metadata column names. Columns starting with META_PREFIX mirror
 # beat.Event.Meta ("@metadata.*", event.go:113-126): visible to routing,
@@ -36,25 +19,3 @@ SINK_COL = "_sink"          # routing decision (outil.Selector result)
 # written files are what the (run, partition, sink) metrics re-aggregate
 # from, so stripping it would leave metrics unverifiable after the fact.
 PID_COL = "_pid"
-ERROR_COL = "error"         # struct<message:string> on processor failure
-FLAGS_PATH = "log.flags"    # beat.FlagField (libbeat/beat/event.go:29)
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("sink", T.StringType(), True),
-        T.StructField("events_in", T.LongType(), False),
-        T.StructField("events_dropped", T.LongType(), False),
-        T.StructField("events_routed", T.LongType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("source_table", T.StringType(), False),
-        T.StructField("snapshot_id", T.StringType(), False),
-        T.StructField("committed_at", T.TimestampType(), False),
-    ]
-)

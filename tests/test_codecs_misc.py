@@ -131,6 +131,12 @@ def test_add_network_direction(spark):
     assert got[("1.1.1.1", "8.8.4.4")] == "external"
 
 
+@pytest.mark.parametrize("nets", [["privat"], ["10.0.0.0/33"]])
+def test_add_network_direction_rejects_bad_networks_at_build(nets):
+    with pytest.raises(ValueError, match="add_network_direction"):
+        build_chain([{"add_network_direction": {"internal_networks": nets}}])
+
+
 def test_decode_csv_quote_aware(spark):
     df = spark.createDataFrame(
         [('a,"b,c",d',), ('x,"he said ""hi""",z',), ("p,q,r",)], "line string"

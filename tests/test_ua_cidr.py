@@ -319,29 +319,61 @@ def test_cidr_inline_and_join_paths_agree(spark, monkeypatch):
     assert outs[0] == outs[1]
 
 
-def test_stage_ip_hex_parity_with_ip_bytes(spark):
-    """_stage_ip_hex (staged temp-column form) must be value-identical to
-    F.hex(_ip_bytes(ip)) — the oracle-pinned parser — on a torture corpus:
-    compression, embedded v4 tails, shape violations, whitespace, NULL."""
-    from beats_spark.processors.enrich import _stage_ip_hex
-    from beats_spark.processors.flowhash import _ip_bytes
+IP_TORTURE = [
+    "10.1.2.3", "0.0.0.0", "255.255.255.255", "256.1.2.3", "1.2.3",
+    "1.2.3.4.5", "999.1.2.3", "::", "::1", "2001:db8::1",
+    "2001:db8:0:1::ffff", "fe80::1%eth0", "2001:db8::1::2", ":::",
+    ":1:2:3:4:5:6:7", "1:2:3:4:5:6:7:", "1:2:3:4:5:6:7:8",
+    "1:2:3:4:5:6:7:8:9", "::ffff:1.2.3.4", "::ffff:999.1.2.3",
+    "::ffff:1.2.3.999", "0:0:0:0:0:0:0:0", "abcd:ef01::", "ABCD::",
+    " 10.1.2.3 ", "", "not an ip", None, "12345::", "1::2:3:4:5:6:7",
+    "::ffff:300.1.2.3", "1.2.3.04", "01:2::",
+    "2001:0db8:0000:0001:0000:0000:0000:0001",
+]
 
-    cases = [
-        "10.1.2.3", "0.0.0.0", "255.255.255.255", "256.1.2.3", "1.2.3",
-        "1.2.3.4.5", "999.1.2.3", "::", "::1", "2001:db8::1",
-        "2001:db8:0:1::ffff", "fe80::1%eth0", "2001:db8::1::2", ":::",
-        ":1:2:3:4:5:6:7", "1:2:3:4:5:6:7:", "1:2:3:4:5:6:7:8",
-        "1:2:3:4:5:6:7:8:9", "::ffff:1.2.3.4", "::ffff:999.1.2.3",
-        "::ffff:1.2.3.999", "0:0:0:0:0:0:0:0", "abcd:ef01::", "ABCD::",
-        " 10.1.2.3 ", "", "not an ip", None, "12345::", "1::2:3:4:5:6:7",
-        "::ffff:300.1.2.3", "1.2.3.04", "01:2::",
-        "2001:0db8:0000:0001:0000:0000:0000:0001",
+
+def test_stage_ip_hex_parity_with_ip_bytes(spark):
+    """ip_hex must be value-identical to F.hex(_ip_bytes(ip)) — the previous
+    oracle-pinned parser, kept in tests/ip_reference.py — on a torture
+    corpus: compression, embedded v4 tails, shape violations, whitespace,
+    NULL."""
+    from ip_reference import _ip_bytes
+
+    from beats_spark.conditions import ip_hex
+
+    df = spark.createDataFrame([(c,) for c in IP_TORTURE], "ip string")
+    out = df.select("ip", ip_hex(F.col("ip")).alias("new"),
+                    F.hex(_ip_bytes(F.col("ip"))).alias("old"))
+    bad = out.filter(~F.col("new").eqNullSafe(F.col("old"))).collect()
+    assert not bad, bad
+
+
+def test_cidr_match_parity_with_reference(spark):
+    """cidr_match over ip_hex equals the previous per-family matcher, its
+    NULL read as false: the torture corpus plus in- and out-of-range
+    addresses × every named network, /0, /17, /33 and bare hosts."""
+    from ip_reference import _cidr_match
+
+    from beats_spark.conditions import (NAMED_NETWORKS, cidr_key, cidr_match,
+                                        ip_hex)
+
+    # the named networks hold the /128s; "10.1.200.7/17" has host bits
+    cidrs = sorted({c for cs in NAMED_NETWORKS.values() for c in cs} | {
+        "0.0.0.0/0", "::/0", "10.1.200.7/17", "2001:db8:8000::/33",
+        "10.1.2.3", "2001:db8::1"})
+    ips = IP_TORTURE + [
+        "10.1.130.1", "10.1.127.255", "172.31.255.255", "172.32.0.1",
+        "192.168.7.7", "224.0.0.1", "169.254.1.1", "127.0.0.1", "fd12::1",
+        "fc00::1", "ff02::fb", "fe80::1234", "febf::1", "fec0::1",
+        "2001:db8:8000::1", "2001:db8:7fff::1", "::ffff:192.168.1.1",
     ]
-    df = spark.createDataFrame([(c,) for c in cases], "ip string")
-    staged, hx, _ = _stage_ip_hex(df, F.col("ip"), "__t_")
-    staged = staged.withColumn("old", F.hex(_ip_bytes(F.col("ip"))))
-    bad = staged.filter(~F.col(hx).eqNullSafe(F.col("old"))) \
-        .select("ip", hx, "old").collect()
+    df = spark.createDataFrame([(c,) for c in ips], "ip string")
+    bad = []
+    for c in cidrs:  # one query per CIDR: the reference trees are large
+        new = cidr_match(ip_hex(F.col("ip")), cidr_key(c))
+        old = F.coalesce(_cidr_match(F.col("ip"), c), F.lit(False))
+        bad += [(c, r["ip"]) for r in
+                df.filter(~new.eqNullSafe(old)).select("ip").collect()]
     assert not bad, bad
 
 
