@@ -178,14 +178,43 @@ def _leaf_fields(df: DataFrame, mapping: dict[str, Any]):
         yield field, get_path(df, field), has_path(df.schema, field), arg
 
 
+_RANGE_OPS = {"gt": Column.__gt__, "gte": Column.__ge__,
+              "lt": Column.__lt__, "lte": Column.__le__}
+_LEAF_KINDS = ("has_fields", "equals", "contains", "regexp", "range", "network")
+
+
+def check_condition(cfg: Any) -> None:
+    """Raise the ``ValueError`` :func:`compile_condition` would raise for
+    ``cfg`` on any frame: a block that is not a single-key dict, an unknown
+    kind or ``range`` op, a ``network`` that :func:`cidr_key` rejects.
+    Stages call it when they are built."""
+    if not isinstance(cfg, dict) or len(cfg) != 1:
+        raise ValueError(f"condition must be a single-key dict, got: {cfg!r}")
+    (kind, arg), = cfg.items()
+    if kind in ("and", "or"):
+        for sub in arg:
+            check_condition(sub)
+    elif kind == "not":
+        check_condition(arg)
+    elif kind == "range":
+        for bounds in arg.values():
+            for op in bounds:
+                if op not in _RANGE_OPS:
+                    raise ValueError(f"range: unknown op {op!r}")
+    elif kind == "network":
+        for nets in arg.values():
+            network_keys(nets)
+    elif kind not in _LEAF_KINDS:
+        raise ValueError(f"unknown condition kind: {kind!r}")
+
+
 def compile_condition(df: DataFrame, cfg: dict[str, Any]) -> Column:
     """Compile a condition config dict against ``df``'s schema.
 
     Multiple keys inside one ``equals``/``contains``/... block AND together,
     matching the reference's NewCondition building one matcher per field.
     """
-    if not isinstance(cfg, dict) or len(cfg) != 1:
-        raise ValueError(f"condition must be a single-key dict, got: {cfg!r}")
+    check_condition(cfg)
     (kind, arg), = cfg.items()
 
     if kind == "and":
@@ -254,22 +283,11 @@ def compile_condition(df: DataFrame, cfg: dict[str, Any]) -> Column:
             num = col if numeric else col.try_cast("double")
             out = out & col.isNotNull()
             for op, v in bounds.items():
-                lim = F.lit(v if numeric else float(v))
-                if op == "gt":
-                    out = out & (num > lim)
-                elif op == "gte":
-                    out = out & (num >= lim)
-                elif op == "lt":
-                    out = out & (num < lim)
-                elif op == "lte":
-                    out = out & (num <= lim)
-                else:
-                    raise ValueError(f"range: unknown op {op!r}")
+                out = out & _RANGE_OPS[op](num, F.lit(v if numeric else float(v)))
         return out
-    if kind == "network":
-        for _fld, col, present, nets in _leaf_fields(df, arg):
-            if not present:
-                return F.lit(False)
-            out = out & in_networks(col, network_keys(nets))
-        return out
-    raise ValueError(f"unknown condition kind: {kind!r}")
+    # network, the last kind check_condition lets through
+    for _fld, col, present, nets in _leaf_fields(df, arg):
+        if not present:
+            return F.lit(False)
+        out = out & in_networks(col, network_keys(nets))
+    return out

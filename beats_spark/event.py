@@ -9,36 +9,44 @@ and every mutation is a projection the optimizer can see through: set =
 struct rebuild via Column.withField, delete = Column.dropFields. All
 plan-time; nothing per-row.
 
-Every field write goes through one write set, :class:`Fields`::
+Every column a stage touches goes through one write set, :class:`Fields`::
 
     f = Fields(df)
     f.set("b", f.get("a"))       # a later read sees the earlier set
-    f.set("c", f.get("b"))
+    f.drop("a")                  # ... and the earlier delete
     df = f.apply(where=cond)
 
-Its contract is libbeat's sequential ``Put``/``GetValue`` on each event,
-resolved at build time:
+Its contract is libbeat's sequential ``Put``/``GetValue``/``Delete`` on
+each event, resolved at build time:
 
-- sets apply in call order; a set below an earlier whole-value set merges
-  into that value, and a set of an ancestor replaces the earlier sets below
-  it (their values still count for the NULL-parent rule below);
-- ``get``/``has`` see pending sets first — the latest value, a field of a
-  pending ancestor, or the merged struct of pending descendants — and then
-  the frame; a missing path reads as NULL;
+- sets and deletes apply in call order; a set below an earlier whole-value
+  set merges into that value, and a set of an ancestor replaces the earlier
+  sets below it (their values still count for the NULL-parent rule below);
+  a set after a delete re-creates the path;
+- ``get``/``has`` see pending sets and deletes first — the latest value, a
+  field of a pending ancestor, or the merged struct of pending descendants —
+  and then the frame; a missing or deleted path reads as NULL;
 - a NULL parent stays NULL on rows where every value written under it is
   NULL, and a fresh root is NULL where all of its leaves are NULL (Put only
   creates intermediates for events a processor actually wrote);
+- a deleted field leaves the frame, and so does a struct left with no
+  fields (a column cannot hold an empty struct);
 - ``set(p, v, where=w)`` puts only on rows where ``w`` holds, and
   ``apply(where=c)`` keeps every old value on rows where ``c`` is false or
-  NULL.
+  NULL; there a deleted field stays in the frame, NULL on the other rows.
 
-Cost: one ``apply`` is at most one staging projection, one projection that
-writes every touched root, and one drop, whatever the path count or
-overlap. Values placed inside a struct are staged as temp columns, so the
-leaf write and the NULL guards reference an attribute instead of re-inlining
-a large expression (which blows whole-stage codegen). A ``get`` or ``has``
-that reads through a pending whole value, or a ``get`` of such a value with
-sets below it, costs one analysis to learn that value's type.
+Temp columns are part of the write set too: ``f.temps(values)`` stages one
+layer of them on ``f.df`` under names from one allocator
+(:func:`free_name`), and ``apply`` leaves them out.
+
+Cost: one ``apply`` is the caller's ``temps`` layers, at most one staging
+projection, and one ``select`` that writes every touched root and leaves
+out every temp and deleted root, whatever the path count or overlap.
+Values placed inside a struct are staged as temp columns, so the leaf write
+and the NULL guards reference an attribute instead of re-inlining a large
+expression (which blows whole-stage codegen). A ``get`` or ``has`` that
+reads through a pending whole value, or of such a value with sets below it,
+costs one analysis to learn that value's type.
 
 Divergences, because a column has one type for every row: a scalar on the
 path of a nested set is replaced by a struct (Put would fail; this keeps
@@ -100,30 +108,44 @@ def _keep(where: Column, new: Column, old: Column | None) -> Column:
 
 
 def _all_null(values: list[Column]) -> Column:
+    if not values:
+        return F.lit(True)
     cond = values[0].isNull()
     for v in values[1:]:
         cond = cond & v.isNull()
     return cond
 
 
+def free_name(taken: set[str]) -> str:
+    """The first ``__t<n>`` that no name in ``taken`` (lower-case) uses;
+    it is added to ``taken``. Every temp column of a stage is named here."""
+    i = 0
+    while f"__t{i}" in taken:
+        i += 1
+    taken.add(f"__t{i}")
+    return f"__t{i}"
+
+
 class _Put:
     """A whole-value write; later writes below it merge into it. ``shadow``
     holds the values of the writes it replaced: they no longer show, but
     they still created this path's ancestors on the rows they were non-NULL
-    (the NULL-parent rule counts every value written under a parent)."""
+    (the NULL-parent rule counts every value written under a parent). A
+    ``gone`` put is a delete: writes below it build a fresh struct."""
 
-    __slots__ = ("value", "subs", "shadow", "dtype")
+    __slots__ = ("value", "subs", "shadow", "dtype", "gone")
 
-    def __init__(self, value: Column, shadow: list[Column] = ()):
+    def __init__(self, value: Column, shadow: list[Column] = (), gone: bool = False):
         self.value = value
         self.subs: dict = {}
         self.shadow = list(shadow)
-        self.dtype: T.DataType | None = None
+        self.dtype: T.DataType | None = T.NullType() if gone else None
+        self.gone = gone
 
 
 def _leaves(ent) -> list[Column]:
     if isinstance(ent, _Put):
-        return [ent.value, *ent.shadow, *_leaves(ent.subs)]
+        return [*([] if ent.gone else [ent.value]), *ent.shadow, *_leaves(ent.subs)]
     return [v for sub in ent.values() for v in _leaves(sub)]
 
 
@@ -131,82 +153,127 @@ class Fields:
     """A write set over ``df`` with sequential per-event semantics (see the
     module docstring). Pending writes form a tree: a ``dict`` node merges
     its children into the frame's value at that path, a ``_Put`` replaces
-    the value and merges its ``subs`` into the new one."""
+    the value (or deletes it) and merges its ``subs`` into the new one.
+
+    ``df`` is the frame the stage works on: :meth:`temps` adds columns to
+    it, and a frame stage may replace it by a join or a filter of itself.
+    :meth:`apply` leaves out every column named by :meth:`temp`."""
 
     def __init__(self, df: DataFrame):
         self.df = df
         self._roots: dict = {}
+        self._temps: set[str] = set()
+        self._taken = {c.lower() for c in df.columns}
+
+    def temp(self) -> str:
+        """A fresh temp column name (:func:`free_name`)."""
+        name = free_name(self._taken)
+        self._temps.add(name)
+        return name
+
+    def temps(self, values: list[Column]) -> list[Column]:
+        """Stage ``values`` as one layer of temp columns; references to
+        them, in order."""
+        names = [self.temp() for _ in values]
+        if names:
+            self.df = self.df.withColumns(dict(zip(names, values)))
+        return [F.col(_quote(n)) for n in names]
 
     def set(self, path: str, value: Column, where: Column | None = None) -> "Fields":
         if where is not None:
             value = _keep(where, value, self._read(path))
-        *parents, leaf = split_path(path)
-        tree = self._roots
-        for p in parents:
-            ent = tree.setdefault(p, {})
-            tree = ent.subs if isinstance(ent, _Put) else ent
-        old = tree.get(leaf)
-        tree[leaf] = _Put(value, _leaves(old) if old is not None else ())
-        return self
+        return self._put(path, value, gone=False)
+
+    def drop(self, path: str) -> "Fields":
+        """Delete ``path``; a no-op where it is missing."""
+        return self._put(path, F.lit(None), gone=True) if self.has(path) else self
 
     def get(self, path: str) -> Column:
         out = self._read(path)
         return out if out is not None else F.lit(None)
 
     def has(self, path: str) -> bool:
-        ent, _, btype = self._find(split_path(path))
-        return ent is not None or btype is not None
+        return self._read(path) is not None
 
     def apply(self, where: Column | None = None) -> DataFrame:
+        """The frame with every pending write, in one ``select`` (module
+        docstring, Cost): a touched root stays in place, as in
+        ``withColumns``, and new roots come last."""
         df = self.df
-        if not self._roots:
+        if not (self._roots or self._temps):
             return df
-        taken = {c.lower() for c in df.columns} | {r.lower() for r in self._roots}
-        temps: dict[str, Column] = {}
+        staged: dict[str, Column] = {}
         typed: dict[str, _Put] = {}
 
         def stage(v: Column) -> str:
-            name = f"__wp{len(temps)}__"
-            while name.lower() in taken:
-                name = "_" + name
-            temps[name] = v
+            name = self.temp()
+            staged[name] = v
             return name
 
         def prep(ent, path: str, nested: bool):
             # guard every value by `where` against the frame's old value,
-            # and stage the ones that land inside a struct
+            # and stage the ones that land inside a struct; a delete under
+            # `where` NULLs an old value, and removes a path the frame lacks
             if not isinstance(ent, _Put):
                 return {k: prep(s, f"{path}.{k}", True) for k, s in ent.items()}
-            v = ent.value
-            if where is not None:
-                v = _keep(where, v, col_path(path) if has_path(df.schema, path) else None)
+            old = col_path(path) if self._in_frame(path) else None
+            gone = ent.gone and (where is None or old is None)
+            v = ent.value if where is None or gone else _keep(where, ent.value, old)
             if not (nested or ent.subs):
-                return _Put(v)
+                return _Put(v, gone=gone)
             # a root's shadow has no ancestor to create: dropped
-            shadow = [F.when(where, c) if where is not None else c
+            shadow = [F.col(_quote(stage(F.when(where, c) if where is not None else c)))
                       for c in (ent.shadow if nested else [])]
-            name = stage(v)
-            out = _Put(F.col(name), [F.col(stage(c)) for c in shadow])
-            if ent.subs:  # merged into: _build needs its type
-                typed[name] = out
-                out.subs = {k: prep(s, f"{path}.{k}", True) for k, s in ent.subs.items()}
+            if gone:
+                out = _Put(v, shadow, gone=True)
+            else:
+                name = stage(v)
+                out = _Put(F.col(_quote(name)), shadow)
+                if ent.subs:  # merged into: _build needs its type
+                    typed[name] = out
+            out.subs = {k: prep(s, f"{path}.{k}", True) for k, s in ent.subs.items()}
             return out
 
         roots = {r: prep(ent, r, False) for r, ent in self._roots.items()}
-        if temps:
-            df = df.withColumns(temps)
+        if staged:
+            df = df.withColumns(staged)
         for name, put in typed.items():
             put.dtype = df.schema[name].dataType
-        df = df.withColumns({r: self._build(ent, *self._find([r])[1:])[0]
-                             for r, ent in roots.items()})
-        return df.drop(*temps) if temps else df
+        out = {}
+        for r, ent in roots.items():
+            _, base, btype = self._find([r])
+            out[r.lower()] = (r, _value(self._build(ent, base, btype)[0], base))
+        cols = []
+        for c in df.columns:
+            if c.lower() in out:
+                r, v = out.pop(c.lower())
+                cols += [] if v is None else [v.alias(r)]
+            elif c.lower() not in self._temps:
+                cols.append(F.col(_quote(c)))
+        return df.select(*cols, *[v.alias(r) for r, v in out.values() if v is not None])
 
     # -- resolution ---------------------------------------------------------
+
+    def _put(self, path: str, value: Column, gone: bool) -> "Fields":
+        *parents, leaf = split_path(path)
+        tree = self._roots
+        for p in parents:
+            ent = tree.setdefault(p, {})
+            tree = ent.subs if isinstance(ent, _Put) else ent
+        old = tree.get(leaf)
+        tree[leaf] = _Put(value, _leaves(old) if old is not None else (), gone)
+        return self
+
+    def _in_frame(self, path: str) -> bool:
+        """Whether the frame holds ``path`` (a root named like a temp
+        column does not see the temp)."""
+        return (split_path(path)[0].lower() not in self._temps
+                and has_path(self.df.schema, path))
 
     def _read(self, path: str) -> Column | None:
         """``get``, but None where the path is missing."""
         ent, base, btype = self._find(split_path(path))
-        return self._build(ent, base, btype)[0] if ent is not None else base
+        return _value(self._build(ent, base, btype)[0], base) if ent is not None else base
 
     def _dtype(self, put: _Put) -> T.DataType:
         if put.dtype is None:
@@ -216,7 +283,8 @@ class Fields:
     def _find(self, parts: list[str]):
         """(pending entry at the path or None, the value the path holds
         without that entry or None, its type or None)."""
-        tree, btype = self._roots, self.df.schema
+        tree = self._roots
+        btype = self.df.schema if self._in_frame(parts[0]) else None
         base, below = None, []  # nearest pending whole value above, path under it
         ent = None
         for i, name in enumerate(parts):
@@ -236,72 +304,65 @@ class Fields:
             base = base.getField(name)
         return ent, base, btype
 
-    def _build(self, ent, base: Column | None,
-               btype: T.DataType | None) -> tuple[Column, list[Column]]:
-        """Column for a pending entry over ``base``, plus the values written
-        at or below it (for the NULL-parent guard of its ancestors)."""
+    def _build(self, ent, base: Column | None, btype: T.DataType | None):
+        """The value of a pending entry over ``base``, plus the values
+        written at or below it (for the NULL-parent guard of its
+        ancestors). The value is a Column; None where the entry deletes
+        the path or every field of its struct; or, where it only deletes
+        fields below ``base``, their quoted relative paths."""
         put = ent if isinstance(ent, _Put) else None
         if put is not None:
             if not put.subs:
-                return put.value, [put.value, *put.shadow]
+                return (None if put.gone else put.value), _leaves(put)
             base, btype, ent = put.value, self._dtype(put), put.subs
-        fields, leaves = [], []
+        fields, drops, gone, leaves = [], [], set(), []
         for name, sub in ent.items():
             if isinstance(sub, _Put) and not sub.subs:  # needs no base
                 v, sub_leaves = self._build(sub, None, None)
             else:
                 v, sub_leaves = self._build(sub, *_field(base, btype, name))
-            fields.append((name, v))
             leaves += sub_leaves
+            if isinstance(v, list):
+                drops += [f"{_quote(name)}.{p}" for p in v]
+            elif v is not None:
+                fields.append((name, v))
+            elif isinstance(btype, T.StructType) and name in btype.fieldNames():
+                drops.append(_quote(name))
+                gone.add(name)
+        shadow = put.shadow if put is not None else []
         if not isinstance(btype, T.StructType):
+            if not fields:
+                return None, leaves + shadow
             out = F.when(~_all_null(leaves), F.struct(*[v.alias(n) for n, v in fields]))
-        else:
-            # withField on a NULL struct returns NULL: write into an all-NULL
-            # stand-in, then restore NULL where nothing non-NULL was written
-            out = F.coalesce(base, F.struct(*[
-                F.lit(None).cast(f.dataType).alias(f.name) for f in btype.fields]))
-            for name, v in fields:
-                out = out.withField(_quote(name), v)
-            out = F.when(~(base.isNull() & _all_null(leaves)), out)
-            if put is not None:
-                leaves = [put.value, *leaves]
-        return out, leaves + (put.shadow if put is not None else [])
+            return out, leaves + shadow
+        up = [put.value] if put is not None else []
+        if not fields and set(btype.fieldNames()) <= gone:
+            return None, up + leaves + shadow
+        if not (fields or leaves):  # deletes only
+            if put is None:
+                return drops, shadow
+            return (base.dropFields(*drops) if drops else base), up + shadow
+        # withField on a NULL struct returns NULL: write into an all-NULL
+        # stand-in, then restore NULL where nothing non-NULL was written
+        out = F.coalesce(base, F.struct(*[
+            F.lit(None).cast(f.dataType).alias(f.name) for f in btype.fields]))
+        for name, v in fields:
+            out = out.withField(_quote(name), v)
+        if drops:
+            out = out.dropFields(*drops)
+        return F.when(~(base.isNull() & _all_null(leaves)), out), up + leaves + shadow
+
+
+def _value(built, base: Column | None) -> Column | None:
+    """A :meth:`Fields._build` value as a Column over ``base``."""
+    if isinstance(built, list):
+        return base.dropFields(*built) if built else base
+    return built
 
 
 def with_path(df: DataFrame, path: str, value: Column) -> DataFrame:
     """Set/overwrite one (possibly nested) field; creates intermediates."""
     return Fields(df).set(path, value).apply()
-
-
-def drop_path(df: DataFrame, path: str) -> DataFrame:
-    """Delete a field if present (no-op when missing, like Delete with
-    ignore_missing)."""
-    if not has_path(df.schema, path):
-        return df
-    parts = split_path(path)
-    # a struct must never be left EMPTY (Spark refuses with
-    # CANNOT_DROP_ALL_FIELDS): when the immediate parent holds only this
-    # field, drop the parent instead — recursively, the columnar analogue
-    # of the reference's scrub of emptied maps (e.g. dropping
-    # system.syslog.timestamp when it is syslog's last field removes
-    # system.syslog; if syslog was system's last field, system goes too)
-    while len(parts) > 1:
-        parent_t = path_type(df.schema, ".".join(parts[:-1]))
-        if isinstance(parent_t, T.StructType) and len(parent_t.fields) == 1:
-            parts = parts[:-1]
-            continue
-        break
-    if len(parts) == 1:
-        return df.drop(parts[0])
-    root = parts[0]
-    nested = ".".join(_quote(p) for p in parts[1:])
-    return df.withColumn(root, F.col(_quote(root)).dropFields(nested))
-
-
-def rename_path(df: DataFrame, src: str, dst: str) -> DataFrame:
-    """Move a field (actions/rename.go:75 renameField = copy + delete)."""
-    df = with_path(df, dst, get_path(df, src))
-    return drop_path(df, src)
 
 
 def tags_expr(f: Fields, tags: list[str], target: str = "tags") -> Column:

@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from beats_spark.event import (Fields, append_flag, get_path, has_path,
-                               path_type, rename_path, tags_expr, with_path)
+                               path_type, tags_expr, with_path)
 from beats_spark.processors.base import Stage, register
 
 # fields the reference refuses to drop (actions/drop_fields.go:24) mapped to
@@ -98,14 +98,14 @@ def rename(cfg: dict[str, Any]) -> Stage:
     fail_on_error = cfg.get("fail_on_error", True)
 
     class Rename(Stage):
-        def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
+        def updates(self, f: Fields) -> None:
             for p in pairs:
                 src, dst = p["from"], p["to"]
-                if not has_path(df.schema, src):
+                if not f.has(src):
                     if ignore_missing or not fail_on_error:
                         continue
                     raise ValueError(f"rename: missing source field {src!r}")
-                if has_path(df.schema, dst):
+                if f.has(dst):
                     if fail_on_error:
                         raise ValueError(
                             f"rename: target field {dst!r} already exists")
@@ -113,12 +113,10 @@ def rename(cfg: dict[str, Any]) -> Stage:
                     # with fail_on_error=false the event stays UNCHANGED —
                     # not overwritten (actions/rename.go:75-98)
                     continue
-                if cond is None:
-                    df = rename_path(df, src, dst)
-                else:
-                    df = (Fields(df).set(dst, get_path(df, src))
-                          .set(src, F.lit(None)).apply(where=cond))
-            return df
+                # delete before put, so a can become a.b (rename.go:86-90)
+                value = f.get(src)
+                f.drop(src)
+                f.set(dst, value)
 
     return Rename()
 
@@ -153,17 +151,15 @@ def drop_fields(cfg: dict[str, Any]) -> Stage:
     ignore_missing = cfg.get("ignore_missing", True)
 
     class DropFields(Stage):
-        def drops(self, df: DataFrame) -> list[str]:
-            out = []
+        def updates(self, f: Fields) -> None:
             for fld in fields:
                 if fld in PROTECTED_FIELDS:
                     continue
-                if not has_path(df.schema, fld):
+                if not f.has(fld):
                     if not ignore_missing:
                         raise ValueError(f"drop_fields: missing field {fld!r}")
                     continue
-                out.append(fld)
-            return out
+                f.drop(fld)
 
     return DropFields()
 
@@ -176,9 +172,7 @@ def include_fields(cfg: dict[str, Any]) -> Stage:
     fields = list(cfg.get("fields", []))
 
     class IncludeFields(Stage):
-        def drops(self, df: DataFrame) -> list[str]:
-            from pyspark.sql import types as T
-
+        def updates(self, f: Fields) -> None:
             wanted = set(fields) | PROTECTED_FIELDS
 
             def unwanted(dtype: T.StructType, prefix: str) -> list[str]:
@@ -200,7 +194,8 @@ def include_fields(cfg: dict[str, Any]) -> Stage:
                         out += [p] if sub == every else sub
                 return out
 
-            return unwanted(df.schema, "")
+            for p in unwanted(f.df.schema, ""):
+                f.drop(p)
 
     return IncludeFields()
 

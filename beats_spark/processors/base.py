@@ -7,16 +7,17 @@ The reference runs processors serially per event; nil return = drop
 Here a Stage declares itself in one of three shapes so conditions can be
 fused into the SAME pass instead of branching per row:
 
-- *project*: ``updates(f)`` adds its writes to a :class:`~beats_spark.event.Fields`
-  write set (``f.get``/``f.has`` read, ``f.set`` writes, rules see each
-  other's writes in order) and ``drops()`` lists deletions; ``apply`` makes
-  exactly one write, ``f.apply(where=cond)``;
+- *project*: ``updates(f)`` adds its writes and deletes to a
+  :class:`~beats_spark.event.Fields` write set (``f.get``/``f.has`` read,
+  ``f.set`` writes, ``f.drop`` deletes, rules see each other's writes in
+  order); ``apply`` makes exactly one write, ``f.apply(where=cond)``;
 - *filter*: ``keep() -> Column`` — under ``when`` it becomes
   ``~cond | keep`` (drop only matching rows);
 - *frame*: an ``apply(df, cond)`` override (joins, windows, mapInPandas)
-  that does its frame-level work on the whole input — a join probes the
-  key masked by ``F.when(cond, key)`` — and ends in one
-  ``Fields.apply(where=cond)``.
+  that does its frame-level work on a ``Fields``' frame — temp columns
+  from ``f.temps``/``f.temp``, a join that probes the key masked by
+  ``F.when(cond, key)`` — and ends in one ``f.apply(where=cond)``, which
+  leaves the temps out.
 
 ``when`` means the same thing in every shape: rows where the condition is
 false or NULL keep every old value, in one pass over the input. Everything
@@ -25,16 +26,13 @@ stays a single declarative plan: Catalyst sees through all of it.
 
 from __future__ import annotations
 
-import itertools
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.conditions import compile_condition
-from beats_spark.event import Fields, drop_path
-
-_cond_counter = itertools.count()
+from beats_spark.conditions import check_condition, compile_condition
+from beats_spark.event import Fields
 
 
 class Stage:
@@ -47,9 +45,6 @@ class Stage:
 
     def updates(self, f: Fields) -> None:
         pass
-
-    def drops(self, df: DataFrame) -> list[str]:
-        return []
 
     def keep(self, df: DataFrame) -> Column | None:
         return None
@@ -70,16 +65,7 @@ class Stage:
 
         f = Fields(df)
         self.updates(f)
-        drops = self.drops(df)
-        if cond is not None:
-            # per-row "delete" under a condition: null out for matches
-            for path in drops:
-                f.set(path, F.lit(None))
-        df = f.apply(where=cond)
-        if cond is None:
-            for path in drops:
-                df = drop_path(df, path)
-        return df
+        return f.apply(where=cond)
 
 
 @dataclass
@@ -88,16 +74,12 @@ class FnStage(Stage):
 
     name: str = "fn"
     updates_fn: Callable[[DataFrame], dict[str, Column]] | None = None
-    drops_fn: Callable[[DataFrame], list[str]] | None = None
     keep_fn: Callable[[DataFrame], Column] | None = None
 
     def updates(self, f: Fields) -> None:
         # the function reads the input frame; its entries are set in order
         for path, value in (self.updates_fn(f.df) if self.updates_fn else {}).items():
             f.set(path, value)
-
-    def drops(self, df: DataFrame) -> list[str]:
-        return self.drops_fn(df) if self.drops_fn else []
 
     def keep(self, df: DataFrame) -> Column | None:
         return self.keep_fn(df) if self.keep_fn else None
@@ -142,16 +124,18 @@ class IfThenElseStage(Stage):
         return any(st.samples_input for st in self.then_stages + self.else_stages)
 
     def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
-        tag = f"__if_{next(_cond_counter)}"
         c = compile_condition(df, self.cond_cfg)
         if cond is not None:
             c = cond & c
-        df = df.withColumn(tag, F.coalesce(c, F.lit(False)))
+        f = Fields(df)
+        tag, = f.temps([F.coalesce(c, F.lit(False))])
+        df = f.df
         for st in self.then_stages:
-            df = st.apply(df, F.col(tag))
+            df = st.apply(df, tag)
         for st in self.else_stages:
-            df = st.apply(df, ~F.col(tag))
-        return df.drop(tag)
+            df = st.apply(df, ~tag)
+        f.df = df
+        return f.apply()
 
 
 # -- registry --------------------------------------------------------------
@@ -174,6 +158,7 @@ def build_stage(name: str, cfg: dict[str, Any]) -> Stage:
     stage = _REGISTRY[name](cfg)
     stage.name = name
     if when_cfg is not None:
+        check_condition(when_cfg)
         stage = WhenStage(inner=stage, when_cfg=when_cfg)
         stage.name = f"when({name})"
     return stage
@@ -184,6 +169,7 @@ def build_chain(processors_cfg: list[dict[str, Any]]) -> list[Stage]:
     stages: list[Stage] = []
     for block in processors_cfg:
         if "if" in block:
+            check_condition(block["if"])
             then_cfg = block.get("then", [])
             else_cfg = block.get("else", [])
             stages.append(

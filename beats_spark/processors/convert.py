@@ -36,15 +36,13 @@ def convert(cfg: dict[str, Any]) -> Stage:
 
     class Convert(Stage):
         def updates(self, f: Fields) -> None:
-            # ``mode: rename`` deletes each source after its write; the
-            # deletes run after the write set, so a moved source reads as
-            # missing and a later write to it cancels its delete
-            self.moved = []
+            # ``mode: rename`` deletes each source after its write: a later
+            # rule then reads it as missing, and a later write re-creates it
             for r in rules:
                 src = r["from"]
                 dst = r.get("to", src)
                 typ = r.get("type", "string")
-                if src in self.moved or not f.has(src):
+                if not f.has(src):
                     if ignore_missing:
                         continue
                     raise ValueError(f"convert: missing field {src!r}")
@@ -57,13 +55,8 @@ def convert(cfg: dict[str, Any]) -> Stage:
                 else:
                     raise ValueError(f"convert: unknown type {typ!r}")
                 f.set(dst, new)
-                if dst in self.moved:
-                    self.moved.remove(dst)
                 if mode == "rename" and dst != src:
-                    self.moved.append(src)
-
-        def drops(self, df: DataFrame) -> list[str]:
-            return self.moved
+                    f.drop(src)
 
     return Convert()
 
@@ -205,10 +198,10 @@ def decode_json_fields(cfg: dict[str, Any]) -> Stage:
                     # input, never a NULL struct, so failure is detected
                     # with a corrupt-record probe (readjson's addError path)
                     probe = F.from_json(
-                        col, "struct<__corrupt: string>",
-                        {"columnNameOfCorruptRecord": "__corrupt"},
+                        col, "struct<_corrupt_record: string>",
+                        {"columnNameOfCorruptRecord": "_corrupt_record"},
                     )
-                    bad = col.isNotNull() & probe["__corrupt"].isNotNull()
+                    bad = col.isNotNull() & probe["_corrupt_record"].isNotNull()
                     set_error_message(f, bad if cond is None else cond & bad,
                                       "Error decoding JSON field")
                 # a decoded struct cannot also hold the string of rows the

@@ -29,7 +29,7 @@ from typing import Any, Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from beats_spark.event import Fields, get_path
+from beats_spark.event import Fields, _quote, get_path
 from beats_spark.processors.base import Stage, register
 
 # Common-coverage built-in subset of the PSL (production: load the full
@@ -73,7 +73,7 @@ def _suffix_frame(spark: SparkSession, name: str) -> DataFrame:
                          f"(registered: {sorted(_registry)})")
     return spark.createDataFrame(
         _registry[name],
-        "__sfx string, __wild boolean, __exc boolean",
+        "sfx string, wild boolean, exc boolean",
     )
 
 
@@ -100,9 +100,9 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
             dom_expr = F.lower(get_path(df, fld))
             if cond is not None:  # skipped rows neither match nor probe
                 dom_expr = F.when(cond, dom_expr)
-            doms = df.select(dom_expr.alias("__dom")).filter(
-                F.col("__dom").isNotNull()).distinct()
-            labels = F.split(F.col("__dom"), r"\.")
+            doms = df.select(dom_expr.alias("dom")).filter(
+                F.col("dom").isNotNull()).distinct()
+            labels = F.split(F.col("dom"), r"\.")
             n = F.size(labels)
             # candidate suffixes with their label counts
             cands = F.transform(
@@ -112,18 +112,18 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
                     k.alias("k"),
                 ),
             )
-            ex = doms.select("__dom", F.explode(cands).alias("__cand"))
+            ex = doms.select("dom", F.explode(cands).alias("cand"))
             j = ex.join(
                 sfx,
                 # exact rule: candidate == suffix; wildcard *.X: the
                 # candidate's PARENT labels equal X (i.e. candidate
                 # endswith ".X" with exactly one extra label) — encoded as
                 # candidate minus first label == suffix
-                (F.col("__cand.c") == F.col("__sfx"))
-                | (F.col("__wild")
-                   & (F.expr("substring_index(__cand.c, '.', -(__cand.k - 1))")
-                      == F.col("__sfx"))
-                   & (F.col("__cand.k") > 1)),
+                (F.col("cand.c") == F.col("sfx"))
+                | (F.col("wild")
+                   & (F.expr("substring_index(cand.c, '.', -(cand.k - 1))")
+                      == F.col("sfx"))
+                   & (F.col("cand.k") > 1)),
                 "left",
             )
             # effective public-suffix label count per rule match:
@@ -131,35 +131,35 @@ def registered_domain(cfg: dict[str, Any]) -> Stage:
             # suffix); exception !W.X -> the suffix is X, i.e. k - 1.
             # No rule matched at all -> the PSL's implicit '*' default rule:
             # the TLD itself is the public suffix (psk = 1).
-            eff_k = F.when(F.col("__exc"), F.col("__cand.k") - 1).otherwise(
-                F.col("__cand.k"))
+            eff_k = F.when(F.col("exc"), F.col("cand.k") - 1).otherwise(
+                F.col("cand.k"))
+            f = Fields(df)
+            dom, psk = f.temp(), f.temp()
             best = (
-                j.groupBy("__dom")
-                .agg(F.max(F.when(F.col("__sfx").isNotNull(), F.struct(
+                j.groupBy("dom")
+                .agg(F.max(F.when(F.col("sfx").isNotNull(), F.struct(
                     # PSL precedence: "the prevailing rule is the exception
                     # rule if any, else the longest match" — so exception
                     # flag orders BEFORE label count
-                    F.col("__exc").cast("int").alias("exc"),
+                    F.col("exc").cast("int").alias("exc"),
                     eff_k.alias("k"),
-                ))).alias("__m"))
+                ))).alias("m"))
                 .select(
-                    "__dom",
-                    F.coalesce(F.col("__m.k"), F.lit(1)).alias("__psk"),
+                    F.col("dom").alias(dom),
+                    F.coalesce(F.col("m.k"), F.lit(1)).alias(psk),
                 )
             )
             # NOT broadcast: distinct-domain cardinality scales with the
             # data; AQE picks the strategy (and can still broadcast a
             # small best side at runtime)
-            out = df.join(best, dom_expr == F.col("__dom"), "left")
-            labels2 = F.split(F.lower(get_path(out, fld)), r"\.")
+            f.df = df.join(best, dom_expr == F.col(_quote(dom)), "left")
+            labels2 = F.split(F.lower(get_path(df, fld)), r"\.")
             n2 = F.size(labels2)
+            k = F.col(_quote(psk))
             reg = F.when(
-                F.col("__psk").isNotNull() & (n2 > F.col("__psk")),
-                F.array_join(
-                    F.slice(labels2, n2 - F.col("__psk"), F.col("__psk") + 1),
-                    "."),
+                k.isNotNull() & (n2 > k),
+                F.array_join(F.slice(labels2, n2 - k, k + 1), "."),
             )
-            return (Fields(out).set(target, reg).apply(where=cond)
-                    .drop("__dom", "__psk"))
+            return f.set(target, reg).apply(where=cond)
 
     return RegisteredDomain()

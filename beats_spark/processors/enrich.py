@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from beats_spark.conditions import (cidr_key, in_networks, ip_hex, let,
                                    mask_hex, network_keys)
-from beats_spark.event import Fields, get_path, has_path
+from beats_spark.event import Fields, _quote, get_path, has_path
 from beats_spark.processors.base import Stage, register
 
 # name → DataFrame provider, bound by the pipeline before building stages
@@ -75,28 +75,24 @@ def enrich(cfg: dict[str, Any]) -> Stage:
     class Enrich(Stage):
         def apply(self, df: DataFrame, cond: Column | None = None) -> DataFrame:
             dim, pairs = _dim("enrich", df, cfg, key_col)
-            # dim columns ride the join under a reserved prefix so a dim
-            # column sharing a name with an event column can neither
-            # become an ambiguous reference nor get the event's own
-            # column dropped afterwards
-            sel = [F.col(src).alias(f"__enr_{dst}") for src, dst in pairs]
-            out_names = [dst for _, dst in pairs]
-            dim = dim.select(F.col(key_col).alias("__enrich_key"), *sel)
+            # the dim rides the join under temp names, so a dim column
+            # sharing a name with an event column can neither become an
+            # ambiguous reference nor replace the event's own column
+            f = Fields(df)
+            k, *vals = (f.temp() for _ in range(len(pairs) + 1))
+            dim = dim.select(F.col(key_col).alias(k), *[
+                F.col(src).alias(v) for (src, _), v in zip(pairs, vals)])
             key = get_path(df, on)
             if cond is not None:
                 key = F.when(cond, key)
-            joined = df.join(
-                F.broadcast(dim), key == F.col("__enrich_key"), "left",
-            ).drop("__enrich_key")
+            f.df = f.df.join(F.broadcast(dim), key == F.col(_quote(k)), "left")
             payload_cols: list[Column] = []
-            for c in out_names:
-                v = F.col(f"__enr_{c}")
+            for (_, c), name in zip(pairs, vals):
+                v = F.col(_quote(name))
                 if c in defaults:
                     v = F.coalesce(v, F.lit(defaults[c]))
                 payload_cols.append(v.alias(c))
-            payload = F.struct(*payload_cols)
-            joined = Fields(joined).set(target, payload).apply(where=cond)
-            return joined.drop(*[f"__enr_{c}" for c in out_names])
+            return f.set(target, F.struct(*payload_cols)).apply(where=cond)
 
     return Enrich()
 
@@ -238,16 +234,9 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
             ip = get_path(df, on)
             if cond is not None:
                 ip = F.when(cond, ip)
-            existing = {c.lower() for c in df.columns}
-            names = ["hex"] + [
-                f"{kp}{x}" for x in range(len(lengths)) for kp in ("k", "p")]
-            tp, i = "__cidr_", 0
-            while any(f"{tp}{x}".lower() in existing for x in names):
-                i += 1
-                tp = f"__cidr{i}_"
             # the address is parsed once, into one temp column
-            df = df.withColumn(f"{tp}hex", ip_hex(ip))
-            ev_hex = F.col(f"{tp}hex")
+            f = Fields(df)
+            ev_hex, = f.temps([ip_hex(ip)])
 
             def ev_key(width: int, plen: int) -> Column:
                 # NULL for another family and for a NULL hex: a /0 row's
@@ -264,25 +253,19 @@ def enrich_cidr(cfg: dict[str, Any]) -> Stage:
                 for (f_, l_), js in zip(lengths, inline_maps):
                     hits.append(F.try_element_at(
                         F.from_json(F.lit(js), map_t), ev_key(f_, l_)))
-                payload = F.coalesce(*hits) if hits else F.lit(None)
-                return (Fields(df).set(target, payload).apply(where=cond)
-                        .drop(f"{tp}hex"))
-
-            for idx, (f_, l_) in enumerate(lengths):
-                slice_schema = T.StructType([
-                    T.StructField(f"{tp}k{idx}", T.StringType(), False),
-                    T.StructField(f"{tp}p{idx}", payload_t)])
-                slice_ = spark.createDataFrame(
-                    [(k, p) for (f2, p2, k), p in prepared.items()
-                     if f2 == f_ and p2 == l_], slice_schema)
-                df = df.join(F.broadcast(slice_),
-                             ev_key(f_, l_) == F.col(f"{tp}k{idx}"), "left")
-                hits.append(F.col(f"{tp}p{idx}"))
+            else:
+                for f_, l_ in lengths:
+                    k, p = f.temp(), f.temp()
+                    slice_ = spark.createDataFrame(
+                        [(key, pay) for (f2, p2, key), pay in prepared.items()
+                         if f2 == f_ and p2 == l_],
+                        T.StructType([T.StructField(k, T.StringType(), False),
+                                      T.StructField(p, payload_t)]))
+                    f.df = f.df.join(F.broadcast(slice_),
+                                     ev_key(f_, l_) == F.col(_quote(k)), "left")
+                    hits.append(F.col(_quote(p)))
             payload = F.coalesce(*hits) if hits else F.lit(None)
-            out = Fields(df).set(target, payload).apply(where=cond)
-            return out.drop(f"{tp}hex",
-                            *[f"{tp}k{i}" for i in range(len(lengths))],
-                            *[f"{tp}p{i}" for i in range(len(lengths))])
+            return f.set(target, payload).apply(where=cond)
 
     return EnrichCIDR()
 

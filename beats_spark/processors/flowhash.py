@@ -120,26 +120,9 @@ def community_id(cfg: dict[str, Any]) -> Stage:
             # them that many times blows up codegen. As attribute refs the
             # downstream expressions stay tiny (CollapseProject keeps
             # expensive multi-referenced aliases staged, SPARK-36718).
-            # free-name probe (case-insensitive, like event._tmp_name): a
-            # user column named __cid_sp must not be overwritten-then-dropped
-            names = ("proto", "sp", "dp", "sh", "dh", "oneway")
-            existing = {c.lower() for c in df.columns}
-            tp, i = "__cid_", 0
-            while any((tp + s).lower() in existing for s in names):
-                i += 1
-                tp = f"__cid{i}_"
-            df = df.withColumns({
-                tp + "proto": proto,
-                tp + "sp": sp,
-                tp + "dp": dp,
-                tp + "sh": ip_hex(src_ip),
-                tp + "dh": ip_hex(dst_ip),
-                tp + "oneway": one_way,
-            })
-            proto = F.col(tp + "proto")
-            sp, dp = F.col(tp + "sp"), F.col(tp + "dp")
-            sh, dh = F.col(tp + "sh"), F.col(tp + "dh")
-            one_way = F.col(tp + "oneway")
+            f = Fields(df)
+            proto, sp, dp, sh, dh, one_way = f.temps(
+                [proto, sp, dp, ip_hex(src_ip), ip_hex(dst_ip), one_way])
 
             # bytes.Compare via the hex strings (lexicographic hex == byte
             # order; equal lengths within one address family)
@@ -159,7 +142,6 @@ def community_id(cfg: dict[str, Any]) -> Stage:
                 portful, F.concat(head, _u16be(a_p), _u16be(b_p))
             ).otherwise(head)
             cid = F.concat(F.lit("1:"), F.base64(F.unhex(F.sha1(payload))))
-            out = Fields(df).set(target, cid).apply(where=cond)
-            return out.drop(*[tp + c for c in names])
+            return f.set(target, cid).apply(where=cond)
 
     return CommunityID()

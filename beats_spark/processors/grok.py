@@ -176,33 +176,22 @@ def grok(cfg: dict[str, Any]) -> Stage:
             # per-field projections into one generated function that blows
             # the JVM's 64 KB method limit and falls back to the
             # interpreter (observed on the 4-pattern apache module grok).
-            existing = {c.lower() for c in df.columns}
-            tp, i = "__grok_", 0
-            while any(x.lower().startswith(tp) for x in existing):
-                i += 1
-                tp = f"__grok{i}_"
-            flags = {
-                f"{tp}m{j}": F.coalesce(col.rlike(rx), F.lit(False))
-                for j, rx in enumerate(regexes)
-            }
-            df = df.withColumns(flags)
+            f = Fields(df)
+            flags = f.temps([F.coalesce(col.rlike(rx), F.lit(False))
+                             for rx in regexes])
             # extracts gated on the (already-staged, attribute-ref) match
             # flag: a pattern that did not match skips its regex scans
             # entirely — on a mostly-single-format corpus that saves
             # (patterns−1) × capture-sites full-regex scans per row
-            xcols: dict[str, Column] = {}
-            for name, sites in fmap.items():
-                for j, gi, _typ in sites:
-                    xcols[f"{tp}x{j}_{gi}"] = F.when(
-                        F.col(f"{tp}m{j}"),
-                        F.regexp_extract(col, regexes[j], gi))
-            df = df.withColumns(xcols)
+            caps = [(j, gi) for ss in fmap.values() for j, gi, _typ in ss]
+            xcols = dict(zip(caps, f.temps([
+                F.when(flags[j], F.regexp_extract(col, regexes[j], gi))
+                for j, gi in caps])))
             # mutually exclusive pattern selectors: pattern j applies only
             # when no earlier pattern matched (ES tries in order)
             sels: list[Column] = []
             prior: Column = F.lit(False)
-            for j in range(len(regexes)):
-                h = F.col(f"{tp}m{j}")
+            for h in flags:
                 sels.append(h & ~prior)
                 prior = prior | h
             matched = prior
@@ -212,7 +201,6 @@ def grok(cfg: dict[str, Any]) -> Stage:
             # value (a fallback grok chain over two formats must not null
             # out what the previous grok extracted, and ES writes only the
             # winner's captures)
-            f = Fields(df)
             for name, sites in fmap.items():
                 by_pat: dict[int, list[tuple[int, str]]] = {}
                 for j, gi, typ in sites:
@@ -224,7 +212,7 @@ def grok(cfg: dict[str, Any]) -> Stage:
                     # the alternation idiom (?:%{IP:host}|%{HOSTNAME:host}):
                     # the PARTICIPATING branch wins (non-participating
                     # groups extract ''), not first-declared
-                    cands = [F.nullif(F.col(f"{tp}x{j}_{gi}"), F.lit(""))
+                    cands = [F.nullif(xcols[j, gi], F.lit(""))
                              for gi, _ in slist]
                     v = cands[0] if len(cands) == 1 else F.coalesce(*cands)
                     if not null_empty:
@@ -251,6 +239,6 @@ def grok(cfg: dict[str, Any]) -> Stage:
             append_flag(f, "grok_parsing_error", cond=~matched)
             if not ignore_failure:
                 set_error_message(f, ~matched, "grok: no pattern matched")
-            return f.apply(where=cond).drop(*flags, *xcols)
+            return f.apply(where=cond)
 
     return Grok()

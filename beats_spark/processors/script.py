@@ -21,6 +21,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 
+from beats_spark.event import free_name
 from beats_spark.processors.base import Stage, register
 
 
@@ -42,9 +43,7 @@ def script(cfg: dict[str, Any]) -> Stage:
                     f for f in df.schema.fields
                     if f.name not in out_schema.fieldNames()])
             out_cols, masked = out_schema.fieldNames(), cond is not None
-            flag, taken = "__script_when", {c.lower() for c in df.columns}
-            while flag in taken:
-                flag = "_" + flag
+            flag = free_name({c.lower() for c in df.columns})
 
             def conform(pdf):
                 """Shape a batch to the output schema — the exception

@@ -11,7 +11,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from beats_spark.event import get_path
+from beats_spark.event import Fields, _quote, get_path
 from beats_spark.processors.base import Stage, register
 
 
@@ -153,40 +153,31 @@ def multiline(cfg: dict[str, Any]) -> Stage:
                     gap = ts - F.lag(ts, 1).over(w)
                     start = start | (F.coalesce(gap, F.lit(0.0)) > secs)
                 start = start | first
-            df = df.withColumn("__ml_start", start.cast("int"))
-            df = df.withColumn("__ml_gid", F.sum("__ml_start").over(w))
+            f = Fields(df)
+            keep = [c for c in df.columns if c not in part]
+            starts, = f.temps([start.cast("int")])
+            gid, = f.temps([F.sum(starts).over(w)])
+            first_t, lines_t, line_t = (f.temp() for _ in range(3))
             order_cols = [F.col(c) for c in order]
-            pair = F.struct(*order_cols, line.alias("__line"))
-            gb = df.groupBy(*part, "__ml_gid")
-            keep_struct = F.struct(
-                *[F.col(c) for c in df.columns if c not in part and not c.startswith("__ml")]
+            pair = F.struct(*order_cols, line.alias(line_t))
+            out = f.df.groupBy(*part, gid).agg(
+                F.min_by(F.struct(*[F.col(c) for c in keep]),
+                         F.struct(*order_cols)).alias(first_t),
+                F.array_sort(F.collect_list(pair)).alias(lines_t),
             )
-            aggs = [
-                F.min_by(keep_struct, F.struct(*order_cols)).alias("__first"),
-                F.array_sort(F.collect_list(pair)).alias("__lines"),
-            ]
-            out = gb.agg(*aggs)
-            lines = F.col("__lines")
+            lines = F.col(_quote(lines_t))
             if max_lines:
                 lines = F.slice(lines, 1, int(max_lines))
-            merged = F.array_join(F.transform(lines, lambda s: s["__line"]), sep)
-            keep = [c for c in df.columns if c not in part and not c.startswith("__ml")]
-            if "." in fld:
-                # dotted field: rebuild the row from the group's first
-                # event, then write the merged text back into the nested
-                # path — substituting only a same-named TOP-LEVEL column
-                # would silently drop every continuation line's content
-                from beats_spark.event import with_path
-                res = out.select(
-                    *[F.col(p) for p in part],
-                    *[F.col(f"__first.{c}").alias(c) for c in keep],
-                    F.col("__lines"),
-                )
-                return with_path(res, fld, merged).drop("__lines")
-            cols = [F.col(p) for p in part] + [
-                (merged if c == fld else F.col(f"__first.{c}")).alias(c) for c in keep
-            ]
-            return out.select(*cols)
+            merged = F.array_join(F.transform(lines, lambda s: s[line_t]), sep)
+            # the row is the group's first event with the merged text
+            # written into the field (nested too: substituting only a
+            # same-named top-level column would silently drop every
+            # continuation line's content)
+            first = F.col(_quote(first_t))
+            f.df = out.select(*[F.col(p) for p in part],
+                              *[first.getField(c).alias(c) for c in keep],
+                              F.col(_quote(lines_t)))
+            return f.set(fld, merged).apply()
 
     return Multiline()
 
@@ -232,8 +223,9 @@ def rate_limit(cfg: dict[str, Any]) -> Stage:
                 keys.append(matched)
                 passes = passes | ~matched
             w = Window.partitionBy(*keys).orderBy(ts)
-            return (df.withColumn("__rl_rn", F.row_number().over(w))
-                    .filter(passes | (F.col("__rl_rn") <= n))
-                    .drop("__rl_rn"))
+            f = Fields(df)
+            rn, = f.temps([F.row_number().over(w)])
+            f.df = f.df.filter(passes | (rn <= n))
+            return f.apply()
 
     return RateLimit()

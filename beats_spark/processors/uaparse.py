@@ -223,30 +223,29 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
                 "spark.sql.parser.escapedStringLiterals", "false")
                 .lower() == "true")
             lit = partial(_sql_str, escaped_literals=esc)
-            existing = {c.lower() for c in df.columns}
-            tp, i = "__ua_", 0
-            while any(x.lower().startswith(tp) for x in existing):
-                i += 1
-                tp = f"__ua{i}_"
-            ua, b, o, bv, ov = (_quote(tp + s) for s in ("s", "b", "o", "bv", "ov"))
+            f = Fields(df)
+            temps = [f.temp() for _ in range(5)]
+            ua, b, o, bv, ov = (_quote(n) for n in temps)
+            ua_t, b_t, o_t, bv_t, ov_t = temps
 
             # rows a `when` skips see a NULL UA, so they skip every regex
-            # (their old values are kept by the write's `where`)
+            # (their old values are kept by the write's `where`); the rule
+            # indexes and packs go in as SQL text, so their layers name
+            # the temps themselves
             raw = get_path(df, fld).cast("string")
-            df = df.withColumn(tp + "s", raw if cond is None else F.when(cond, raw))
+            f.df = f.df.withColumn(ua_t, raw if cond is None else F.when(cond, raw))
             idx, packs = {}, {}
             if props & {"name", "version", "device"}:
-                idx[tp + "b"] = _first_match(ua, [r[1] for r in _BROWSERS], lit)
+                idx[b_t] = _first_match(ua, [r[1] for r in _BROWSERS], lit)
             if "version" in props:
-                packs[tp + "bv"] = _packed(ua, b, [r[1:3] for r in _BROWSERS], lit)
+                packs[bv_t] = _packed(ua, b, [r[1:3] for r in _BROWSERS], lit)
             if "os" in props:
-                idx[tp + "o"] = _first_match(ua, [r[1] for r in _OSES], lit)
-                packs[tp + "ov"] = _packed(ua, o, [r[1:3] for r in _OSES], lit)
+                idx[o_t] = _first_match(ua, [r[1] for r in _OSES], lit)
+                packs[ov_t] = _packed(ua, o, [r[1:3] for r in _OSES], lit)
             for cols in (idx, packs):
                 if cols:
-                    df = df.withColumns({k: F.expr(v) for k, v in cols.items()})
+                    f.df = f.df.withColumns({k: F.expr(v) for k, v in cols.items()})
 
-            f = Fields(df)
             if "name" in props:
                 name = _pick(b, [lit(r[0]) for r in _BROWSERS])
                 f.set(f"{target}.name", F.expr(
@@ -275,6 +274,6 @@ def user_agent(cfg: dict[str, Any]) -> Stage:
                     f"CASE WHEN {ua} IS NOT NULL THEN 'Other' END) END"))
             if "original" in props and f"{target}.original" != fld:
                 f.set(f"{target}.original", F.col(ua))
-            return f.apply(where=cond).drop(tp + "s", *idx, *packs)
+            return f.apply(where=cond)
 
     return UserAgent()

@@ -6,10 +6,8 @@ from beats_spark.event import (
     Fields,
     add_tags,
     append_flag,
-    drop_path,
     get_path,
     has_path,
-    rename_path,
     with_path,
 )
 
@@ -39,15 +37,17 @@ def test_drop_and_rename(spark):
     df = spark.createDataFrame([(1,)], "id int")
     df = with_path(df, "s.x", F.lit(5))
     df = with_path(df, "s.y", F.lit(6))
-    df = drop_path(df, "s.x")
+    df = Fields(df).drop("s.x").apply()
     assert not has_path(df.schema, "s.x") and has_path(df.schema, "s.y")
-    df = rename_path(df, "s.y", "t.z")
+    f = Fields(df)
+    f.set("t.z", f.get("s.y")).drop("s.y")
+    df = f.apply()
     assert not has_path(df.schema, "s") and df.collect()[0]["t"]["z"] == 6
 
 
 def test_drop_last_field_removes_root(spark):
     df = with_path(spark.createDataFrame([(1,)], "id int"), "s.only", F.lit(1))
-    df = drop_path(df, "s.only")
+    df = Fields(df).drop("s.only").apply()
     assert "s" not in df.columns
 
 
@@ -154,19 +154,33 @@ def test_with_paths_prefix_overlap_falls_back_sequential(spark):
 
 
 def test_with_paths_temp_collision_with_target_and_column(spark):
-    """Targets or existing columns named like the internal __wpN__ temps
+    """Targets or existing columns named like the internal __tN temps
     must neither be dropped nor clobbered."""
-    df = spark.createDataFrame([("keep", 1)], "__wp0__ string, n int")
+    df = spark.createDataFrame([("keep", 1)], "__t0 string, n int")
     out = with_paths(df, {"a.b": F.lit("x"),
                           "c": F.lit("y")}).collect()[0]
-    assert out["__wp0__"] == "keep"
+    assert out["__t0"] == "keep"
     assert out["a"]["b"] == "x" and out["c"] == "y"
-    # a target literally named __wp0__ is written, not dropped
+    # a target literally named __t0 is written, not dropped
     df2 = spark.createDataFrame([(1,)], "n int")
-    out2 = with_paths(df2, {"__wp0__": F.lit("v"),
+    out2 = with_paths(df2, {"__t0": F.lit("v"),
                             "x.y": F.lit("w")}).collect()[0]
-    assert out2["__wp0__"] == "v"
+    assert out2["__t0"] == "v"
     assert out2["x"]["y"] == "w"
+
+
+def test_root_named_like_a_temp_does_not_read_it(spark):
+    """A path whose root is named like a temp column staged before it (a
+    grok capture named ``__t0``) reads as missing, not as the temp: rows a
+    ``where`` skips stay NULL, and the temp is still left out."""
+    df = spark.createDataFrame([(1,), (2,)], "n int")
+    f = Fields(df)
+    flag, = f.temps([F.col("n") == 1])
+    assert not f.has("__t0")
+    f.set("__t0", F.lit("v"), where=flag)
+    out = f.apply().orderBy("n").collect()
+    assert [r["__t0"] for r in out] == ["v", None]
+    assert out[0].asDict().keys() == {"n", "__t0"}
 
 
 def test_copy_fields_chained_pairs_read_own_writes(spark):

@@ -1,13 +1,19 @@
 """Property test: the ``Fields`` write set against a pure-Python MapStr.
 
-The oracle is a dict-of-dicts with libbeat's sequential ``Put``/``GetValue``
-(mapstr.go:124-201) plus the NULL-parent rule: a write of NULL creates no
-missing or NULL parent. Random sequences of sets and reads over nested,
-prefix-overlapping and chained paths run on frames whose parent structs are
-NULL and non-NULL, with and without ``where``; every read, ``has`` and the
-final roots must equal the oracle's on every row. A NULL field and a
-missing one compare equal (a struct column has every field), a NULL struct
-and an all-NULL one do not.
+The oracle is a dict-of-dicts with libbeat's sequential ``Put``/``GetValue``/
+``Delete`` (mapstr.go:124-201) plus the NULL-parent rule: a write of NULL
+creates no missing or NULL parent. Random sequences of sets, deletes and
+reads over nested, prefix-overlapping and chained paths run on frames whose
+parent structs are NULL and non-NULL, with and without ``where``; every
+read, ``has`` and the final roots must equal the oracle's on every row. A
+NULL field and a missing one compare equal (a struct column has every
+field), a NULL struct and an all-NULL one do not.
+
+A column cannot hold an empty struct, so the oracle also tracks the
+frame's shape — the paths the output schema has: a delete removes a path,
+and a struct left with no fields goes with it. Under ``where`` a delete
+keeps a path the input has (NULL on matching rows). Values and reads are
+compared over that shape.
 """
 
 from __future__ import annotations
@@ -65,6 +71,7 @@ OPS = st.lists(st.one_of(
     st.tuples(st.just("set"), st.sampled_from(MIDS), MID, st.none()),
     st.tuples(st.just("set"), st.sampled_from(ROOTS), TOP, st.none()),
     st.tuples(st.just("read"), st.sampled_from(ROOTS + MIDS + LEAVES)),
+    st.tuples(st.just("delete"), st.sampled_from(ROOTS + MIDS + LEAVES)),
 ), min_size=1, max_size=8)
 
 
@@ -131,6 +138,50 @@ def o_put(doc, path, value):
     cur[leaf] = copy.deepcopy(value)
 
 
+def o_delete(doc, path):
+    *parents, leaf = path.split(".")
+    cur = doc
+    for p in parents:
+        cur = cur.get(p)
+        if not isinstance(cur, dict):
+            return
+    cur.pop(leaf, None)
+
+
+def spec_paths(path, spec):
+    """``path`` and the paths below it that a value of ``spec`` has."""
+    out = {path}
+    if spec[0] == "struct":
+        for n, sub in zip(spec[1], spec[2]):
+            out |= spec_paths(f"{path}.{n}", sub)
+    return out
+
+
+def shape_set(shape, path, spec):
+    parts = path.split(".")
+    shape -= {q for q in shape if q.startswith(path + ".")}
+    shape |= {".".join(parts[:i]) for i in range(1, len(parts))}
+    shape |= spec_paths(path, spec)
+
+
+def shape_delete(shape, path):
+    shape -= {q for q in shape if q == path or q.startswith(path + ".")}
+    parts = path.split(".")[:-1]
+    while parts and not any(q.startswith(".".join(parts) + ".") for q in shape):
+        shape.discard(".".join(parts))
+        parts.pop()
+
+
+def prune(v, path, shape):
+    """``v`` (the oracle's value at ``path``) without what ``shape`` lacks."""
+    if path not in shape:
+        return None
+    if isinstance(v, dict):
+        return {k: prune(x, f"{path}.{k}", shape) for k, x in v.items()
+                if f"{path}.{k}" in shape}
+    return v
+
+
 def norm(v):
     if isinstance(v, dict):
         return {k: n for k, n in ((k, norm(x)) for k, x in v.items())
@@ -142,21 +193,25 @@ def run_case(spark, with_roots, ops, where):
     df = spark.createDataFrame(_rows(), SCHEMA)
     if not with_roots:
         df = df.drop("r", "s")
-    f = Fields(df)
-    reads, written = [], []
+    frame = {q for r in ROOTS for q in spec_paths(r, TOP_FULL)} if with_roots else set()
+    f, shape, shapes = Fields(df), set(frame), []
+    reads = []
     for op in ops:
         if op[0] == "read":
-            path = op[1]
-            want_has = with_roots or any(
-                q == path or path.startswith(q + ".") or q.startswith(path + ".")
-                for q in written)
-            assert f.has(path) == want_has, (path, ops)
-            reads.append(f.get(path))
-            continue
-        _, path, spec, cond = op
-        f.set(path, c_val(spec, f), where=None if cond is None else c_cond(cond))
-        written.append(path)
+            assert f.has(op[1]) == (op[1] in shape), (op, ops)
+            reads.append(f.get(op[1]))
+            shapes.append(set(shape))
+        elif op[0] == "delete":
+            f.drop(op[1])
+            shape_delete(shape, op[1])
+        else:
+            _, path, spec, cond = op
+            f.set(path, c_val(spec, f), where=None if cond is None else c_cond(cond))
+            shape_set(shape, path, spec)
     out = f.apply(where=None if where is None else c_cond(where))
+    if where is not None and with_roots:  # every path the oracle sees is an input path
+        shape = frame
+    assert {r for r in ROOTS if r in shape} == {r for r in ROOTS if r in out.columns}
 
     got_reads = {r["id"]: r for r in df.select(
         "id", *[c.alias(f"rd{i}") for i, c in enumerate(reads)]).collect()}
@@ -168,7 +223,11 @@ def run_case(spark, with_roots, ops, where):
         want_reads = []
         for op in ops:
             if op[0] == "read":
-                want_reads.append(o_get(doc, op[1]))
+                want_reads.append(prune(o_get(doc, op[1]), op[1],
+                                        shapes[len(want_reads)]))
+                continue
+            if op[0] == "delete":
+                o_delete(doc, op[1])
                 continue
             _, path, spec, cond = op
             value = o_val(spec, row, doc)
@@ -178,7 +237,8 @@ def run_case(spark, with_roots, ops, where):
             doc = before
         g = got[row["id"]]
         for r in ROOTS:
-            assert norm(g.get(r)) == norm(doc.get(r)), (r, row, ops, where)
+            want = prune(doc.get(r), r, shape)
+            assert norm(g.get(r)) == norm(want), (r, row, ops, where)
         gr = got_reads[row["id"]].asDict(recursive=True)
         for i, w in enumerate(want_reads):
             assert norm(gr[f"rd{i}"]) == norm(w), (i, row, ops)
@@ -207,5 +267,23 @@ MID_NULLABLE = ("struct", ("x", "y"), (("lit", "c"), ("null",)), True)
                                ("set", "r.a.x", ("get", "r.a.x"), ("lt", 4)),
                                ("set", "s.b.y", ("get", "r.a.x"), None)],
          where=("lt_null", 3))
+# deletes: a field, then the last field of its struct (the struct goes);
+# a deleted struct re-created by a later set; a set-then-delete path the
+# input lacks; deletes under a NULL-able where
+@example(with_roots=True, ops=[("delete", "r.a.x"), ("read", "r.a"),
+                               ("delete", "r.a.y"), ("read", "r.a"),
+                               ("read", "r")], where=None)
+@example(with_roots=True, ops=[("delete", "r.a"), ("delete", "r.b"),
+                               ("read", "r")], where=None)
+@example(with_roots=True, ops=[("delete", "r.a"), ("read", "r.a.x"),
+                               ("set", "r.a.x", ("col", "v1"), None),
+                               ("read", "r.a")], where=None)
+@example(with_roots=False, ops=[("set", "r.a.x", ("col", "v1"), None),
+                                ("set", "r.b.x", ("lit", "c"), None),
+                                ("delete", "r.a.x"), ("read", "r")],
+         where=("lt", 3))
+@example(with_roots=True, ops=[("delete", "s"), ("delete", "r.a.x"),
+                               ("set", "r.b", MID_NULLABLE, None),
+                               ("delete", "r.b.y")], where=("lt_null", 3))
 def test_fields_match_sequential_mapstr(spark, with_roots, ops, where):
     run_case(spark, with_roots, ops, where)

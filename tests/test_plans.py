@@ -462,6 +462,15 @@ def test_processors_have_one_when_path():
                          "processors") == []
 
 
+def test_processors_name_temps_through_one_allocator():
+    """Every temp column a processor stages is named by ``event.free_name``
+    (through ``Fields.temp``/``temps``) and left out by ``Fields.apply``:
+    no processor module probes for a free name itself, spells a fixed
+    ``"__…"`` name, or drops columns from a frame on its own."""
+    assert _grep_library(r"""["']__\w|\bwhile\b.*\b(taken|existing)\b"""
+                         r"|(?<!\bf)\.drop\(", "processors") == []
+
+
 def test_library_uses_no_private_py4j_handles():
     """Production code reaches the JVM only through the public API."""
     assert _grep_library(r"\._(jo|jdf|jvm|jsc)\b") == []

@@ -1211,3 +1211,65 @@ def test_rate_limit_null_ts_passes_through(spark):
     ).collect()
     assert sum(1 for r in out if r["ts"] is not None) == 5
     assert sum(1 for r in out if r["ts"] is None) == 7
+
+
+@pytest.mark.parametrize("when", [
+    {"network": {"ip": "privat"}},
+    {"network": {"ip": ["10.0.0.0/8", "10.0.0.0/33"]}},
+    {"range": {"n": {"above": 3}}},
+    {"nope": {"n": 1}},
+    {"equals": {"n": 1}, "contains": {"s": "x"}},
+    {"and": [{"equals": {"n": 1}}, {"or": [{"bogus": {}}]}]},
+    {"not": {"range": {"n": {"gte": 1, "lt2": 4}}}},
+])
+def test_bad_condition_fails_at_build(when):
+    """A condition that compiling would reject is a config error when the
+    chain is built, under ``when`` and under ``if``, like an unknown
+    processor; it is not left until the stage is applied."""
+    with pytest.raises(ValueError):
+        build_chain([{"add_tags": {"tags": ["x"], "when": when}}])
+    with pytest.raises(ValueError):
+        build_chain([{"if": when, "then": [{"add_tags": {"tags": ["x"]}}]}])
+
+
+def _register_collide_tools(spark):
+    from beats_spark.processors.enrich import register_lookup
+
+    register_lookup("collide_tools", lambda: spark.createDataFrame(
+        [("search", "web")], "tool string, family string"))
+
+
+@pytest.mark.parametrize("user_col,cfg", [
+    ("__enrich_key", {"enrich": {"lookup": "collide_tools", "on": "tool"}}),
+    ("__enr_family", {"enrich": {"lookup": "collide_tools", "on": "tool"}}),
+    ("__dom", {"registered_domain": {"field": "domain"}}),
+    ("__psk", {"registered_domain": {"field": "domain"}}),
+    # the name the first if/then of a process used to stage its condition in
+    ("__if_0", {"if": {"equals": {"tool": "search"}},
+                "then": [{"add_tags": {"tags": ["hit"]}}]}),
+    ("__ml_note", {"multiline": {"field": "text", "pattern": r"^\s",
+                                 "partition_by": ["conv"],
+                                 "order_by": ["turn"]}}),
+    ("__rl_rn", {"rate_limit": {"limit": "1/m"}}),
+    ("__t0", {"grok": {"field": "text", "pattern": "%{WORD:w}"}}),
+])
+def test_temp_names_leave_user_columns_alone(spark, user_col, cfg):
+    """A stage's temp columns never take an input column's name: a column
+    named like a temp (the former fixed names, or the allocator's first
+    pick) comes out unchanged, and the stage still does its work."""
+    _register_collide_tools(spark)
+    ts = dt.datetime(2025, 1, 1)
+    users = list(dict.fromkeys([user_col, "__t0"]))
+    df = spark.createDataFrame(
+        [("c1", i, f"word{i}", "search", "a.example.com",
+          ts + dt.timedelta(minutes=i), *["keep"] * len(users))
+         for i in range(3)],
+        "conv string, turn int, text string, tool string, domain string, "
+        "ts timestamp, " + ", ".join(f"`{c}` string" for c in users))
+    out = apply_chain(df, build_chain([cfg]))
+    rows = out.collect()
+    assert rows and all(r[c] == "keep" for r in rows for c in users)
+    assert [c for c in out.columns if c.startswith("__")] == users
+    target = {"enrich": "collide_tools", "registered_domain":
+              "registered_domain", "grok": "w", "if": "tags"}.get(next(iter(cfg)))
+    assert target is None or all(r[target] is not None for r in rows)

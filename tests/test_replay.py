@@ -187,3 +187,69 @@ def test_later_run_incremental_jobs(spark, batches, tmp_path, builds):
     assert res.events_in == batches[1].count()
     assert len(builds) == 1
     assert jobs == 2
+
+
+def test_benchmark_shaped_chain_records_few_ops(spark, monkeypatch):
+    """The plan a Pipeline records for a benchmark-shaped chain (two
+    dissects, grok, user_agent, kv, drop_event, fingerprint, enrich,
+    enrich_cidr, if/then, routes) has at most 26 live frame ops: each
+    stage's write set ends in one projection, with no drop of its own (the
+    replay pays one eager analysis per op; 37 when every stage dropped its
+    temps itself)."""
+    tapes = []
+
+    class Recording(pipeline_mod.Tape):
+        def __init__(self):
+            super().__init__()
+            tapes.append(self)
+
+    monkeypatch.setattr(pipeline_mod, "Tape", Recording)
+    register_lookup("ops_tools", lambda: spark.createDataFrame(
+        [("search", "retrieval", "cheap")],
+        "tool string, tool_family string, tool_cost_class string"))
+    register_lookup("ops_geo", lambda: spark.createDataFrame(
+        [("10.0.0.0/16", "DE", None)] + [
+            (f"10.1.{k}.0/24", "US", f"city-{k}") for k in range(200)],
+        "cidr string, country_iso_code string, city_name string"))
+    access = ('%{IP:client_ip} - %{NOTSPACE:user} \\[%{DATA:time}\\] '
+              '"%{WORD:method} %{NOTSPACE:path} HTTP/%{NUMBER:version}" '
+              '%{INT:status:int} %{INT:bytes:int} "%{DATA:referrer}" "%{DATA:ua}"')
+    cfg = PipelineConfig(processors=[
+        {"dissect": {"tokenizer": 'level=%{level} caller=%{caller} msg="%{msg}" '
+                                  "latency_ms=%{latency|integer}",
+                     "field": "text", "target_prefix": "parsed",
+                     "ignore_failure": True,
+                     "when": {"contains": {"text": "level="}}}},
+        {"dissect": {"tokenizer": "src=%{ip|ip} user=%{user} action=%{action} "
+                                  "status=%{status}",
+                     "field": "text", "target_prefix": "source",
+                     "ignore_failure": True,
+                     "when": {"contains": {"text": "src="}}}},
+        {"grok": {"field": "text", "pattern": access, "target_prefix": "http",
+                  "when": {"contains": {"text": "HTTP/"}}}},
+        {"user_agent": {"field": "http.ua", "ignore_missing": True}},
+        {"kv": {"field": "text", "target": "kv", "strict": False,
+                "include_keys": ["src", "user", "action", "status"]}},
+        {"drop_event": {"when": {"equals": {"role": "system"}}}},
+        {"fingerprint": {"fields": ["conv_id", "turn_idx", "text"],
+                         "method": "sha256", "target_field": "fingerprint"}},
+        {"enrich": {"lookup": "ops_tools", "on": "tool", "target": "tool_meta",
+                    "default": {"tool_family": "unknown"}}},
+        {"enrich_cidr": {"lookup": "ops_geo", "on": "source.ip",
+                         "target": "source.geo"}},
+        {"if": {"range": {"parsed.latency": {"gte": 400}}},
+         "then": [{"add_tags": {"tags": ["slow"]}}]},
+    ], routes=[{"sink": "http_errors",
+                "when": {"range": {"http.status": {"gte": 500}}}},
+               {"sink": "%{[tool]}"}])
+    df = spark.createDataFrame(
+        [("c1", 0, "user", "level=info caller=a.py:1 msg=\"ok\" latency_ms=500",
+          "search", dt.datetime(2025, 1, 1))],
+        "conv_id string, turn_idx int, role string, text string, tool string, "
+        "ts timestamp")
+    Pipeline(spark, cfg).transform(df)
+    (tape,) = tapes
+    assert tape.out is not None  # replayable
+    ops = [tape.ops[k - 1][1] for k in tape.live()[1:]]
+    assert len(ops) <= 26, ops
+    assert "drop" not in ops
