@@ -381,10 +381,6 @@ def tags_expr(f: Fields, tags: list[str], target: str = "tags") -> Column:
     return F.concat(base, F.array(*[F.lit(t) for t in tags]))
 
 
-def add_tags(df: DataFrame, tags: list[str], target: str = "tags") -> DataFrame:
-    return with_path(df, target, tags_expr(Fields(df), tags, target))
-
-
 def append_flag(f: Fields, flag: str, cond: Column | None = None,
                 path: str = "log.flags") -> None:
     """Append a value to log.flags (beat.FlagField semantics) in the write

@@ -30,16 +30,6 @@ def _field_ref(ref: str) -> str:
     return ref
 
 
-def fields_in(fmt: str) -> list[str]:
-    """Plan-time: the event fields a format string references."""
-    out = []
-    for m in _TOKEN_RE.finditer(fmt):
-        tok = m.group(1)
-        if not tok.startswith("+"):
-            out.append(_field_ref(tok))
-    return out
-
-
 def compile_fmtstr(df: DataFrame, fmt: str, ts_field: str = "ts") -> Column:
     """Compile a format string to a Column over ``df``.
 

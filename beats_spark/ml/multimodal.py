@@ -24,6 +24,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from beats_spark.ml.dedup import POLY_P
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -41,10 +43,6 @@ MEDIA_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 _FEATURES_FIELDS = "media_id long, kind string, feature array<float>, decode_ok boolean"
-_FRAMES_FIELDS = ("media_id long, frame_idx int, frame_payload binary")
-
-
-POLY_P = 2_147_483_647  # same modulus as ml.dedup's portable poly hashes
 
 
 def synthesize_media(spark: SparkSession, n: int = 200,
@@ -144,61 +142,3 @@ def extract_features(df: DataFrame, decoder: str = "fake",
             })
 
     return df.mapInPandas(run, schema=_FEATURES_FIELDS)
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  max_frames: int = 8) -> DataFrame:
-    """video rows → one row per sampled frame (frame payload stubbed as a
-    deterministic slice of the source bytes). Demonstrates the explode-shaped
-    mapInPandas contract (one input row → N output rows).
-
-    The frame-index expansion is vectorized (numpy repeat/arange over the
-    whole Arrow batch); the only per-frame Python is the byte-slice of the
-    payload, which is where a real decoder call would sit anyway. The
-    needed meta field is projected to a flat column BEFORE the UDF so the
-    batch never materializes the full meta struct per row.
-    """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dur = pdf["dur"].fillna(0).to_numpy(dtype=np.int64)
-            n = np.minimum(max_frames, np.maximum(1, dur // every_ms))
-            total = int(n.sum())
-            row_of = np.repeat(np.arange(len(pdf)), n)
-            idx = np.arange(total) - np.repeat(np.cumsum(n) - n, n)
-            payloads = pdf["payload"].to_numpy(dtype=object)
-            lens = np.fromiter(
-                (len(b) if b is not None else 0 for b in payloads),
-                dtype=np.int64, count=len(payloads),
-            )
-            steps = np.maximum(1, lens // np.maximum(n, 1))
-            starts = idx * steps[row_of]
-            frames = [
-                bytes((payloads[r] or b"")[s:s + 16])
-                for r, s in zip(row_of, starts)
-            ]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].to_numpy()[row_of],
-                "frame_idx": idx.astype("int32"),
-                "frame_payload": pd.Series(frames, dtype=object),
-            })
-
-    vids = df.filter(F.col("kind") == "video").select(
-        "media_id", F.col("meta.duration_ms").alias("dur"), "payload"
-    )
-    return vids.mapInPandas(run, schema=_FRAMES_FIELDS)
-
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Metadata-only resize: rewrites the meta struct (real pixel resize
-    would live in the same mapInPandas slot as extract_features). Pure
-    column expression — payload untouched, parquet scan prunes it."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.col("meta.mime").alias("mime"),
-            F.when(F.col("kind") == "image", F.lit(width)).otherwise(F.col("meta.width")).cast("int").alias("width"),
-            F.when(F.col("kind") == "image", F.lit(height)).otherwise(F.col("meta.height")).cast("int").alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-        ),
-    )

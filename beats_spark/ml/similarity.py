@@ -12,10 +12,10 @@ Two tiers:
   The query's own bucket is computed in Python (:func:`query_bucket`,
   bit-identical to the corpus pass) and inlined as a literal, so building
   the probe runs no Spark job and the probe filter is a pure codegen
-  bit_count. The probe scans ~corpus/2^planes rows per probe; at 100 TB
-  the corpus would be WRITTEN partitioned by bucket so the probe prunes
-  file scans instead. Hyperplane coefficients are deterministic integer
-  hashes (no RNG shipping, reproducible at any parallelism).
+  bit_count. The probe filters the corpus rows after the bucket pass; it
+  keeps ~C(planes, <=hamming)/2^planes of them. Hyperplane coefficients
+  are deterministic integer hashes (no RNG shipping, reproducible at any
+  parallelism).
 """
 
 from __future__ import annotations
@@ -143,16 +143,6 @@ def _base(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
                      F.col(vec_col).cast("array<double>").alias("__v"))
 
 
-def hyperplane_buckets(df: DataFrame, vec_col: str = "embedding",
-                       id_col: str = "vec_id", num_planes: int = 8,
-                       coef_hash: str = "xx") -> DataFrame:
-    """(__id, __bkt) for every corpus row (ids must be unique), computed
-    relationally; each the :func:`query_bucket` of the row's vector, 0 for
-    an empty, NULL or NULL-element vector."""
-    return _bucket_projs(_base(df, vec_col, id_col), num_planes,
-                         coef_hash).select("__id", "__bkt")
-
-
 def _bucketed(corpus: DataFrame, vec_col: str, id_col: str,
               num_planes: int, coef_hash: str) -> DataFrame:
     """The corpus plus its ``__bkt`` column (a NULL id gets bucket 0)."""
@@ -189,21 +179,6 @@ def _topk(rows: DataFrame, query_vec: list[float], k: int, vec_col: str,
     )
 
 
-def _probe_topk(rows: DataFrame, query_vec: list[float], k: int,
-                vec_col: str, id_col: str, num_planes: int,
-                probe_hamming: int, exclude_id: int | None,
-                coef_hash: str) -> DataFrame:
-    """Top-k among ``rows`` (with a ``__bkt`` column) whose bucket is
-    within ``probe_hamming`` bits of the query's. The probe references
-    only ``__bkt``, so on a bucket-partitioned table it is a partition
-    filter."""
-    qb = query_bucket(query_vec, num_planes, coef_hash)
-    probed = rows.filter(
-        F.bit_count(F.col("__bkt").cast("long").bitwiseXOR(F.lit(qb)))
-        <= probe_hamming)
-    return _topk(probed, query_vec, k, vec_col, id_col, exclude_id)
-
-
 def cosine_topk(
     corpus: DataFrame,
     query_vec: list[float],
@@ -231,93 +206,11 @@ def lsh_topk(
 ) -> DataFrame:
     """ANN top-k: scan only corpus rows whose hyperplane bucket is within
     ``probe_hamming`` bits of the query's bucket (multi-probe LSH), then
-    exact cosine + top-k inside the probed slice.
-
-    At 100 TB the corpus would be written bucketed/partitioned by the
-    signature so the probe prunes file scans via partition pruning
-    (:func:`write_bucketed`); here the filter is computed on the fly
-    (bit_count is codegen'd).
+    exact cosine + top-k inside the probed slice. The probe filter is a
+    codegen'd ``bit_count`` over the bucket column, computed on the fly.
     """
-    return _probe_topk(_bucketed(corpus, vec_col, id_col, num_planes,
-                                 coef_hash),
-                       query_vec, k, vec_col, id_col, num_planes,
-                       probe_hamming, exclude_id, coef_hash)
-
-
-def write_bucketed(
-    corpus: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-    coef_hash: str = "xx",
-) -> None:
-    """Materialize the corpus hive-partitioned by its hyperplane bucket —
-    the 100 TB layout ``lsh_topk``'s docstring promises: a probe against
-    the written table prunes whole bucket DIRECTORIES at file-listing time
-    (the ``__bkt`` predicate lands in the scan's ``PartitionFilters``), so
-    a probe reads ~``C(planes, ≤hamming)/2^planes`` of the corpus bytes
-    instead of filtering rows after a full scan.
-
-    One signature pass, one id-join, one partitioned write. 2^num_planes
-    directories — keep num_planes moderate (8 → 256 partitions) so files
-    stay large at scale."""
-    (_bucketed(corpus, vec_col, id_col, num_planes, coef_hash)
-     .write.partitionBy("__bkt").mode("overwrite").parquet(path))
-
-
-def lsh_topk_bucketed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-    probe_hamming: int = 2,
-    exclude_id: int | None = None,
-    coef_hash: str = "xx",
-) -> DataFrame:
-    """``lsh_topk`` over a :func:`write_bucketed` corpus. Identical
-    results; the bucket probe becomes a PARTITION filter (it references
-    only the partition column), so unprobed buckets are never read."""
-    return _probe_topk(spark.read.parquet(path), query_vec, k, vec_col,
-                       id_col, num_planes, probe_hamming, exclude_id,
-                       coef_hash)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    n_probe: int = 2,
-) -> DataFrame:
-    """IVF-style ANN when a coarse quantizer already exists (a cluster
-    ``label`` column, as produced by any offline k-means): probe the
-    ``n_probe`` centroids nearest to the query (centroids = per-label mean,
-    computed with one small agg), then exact top-k within probed cells."""
-    vec = F.col(vec_col).cast("array<double>")
-    q = F.lit(query_vec).cast("array<double>")
-
-    # element-wise mean per label: posexplode → avg per (label, pos) →
-    # reassemble ordered. The exploded frame is tiny relative to the corpus
-    # (dims × rows of 3 columns) and aggregates map-side first.
-    cents = (
-        corpus.select(F.col(label_col).alias("lbl"), F.posexplode(vec).alias("pos", "x"))
-        .groupBy("lbl", "pos")
-        .agg(F.avg("x").alias("m"))
-        .groupBy("lbl")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("lbl", F.transform(F.col("pm"), lambda s: s["m"]).alias("centroid"))
-    )
-    probe = [
-        r["lbl"]
-        for r in cents.select(
-            "lbl", cosine(F.col("centroid"), q).alias("s")
-        ).orderBy(F.col("s").desc()).limit(n_probe).collect()
-    ]
-    return _topk(corpus.filter(F.col(label_col).isin(probe)), query_vec, k,
-                 vec_col, id_col, None)
+    qb = query_bucket(query_vec, num_planes, coef_hash)
+    probed = _bucketed(corpus, vec_col, id_col, num_planes, coef_hash).filter(
+        F.bit_count(F.col("__bkt").cast("long").bitwiseXOR(F.lit(qb)))
+        <= probe_hamming)
+    return _topk(probed, query_vec, k, vec_col, id_col, exclude_id)

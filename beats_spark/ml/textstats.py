@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from beats_spark.ml.dedup import words
+from beats_spark.ml.dedup import POLY_P, poly_string_hash, words
 
 # tiny fixed stopword lists for the n-gram/stopword-voting language heuristic
 STOPWORDS = {
@@ -175,20 +175,7 @@ def gopher_keep(col: Column) -> Column:
 
 # -- document fingerprinting (rolling hash / winnowing-lite) -----------------
 
-_FP_B = 1_000_003          # polynomial base
-_FP_P = 2_147_483_647      # 2^31 - 1: keeps acc*B inside 64-bit
-
-
-def _word_hash(t: Column) -> Column:
-    """Position-independent word hash in [0, P): polynomial over character
-    codes — same integer math is expressible in DuckDB (list_reduce over
-    unicode codepoints), unlike xxhash64."""
-    chars = F.split(t, "")
-    return F.aggregate(
-        chars,
-        F.lit(7).cast("long"),
-        lambda acc, c: F.pmod(acc * 31 + F.ascii(c), F.lit(_FP_P)),
-    )
+_FP_B = 1_000_003          # polynomial base; P = 2^31 - 1 keeps acc*B in 64 bits
 
 
 def rolling_fingerprint(col: Column, window: int = 5) -> Column:
@@ -202,17 +189,18 @@ def rolling_fingerprint(col: Column, window: int = 5) -> Column:
     # transform-over-indices lambda would re-slice and re-char-hash every
     # token `window` times per row (interpreted HOFs have no common-subexpression
     # elimination), O(window × tokens) char hashing instead of O(tokens).
-    th = F.transform(toks, _word_hash)
+    # one argument: transform would bind base and seed to lambda variables
+    th = F.transform(toks, lambda t: poly_string_hash(t))
     kk = F.greatest(k, F.lit(0))
     hs = F.slice(th, 1, kk)
     for j in range(1, window):
         hs = F.zip_with(
             hs, F.slice(th, 1 + j, kk),
-            lambda acc, h: F.pmod(acc * _FP_B + h, F.lit(_FP_P)),
+            lambda acc, h: F.pmod(acc * _FP_B + h, F.lit(POLY_P)),
         )
     whole = F.aggregate(
         th,
         F.lit(0).cast("long"),
-        lambda acc, h: F.pmod(acc * _FP_B + h, F.lit(_FP_P)),
+        lambda acc, h: F.pmod(acc * _FP_B + h, F.lit(POLY_P)),
     )
     return F.when(k > 0, F.array_min(hs)).otherwise(whole)

@@ -73,7 +73,7 @@ from beats_spark.catalog import ParquetCatalog, data_files, read_files
 from beats_spark.processors import apply_chain, build_chain
 from beats_spark.processors.enrich import lookup_generation
 from beats_spark.schema import META_PREFIX, PID_COL, SINK_COL
-from beats_spark.selector import compile_selector
+from beats_spark.selector import check_routes, compile_selector
 from beats_spark.tape import Tape, real
 
 DEAD_LETTER = "dead_letter"
@@ -192,6 +192,7 @@ class Pipeline:
         self.config = config
         self.catalog = catalog
         self.stages = build_chain(config.processors)
+        check_routes(config.routes)
         self._plan: tuple[tuple, Tape] | None = None   # (key, replayable tape)
 
     # -- pure plan (unit-testable, no IO) -----------------------------------

@@ -69,23 +69,6 @@ class Stage:
 
 
 @dataclass
-class FnStage(Stage):
-    """Adapter for simple function-shaped stages."""
-
-    name: str = "fn"
-    updates_fn: Callable[[DataFrame], dict[str, Column]] | None = None
-    keep_fn: Callable[[DataFrame], Column] | None = None
-
-    def updates(self, f: Fields) -> None:
-        # the function reads the input frame; its entries are set in order
-        for path, value in (self.updates_fn(f.df) if self.updates_fn else {}).items():
-            f.set(path, value)
-
-    def keep(self, df: DataFrame) -> Column | None:
-        return self.keep_fn(df) if self.keep_fn else None
-
-
-@dataclass
 class WhenStage(Stage):
     """``when:`` guard around another stage (WhenProcessor,
     conditionals.go:60-91)."""

@@ -190,8 +190,8 @@ def rate_limit(cfg: dict[str, Any]) -> Stage:
     Batch semantics: within each (key, time-window) allow the first N events
     in event-time order, drop the rest — ``row_number() over (partition by
     key, window start) <= N``, one shuffle on (key, window). Untimestamped
-    rows pass, as in the streaming token bucket (streaming/stateful.py);
-    under ``when`` the condition joins the key and skipped rows pass.
+    rows pass; under ``when`` the condition joins the key and skipped rows
+    pass.
     """
     unknown = set(cfg) - {"limit", "fields", "ts_field"}
     if unknown:

@@ -26,7 +26,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from beats_spark.conditions import compile_condition
+from beats_spark.conditions import check_condition, compile_condition
 from beats_spark.fmtstr import compile_fmtstr
 
 
@@ -34,11 +34,25 @@ def _nonempty(c: Column) -> Column:
     return F.when(c == F.lit(""), F.lit(None)).otherwise(c)
 
 
-def compile_rule(df: DataFrame, rule: dict[str, Any]) -> Column:
+def _format(rule: dict[str, Any]) -> str:
     fmt = rule.get("sink") or rule.get("index") or rule.get("topic")
     if fmt is None:
         raise ValueError(f"routing rule needs sink/index/topic: {rule!r}")
-    val = compile_fmtstr(df, fmt)
+    return fmt
+
+
+def check_routes(rules: list[dict[str, Any]]) -> None:
+    """Raise the ``ValueError`` :func:`compile_selector` would raise for
+    ``rules`` on any frame: a rule without sink/index/topic, or a bad
+    ``when``. The pipeline calls it when it is built."""
+    for rule in rules:
+        _format(rule)
+        if rule.get("when") is not None:
+            check_condition(rule["when"])
+
+
+def compile_rule(df: DataFrame, rule: dict[str, Any]) -> Column:
+    val = compile_fmtstr(df, _format(rule))
 
     mappings = rule.get("mappings")
     if mappings:

@@ -1,22 +1,15 @@
-"""Kafka source/sink wiring (outputs/kafka + filebeat kafka input).
+"""Kafka input wiring: filebeat's kafka input config (hosts, topics,
+initial_offset, group_id, max_batch_size) translated to
+``spark.readStream.format("kafka")`` reader options.
 
-This sandbox has no broker and no spark-sql-kafka artifact, so the IO call
-is gated; what IS tested is the config translation — the part with
-reference semantics:
-
-- topic selection: the selector column (outil.Selector) becomes the
-  ``topic`` column of the writer frame (outputs/kafka/client.go:190-202);
-- message key: a fmtstr compiled to the ``key`` column (config.go:53);
-- ``partition.hash`` on fields ≡ repartition by hash of those columns
-  (partition.go:65-76,216) — Kafka's default partitioner hashes the key, so
-  emitting the hash fields AS the key reproduces hash partitioning.
+Only the reader options live here; events leave through the pipeline's
+per-sink tables, so there is no Kafka output. The spark-sql-kafka
+artifact is not bundled, so the read itself is left to the caller.
 """
 
 from __future__ import annotations
 
 from typing import Any
-
-from pyspark.sql import DataFrame, functions as F
 
 
 def kafka_reader_options(cfg: dict[str, Any]) -> dict[str, str]:
@@ -39,75 +32,3 @@ def kafka_reader_options(cfg: dict[str, Any]) -> dict[str, str]:
         opts["maxOffsetsPerTrigger"] = str(cfg["max_batch_size"])
     return {k: v for k, v in opts.items() if v}
 
-
-def kafka_writer_frame(df: DataFrame, *, topic_col: str = "_sink",
-                       key_fmtstr: str | None = None,
-                       hash_fields: list[str] | None = None,
-                       num_partitions: int | None = None) -> DataFrame:
-    """Shape a routed frame for ``df.write.format("kafka")``: columns
-    (topic, key, value[, partition]). value = JSON of the payload
-    (codec json, outputs/codec/json).
-
-    A configured ``key_fmtstr`` ALWAYS becomes the message key — beats
-    keys the message with the fmtstr even when ``partition.hash`` is also
-    set (client.go:190-202; partition.go hashes the fields independently
-    of the key). With both configured, ``partition.hash`` semantics need an
-    explicit ``partition`` int column (the Spark Kafka sink only honors
-    topic/key/value/headers/partition): pass ``num_partitions`` and the
-    hash fields become ``partition = pmod(hash(fields), num_partitions)``.
-    Only when no key is configured do the hash fields double as the key
-    (Kafka's default partitioner hashes the key, reproducing hash
-    partitioning without broker metadata).
-
-    Documented divergences / API notes:
-    - The explicit partition column hashes with ``xxhash64`` — NEITHER
-      beats' ``partition.hash`` (FNV-1a, libbeat/outputs/kafka/
-      partition.go) nor Kafka's default murmur2-of-key, so physical
-      partition PLACEMENT differs from a real beats deployment. The
-      routing INVARIANT is preserved: same hash_fields values → same
-      partition, deterministically.
-    - Since r4, configs with BOTH key_fmtstr and hash_fields require
-      ``num_partitions`` (previously they silently returned a frame whose
-      hash fields the sink ignored — that was a correctness bug, and
-      making it loud is a deliberate breaking change)."""
-    from beats_spark.fmtstr import compile_fmtstr
-
-    payload_cols = [c for c in df.columns if not c.startswith("_")]
-    value = F.to_json(F.struct(*[F.col(c) for c in payload_cols]))
-    hash_key = (
-        F.concat_ws("|", *[F.col(f).cast("string") for f in hash_fields])
-        if hash_fields else None
-    )
-    if key_fmtstr:
-        key = compile_fmtstr(df, key_fmtstr)
-    elif hash_key is not None:
-        key = hash_key
-    else:
-        key = F.lit(None).cast("string")
-    cols = [
-        F.col(topic_col).alias("topic"),
-        key.alias("key"),
-        value.alias("value"),
-    ]
-    if key_fmtstr and hash_key is not None:
-        if num_partitions is None:
-            # an inert side column would read as implemented behavior; the
-            # sink ignores anything but topic/key/value/headers/partition
-            raise ValueError(
-                "kafka: key_fmtstr and hash_fields both set — partition "
-                "assignment must be explicit; pass num_partitions so the "
-                "hash fields become a 'partition' column the sink honors"
-            )
-        cols.append(
-            F.pmod(F.xxhash64(hash_key), F.lit(int(num_partitions)))
-            .cast("int").alias("partition")
-        )
-    return df.select(*cols)
-
-
-def write_kafka(df: DataFrame, bootstrap: str, **writer_frame_kwargs) -> None:
-    """Gated IO: requires the spark-sql-kafka package on the classpath."""
-    out = kafka_writer_frame(df, **writer_frame_kwargs)
-    (out.write.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .save())

@@ -22,9 +22,12 @@ Spark mapping:
   file path, ordered by the line ordinal;
 - ``max_bytes`` = ``F.substring`` clamp (reader/readfile line limit).
 
-At 100 TB: the scan parallelizes by file split; the ONLY shuffle is the
-optional multiline sessionization (keyed by file), which is unavoidable
-state and is bounded per file.
+At 100 TB: the scan parallelizes by file split. The UTF-8 path then
+shuffles every line once: its line ordinal is a ``row_number`` window
+partitioned by file path. The optional multiline sessionization is a
+second shuffle keyed by file. Both are per-file state and bounded per
+file. A non-UTF-8 charset reads whole files and takes ordinals from the
+split, so it has no ordinal shuffle.
 """
 
 from __future__ import annotations

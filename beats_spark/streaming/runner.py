@@ -9,11 +9,9 @@ re-append detectable/idempotent). This mirrors the reference's publisher:
 the queue hands batches to one output path regardless of input
 (libbeat/publisher/pipeline/consumer.go:70).
 
-Event-time extras for late data (not needed by the batch contract but
+Event-time extra for late data (not needed by the batch contract but
 provided): ``windowed_counts`` — watermarked tumbling-window counts per
-sink, the streaming analogue of the pipeline_metrics table; and
-``dedup_stream`` — watermarked dropDuplicates on the fingerprint column
-(the ES ``_id`` dedup the reference gets from its sink).
+sink, the streaming analogue of the pipeline_metrics table.
 """
 
 from __future__ import annotations
@@ -93,18 +91,3 @@ def windowed_counts(routed: DataFrame, window: str = "1 minute",
         .agg(F.count("*").alias("events_routed"))
         .select(F.col("w.start").alias("window_start"), "_sink", "events_routed")
     )
-
-
-def dedup_stream(df: DataFrame, fingerprint_col: str = "fingerprint",
-                 watermark: str = "10 minutes") -> DataFrame:
-    """At-least-once → effectively-once: watermarked dedup on the CONTENT
-    fingerprint alone (the dedup ES gives the reference via ``_id``).
-    ``dropDuplicatesWithinWatermark`` keys state on just the fingerprint —
-    including ``ts`` in the key (the pre-3.5 eviction idiom) would pass a
-    re-ingested event through whenever its timestamp was refreshed. The
-    operator is streaming-only, so a batch frame (the one-code-path test
-    mode) gets the same content-keyed semantics via dropDuplicates."""
-    if not df.isStreaming:
-        return df.dropDuplicates([fingerprint_col])
-    return (df.withWatermark("ts", watermark)
-            .dropDuplicatesWithinWatermark([fingerprint_col]))

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from beats_spark.catalog import ParquetCatalog
 from beats_spark.pipeline import Pipeline, fixture_config
-from beats_spark.streaming.runner import dedup_stream, run_stream, windowed_counts
+from beats_spark.streaming.runner import run_stream, windowed_counts
 from beats_spark.testdata import synthesize_transcripts
 
 
@@ -85,8 +85,6 @@ def test_streaming_windowed_counts_and_dedup(spark, tmp_path):
     wc = windowed_counts(routed).toPandas()
     assert (wc["events_routed"] > 0).all()
     assert wc.groupby("_sink")["events_routed"].sum().sum() == routed.count()
-    dd = dedup_stream(routed.unionByName(routed))
-    assert dd.count() == routed.count()
 
 
 def test_streaming_replay_after_partial_commit_is_exactly_once(spark, tmp_path):

@@ -1,57 +1,12 @@
-"""Codecs (json/format), file/console sinks, decode_xml, constant-metadata
-processors, and dead-letter routing semantics."""
-
-import json
+"""decode_xml, constant-metadata processors, and dead-letter routing
+semantics."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from beats_spark.codecs import (
-    console_output,
-    format_codec,
-    json_codec,
-    write_file_ndjson,
-)
 from beats_spark.catalog import ParquetCatalog
 from beats_spark.pipeline import Pipeline, PipelineConfig
 from beats_spark.processors import apply_chain, build_chain, build_stage
-
-
-@pytest.fixture()
-def small(spark):
-    return spark.createDataFrame(
-        [("c1", 0, "<b>hi</b>", "sink_a", "m1"),
-         ("c2", 1, "plain", "sink_b", "m2")],
-        "conv_id string, turn_idx int, text string, _sink string, _meta_x string",
-    )
-
-
-def test_json_codec_excludes_meta(spark, small):
-    lines = [json.loads(r["v"]) for r in
-             small.select(json_codec(small).alias("v")).collect()]
-    assert all(set(l) == {"conv_id", "turn_idx", "text"} for l in lines)
-
-
-def test_json_codec_escape_html(spark, small):
-    lines = [r["v"] for r in
-             small.select(json_codec(small, escape_html=True).alias("v")).collect()]
-    joined = "\n".join(lines)
-    assert "<b>" not in joined and "\\u003cb\\u003e" in joined
-
-
-def test_format_codec(spark, small):
-    out = sorted(r["v"] for r in small.select(
-        format_codec(small, "%{[conv_id]}:%{[turn_idx]}").alias("v")).collect())
-    assert out == ["c1:0", "c2:1"]
-
-
-def test_write_file_ndjson_and_console(spark, small, tmp_path, capsys):
-    p = str(tmp_path / "out")
-    write_file_ndjson(small, p, max_records_per_file=1)
-    back = [json.loads(r["value"]) for r in spark.read.text(p).collect()]
-    assert sorted(b["conv_id"] for b in back) == ["c1", "c2"]
-    lines = console_output(small, limit=1)
-    assert len(lines) == 1 and capsys.readouterr().out.strip() == lines[0]
 
 
 def test_decode_xml(spark):

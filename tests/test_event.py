@@ -4,12 +4,12 @@ from pyspark.sql import functions as F
 
 from beats_spark.event import (
     Fields,
-    add_tags,
     append_flag,
     get_path,
     has_path,
     with_path,
 )
+from beats_spark.processors import apply_chain, build_chain
 
 
 def test_with_path_creates_nested(spark):
@@ -53,8 +53,8 @@ def test_drop_last_field_removes_root(spark):
 
 def test_add_tags_and_flags(spark):
     df = spark.createDataFrame([(1,)], "id int")
-    df = add_tags(df, ["t1", "t2"])
-    df = add_tags(df, ["t3"])
+    df = apply_chain(df, build_chain([{"add_tags": {"tags": ["t1", "t2"]}},
+                                      {"add_tags": {"tags": ["t3"]}}]))
     assert df.collect()[0]["tags"] == ["t1", "t2", "t3"]
     f = Fields(df)
     append_flag(f, "truncated", cond=F.col("id") == 1)

@@ -133,51 +133,6 @@ def test_lsh_topk_recall(emb):
     assert overlap >= 5  # recall@10 ≥ 0.5 with 8 planes / probe 3
 
 
-def test_bucketed_lsh_prunes_partitions_and_matches_in_memory(
-        spark, emb, tmp_path_factory):
-    """The 100 TB layout, materialized: write_bucketed partitions the
-    corpus by hyperplane bucket; the probe's __bkt predicate must land in
-    the scan's PartitionFilters (whole unprobed bucket directories are
-    never read) and return EXACTLY the in-memory lsh_topk results."""
-    import os
-    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
-    similarity.write_bucketed(emb, path, num_planes=6)
-    # hive layout on disk: one directory per bucket
-    dirs = [d for d in os.listdir(path) if d.startswith("__bkt=")]
-    assert len(dirs) > 1
-
-    pdf = emb.toPandas()
-    q = [float(x) for x in pdf["embedding"][0]]
-    got = similarity.lsh_topk_bucketed(
-        spark, path, q, k=10, num_planes=6, probe_hamming=2, exclude_id=0)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    # the bucket probe is a PARTITION filter, not a post-scan row filter
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and "bit_count" in pf[0], plan
-    want = similarity.lsh_topk(emb, q, k=10, num_planes=6,
-                               probe_hamming=2, exclude_id=0).toPandas()
-    pd.testing.assert_frame_equal(
-        got.toPandas().reset_index(drop=True), want.reset_index(drop=True))
-
-
-def test_ivf_topk_probes_clusters(emb):
-    pdf = emb.toPandas()
-    q = [float(x) for x in pdf["embedding"][0]]
-    got = similarity.ivf_topk(emb, q, k=10, n_probe=2).toPandas()
-    assert len(got) == 10
-    # IVF invariant: every exact-top-k member living in a probed cell MUST
-    # appear (the sandbox labels are weak clusters, so overall recall is
-    # data-dependent — the in-cell guarantee is what IVF actually promises)
-    exact = similarity.cosine_topk(emb, q, k=10).toPandas()
-    probed_labels = set(
-        pdf.set_index("vec_id").loc[got["vec_id"], "label"].unique()
-    )
-    lab = pdf.set_index("vec_id")["label"]
-    in_cell = [i for i in exact["vec_id"] if lab[i] in probed_labels]
-    assert set(in_cell) <= set(got["vec_id"])
-    assert len(in_cell) > 0
-
-
 def test_textstats_oracle(docs):
     out = docs.select(
         "doc_id",
@@ -217,13 +172,6 @@ def test_multimodal_features_and_frames(spark):
     # real decoder path is explicitly stubbed
     with pytest.raises(Exception):
         multimodal.extract_features(media, decoder="real").collect()
-    frames = multimodal.sample_frames(media).toPandas()
-    assert (frames["frame_idx"] >= 0).all()
-    vids = media.filter(F.col("kind") == "video").count()
-    assert frames["media_id"].nunique() == vids
-    resized = multimodal.resize_stub(media, 64, 64)
-    img = resized.filter(F.col("kind") == "image").select("meta.width").distinct().collect()
-    assert [r["width"] for r in img] == [64]
 
 
 def test_multimodal_features_repartition_by_byte_budget(spark):
@@ -338,10 +286,18 @@ def test_simhash_perm_wide_key_no_overflow(docs):
     assert set(zip(got["id_a"], got["id_b"])) == want
 
 
+def _buckets(df, num_planes: int, coef_hash: str = "xx"):
+    """(__id, __bkt) of every row: the bucket pass that ``lsh_topk`` and
+    ``dedup.embedding_neardup_pairs`` run."""
+    base = similarity._base(df, "embedding", "vec_id")
+    return similarity._bucket_projs(base, num_planes,
+                                    coef_hash).select("__id", "__bkt")
+
+
 def test_hyperplane_buckets_relational_plan_and_parity(emb):
     """Corpus bucket pass must be codegen aggregates (no interpreted
     higher-order functions) and must equal the Column form bit-for-bit."""
-    rel = similarity.hyperplane_buckets(emb, num_planes=8)
+    rel = _buckets(emb, 8)
     plan = rel._jdf.queryExecution().executedPlan().toString()
     assert "HashAggregate" in plan
     assert "zip_with" not in plan.lower() and "transform(" not in plan.lower()
@@ -363,8 +319,7 @@ def test_hyperplane_buckets_null_and_empty_vectors(spark):
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     for ch in ("xx", "poly"):
         rel = {r["__id"]: r["__bkt"]
-               for r in similarity.hyperplane_buckets(df, num_planes=4,
-                                                      coef_hash=ch).collect()}
+               for r in _buckets(df, 4, ch).collect()}
         col = {r["vec_id"]: r["b"] for r in df.select(
             "vec_id",
             similarity_reference.hyperplane_bucket(
@@ -502,7 +457,7 @@ def test_hyperplane_buckets_equal_reference(edge_emb, coef_hash, planes):
     bucket give every vector the bucket of the previous forms."""
     kw = dict(num_planes=planes, coef_hash=coef_hash)
     want = _rows(similarity_reference.hyperplane_buckets(edge_emb, **kw))
-    assert _rows(similarity.hyperplane_buckets(edge_emb, **kw)) == want
+    assert _rows(_buckets(edge_emb, planes, coef_hash)) == want
     col = edge_emb.select("vec_id", "embedding", similarity_reference
                           .hyperplane_bucket(F.col("embedding").cast(
                               "array<double>"), planes, coef_hash)
@@ -514,16 +469,12 @@ def test_hyperplane_buckets_equal_reference(edge_emb, coef_hash, planes):
 
 @pytest.mark.parametrize("coef_hash", ["xx", "poly"])
 @pytest.mark.parametrize("planes,hamming", [(8, 3), (6, 2)])
-def test_lsh_topk_equals_reference(spark, edge_emb, tmp_path_factory,
-                                   coef_hash, planes, hamming):
-    """lsh_topk and lsh_topk_bucketed return the previous lsh_topk's rows,
-    in order, for every query. The previous form aborted on a zero norm
-    (ANSI division) and kept rows without a score, so its side runs over
-    the corpus without the zero-norm (empty and all-zero) vectors and
-    drops its NULL scores."""
-    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
-    similarity.write_bucketed(edge_emb, path, num_planes=planes,
-                              coef_hash=coef_hash)
+def test_lsh_topk_equals_reference(edge_emb, coef_hash, planes, hamming):
+    """lsh_topk returns the previous lsh_topk's rows, in order, for every
+    query. The previous form aborted on a zero norm (ANSI division) and
+    kept rows without a score, so its side runs over the corpus without
+    the zero-norm (empty and all-zero) vectors and drops its NULL
+    scores."""
     nonzero = edge_emb.filter(F.coalesce(F.exists(
         "embedding", lambda x: x != 0), F.lit(True)))
     vecs = {r["vec_id"]: r["embedding"] for r in
@@ -535,13 +486,11 @@ def test_lsh_topk_equals_reference(spark, edge_emb, tmp_path_factory,
         want = [r for r in similarity_reference.lsh_topk(
             nonzero, vecs[qid], **kw).collect() if r["score"] is not None]
         assert similarity.lsh_topk(edge_emb, vecs[qid], **kw).collect() == want
-        assert similarity.lsh_topk_bucketed(
-            spark, path, vecs[qid], **kw).collect() == want
         full += len(want) == 10
     assert full >= 3
 
 
-def test_topk_skips_zero_norm_vectors(spark, emb, tmp_path_factory):
+def test_topk_skips_zero_norm_vectors(spark, emb):
     """A zero corpus vector is never scored and a zero query scores
     nothing: every top-k entry point returns the rows it returns without
     the zero vector, and no row for a zero query, instead of aborting on a
@@ -550,8 +499,6 @@ def test_topk_skips_zero_norm_vectors(spark, emb, tmp_path_factory):
                                  "vec_id bigint, embedding array<float>, "
                                  "label int")
     both = emb.unionByName(zero)
-    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
-    similarity.write_bucketed(both, path, num_planes=6)
     q = [float(x) for x in
          emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     lsh = dict(num_planes=6, probe_hamming=6)  # every bucket, bucket 0 too
@@ -559,14 +506,10 @@ def test_topk_skips_zero_norm_vectors(spark, emb, tmp_path_factory):
     def entry_points(corpus):
         return {
             "cosine_topk": lambda v: similarity.cosine_topk(corpus, v),
-            "ivf_topk": lambda v: similarity.ivf_topk(corpus, v),
             "lsh_topk": lambda v: similarity.lsh_topk(corpus, v, **lsh),
         }
 
     with_zero, without = entry_points(both), entry_points(emb)
-    with_zero["lsh_topk_bucketed"] = lambda v: similarity.lsh_topk_bucketed(
-        spark, path, v, **lsh)
-    without["lsh_topk_bucketed"] = without["lsh_topk"]
     for name, topk in with_zero.items():
         assert topk([0.0] * 64).collect() == [], name
         got = topk(q).collect()
@@ -598,19 +541,14 @@ def _jobs(spark, build) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_lsh_topk_builds_without_a_job(spark, emb, tmp_path_factory):
+def test_lsh_topk_builds_without_a_job(spark, emb):
     """The query bucket is computed in Python: building lsh_topk runs no
-    job, and lsh_topk_bucketed none beyond reading the table's schema."""
-    path = str(tmp_path_factory.mktemp("ann") / "bucketed")
-    similarity.write_bucketed(emb, path, num_planes=6)
+    job."""
     q = [float(x) for x in
          emb.filter(F.col("vec_id") == 0).first()["embedding"]]
     for coef_hash in ("xx", "poly"):
         assert _jobs(spark, lambda: similarity.lsh_topk(
             emb, q, probe_hamming=3, coef_hash=coef_hash)) == 0, coef_hash
-    assert _jobs(spark, lambda: similarity.lsh_topk_bucketed(
-        spark, path, q, num_planes=6)) == _jobs(
-        spark, lambda: spark.read.parquet(path))
 
 
 def test_embedding_neardup_reads_input_4_times(spark, tmp_path):

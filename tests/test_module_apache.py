@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from beats_spark.event import get_path
 from beats_spark.processors import apply_chain, build_chain
-from beats_spark.processors.base import FnStage
+from fn_stage import FnStage
 
 # stock-grok shapes the pipeline relies on (IP covers v6+v4 in the public
 # grok library; the builtin here is v4-only, so the module config supplies

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from beats_spark.event import get_path, has_path
 from beats_spark.processors import apply_chain, build_chain
-from beats_spark.processors.base import FnStage
+from fn_stage import FnStage
 
 MYSQL_DEFS = {
     "IP": r"(?:%{IPV6}|(?:\d{1,3}\.){3}\d{1,3})",

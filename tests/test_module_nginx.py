@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from beats_spark.event import get_path, has_path
 from beats_spark.processors import apply_chain, build_chain
-from beats_spark.processors.base import FnStage
+from fn_stage import FnStage
 
 # Pattern definitions mirrored from the module pipeline (public filebeat
 # config surface; HTTPDATE spelled concretely — the stock grok library's

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from beats_spark.event import get_path
 from beats_spark.processors import apply_chain, build_chain
-from beats_spark.processors.base import FnStage
+from fn_stage import FnStage
 
 SYSLOG_DEFS = {
     "IP": r"(?:%{IPV6}|(?:\d{1,3}\.){3}\d{1,3})",

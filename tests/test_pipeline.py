@@ -37,6 +37,18 @@ def transcripts(spark):
     return transcripts_from_events(spark, SF_DIR).cache()
 
 
+@pytest.mark.parametrize("route,match", [
+    ({"sink": "x", "when": {"network": {"ip": "privat"}}}, "privat"),
+    ({"sink": "x", "when": {"bogus": {}}}, "unknown condition kind"),
+    ({"when": {"equals": {"a": 1}}}, "sink/index/topic"),
+], ids=["bad_network", "unknown_kind", "no_sink"])
+def test_bad_route_is_rejected_when_the_pipeline_is_built(route, match):
+    """A route the selector cannot compile fails in ``Pipeline()``, as a
+    bad processor does in ``build_chain``, not at the first transform."""
+    with pytest.raises(ValueError, match=match):
+        Pipeline(None, PipelineConfig(processors=[], routes=[route]))
+
+
 def test_transform_counts_match_pandas_oracle(spark, transcripts):
     pipe = Pipeline(spark, fixture_config())
     got = {

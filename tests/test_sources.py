@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from beats_spark.processors import apply_chain, build_chain, build_stage
 from beats_spark.sources import kafka_reader_options, read_log_files
-from beats_spark.sources.kafka import kafka_writer_frame
 
 
 @pytest.fixture()
@@ -70,7 +69,7 @@ def test_logfile_max_bytes(spark, tmp_path):
     assert sorted(r["message"] for r in df.collect()) == ["A" * 10, "short"]
 
 
-def test_kafka_options_and_frame(spark):
+def test_kafka_options_and_frame():
     opts = kafka_reader_options({
         "hosts": ["k1:9092", "k2:9092"], "topics": ["t1", "t2"],
         "initial_offset": "newest", "group_id": "g", "max_batch_size": 500,
@@ -82,14 +81,6 @@ def test_kafka_options_and_frame(spark):
         "kafka.group.id": "g",
         "maxOffsetsPerTrigger": "500",
     }
-    df = spark.createDataFrame([("c1", 1, "hello", "sink_a")],
-                               "conv_id string, turn_idx int, text string, _sink string")
-    out = kafka_writer_frame(df, key_fmtstr="%{[conv_id]}").toPandas()
-    assert list(out.columns) == ["topic", "key", "value"]
-    assert out.iloc[0]["topic"] == "sink_a"
-    assert out.iloc[0]["key"] == "c1"
-    v = json.loads(out.iloc[0]["value"])
-    assert v == {"conv_id": "c1", "turn_idx": 1, "text": "hello"}
 
 
 def test_decompress_gzip_field(spark):
@@ -302,40 +293,6 @@ def test_kafka_scalar_hosts_and_key_with_hash():
 
     opts = kafka_reader_options({"hosts": "broker1:9092", "topics": "t"})
     assert opts["kafka.bootstrap.servers"] == "broker1:9092"
-
-
-def test_kafka_writer_key_fmtstr_wins_over_hash(spark):
-    from beats_spark.sources.kafka import kafka_writer_frame
-
-    df = spark.createDataFrame(
-        [("s1", "agent-7", "hostA", "x")],
-        "_sink string, agent string, host string, payload string")
-    out = kafka_writer_frame(df, key_fmtstr="%{[agent]}",
-                             hash_fields=["host"],
-                             num_partitions=12).collect()[0]
-    # beats keys the message with the fmtstr even when partition.hash is
-    # configured; the hash fields become an explicit partition assignment
-    # (the only column shape the Spark Kafka sink honors)
-    assert out["key"] == "agent-7"
-    assert 0 <= out["partition"] < 12
-    # same hash fields → same partition (deterministic assignment)
-    df2 = spark.createDataFrame(
-        [("s2", "agent-9", "hostA", "y")],
-        "_sink string, agent string, host string, payload string")
-    out2 = kafka_writer_frame(df2, key_fmtstr="%{[agent]}",
-                              hash_fields=["host"],
-                              num_partitions=12).collect()[0]
-    assert out2["partition"] == out["partition"]
-
-
-def test_kafka_writer_hash_with_key_requires_num_partitions(spark):
-    from beats_spark.sources.kafka import kafka_writer_frame
-
-    df = spark.createDataFrame(
-        [("s1", "agent-7", "hostA", "x")],
-        "_sink string, agent string, host string, payload string")
-    with pytest.raises(ValueError, match="num_partitions"):
-        kafka_writer_frame(df, key_fmtstr="%{[agent]}", hash_fields=["host"])
 
 
 def test_logfile_json_parses_per_line_before_multiline(spark, tmp_path):
